@@ -180,9 +180,22 @@ def _steal_ticks() -> int | None:
         return None
 
 
+def _cpus_from_env() -> int:
+    """SPARK_GRAFT_CPUS as a core count, checked before the run starts:
+    the artifact records it as an int, so a bad value must fail here,
+    not after the whole suite has run."""
+    raw = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    try:
+        return int(raw)
+    except ValueError:
+        sys.exit(
+            f"bench.py: SPARK_GRAFT_CPUS must be an integer core count, got {raw!r}"
+        )
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = _cpus_from_env()
     try:
         sf = float(os.path.basename(sf_dir.rstrip("/")).replace("sf", ""))
     except ValueError:
@@ -326,7 +339,7 @@ def main() -> None:
         "sf": sf,
         # core count the run actually used (local[cpus]); the calm gate
         # only accepts the default GATE_CPUS config (VERDICT r10 #1)
-        "cpus": int(cpus),
+        "cpus": cpus,
         # provenance (ADVICE r9 #2): sources_sha ties the artifact to the
         # exact engine/bench code it measured; the calm-gate test skips
         # loudly (never passes) when it no longer matches the tree.
@@ -400,7 +413,7 @@ def main() -> None:
     # scheduler config; it must never become the gating artifact.
     if (
         sf == 0.1
-        and int(cpus) == GATE_CPUS
+        and cpus == GATE_CPUS
         and host_steal_sec is not None
         and host_steal_sec < CALM_STEAL_SEC
     ):

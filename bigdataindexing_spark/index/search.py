@@ -12,7 +12,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from bigdataindexing_spark.sources.store_dirs import (
     SessionParquetStore,
-    session_store_dir,
+    write_store,
 )
 
 from bigdataindexing_spark.index.build import term_rows
@@ -104,45 +104,22 @@ def idx_delete_anti_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# (applicationId, sf_dir) -> dir of the BASE postings store (docs with
-# doc_id % 10 < 8): the "index as of the last build" that incremental
-# maintenance merges new arrivals into. Materialized once per session —
-# an incremental-maintenance benchmark where the base is rebuilt per query
-# would be measuring a full rebuild, the exact thing merging exists to
-# avoid.
-_BASE_POSTINGS_DIR: dict[tuple[str, str], str] = {}
-
-
-def base_postings_table(spark: SparkSession, sf_dir: str) -> DataFrame:
+# The BASE postings store (docs with doc_id % 10 < 8): the "index as of
+# the last build" that incremental maintenance merges new arrivals into.
+# Materialized once per session — an incremental-maintenance benchmark
+# where the base is rebuilt per query would be measuring a full rebuild,
+# the exact thing merging exists to avoid.
+def _build_base_postings(spark: SparkSession, sf_dir: str, path: str) -> None:
     from bigdataindexing_spark.index.build import postings
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    path = _BASE_POSTINGS_DIR.get(key)
-    if path is None:
-        path = session_store_dir("base_postings")
-        docs = spread(table(spark, sf_dir, "documents"))
-        postings(docs.filter(F.col("doc_id") % 10 < 8)).sortWithinPartitions(
-            "token"
-        ).write.mode("overwrite").parquet(path)
-        _BASE_POSTINGS_DIR[key] = path
-    return spark.read.parquet(path)
+    docs = spread(table(spark, sf_dir, "documents"))
+    write_store(
+        postings(docs.filter(F.col("doc_id") % 10 < 8)).sortWithinPartitions("token"),
+        path,
+    )
 
 
-_BASE_POSTINGS_VIEWS: dict[tuple[str, str], str] = {}
-
-
-def base_postings_view(spark: SparkSession, sf_dir: str) -> str:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    view = _BASE_POSTINGS_VIEWS.get(key)
-    if view is None:
-        view = f"bdi_base_postings_{abs(hash(key)) % 10**8}"
-        base_postings_table(spark, sf_dir).createOrReplaceTempView(view)
-        _BASE_POSTINGS_VIEWS[key] = view
-    elif not spark.catalog.tableExists(view):
-        # temp views are session-scoped, the cache application-scoped:
-        # re-register for a sibling spark.newSession() (ADVICE r4)
-        base_postings_table(spark, sf_dir).createOrReplaceTempView(view)
-    return view
+_BASE_POSTINGS = SessionParquetStore("base_postings", _build_base_postings)
 
 
 @register(
@@ -174,7 +151,7 @@ def idx_postings_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     from bigdataindexing_spark.tables import table_view
 
     docs = table_view(spark, sf_dir, "documents")
-    base = base_postings_view(spark, sf_dir)
+    base = _BASE_POSTINGS.view(spark, sf_dir)
     # one SQL statement = one driver round-trip (see tables.table_view);
     # same plan as the Column form: delta postings in one shuffle
     # (row-local array_distinct), vocabulary-sized full-outer merge,
@@ -382,49 +359,42 @@ def idx_phrase_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """)
 
 
-# (applicationId, sf_dir) -> dir of the materialized search index: the
-# token-sorted term_rows/postings tables (index/build.write_index) plus a
-# doc-length sidecar and a 1-row corpus-stats table. This is the
-# reference's actual serving architecture — IndexingListener.java:23-45
+# The materialized search index: the token-sorted term_rows/postings
+# tables (index/build.write_index) plus a doc-length sidecar and a 1-row
+# corpus-stats table, each a named sub-table ``<name>.parquet``. This is
+# the reference's actual serving architecture — IndexingListener.java:23-45
 # maintains an Elasticsearch index asynchronously and queries hit the
 # INDEX, never raw documents; the inline build+search queries above keep
 # their end-to-end oracles, while the *_serve variants below read this
 # store the way a search tier reads ES.
-_SEARCH_INDEX_DIR: dict[tuple[str, str], str] = {}
-_SEARCH_INDEX_DF: dict[tuple[str, str, str], DataFrame] = {}
-
-
-def search_index_table(
-    spark: SparkSession, sf_dir: str, name: str
-) -> DataFrame:
+def _build_search_index(spark: SparkSession, sf_dir: str, path: str) -> None:
     from bigdataindexing_spark.functions.text import tokens
     from bigdataindexing_spark.index.build import write_index
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    path = _SEARCH_INDEX_DIR.get(key)
-    if path is None:
-        path = session_store_dir("search_idx")
-        docs = spread(table(spark, sf_dir, "documents"))
-        write_index(docs, path)
-        lens = docs.select("doc_id", F.size(tokens("text")).alias("dl"))
-        stats = lens.agg(
-            F.count(F.lit(1)).alias("n_docs"), F.avg("dl").alias("avgdl")
-        )
-        stats.write.mode("overwrite").parquet(f"{path}/stats.parquet")
-        # Per-doc and per-term scoring constants PRECOMPUTED at build
-        # time — what Lucene/ES segments actually store: the BM25 length
-        # norm k1*(1-b+b*dl/avgdl) depends only on (dl, avgdl) and the
-        # idf only on (n_docs, df), all fixed once the build commits, so
-        # the serve path pays zero corpus-level aggregation per query.
+    docs = spread(table(spark, sf_dir, "documents"))
+    write_index(docs, path)
+    lens = docs.select("doc_id", F.size(tokens("text")).alias("dl"))
+    stats = lens.agg(
+        F.count(F.lit(1)).alias("n_docs"), F.avg("dl").alias("avgdl")
+    )
+    write_store(stats, f"{path}/stats.parquet")
+    # Per-doc and per-term scoring constants PRECOMPUTED at build
+    # time — what Lucene/ES segments actually store: the BM25 length
+    # norm k1*(1-b+b*dl/avgdl) depends only on (dl, avgdl) and the
+    # idf only on (n_docs, df), all fixed once the build commits, so
+    # the serve path pays zero corpus-level aggregation per query.
+    write_store(
         lens.crossJoin(F.broadcast(stats)).select(
             "doc_id",
             "dl",
             (
                 BM25_K1 * (1 - BM25_B + BM25_B * F.col("dl") / F.col("avgdl"))
             ).alias("norm"),
-        ).repartition(1).sortWithinPartitions("doc_id").write.mode(
-            "overwrite"
-        ).parquet(f"{path}/doclens.parquet")
+        ),
+        f"{path}/doclens.parquet",
+        "doc_id",
+    )
+    write_store(
         spark.read.parquet(f"{path}/postings.parquet").crossJoin(
             F.broadcast(stats)
         ).select(
@@ -433,24 +403,21 @@ def search_index_table(
             F.log(
                 1 + (F.col("n_docs") - F.col("df") + 0.5) / (F.col("df") + 0.5)
             ).alias("idf"),
-        ).repartition(1).sortWithinPartitions("token").write.mode(
-            "overwrite"
-        ).parquet(f"{path}/termmeta.parquet")
-        # Per-term MAX impact — the WAND/MaxScore sidecar: the largest
-        # BM25 contribution any single posting of this term can make,
-        # fixed at build time like idf/norm. Early-termination serves
-        # (idx_maxscore_topk) prune with these bounds instead of
-        # enumerating low-impact postings.
-        tr = spark.read.parquet(f"{path}/term_rows.parquet")
-        tm = spark.read.parquet(f"{path}/termmeta.parquet")
-        dl = spark.read.parquet(f"{path}/doclens.parquet")
-        # Per-posting PRECOMPUTED impacts (token, doc_id, w) — the other
-        # half of the Lucene impact layout: w is a pure function of
-        # build-fixed store columns (idf, tf, norm), so serving paths
-        # that used to recompute it per query via two joins (term_rows ⋈
-        # termmeta ⋈ doclens) now read it straight off a token-sorted
-        # scan with the query-term filter pushed down (r10; guide §2.4 —
-        # the joins belonged in the build, not the serve).
+        ),
+        f"{path}/termmeta.parquet",
+        "token",
+    )
+    tr = spark.read.parquet(f"{path}/term_rows.parquet")
+    tm = spark.read.parquet(f"{path}/termmeta.parquet")
+    dl = spark.read.parquet(f"{path}/doclens.parquet")
+    # Per-posting PRECOMPUTED impacts (token, doc_id, w) — the other
+    # half of the Lucene impact layout: w is a pure function of
+    # build-fixed store columns (idf, tf, norm), so serving paths
+    # that used to recompute it per query via two joins (term_rows ⋈
+    # termmeta ⋈ doclens) now read it straight off a token-sorted
+    # scan with the query-term filter pushed down (r10; guide §2.4 —
+    # the joins belonged in the build, not the serve).
+    write_store(
         tr.join(F.broadcast(tm.select("token", "idf")), "token").join(
             dl.select("doc_id", "norm"), "doc_id"
         ).select(
@@ -461,29 +428,36 @@ def search_index_table(
                 * (F.col("tf") * (BM25_K1 + 1))
                 / (F.col("tf") + F.col("norm"))
             ).alias("w"),
-        ).repartition(1).sortWithinPartitions("token", "doc_id").write.mode(
-            "overwrite"
-        ).parquet(f"{path}/term_impacts.parquet")
-        # Per-term MAX impact — the WAND/MaxScore sidecar: the largest
-        # BM25 contribution any single posting of this term can make,
-        # fixed at build time like idf/norm. Early-termination serves
-        # (idx_maxscore_topk) prune with these bounds instead of
-        # enumerating low-impact postings. Derived from the impacts
-        # table (bit-identical w, one less join tree in the build).
-        spark.read.parquet(f"{path}/term_impacts.parquet").groupBy(
-            "token"
-        ).agg(F.max("w").alias("maxw")).repartition(
-            1
-        ).sortWithinPartitions("token").write.mode("overwrite").parquet(
-            f"{path}/term_maxw.parquet"
-        )
-        _SEARCH_INDEX_DIR[key] = path
-    dfkey = key + (name,)
-    df = _SEARCH_INDEX_DF.get(dfkey)
-    if df is None:
-        df = spark.read.parquet(f"{path}/{name}.parquet")
-        _SEARCH_INDEX_DF[dfkey] = df
-    return df
+        ),
+        f"{path}/term_impacts.parquet",
+        "token",
+        "doc_id",
+    )
+    # Per-term MAX impact — the WAND/MaxScore sidecar: the largest
+    # BM25 contribution any single posting of this term can make,
+    # fixed at build time like idf/norm. Early-termination serves
+    # (idx_maxscore_topk) prune with these bounds instead of
+    # enumerating low-impact postings. Derived from the impacts
+    # table (bit-identical w, one less join tree in the build).
+    write_store(
+        spark.read.parquet(f"{path}/term_impacts.parquet")
+        .groupBy("token")
+        .agg(F.max("w").alias("maxw")),
+        f"{path}/term_maxw.parquet",
+        "token",
+    )
+
+
+_SEARCH_INDEX = SessionParquetStore("search_idx", _build_search_index)
+
+
+def search_index_table(
+    spark: SparkSession, sf_dir: str, name: str
+) -> DataFrame:
+    """The search index's one public read, by sub-table name (``term_rows``,
+    ``term_impacts``, ...): every caller, inside this module or out,
+    reaches the store through here."""
+    return _SEARCH_INDEX.df(spark, sf_dir, f"{name}.parquet")
 
 
 @register(
@@ -554,41 +528,48 @@ BM25_INC_TERMS = ("stream", "filter")
 
 _BM25_BASE_ROWS = SessionParquetStore(
     "bm25_base_rows",
-    lambda spark, sf_dir: term_rows(
-        spread(table(spark, sf_dir, "documents")).filter(
-            F.col("doc_id") % 10 < 8
-        )
+    lambda spark, sf_dir, path: write_store(
+        term_rows(
+            spread(table(spark, sf_dir, "documents")).filter(
+                F.col("doc_id") % 10 < 8
+            )
+        ),
+        path, "token",
     ),
-    sort_cols=("token",),
 )
 _BM25_BASE_LENS = SessionParquetStore(
     "bm25_base_lens",
-    lambda spark, sf_dir: _doc_lens(
-        spread(table(spark, sf_dir, "documents")).filter(
-            F.col("doc_id") % 10 < 8
-        )
+    lambda spark, sf_dir, path: write_store(
+        _doc_lens(
+            spread(table(spark, sf_dir, "documents")).filter(
+                F.col("doc_id") % 10 < 8
+            )
+        ),
+        path, "doc_id",
     ),
-    sort_cols=("doc_id",),
 )
 _BM25_DELTA_ROWS = SessionParquetStore(
     "bm25_delta_rows",
-    lambda spark, sf_dir: term_rows(
-        spread(table(spark, sf_dir, "documents")).filter(
-            F.col("doc_id") % 10 >= 8
-        )
+    lambda spark, sf_dir, path: write_store(
+        term_rows(
+            spread(table(spark, sf_dir, "documents")).filter(
+                F.col("doc_id") % 10 >= 8
+            )
+        ),
+        path, "token",
     ),
-    sort_cols=("token",),
 )
 _BM25_DELTA_LENS = SessionParquetStore(
     "bm25_delta_lens",
-    lambda spark, sf_dir: _doc_lens(
-        spread(table(spark, sf_dir, "documents")).filter(
-            F.col("doc_id") % 10 >= 8
-        )
+    lambda spark, sf_dir, path: write_store(
+        _doc_lens(
+            spread(table(spark, sf_dir, "documents")).filter(
+                F.col("doc_id") % 10 >= 8
+            )
+        ),
+        path, "doc_id",
     ),
-    sort_cols=("doc_id",),
 )
-
 
 def _doc_lens(docs: DataFrame) -> DataFrame:
     from bigdataindexing_spark.functions.text import tokens
@@ -606,29 +587,39 @@ def _doc_lens(docs: DataFrame) -> DataFrame:
 # (r10; guide §2.4 — those aggregations belonged in the build).
 _BM25_BASE_STATS = SessionParquetStore(
     "bm25_base_stats",
-    lambda spark, sf_dir: _BM25_BASE_LENS.df(spark, sf_dir).agg(
-        F.count(F.lit(1)).alias("n"), F.sum("dl").alias("sum_dl")
+    lambda spark, sf_dir, path: write_store(
+        _BM25_BASE_LENS.df(spark, sf_dir).agg(
+            F.count(F.lit(1)).alias("n"), F.sum("dl").alias("sum_dl")
+        ),
+        path,
     ),
 )
 _BM25_DELTA_STATS = SessionParquetStore(
     "bm25_delta_stats",
-    lambda spark, sf_dir: _BM25_DELTA_LENS.df(spark, sf_dir).agg(
-        F.count(F.lit(1)).alias("n"), F.sum("dl").alias("sum_dl")
+    lambda spark, sf_dir, path: write_store(
+        _BM25_DELTA_LENS.df(spark, sf_dir).agg(
+            F.count(F.lit(1)).alias("n"), F.sum("dl").alias("sum_dl")
+        ),
+        path,
     ),
 )
 _BM25_BASE_TERMDF = SessionParquetStore(
     "bm25_base_termdf",
-    lambda spark, sf_dir: _BM25_BASE_ROWS.df(spark, sf_dir)
-    .groupBy("token")
-    .agg(F.count(F.lit(1)).alias("df")),
-    sort_cols=("token",),
+    lambda spark, sf_dir, path: write_store(
+        _BM25_BASE_ROWS.df(spark, sf_dir)
+        .groupBy("token")
+        .agg(F.count(F.lit(1)).alias("df")),
+        path, "token",
+    ),
 )
 _BM25_DELTA_TERMDF = SessionParquetStore(
     "bm25_delta_termdf",
-    lambda spark, sf_dir: _BM25_DELTA_ROWS.df(spark, sf_dir)
-    .groupBy("token")
-    .agg(F.count(F.lit(1)).alias("df")),
-    sort_cols=("token",),
+    lambda spark, sf_dir, path: write_store(
+        _BM25_DELTA_ROWS.df(spark, sf_dir)
+        .groupBy("token")
+        .agg(F.count(F.lit(1)).alias("df")),
+        path, "token",
+    ),
 )
 
 
@@ -1004,7 +995,10 @@ def _build_positional_postings(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _POS_STORE = SessionParquetStore(
-    "positional_postings", _build_positional_postings, sort_cols=("token",)
+    "positional_postings",
+    lambda spark, sf_dir, path: write_store(
+        _build_positional_postings(spark, sf_dir), path, "token"
+    ),
 )
 
 
@@ -1069,18 +1063,20 @@ POS_SHIFT = 1 << 20  # max tokens/doc the packing supports; the corpus'
 
 _PACKED_POS_BASE = SessionParquetStore(
     "positional_packed_base",
-    lambda spark, sf_dir: _build_positional_postings(spark, sf_dir)
-    .filter(F.col("doc_id") % 10 < 8)
-    .select(
-        "token",
-        (F.col("doc_id") * F.lit(POS_SHIFT) + F.col("pos")).alias("key"),
-    )
-    .groupBy("token")
-    .agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sort_array(F.collect_list("key")).alias("ks"),
+    lambda spark, sf_dir, path: write_store(
+        _build_positional_postings(spark, sf_dir)
+        .filter(F.col("doc_id") % 10 < 8)
+        .select(
+            "token",
+            (F.col("doc_id") * F.lit(POS_SHIFT) + F.col("pos")).alias("key"),
+        )
+        .groupBy("token")
+        .agg(
+            F.count(F.lit(1)).alias("n"),
+            F.sort_array(F.collect_list("key")).alias("ks"),
+        ),
+        path, "token",
     ),
-    sort_cols=("token",),
 )
 
 

@@ -37,7 +37,11 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from bigdataindexing_spark.registry import register
-from bigdataindexing_spark.sources.store_dirs import session_store_dir
+from bigdataindexing_spark.sources.store_dirs import (
+    SessionParquetStore,
+    session_store_dir,
+    write_store,
+)
 from bigdataindexing_spark.tables import _PINNED, pin, spread, table
 
 JACCARD_TAU = 0.2
@@ -64,7 +68,7 @@ SIMHASH_BITS = 32
 # pair contribution to ~500k at real scale.
 #
 # The pair-count-store consumers (dedup_ngram_jaccard,
-# q104_containment_pairs, jaccard_pairs_store → dedup_cluster_cc) are
+# q104_containment_pairs, the jaccard_pairs store → dedup_cluster_cc) are
 # therefore DF-CAPPED-EXACT operators, and their registered duckdb
 # oracles apply the SAME cap (the `hot`/`uc` CTEs below), so the oracle
 # gate holds at any corpus — not just below the cap (ADVICE r5).
@@ -72,7 +76,7 @@ SIMHASH_BITS = 32
 # (dedup_minhash_lsh, dedup_delta_vs_corpus, streaming lsh_dedup)
 # compute true uncapped Jaccard and keep the uncapped oracle.
 #
-# Env override: both the store build (shingle_pair_counts_view) and the
+# Env override: both the store build (_build_pair_counts) and the
 # registered capped oracles resolve the env var THROUGH _current_cap()
 # at build/check time (the oracles are lazy callables — ADVICE r6), so a
 # post-import override takes effect identically on both sides of the
@@ -91,7 +95,7 @@ _SHINGLE_SQL = (
 
 def _current_cap() -> int:
     """The hot-shingle df cap as of NOW. Store builds
-    (shingle_pair_counts_view) and the lazy capped oracles below both
+    (_build_pair_counts) and the lazy capped oracles below both
     resolve the env through this one function at their respective build/
     check times, so the two sides of the driver gate can never compare
     differently-capped computations (ADVICE r6)."""
@@ -99,7 +103,7 @@ def _current_cap() -> int:
 
 
 # Same shape with the hot-shingle df cap applied before the self-join —
-# the oracle twin of shingle_pair_counts_view. `sizes` stays uncapped
+# the oracle twin of _build_pair_counts. `sizes` stays uncapped
 # (denominators are exact on both sides). A FUNCTION, not a constant:
 # the cap resolves when the oracle text is requested (registry
 # oracle_text()), mirroring the store build's own env re-read.
@@ -147,74 +151,25 @@ def _shingle_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# (applicationId, sf_dir) -> parquet dir / cached DataFrame handle for the
-# materialized (doc_id, shingles, sig) signature store. Signatures are a
-# property of the CORPUS, not of any one query: a dedup pipeline computes
-# them once at ingest and every candidate/verify/cluster stage reads the
-# store — the same build-once/serve-many split as the inverted index
-# (index/build.py), the hourly rollup (index/rollup.py:q44) and the ANN
-# hyperplane signature index (similarity.py:lsh_signature_dir). At 100 TB
-# the store is maintained incrementally by the streaming LSH path
-# (streaming/lsh_dedup.py) rather than rebuilt.
-_SHINGLE_STORE_DIR: dict[tuple[str, str], str] = {}
-_SHINGLE_STORE_DF: dict[tuple[str, str], DataFrame] = {}
-
-
-def shingle_sig_path(spark: SparkSession, sf_dir: str) -> str:
-    """Materialize (once per session) the corpus signature store and
-    return its parquet path. Single-SQL consumers scan it via
-    ``parquet.`path``` so the whole query is ONE driver round-trip."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    path = _SHINGLE_STORE_DIR.get(key)
-    if path is None:
-        path = session_store_dir("shingle_sig")
-        (
-            spread(table(spark, sf_dir, "documents"), heavy=True)
-            .select("doc_id", "text")
-            .mapInPandas(_shingle_sig_batches, _SHINGLE_SIG_SCHEMA)
-            .write.mode("overwrite")
-            .parquet(path)
-        )
-        _SHINGLE_STORE_DIR[key] = path
-    return path
-
-
-def shingle_sig_store(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Materialize (once per session) and return the corpus signature
-    store. Reading parquet per consumer branch beats persist() here:
-    each branch prunes to the columns it needs (the banding branch reads
-    only `sig`, the verify branch only `shingles`)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    df = _SHINGLE_STORE_DF.get(key)
-    # cached DataFrames are bound to their creating session; a sibling
-    # spark.newSession() must re-read (ADVICE r4)
-    if df is not None and df.sparkSession is spark:
-        return df
-    df = spark.read.parquet(shingle_sig_path(spark, sf_dir))
-    _SHINGLE_STORE_DF[key] = df
-    return df
-
-
-def shingle_sig_view(spark: SparkSession, sf_dir: str) -> str:
-    """Session temp view over the signature store, for single-SQL
-    consumers: view resolution reuses the store DataFrame's already-
-    resolved file index, where a ``parquet.`path``` reference re-lists
-    the directory on every analysis (5 references in the LSH query =
-    5 listings per invocation)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    name = _SHINGLE_VIEWS.get(key)
-    if name is None:
-        name = f"shingle_sig_{abs(hash(key)) % 10**8}"
-        shingle_sig_store(spark, sf_dir).createOrReplaceTempView(name)
-        _SHINGLE_VIEWS[key] = name
-    elif not spark.catalog.tableExists(name):
-        # temp views are session-scoped, the cache is application-scoped:
-        # re-register for a sibling spark.newSession() (ADVICE r4)
-        shingle_sig_store(spark, sf_dir).createOrReplaceTempView(name)
-    return name
-
-
-_SHINGLE_VIEWS: dict[tuple[str, str], str] = {}
+# The materialized (doc_id, shingles, sig) signature store. Signatures
+# are a property of the CORPUS, not of any one query: a dedup pipeline
+# computes them once at ingest and every candidate/verify/cluster stage
+# reads the store — the same build-once/serve-many split as the inverted
+# index (index/build.py), the hourly rollup (index/rollup.py:q44) and the
+# ANN hyperplane signature index (similarity.py:_SIG_STORE). At
+# 100 TB the store is maintained incrementally by the streaming LSH path
+# (streaming/lsh_dedup.py) rather than rebuilt. Single-SQL consumers read
+# its view tier: view resolution reuses the resolved file index, where a
+# ``parquet.`path``` reference re-lists the directory on every analysis.
+_SHINGLE_SIG = SessionParquetStore(
+    "shingle_sig",
+    lambda spark, sf_dir, path: write_store(
+        spread(table(spark, sf_dir, "documents"), heavy=True)
+        .select("doc_id", "text")
+        .mapInPandas(_shingle_sig_batches, _SHINGLE_SIG_SCHEMA),
+        path,
+    ),
+)
 
 
 # Shared shingle-overlap pair counts: inter(doc_a, doc_b, i, na, nb) for
@@ -223,32 +178,18 @@ _SHINGLE_VIEWS: dict[tuple[str, str], str] = {}
 # the dedup family, and it is the COMMON PREFIX of three reducers: exact
 # Jaccard (dedup_ngram_jaccard: i/(na+nb-i)), asymmetric containment
 # (q104_containment_pairs: i/na, i/nb), and the verified pair store
-# (jaccard_pairs_store -> dedup_cluster_cc). Materialized once per
+# (the jaccard_pairs store -> dedup_cluster_cc). Materialized once per
 # (session, sf_dir); each consumer is then a row-local filter+project over
 # the store — the same build-once/serve-many split as the signature store
 # above. At 100 TB this is exactly how a curation pipeline runs: one
 # overlap-count job, many downstream screens.
-_PAIRCOUNT_STORE_DIR: dict[tuple[str, str], str] = {}
-_PAIRCOUNT_VIEWS: dict[tuple[str, str], str] = {}
-
-
-def shingle_pair_counts_view(spark: SparkSession, sf_dir: str) -> str:
-    """Materialize (once per session) the shingle-overlap pair-count
-    relation and return a temp-view name over it."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    name = _PAIRCOUNT_VIEWS.get(key)
-    if name is not None:
-        if not spark.catalog.tableExists(name):  # sibling newSession()
-            spark.read.parquet(_PAIRCOUNT_STORE_DIR[key]).createOrReplaceTempView(name)
-        return name
-    path = _PAIRCOUNT_STORE_DIR.get(key)
-    if path is None:
-        path = session_store_dir("shingle_pair_counts")
-        store = shingle_sig_view(spark, sf_dir)
-        # re-resolve the env override at BUILD time (a post-import
-        # override must not silently no-op — ADVICE r5); the lazy
-        # oracles read the same function at check time (ADVICE r6)
-        cap = _current_cap()
+def _build_pair_counts(spark: SparkSession, sf_dir: str, path: str) -> None:
+    store = _SHINGLE_SIG.view(spark, sf_dir)
+    # re-resolve the env override at BUILD time (a post-import override
+    # must not silently no-op — ADVICE r5); the lazy oracles read the
+    # same function at check time (ADVICE r6)
+    cap = _current_cap()
+    write_store(
         spark.sql(f"""
             WITH u AS (
               SELECT doc_id, size(shingles) AS n, explode(shingles) AS s
@@ -264,12 +205,12 @@ def shingle_pair_counts_view(spark: SparkSession, sf_dir: str) -> str:
                    first(a.n) AS na, first(b.n) AS nb
             FROM uc a JOIN uc b ON a.s = b.s AND a.doc_id < b.doc_id
             GROUP BY a.doc_id, b.doc_id
-        """).write.mode("overwrite").parquet(path)
-        _PAIRCOUNT_STORE_DIR[key] = path
-    name = f"bdi_pair_counts_{abs(hash(key)) % 10**8}"
-    spark.read.parquet(path).createOrReplaceTempView(name)
-    _PAIRCOUNT_VIEWS[key] = name
-    return name
+        """),
+        path,
+    )
+
+
+_PAIR_COUNTS = SessionParquetStore("shingle_pair_counts", _build_pair_counts)
 
 
 def _jaccard_pairs(docs_sh: DataFrame, pairs: DataFrame | None = None) -> DataFrame:
@@ -390,7 +331,7 @@ def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     "own work is the row-local Jaccard filter over the stored counts.",
 )
 def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
-    view = shingle_pair_counts_view(spark, sf_dir)
+    view = _PAIR_COUNTS.view(spark, sf_dir)
     return spark.sql(f"""
         SELECT doc_a, doc_b, FLOOR(i * 1.0D / (na + nb - i) * 1e4 + 0.5) / 1e4 AS jac
         FROM {view} WHERE i * 1.0D / (na + nb - i) >= {JACCARD_TAU}
@@ -503,7 +444,7 @@ def _shingle_sig_batches(it):
     doc="MinHash(128) + LSH banding (64 bands × 2 rows) near-dup pairs: "
     "band-bucket equi-join for candidates, signature-estimate prefilter, "
     "exact-Jaccard verify of survivors only. Candidates come from the "
-    "session-materialized BAND INDEX (lsh_band_view — the banded posting "
+    "session-materialized BAND INDEX (the lsh_bands store — the banded posting "
     "side of the MinHash store, built once at ingest like production LSH; "
     "re-banding per query charged build work to the serve path). Scale "
     "path: signatures come "
@@ -517,7 +458,7 @@ def _shingle_sig_batches(it):
 )
 def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Signatures come from the session-materialized corpus signature store
-    # (shingle_sig_store): the banding branch, both prefilter sides, and
+    # (_SHINGLE_SIG): the banding branch, both prefilter sides, and
     # the exact-Jaccard verify each read the parquet store with their own
     # column pruning. Jaccard over 64-bit shingle hashes equals Jaccard
     # over shingle strings (collision odds ~2^-64 per pair).
@@ -529,8 +470,8 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Band buckets via one higher-order transform (a 64-element literal
     # array of hash() calls would generate a huge codegen class for no
     # runtime benefit — the lambda is evaluated per band instead).
-    store = shingle_sig_view(spark, sf_dir)
-    bands = lsh_band_view(spark, sf_dir)
+    store = _SHINGLE_SIG.view(spark, sf_dir)
+    bands = _LSH_BANDS.view(spark, sf_dir)
     return spark.sql(f"""
         WITH cand AS (
           SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
@@ -612,88 +553,47 @@ def _simhash_sig(spark: SparkSession, sf_dir: str) -> DataFrame:
 # and the ANN signature index already fixed. The streaming twin
 # (streaming/lsh_dedup.py) maintains its band state incrementally for
 # exactly this reason.
-_BAND_STORE_DIR: dict[tuple[str, str], str] = {}
-_BAND_VIEWS: dict[tuple[str, str], str] = {}
-
-
-def lsh_band_view(spark: SparkSession, sf_dir: str) -> str:
-    """Materialize (once per session) the (doc_id, band, bucket) band
-    index over the corpus signature store; returns a temp-view name."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    name = _BAND_VIEWS.get(key)
-    if name is not None:
-        if not spark.catalog.tableExists(name):  # sibling newSession()
-            spark.read.parquet(_BAND_STORE_DIR[key]).createOrReplaceTempView(name)
-        return name
-    path = _BAND_STORE_DIR.get(key)
-    if path is None:
-        path = session_store_dir("lsh_bands")
-        store = shingle_sig_view(spark, sf_dir)
-        n_bands = NUM_MINHASHES // BAND_ROWS
-        row_refs = ", ".join(
-            f"sig[b * {BAND_ROWS} + {r}]" for r in range(BAND_ROWS)
-        )
+def _build_lsh_bands(spark: SparkSession, sf_dir: str, path: str) -> None:
+    store = _SHINGLE_SIG.view(spark, sf_dir)
+    n_bands = NUM_MINHASHES // BAND_ROWS
+    row_refs = ", ".join(f"sig[b * {BAND_ROWS} + {r}]" for r in range(BAND_ROWS))
+    write_store(
         spark.sql(f"""
             SELECT doc_id, band, bucket
             FROM {store}
             LATERAL VIEW posexplode(
               transform(sequence(0, {n_bands - 1}), b -> hash({row_refs}))
             ) t AS band, bucket
-        """).write.mode("overwrite").parquet(path)
-        _BAND_STORE_DIR[key] = path
-    name = f"bdi_lsh_bands_{abs(hash(key)) % 10**8}"
-    spark.read.parquet(path).createOrReplaceTempView(name)
-    _BAND_VIEWS[key] = name
-    return name
+        """),
+        path,
+    )
+
+
+_LSH_BANDS = SessionParquetStore("lsh_bands", _build_lsh_bands)
 
 
 # (doc_a, doc_b) exact-Jaccard pair graph (J >= tau), materialized once
 # per (session, sf_dir) from the signature store — the verify stage's
 # output relation, consumed by downstream clustering.
-_PAIR_STORE_DIR: dict[tuple[str, str], str] = {}
-_PAIR_STORE_DF: dict[tuple[str, str], DataFrame] = {}
-
-
-def jaccard_pairs_store(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    df = _PAIR_STORE_DF.get(key)
-    if df is not None and df.sparkSession is spark:
-        return df
-    path = _PAIR_STORE_DIR.get(key)
-    if path is None:
-        path = session_store_dir("jaccard_pairs")
-        pc = shingle_pair_counts_view(spark, sf_dir)
+_JACCARD_PAIRS = SessionParquetStore(
+    "jaccard_pairs",
+    lambda spark, sf_dir, path: write_store(
         spark.sql(
-            f"SELECT doc_a, doc_b FROM {pc} "
+            f"SELECT doc_a, doc_b FROM {_PAIR_COUNTS.view(spark, sf_dir)} "
             f"WHERE i * 1.0D / (na + nb - i) >= {JACCARD_TAU}"
-        ).write.mode("overwrite").parquet(path)
-        _PAIR_STORE_DIR[key] = path
-    df = spark.read.parquet(path)
-    _PAIR_STORE_DF[key] = df
-    return df
+        ),
+        path,
+    ),
+)
 
 
-# SimHash analogue of shingle_sig_store: (doc_id, simhash) materialized
+# SimHash analogue of the shingle signature store: (doc_id, simhash) materialized
 # once per (session, sf_dir). Consumed by the banded candidate stage;
 # dedup_simhash itself is the signature-build query and stays live.
-_SIMHASH_STORE_DIR: dict[tuple[str, str], str] = {}
-_SIMHASH_VIEWS: dict[tuple[str, str], str] = {}
-_SIMHASH_STORE_DF: dict[tuple[str, str], DataFrame] = {}
-
-
-def simhash_sig_store(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    df = _SIMHASH_STORE_DF.get(key)
-    if df is not None and df.sparkSession is spark:
-        return df
-    path = _SIMHASH_STORE_DIR.get(key)
-    if path is None:
-        path = session_store_dir("simhash_sig")
-        _simhash_sig(spark, sf_dir).write.mode("overwrite").parquet(path)
-        _SIMHASH_STORE_DIR[key] = path
-    df = spark.read.parquet(path)
-    _SIMHASH_STORE_DF[key] = df
-    return df
+_SIMHASH_SIG = SessionParquetStore(
+    "simhash_sig",
+    lambda spark, sf_dir, path: write_store(_simhash_sig(spark, sf_dir), path),
+)
 
 
 _SIMHASH_SQL = (
@@ -909,7 +809,7 @@ def dedup_cluster_cc(spark: SparkSession, sf_dir: str) -> DataFrame:
     # reads the signature store — the staged dataflow of a real dedup
     # pipeline (sign → candidate → verify → cluster), each stage
     # persisting its relation for the next.
-    pairs = jaccard_pairs_store(spark, sf_dir)
+    pairs = _JACCARD_PAIRS.df(spark, sf_dir)
     return (
         cc_labels(pairs, "doc_a", "doc_b")
         .select(F.col("id").alias("doc_id"), F.col("label").alias("cluster"))
@@ -941,14 +841,7 @@ def dedup_simhash_banded(spark: SparkSession, sf_dir: str) -> DataFrame:
     # store (signatures are corpus state — dedup_simhash, the signature
     # BUILD query, stays live and keeps paying the full compute).
     # Single-SQL over a store view (one driver round-trip).
-    key = (spark.sparkContext.applicationId, sf_dir)
-    view = _SIMHASH_VIEWS.get(key)
-    if view is None:
-        view = f"bdi_simhash_sig_{abs(hash(key)) % 10**8}"
-        simhash_sig_store(spark, sf_dir).createOrReplaceTempView(view)
-        _SIMHASH_VIEWS[key] = view
-    elif not spark.catalog.tableExists(view):  # sibling newSession()
-        simhash_sig_store(spark, sf_dir).createOrReplaceTempView(view)
+    view = _SIMHASH_SIG.view(spark, sf_dir)
     band_arr = ", ".join(
         f"shiftright(simhash, {8 * b}) & {0xFF}" for b in range(SIMHASH_BANDS)
     )
@@ -1011,7 +904,7 @@ def _containment_oracle() -> str:
 def q104_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # row-local filter+project over the shared pair-count store (the
     # expensive shingle self-join runs once per session, not per screen)
-    view = shingle_pair_counts_view(spark, sf_dir)
+    view = _PAIR_COUNTS.view(spark, sf_dir)
     return spark.sql(f"""
         SELECT doc_a, doc_b,
                FLOOR(i * 1.0D / na * 1e4 + 0.5) / 1e4 AS cont_ab,
@@ -1081,8 +974,8 @@ def dedup_delta_vs_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     # delta-bounded candidate set and intersects ROW-LOCALLY — the corpus
     # is never exploded or re-shingled, preserving the O(delta) contract
     # (plan pinned by tests/test_plans.py: no Generate explode(shingles)).
-    store = shingle_sig_view(spark, sf_dir)
-    bands = lsh_band_view(spark, sf_dir)
+    store = _SHINGLE_SIG.view(spark, sf_dir)
+    bands = _LSH_BANDS.view(spark, sf_dir)
     return spark.sql(f"""
         WITH cand AS (
           SELECT /*+ BROADCAST(d) */ DISTINCT
@@ -1241,7 +1134,7 @@ def _span_align_oracle() -> str:
 def dedup_span_align(spark: SparkSession, sf_dir: str) -> DataFrame:
     from bigdataindexing_spark.tables import table_view
 
-    pc = shingle_pair_counts_view(spark, sf_dir)
+    pc = _PAIR_COUNTS.view(spark, sf_dir)
     docs = table_view(spark, sf_dir, "documents")
     return spark.sql(f"""
         WITH pairs AS (

@@ -18,7 +18,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
-from bigdataindexing_spark.sources.store_dirs import session_store_dir
+from bigdataindexing_spark.sources.store_dirs import SessionParquetStore, write_store
 
 from bigdataindexing_spark.functions.text import tokens
 from bigdataindexing_spark.registry import register
@@ -817,36 +817,27 @@ def q110_train_shard_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --- materialized sketch store -----------------------------------------
-# (applicationId, sf_dir) -> parquet dir of per-shard HLL sketches over
-# events(user_id) keyed by event_type. Built once per session: at 100 TB
-# each ingest shard summarizes its own users into a kilobyte-sized
-# Datasketches HLL once, and every later cardinality question is a union
-# of sketches — never a rescan of raw events. Sketch union is exact with
+# Per-shard HLL sketches over events(user_id) keyed by event_type. Built
+# once per session: at 100 TB each ingest shard summarizes its own users
+# into a kilobyte-sized Datasketches HLL once, and every later cardinality
+# question is a union of sketches — never a rescan of raw events. Sketch union is exact with
 # respect to the sketch (register-wise max, order-independent), so the
 # merged estimate EQUALS the single-pass estimate — the mergeability
 # contract tests/test_pipeline_ops.py asserts bit-for-bit.
-_SKETCH_STORE_DIR: dict[tuple[str, str], str] = {}
-
 SKETCH_SHARDS = 8
 
 
-def hll_sketch_store(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    path = _SKETCH_STORE_DIR.get(key)
-    if path is None:
-        path = session_store_dir("hll_sketch")
-        (
-            table(spark, sf_dir, "events")
-            .withColumn(
-                "shard", (F.col("event_id") % SKETCH_SHARDS).cast("int")
-            )
-            .groupBy("shard", "event_type")
-            .agg(F.hll_sketch_agg("user_id").alias("sketch"))
-            .write.mode("overwrite")
-            .parquet(path)
-        )
-        _SKETCH_STORE_DIR[key] = path
-    return spark.read.parquet(path)
+def _build_hll_sketches(spark: SparkSession, sf_dir: str, path: str) -> None:
+    write_store(
+        table(spark, sf_dir, "events")
+        .withColumn("shard", (F.col("event_id") % SKETCH_SHARDS).cast("int"))
+        .groupBy("shard", "event_type")
+        .agg(F.hll_sketch_agg("user_id").alias("sketch")),
+        path,
+    )
+
+
+_HLL_SKETCHES = SessionParquetStore("hll_sketch", _build_hll_sketches)
 
 
 @register(
@@ -867,7 +858,7 @@ def hll_sketch_store(spark: SparkSession, sf_dir: str) -> DataFrame:
     "path (q32) are its registered siblings.",
 )
 def q113_hll_sketch_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
-    store = hll_sketch_store(spark, sf_dir)
+    store = _HLL_SKETCHES.df(spark, sf_dir)
     return (
         store.groupBy("event_type")
         .agg(

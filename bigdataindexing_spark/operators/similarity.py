@@ -31,7 +31,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
-from bigdataindexing_spark.sources.store_dirs import SessionParquetStore
+from bigdataindexing_spark.sources.store_dirs import SessionParquetStore, write_store
 
 from bigdataindexing_spark.functions.vectors import as_double, cosine
 from bigdataindexing_spark.registry import register
@@ -205,25 +205,11 @@ def lsh_signatures(emb: DataFrame, dim: int) -> DataFrame:
 # session-rebind and stale-dir hazards once for every tier.
 _SIG_STORE = SessionParquetStore(
     "lsh_sig",
-    lambda spark, sf_dir: lsh_signatures(
-        spread(table(spark, sf_dir, "embeddings"), heavy=True), 64
+    lambda spark, sf_dir, path: write_store(
+        lsh_signatures(spread(table(spark, sf_dir, "embeddings"), heavy=True), 64),
+        path, "tbl", "bucket",
     ),
-    sort_cols=("tbl", "bucket"),
 )
-
-
-def lsh_signature_dir(spark: SparkSession, sf_dir: str, dim: int = 64) -> str:
-    assert dim == 64, "the materialized signature store is 64-dim"
-    return _SIG_STORE.dir(spark, sf_dir)
-
-
-def lsh_signature_index(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _SIG_STORE.df(spark, sf_dir)
-
-
-def lsh_signature_view(spark: SparkSession, sf_dir: str) -> str:
-    """Session temp view over the signature index, for single-SQL serves."""
-    return _SIG_STORE.view(spark, sf_dir)
 
 
 # Band-POSTINGS store: (tbl, bucket, members ARRAY<BIGINT>) — the
@@ -235,25 +221,13 @@ def lsh_signature_view(spark: SparkSession, sf_dir: str) -> str:
 # uses, applied to LSH banding (VERDICT r6 #2).
 _POST_STORE = SessionParquetStore(
     "lsh_postings",
-    lambda spark, sf_dir: (
-        lsh_signature_index(spark, sf_dir)
+    lambda spark, sf_dir, path: write_store(
+        _SIG_STORE.df(spark, sf_dir)
         .groupBy("tbl", "bucket")
-        .agg(F.sort_array(F.collect_list("vec_id")).alias("members"))
+        .agg(F.sort_array(F.collect_list("vec_id")).alias("members")),
+        path, "tbl", "bucket",
     ),
-    sort_cols=("tbl", "bucket"),
 )
-
-
-def lsh_postings_dir(spark: SparkSession, sf_dir: str) -> str:
-    return _POST_STORE.dir(spark, sf_dir)
-
-
-def lsh_postings_index(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _POST_STORE.df(spark, sf_dir)
-
-
-def lsh_postings_view(spark: SparkSession, sf_dir: str) -> str:
-    return _POST_STORE.view(spark, sf_dir)
 
 
 # Bucket-cardinality sidecar: (tbl, bucket, n) — fixed-width rows, row
@@ -267,17 +241,13 @@ def lsh_postings_view(spark: SparkSession, sf_dir: str) -> str:
 # hash-compares the postings store's exact 3-column shape.
 _BUCKET_STATS_STORE = SessionParquetStore(
     "lsh_bucket_stats",
-    lambda spark, sf_dir: (
-        lsh_signature_index(spark, sf_dir)
+    lambda spark, sf_dir, path: write_store(
+        _SIG_STORE.df(spark, sf_dir)
         .groupBy("tbl", "bucket")
-        .agg(F.count(F.lit(1)).alias("n"))
+        .agg(F.count(F.lit(1)).alias("n")),
+        path, "tbl", "bucket",
     ),
-    sort_cols=("tbl", "bucket"),
 )
-
-
-def lsh_bucket_stats_view(spark: SparkSession, sf_dir: str) -> str:
-    return _BUCKET_STATS_STORE.view(spark, sf_dir)
 
 
 # --- Incremental ANN index maintenance ---------------------------------------
@@ -292,7 +262,7 @@ def lsh_bucket_stats_view(spark: SparkSession, sf_dir: str) -> str:
 # contract idx_postings_merge carries for the inverted text index.
 _BASE_POST_STORE = SessionParquetStore(
     "lsh_base_postings",
-    lambda spark, sf_dir: (
+    lambda spark, sf_dir, path: write_store(
         lsh_signatures(
             spread(table(spark, sf_dir, "embeddings"), heavy=True).filter(
                 F.col("vec_id") % 10 != 7
@@ -300,14 +270,10 @@ _BASE_POST_STORE = SessionParquetStore(
             64,
         )
         .groupBy("tbl", "bucket")
-        .agg(F.sort_array(F.collect_list("vec_id")).alias("members"))
+        .agg(F.sort_array(F.collect_list("vec_id")).alias("members")),
+        path, "tbl", "bucket",
     ),
-    sort_cols=("tbl", "bucket"),
 )
-
-
-def lsh_base_postings_dir(spark: SparkSession, sf_dir: str) -> str:
-    return _BASE_POST_STORE.dir(spark, sf_dir)
 
 
 # Full-fidelity duckdb oracle for the LSH pipeline: the hyperplanes are
@@ -379,7 +345,7 @@ SELECT qid, neighbor_id FROM found UNION ALL SELECT qid, neighbor_id FROM fb ORD
     "hyperplane buckets, OR-construction): candidates = vectors sharing "
     "any table bucket with the query; queries whose buckets are empty fall "
     "back to brute force so the result is total. No quadratic stage; "
-    "serve probes the session band-POSTINGS store (lsh_postings_dir — "
+    "serve probes the session band-POSTINGS store (_POST_STORE — "
     "the signature index inverted at build, <= tables×2^bits rows) with "
     "the query's bucket keys and exact-reranks only the matched member "
     "lists — signatures are never recomputed and the corpus-sized "
@@ -438,15 +404,15 @@ def sim_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     # up front lets the serve plan DROP the anti-join + broadcast-
     # nested-loop fallback branch entirely on the (typical) all-found
     # path: the r9 plan's 9 exchanges / ~8 serial broadcast jobs shrink
-    # to probe->rerank->agg (see PLANS.md). When queries ARE missing,
+    # to probe->rerank->agg (see tests/golden_plans.json). When queries ARE missing,
     # the brute-force branch comes back scoped to literal qids,
     # semantics unchanged.
     from bigdataindexing_spark.tables import table_view
 
     emb_view = table_view(spark, sf_dir, "embeddings")
-    post_view = lsh_postings_view(spark, sf_dir)
-    sig_view = lsh_signature_view(spark, sf_dir)
-    stats_view = lsh_bucket_stats_view(spark, sf_dir)
+    post_view = _POST_STORE.view(spark, sf_dir)
+    sig_view = _SIG_STORE.view(spark, sf_dir)
+    stats_view = _BUCKET_STATS_STORE.view(spark, sf_dir)
     fetched = spark.sql(f"""
         WITH qs AS (SELECT vec_id, tbl, bucket FROM {sig_view}
                     WHERE vec_id < {N_QUERIES})
@@ -1032,23 +998,14 @@ PQ_M = 8          # subvectors per embedding (64 dims -> 8 x 8)
 PQ_K = 16         # centroids per sub-codebook (4-bit codes)
 PQ_SHORTLIST = 50  # ADC shortlist size fed to the exact reranker
 
-# (applicationId, sf_dir) -> (codes parquet dir, codebooks)
-_PQ_STORE: dict[tuple[str, str], tuple[str, list]] = {}
-
-
-def _pq_store(spark: SparkSession, sf_dir: str) -> tuple[str, list]:
+def _build_pq_codes(spark: SparkSession, sf_dir: str, path: str) -> list:
     """Train per-subspace codebooks (deterministic Lloyd's on the same
     bounded driver sample the IVF quantizer uses) and materialize the
     corpus code table once per session — codes are a corpus property,
-    the same build-once/serve-many policy as every other store."""
+    the same build-once/serve-many policy as every other store. The
+    codebooks are the store's driver-side metadata."""
     import numpy as np
 
-    from bigdataindexing_spark.sources.store_dirs import session_store_dir
-
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _PQ_STORE.get(key)
-    if cached is not None:
-        return cached
     emb = table(spark, sf_dir, "embeddings")
     sample = (
         emb.select("vec_id", as_double("embedding").alias("v"))
@@ -1092,12 +1049,16 @@ def _pq_store(spark: SparkSession, sf_dir: str) -> tuple[str, list]:
                 {"vec_id": pdf["vec_id"], "codes": list(codes)}
             )
 
-    path = session_store_dir("pq_codes")
-    emb.select("vec_id", "embedding").mapInPandas(
-        encode, "vec_id BIGINT, codes ARRAY<INT>"
-    ).write.mode("overwrite").parquet(path)
-    _PQ_STORE[key] = (path, books)
-    return path, books
+    write_store(
+        emb.select("vec_id", "embedding").mapInPandas(
+            encode, "vec_id BIGINT, codes ARRAY<INT>"
+        ),
+        path,
+    )
+    return books
+
+
+_PQ_CODES = SessionParquetStore("pq_codes", _build_pq_codes)
 
 
 _D_SUB = EMB_DIM // PQ_M
@@ -1245,8 +1206,8 @@ adc AS (
 def sim_ann_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     import numpy as np
 
-    path, books = _pq_store(spark, sf_dir)
-    codes = spark.read.parquet(path)
+    codes = _PQ_CODES.df(spark, sf_dir)
+    books = _PQ_CODES.meta(spark, sf_dir)
     emb = table(spark, sf_dir, "embeddings")
     d_sub = len(books[0][0])
     qrows = (
@@ -1339,8 +1300,8 @@ def sim_ann_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = spread(table(spark, sf_dir, "embeddings"))
     centroids = train_centroids(emb)
     cells = assign_cells(emb, centroids)
-    path, books = _pq_store(spark, sf_dir)
-    codes = spark.read.parquet(path).join(cells, "vec_id")
+    codes = _PQ_CODES.df(spark, sf_dir).join(cells, "vec_id")
+    books = _PQ_CODES.meta(spark, sf_dir)
     d_sub = len(books[0][0])
 
     # driver-side per-query prep, bounded to N_QUERIES rows: nprobe
@@ -1519,7 +1480,7 @@ def sim_ann_store_freshness(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("tbl", "bucket")
         .agg(F.sort_array(F.collect_list("vec_id")).alias("members"))
     )
-    stored = lsh_postings_index(spark, sf_dir)
+    stored = _POST_STORE.df(spark, sf_dir)
     keys = ["tbl", "bucket", "members"]
     drift = fresh.join(stored, keys, "left_anti").unionByName(
         stored.join(fresh, keys, "left_anti")

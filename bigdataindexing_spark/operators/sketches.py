@@ -28,7 +28,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from bigdataindexing_spark.registry import register
-from bigdataindexing_spark.sources.store_dirs import SessionParquetStore
+from bigdataindexing_spark.sources.store_dirs import SessionParquetStore, write_store
 from bigdataindexing_spark.tables import bounded_sort, table_view
 
 # --- Bloom-filter decontamination -------------------------------------------
@@ -215,16 +215,9 @@ def _build_cms(spark: SparkSession, sf_dir: str):
 
 
 _CMS_STORE = SessionParquetStore(
-    "cms_counters", _build_cms, sort_cols=("d", "w")
+    "cms_counters",
+    lambda spark, sf_dir, path: write_store(_build_cms(spark, sf_dir), path, "d", "w"),
 )
-
-
-def cms_counters_dir(spark: SparkSession, sf_dir: str) -> str:
-    return _CMS_STORE.dir(spark, sf_dir)
-
-
-def cms_counters_view(spark: SparkSession, sf_dir: str) -> str:
-    return _CMS_STORE.view(spark, sf_dir)
 
 
 _CMS_ORACLE = f"""
@@ -268,7 +261,7 @@ GROUP BY p.t, p.c ORDER BY true_cnt DESC, token
 )
 def txt_cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = table_view(spark, sf_dir, "documents")
-    cms = cms_counters_view(spark, sf_dir)
+    cms = _CMS_STORE.view(spark, sf_dir)
     out = spark.sql(f"""
         WITH tok AS (
           SELECT explode(split(lower(text), ' ')) AS t FROM {docs}
@@ -307,12 +300,11 @@ def _build_quantile_hist(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _QH_STORE = SessionParquetStore(
-    "quantile_hist", _build_quantile_hist, sort_cols=("source", "bin")
+    "quantile_hist",
+    lambda spark, sf_dir, path: write_store(
+        _build_quantile_hist(spark, sf_dir), path, "source", "bin"
+    ),
 )
-
-
-def quantile_hist_view(spark: SparkSession, sf_dir: str) -> str:
-    return _QH_STORE.view(spark, sf_dir)
 
 
 _QH_SERVE = """
@@ -359,7 +351,7 @@ ORDER BY q
     "identical.",
 )
 def q119_quantile_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
-    view = quantile_hist_view(spark, sf_dir)
+    view = _QH_STORE.view(spark, sf_dir)
     out = spark.sql(
         _QH_SERVE.format(src=view, w=QH_W).rsplit("ORDER BY q", 1)[0]
     )
@@ -456,7 +448,10 @@ def _build_adaptive_hist(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _AQ_STORE = SessionParquetStore(
-    "adaptive_quantile_hist", _build_adaptive_hist, sort_cols=("source", "bin")
+    "adaptive_quantile_hist",
+    lambda spark, sf_dir, path: write_store(
+        _build_adaptive_hist(spark, sf_dir), path, "source", "bin"
+    ),
 )
 
 # serve: merge partials by addition, rank into the covering refined bin,

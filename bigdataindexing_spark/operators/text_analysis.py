@@ -532,10 +532,14 @@ def _build_bigram_lm(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 from bigdataindexing_spark.sources.store_dirs import (  # noqa: E402
     SessionParquetStore,
+    write_store,
 )
 
 _BIGRAM_LM_STORE = SessionParquetStore(
-    "bigram_lm", _build_bigram_lm, sort_cols=("a", "b")
+    "bigram_lm",
+    lambda spark, sf_dir, path: write_store(
+        _build_bigram_lm(spark, sf_dir), path, "a", "b"
+    ),
 )
 
 

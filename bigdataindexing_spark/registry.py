@@ -61,262 +61,11 @@ def register(
     return deco
 
 
-# Queries that already earned a green driver CORRECTNESS row (rounds 1+2).
-# The driver's per-round correctness sweep verifies the FIRST ~50 entries of
-# queries() in order, so all_specs() surfaces not-yet-driver-verified queries
-# first (new + previously-outside-the-window ones), then never-checked
-# no-oracle contracts (rows-only check), and the already-proven set last.
-# Registration order is preserved within each tier.
-_R01_VERIFIED = frozenset(
-    {
-        "q00_match_all", "q01_exact_match", "q02_wildcard", "q03_range",
-        "q04_join_2way", "q05_semi_join", "q06_anti_join",
-        "q07_nested_inner_hits", "q08_multiway_chain", "q09_tpch_q1",
-        "q10_count_distinct", "q11_rollup", "q12_row_number", "q13_lag",
-        "q14_running_sum", "q15_topk", "q16_union", "q17_intersect",
-        "q18_key_concat", "q19_date_extract", "q30_theta_join", "q31_cube",
-        "q32_approx_distinct", "q33_asof_join", "q40_key_parse",
-        "q41_array_ops", "q45_percentiles", "q46_pivot", "q47_ntile",
-        "q48_first_last_value", "q49_string_funcs", "q50_filtered_agg",
-        "q21_array_explode", "q22_json_extract", "q23_tumbling_window",
-        "q27_map_functions", "q26_token_count", "txt_quality_score",
-        "txt_langid", "txt_fingerprint", "txt_bpe_tokens", "txt_normalize",
-        "q24_distinct_text_count", "dedup_exact",
-        "dedup_minhash_lsh", "dedup_simhash", "dedup_simhash_pairs",
-        "q25_ann_bruteforce", "sim_cosine_neardup",
-    }
-)
-
-# Green driver rows from CORRECTNESS_r02.json (everything checked in round 2
-# except the two hash-fails q67/q90, which ride the recheck tier below).
-_R02_VERIFIED = frozenset(
-    {
-        "q34_sql_tpch_q3", "q35_sql_tpch_q5", "q36_sql_exists",
-        "q37_sql_having", "q38_sql_scalar_subquery",
-        "q51_sql_correlated_scalar", "q52_sql_grouping_sets",
-        "idx_term_lookup", "idx_top_terms", "idx_delete_anti_join",
-        "idx_tfidf_search", "idx_phrase_query", "mm_binary_meta",
-        "mm_frame_sample", "mm_decode_stats", "q28_sliding_window",
-        "q29_session_window", "q42_grouped_udaf_geomean", "q43_group_zscore",
-        "sim_ann_label_partition", "st1_stream_index_build",
-        "st2_stream_tumbling", "st3_stream_sliding", "st6_stream_dedup",
-        "st7_stateful_sessionize", "q53_except", "q54_ntile_partitioned",
-        "q93_window_battery", "q94_fuzzy_match", "q58_variant_extract",
-        "q92_gap_fill_ffill", "txt_repetition", "dedup_cluster_cc",
-        "dedup_simhash_banded", "q73_knn_classify", "sim_semantic_clusters",
-        "q55_geomean_partial_agg", "q59_hash_split", "q60_stratified_sample",
-        "q61_quality_filter", "q62_token_histogram", "q68_embedding_quantize",
-        "q81_decontaminate", "q82_source_cap", "q83_lang_rebalance",
-    }
-)
-
-# Green driver rows from CORRECTNESS_r03.json (all 50 checked entries
-# passed — including the two round-2 hash-fails q67/q90 after the oracle
-# CAST fix).
-_R03_VERIFIED = frozenset(
-    {
-        "q56_sql_recursive_cte", "q57_sql_lateral_topk",
-        "q63_embedding_centroid", "q64_sql_tpch_q10", "q65_sql_tpch_q12",
-        "q66_sql_tpch_q14", "q70_event_funnel", "q71_cohort_retention",
-        "q72_sql_tpch_q22", "q74_sql_tpch_q6", "q75_sql_tpch_q13",
-        "q76_sql_tpch_q7", "q77_sql_tpch_q17", "q78_sql_tpch_q19",
-        "q79_sql_tpch_q15", "q80_sql_tpch_q21", "q84_sql_tpch_q2",
-        "q85_sql_tpch_q8", "q86_sql_tpch_q9", "q87_sql_tpch_q11",
-        "q88_sql_tpch_q16", "q89_sql_tpch_q20", "q91_centroid_outliers",
-        "q95_profile_columns", "q97_chunk_windows", "udtf_char_shingles",
-        "idx_bm25_search", "st8_stream_stream_join", "st9_stream_lsh_dedup",
-        "q98_sequence_pack_sharded", "q99_budget_select_sharded",
-        "q111_minmax_skipping", "idx_postings_merge", "q104_containment_pairs",
-        "q67_sequence_pack", "q90_budget_select", "q39_salted_agg",
-        "q44_rollup_serve", "q96_salted_join", "dedup_ngram_jaccard",
-        "dedup_minhash_lsh", "dedup_cluster_cc", "sim_semantic_clusters",
-        "dedup_simhash_banded", "idx_tfidf_search", "q22_json_extract",
-        "q25_ann_bruteforce", "q73_knn_classify", "q43_group_zscore",
-        "q42_grouped_udaf_geomean",
-    }
-)
-
-# Green oracle rows from CORRECTNESS_r04.json (31 of the 50 checked
-# entries carried oracles; the other 19 were rows-only contract checks
-# and stay outside the verified set).
-_R04_VERIFIED = frozenset(
-    {
-        "dedup_cluster_cc", "dedup_delta_vs_corpus", "dedup_minhash_lsh",
-        "dedup_ngram_jaccard", "dedup_span_fraction", "idx_bm25_search",
-        "idx_bm25_serve", "idx_postings_merge", "idx_store_freshness",
-        "idx_tfidf_search", "q100_unigram_logprob", "q101_weighted_sample",
-        "q102_rollup_merge", "q103_event_pattern", "q104_containment_pairs",
-        "q105_lang_top_bigrams", "q106_full_outer_reconcile",
-        "q107_range_frame_agg", "q108_event_transitions",
-        "q109_length_quartiles", "q110_train_shard_shuffle",
-        "q112_zorder_skipping", "q114_curation_pipeline",
-        "q115_pseudonymize_join", "q96_salted_join", "sim_semantic_clusters",
-        "src_layout_maintenance", "st10_stream_static_enrich",
-        "st11_stream_stream_outer", "txt_blocklist_scrub", "txt_keywords",
-    }
-)
-
-# Green oracle rows from CORRECTNESS_r05.json (32 of the 50 checked
-# entries carried oracles; the other 18 were rows-only contract checks).
-_R05_VERIFIED = frozenset(
-    {
-        "dedup_cluster_cc", "dedup_minhash_lsh", "dedup_ngram_jaccard",
-        "mm_binary_meta", "mm_decode_stats", "mm_frame_sample",
-        "q00_match_all", "q01_exact_match", "q02_wildcard", "q03_range",
-        "q04_join_2way", "q05_semi_join", "q06_anti_join",
-        "q07_nested_inner_hits", "q08_multiway_chain", "q09_tpch_q1",
-        "q104_containment_pairs", "q10_count_distinct", "q11_rollup",
-        "q12_row_number", "q13_lag", "q14_running_sum", "q15_topk",
-        "q80_sql_tpch_q21", "q84_sql_tpch_q2", "q87_sql_tpch_q11",
-        "sim_ann_lsh", "sim_semantic_clusters", "src_layout_maintenance",
-        "st11_stream_stream_outer", "st1_stream_index_build",
-        "udtf_char_shingles",
-    }
-)
-
-# Green oracle rows from CORRECTNESS_r06.json (48 of the 50 checked
-# entries carried oracles and hashed green; sim_ann_ivfpq and
-# q32_approx_distinct were rows-only).
-_R06_VERIFIED = frozenset(
-    {
-        "dedup_ngram_jaccard_raw", "st4_stream_session",
-        "src_layout_time_travel", "txt_char_entropy", "dedup_span_align",
-        "dedup_ngram_jaccard", "q104_containment_pairs",
-        "dedup_cluster_cc", "udtf_char_shingles", "mm_decode_stats",
-        "q80_sql_tpch_q21", "dedup_delta_vs_corpus", "dedup_minhash_lsh",
-        "sim_ann_lsh", "q87_sql_tpch_q11", "q84_sql_tpch_q2",
-        "mm_binary_meta", "mm_frame_sample", "q16_union", "q17_intersect",
-        "q18_key_concat", "q19_date_extract", "q21_array_explode",
-        "q23_tumbling_window", "q24_distinct_text_count",
-        "q26_token_count", "q27_map_functions", "q30_theta_join",
-        "q31_cube", "q33_asof_join", "q40_key_parse", "q41_array_ops",
-        "q45_percentiles", "q46_pivot", "q47_ntile",
-        "q48_first_last_value", "q49_string_funcs", "q50_filtered_agg",
-        "dedup_exact", "dedup_simhash", "dedup_simhash_pairs",
-        "sim_cosine_neardup", "txt_bpe_tokens", "txt_fingerprint",
-        "txt_langid", "txt_normalize", "txt_quality_score",
-        "idx_delete_anti_join",
-    }
-)
-
-_DRIVER_VERIFIED = (
-    _R01_VERIFIED | _R02_VERIFIED | _R03_VERIFIED | _R04_VERIFIED
-    | _R05_VERIFIED | _R06_VERIFIED
-)
-
-
-# Round-7 window (VERDICT r6 #8). The driver checks the FIRST ~50
-# entries of queries() in order. Priority tier 1: everything round 7
-# TOUCHED — the three trained-ANN entries that gained full hash oracles
-# (the round's headline), the restructured sim_ann_lsh serve, the new
-# vacuum-horizon lifecycle, the q89 bounded tail, the lazily-resolved
-# capped dedup oracles, and the layout entries whose commit path gained
-# put-if-absent. Tier 2: the r03-window greens never re-checked since
-# round 3, then the contract-only entries rotated back in after sitting
-# out round 6 (each also carries a pytest contract).
-_R07_PRIORITY = (
-    "q117_scd2_pit_join",       # NEW op: SCD2 point-in-time join
-                                # (X31), full hash oracle
-    "src_layout_merge_upsert",  # NEW op: copy-on-write MERGE (X32),
-                                # full hash oracle
-    "src_layout_cdc_read",      # NEW op: derived CDC read (X33),
-                                # full hash oracle
-    "st13_stream_scd2",         # NEW op: streaming SCD2 maintenance
-                                # (ST13), full hash oracle
-    "q118_pagerank",            # NEW op: PageRank centrality (X34),
-                                # full hash oracle
-    "q119_quantile_sketch",     # NEW op: mergeable quantile sketch
-                                # (X35), full hash oracle
-    "src_layout_schema_evolution",  # NEW op: metadata-only ADD COLUMN
-                                # (X36), full hash oracle
-    "st14_stream_cdc_apply",    # NEW op: streaming CDC apply, version-
-                                # gated exactly-once (ST14), full oracle
-    "src_layout_mor_read",      # NEW op: merge-on-read layout (X37),
-                                # full hash oracle
-    "q120_bucketed_join",       # NEW op: zero-exchange bucketed join
-                                # (X38), full hash oracle
-    "q121_partition_pruning",   # NEW op: Hive-style partition pruning
-                                # (X39), full hash oracle
-    "q122_dpp_star_join",       # NEW op: dynamic partition pruning
-                                # (X40), full hash oracle
-    "q123_interval_overlap",    # NEW op: interval-overlap join (X41),
-                                # full hash oracle
-    "q124_unpivot",             # NEW op: wide->long reshape (X42),
-                                # full hash oracle
-    "st15_stream_quantile",     # NEW op: streaming quantile sketch
-                                # (ST15), full hash oracle
-    "q125_dq_audit",            # NEW op: constraint audit (X43),
-                                # full hash oracle
-    "dedup_bloom_decontaminate",  # NEW op: Bloom-mask decontamination
-                                # (X27), full hash oracle
-    "txt_cms_heavy_hitters",    # NEW op: count-min-sketch heavy
-                                # hitters (X28), full hash oracle
-    "q116_scd2_intervals",      # NEW op: SCD2 temporal-dimension
-                                # build (X30), full hash oracle
-    "st12_stream_cms",          # NEW op: streaming CMS maintenance
-                                # (ST12), full hash oracle
-    "sim_ann_index_upsert",     # NEW op: incremental ANN postings
-                                # maintenance (X29), full hash oracle
-    "sim_ann_ivf",              # NEW full hash oracle (k-means rebuilt
-                                # in SQL under the 1e-9 quantization
-                                # contract — VERDICT r6 #1)
-    "sim_ann_pq",               # NEW full hash oracle (codebooks + ADC)
-    "sim_ann_ivfpq",            # NEW full hash oracle (composite)
-    "sim_ann_lsh",              # serve restructured onto the band-
-                                # postings store (VERDICT r6 #2)
-    "src_layout_vacuum_horizon",  # NEW: vacuum past retention in the
-                                # registered lifecycle (VERDICT r6 #6)
-    "q89_sql_tpch_q20",         # bounded-sort tail (VERDICT r6 #4)
-    "dedup_ngram_jaccard",      # oracle now resolves the df cap lazily
-    "q104_containment_pairs",   # (ADVICE r6) — re-evidence all four
-    "dedup_cluster_cc",
-    "dedup_span_align",
-    "src_layout_maintenance",   # commit_manifest now put-if-absent
-    "src_layout_time_travel",   # (ADVICE r6)
-)
-
-# Oldest-first re-checks: greens whose last driver check was round 3,
-# then the contract-only entries (rows-only) as window room allows.
-_R07_RECHECK = (
-    "q56_sql_recursive_cte", "q57_sql_lateral_topk",
-    "q63_embedding_centroid", "q64_sql_tpch_q10", "q65_sql_tpch_q12",
-    "q66_sql_tpch_q14", "q70_event_funnel", "q71_cohort_retention",
-    "q72_sql_tpch_q22", "q74_sql_tpch_q6", "q75_sql_tpch_q13",
-    "q76_sql_tpch_q7", "q77_sql_tpch_q17", "q78_sql_tpch_q19",
-    "q79_sql_tpch_q15", "q85_sql_tpch_q8", "q86_sql_tpch_q9",
-    "q88_sql_tpch_q16", "q91_centroid_outliers", "q95_profile_columns",
-    "q97_chunk_windows", "st8_stream_stream_join", "st9_stream_lsh_dedup",
-    "q98_sequence_pack_sharded", "q99_budget_select_sharded",
-    "q67_sequence_pack", "q90_budget_select", "q39_salted_agg",
-    # contract-only rows (rows-only driver check; pytest-contract-backed)
-    # rotated back in after sitting out round 6
-    "doc_roundtrip", "doc_validation_quarantine", "doc_merge_contract",
-    "doc_replace_contract", "doc_cascade_delete", "doc_etag",
-    "doc_precondition", "doc_schema_inference", "search_match",
-    "search_wildcard",
-)
-
-_R07_DEFER = frozenset()
-
-_PIN_POS = {n: i for i, n in enumerate(_R07_PRIORITY + _R07_RECHECK)}
-
-
-def _driver_tier(spec: QuerySpec) -> tuple[int, int]:
-    if spec.name in _PIN_POS:
-        return (0, _PIN_POS[spec.name])
-    if spec.name in _R07_DEFER:
-        return (2, -1)  # ahead of no-oracle contracts, behind the window
-    if spec.name in _DRIVER_VERIFIED:
-        return (3, 0)
-    return (1, 0) if spec.oracle is not None else (2, 0)
-
-
 def all_specs() -> dict[str, QuerySpec]:
+    """Every registered query: oracle-bearing queries first, then the
+    no-oracle contracts, each group in registration order."""
     _ensure_loaded()
-    pos = {name: i for i, name in enumerate(_REGISTRY)}
-    ordered = sorted(
-        _REGISTRY.values(), key=lambda s: (_driver_tier(s), pos[s.name])
-    )
+    ordered = sorted(_REGISTRY.values(), key=lambda s: s.oracle is None)
     return {s.name: s for s in ordered}
 
 

@@ -48,13 +48,14 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from bigdataindexing_spark.registry import register
-from bigdataindexing_spark.sources.store_dirs import session_store_dir
+from bigdataindexing_spark.sources.store_dirs import (
+    SessionParquetStore,
+    session_store_dir,
+)
 from bigdataindexing_spark.tables import bounded_sort, table
 
 DELTA_SPLIT = 250  # range boundary between files A and B
 DELTA_READ_HI = 200  # skipping-query upper bound (prunes B/B2 by stats)
-
-_TABLES: "dict[tuple[str, str], str]" = {}
 
 # table_dir -> parsed metaData schema (a Delta reader takes the schema
 # from the log's metaData action, never from parquet footers — besides
@@ -135,16 +136,9 @@ def _commit(table_dir: str, version: int, actions: "list[dict]") -> None:
     os.replace(tmp, path)
 
 
-def build_delta_table(spark: SparkSession, sf_dir: str) -> str:
-    """Build (once per session) the deterministic 3-commit test table."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _TABLES.get(key)
-    if cached is not None and os.path.isdir(
-        os.path.join(cached, "_delta_log")
-    ):
-        return cached
+def _build_delta_table(spark: SparkSession, sf_dir: str, table_dir: str) -> None:
+    """The deterministic 3-commit test table."""
     docs = table(spark, sf_dir, "documents")
-    table_dir = session_store_dir("delta_tbl")
     os.makedirs(os.path.join(table_dir, "_delta_log"), exist_ok=True)
 
     base = docs.filter(F.col("doc_id") % 3 == 0)
@@ -201,8 +195,17 @@ def build_delta_table(spark: SparkSession, sf_dir: str) -> str:
         if add_b2:
             v2_actions.append({"add": add_b2})
     _commit(table_dir, 2, v2_actions)
-    _TABLES[key] = table_dir
-    return table_dir
+
+
+def _open_snapshot(spark: SparkSession, table_dir: str, _meta) -> DataFrame:
+    """A Delta store's handle: the latest snapshot the log resolves, never
+    a scan of the data directory (which still holds removed files)."""
+    return read_delta_snapshot(spark, table_dir)
+
+
+_DELTA_TABLE = SessionParquetStore(
+    "delta_tbl", _build_delta_table, _open_snapshot
+)
 
 
 def delta_snapshot_files(
@@ -286,8 +289,7 @@ _LATEST_PRED = (
     "listing, is the authority.",
 )
 def src_delta_read(spark: SparkSession, sf_dir: str) -> DataFrame:
-    table_dir = build_delta_table(spark, sf_dir)
-    snap = read_delta_snapshot(spark, table_dir)
+    snap = _DELTA_TABLE.df(spark, sf_dir)
     out = snap.groupBy("lang").agg(
         F.count(F.lit(1)).alias("n_docs"),
         F.sum("n_chars").alias("chars"),
@@ -316,7 +318,7 @@ def src_delta_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     "homegrown-manifest algebra.",
 )
 def src_delta_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
-    table_dir = build_delta_table(spark, sf_dir)
+    table_dir = _DELTA_TABLE.dir(spark, sf_dir)
     # ONE shared scan serves all three versions (guide §2.3/§2.4 — the
     # q125 shared-scan discipline): the three snapshots' live-file sets
     # overlap heavily (v0 ⊂ v1 up to the delete rewrite), so instead of
@@ -378,7 +380,7 @@ def src_delta_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     "100 TB the skip decision is O(log) metadata, no footer reads.",
 )
 def src_delta_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
-    table_dir = build_delta_table(spark, sf_dir)
+    table_dir = _DELTA_TABLE.dir(spark, sf_dir)
     snap = read_delta_snapshot(
         spark, table_dir, doc_id_range=(0, DELTA_READ_HI)
     )
@@ -400,8 +402,6 @@ def src_delta_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
 # protocol itself.
 
 ST18_APP_ID = "bdi-st18-delta-sink"
-
-_STREAM_TABLES: "dict[tuple[str, str], tuple[str, str]]" = {}
 
 
 def delta_stream_sink_batch(table_dir: str, base_version: int):
@@ -426,23 +426,17 @@ def delta_stream_sink_batch(table_dir: str, base_version: int):
     return apply
 
 
-def build_stream_delta_table(spark: SparkSession, sf_dir: str) -> str:
+def _build_stream_delta_table(spark: SparkSession, sf_dir: str, table_dir: str) -> str:
     """v0 base write (doc_id % 4 = 0), then a 3-arrival stream appends
     the other residues through the exactly-once sink; final table =
-    every document."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _STREAM_TABLES.get(key)
-    if cached is not None and os.path.isdir(
-        os.path.join(cached[0], "_delta_log")
-    ):
-        return cached[0]
+    every document. Returns the arrival directory (the replay input),
+    kept inside the table directory so it goes when the store does."""
     from bigdataindexing_spark.streaming.core import (
         run_foreach_batch,
         write_arrivals,
     )
 
     docs = table(spark, sf_dir, "documents")
-    table_dir = session_store_dir("delta_stream_tbl")
     os.makedirs(os.path.join(table_dir, "_delta_log"), exist_ok=True)
     add0 = _write_data_file(
         docs.filter(F.col("doc_id") % 4 == 0), table_dir, "part-base.parquet"
@@ -465,7 +459,7 @@ def build_stream_delta_table(spark: SparkSession, sf_dir: str) -> str:
         ]
         + ([{"add": add0}] if add0 else []),
     )
-    src = session_store_dir("delta_stream_src")
+    src = os.path.join(table_dir, "_arrivals")
     write_arrivals(
         [docs.filter(F.col("doc_id") % 4 == r) for r in (1, 2, 3)], src
     )
@@ -475,8 +469,12 @@ def build_stream_delta_table(spark: SparkSession, sf_dir: str) -> str:
         .parquet(src)
     )
     run_foreach_batch(stream, delta_stream_sink_batch(table_dir, 0))
-    _STREAM_TABLES[key] = (table_dir, src)
-    return table_dir
+    return src
+
+
+_STREAM_DELTA_TABLE = SessionParquetStore(
+    "delta_stream_tbl", _build_stream_delta_table, _open_snapshot
+)
 
 
 @register(
@@ -500,8 +498,7 @@ def build_stream_delta_table(spark: SparkSession, sf_dir: str) -> str:
     "time-travel readable.",
 )
 def st18_stream_delta_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
-    table_dir = build_stream_delta_table(spark, sf_dir)
-    snap = read_delta_snapshot(spark, table_dir)
+    snap = _STREAM_DELTA_TABLE.df(spark, sf_dir)
     out = snap.groupBy("lang").agg(
         F.count(F.lit(1)).alias("n_docs"),
         F.sum("n_chars").alias("chars"),

@@ -21,6 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from bigdataindexing_spark.sources.store_dirs import SessionParquetStore
 from bigdataindexing_spark.tables import table
 
 N_BUCKETS = 8
@@ -92,25 +93,9 @@ def bucketed_join(spark: SparkSession, db: str = "bdi") -> DataFrame:
 _BUCKETED_SF: dict[str, str] = {}
 
 
-# (applicationId, sf_dir) -> partitioned-orders layout dir (build once
-# per session; a fresh dir per build, so no cross-sf staleness)
-_PARTITIONED: dict[tuple[str, str], str] = {}
-
-
-def _partitioned_orders(spark: SparkSession, sf_dir: str) -> str:
-    from bigdataindexing_spark.sources.store_dirs import session_store_dir
-
-    import os
-
-    key = (spark.sparkContext.applicationId, sf_dir)
-    path = _PARTITIONED.get(key)
-    # re-validate like SessionParquetStore.dir: a store dir reclaimed
-    # externally (tmp cleanup) must rebuild, not error (ADVICE r7)
-    if path is None or not os.path.isdir(path):
-        path = session_store_dir("partitioned_orders")
-        write_partitioned_orders(spark, sf_dir, path)
-        _PARTITIONED[key] = path
-    return path
+_PARTITIONED_ORDERS = SessionParquetStore(
+    "partitioned_orders", write_partitioned_orders
+)
 
 
 def _register() -> None:
@@ -175,9 +160,8 @@ def _register() -> None:
         "pruned path against the plain full-scan oracle.",
     )
     def q121_partition_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
-        path = _partitioned_orders(spark, sf_dir)
         out = (
-            read_orders_year(spark, path, 1996)
+            read_orders_year(spark, _PARTITIONED_ORDERS.dir(spark, sf_dir), 1996)
             .groupBy(F.date_format("o_orderdate", "yyyy-MM").alias("month"))
             .agg(
                 F.count(F.lit(1)).alias("n_orders"),
@@ -212,8 +196,7 @@ def _register() -> None:
         "inlined oracle.",
     )
     def q122_dpp_star_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-        path = _partitioned_orders(spark, sf_dir)
-        fact = spark.read.parquet(path)
+        fact = _PARTITIONED_ORDERS.df(spark, sf_dir)
         years = (
             fact.select(F.col("o_year").alias("y"))
             .distinct()

@@ -39,20 +39,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from bigdataindexing_spark.registry import register
-from bigdataindexing_spark.sources.store_dirs import session_store_dir
+from bigdataindexing_spark.sources.store_dirs import SessionParquetStore
 from bigdataindexing_spark.tables import bounded_sort, table
 
 N_CLUSTER_FILES = 16
-
-# (applicationId, sf_dir) -> (layout dir, manifest rows) of the shipdate-
-# clustered lineitem layout. Built once per session (a layout is a property
-# of the table, not of any one query) — same build-once/serve-many policy as
-# the inverted index and the LSH signature store. The manifest is harvested
-# ONCE, right after the layout write, by the distributed footer pass and
-# kept driver-side: that is exactly how Delta/Iceberg serve planning — the
-# scan planner replays file stats from the transaction log, it never
-# re-reads footers per query. Manifest size is O(files), never O(rows).
-_CLUSTERED_DIR: dict[tuple[str, str], tuple[str, list[dict]]] = {}
 
 
 def _footer_stats(col: str):
@@ -102,21 +92,14 @@ def file_stats_manifest(
     return paths.mapInPandas(_footer_stats(col), schema)
 
 
-def clustered_lineitem_layout(
-    spark: SparkSession, sf_dir: str
-) -> tuple[str, list[dict]]:
-    """Materialize (once per session) lineitem range-clustered by
-    l_shipdate into N_CLUSTER_FILES files, plus its file-stats manifest.
+def _build_clustered(spark: SparkSession, sf_dir: str, path: str) -> list[dict]:
+    """Lineitem range-clustered by l_shipdate into N_CLUSTER_FILES files;
+    returns its file-stats manifest.
 
     The manifest is harvested by ONE distributed footer pass at write time
     and collect()ed — bounded by FILE COUNT, the same driver-side metadata
     a table format replays from its log — so query planning later consults
     a list, not a Spark job."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _CLUSTERED_DIR.get(key)
-    if cached is not None:
-        return cached
-    path = session_store_dir("clustered_lineitem")
     (
         table(spark, sf_dir, "lineitem")
         .repartitionByRange(N_CLUSTER_FILES, F.col("l_shipdate"))
@@ -128,18 +111,24 @@ def clustered_lineitem_layout(
         for f in os.listdir(path)
         if f.endswith(".parquet")
     ]
-    manifest = [
+    return [
         r.asDict()
         for r in file_stats_manifest(
             spark, files, "l_shipdate", "date"
         ).collect()
     ]
-    _CLUSTERED_DIR[key] = (path, manifest)
-    return path, manifest
 
 
-def clustered_lineitem_dir(spark: SparkSession, sf_dir: str) -> str:
-    return clustered_lineitem_layout(spark, sf_dir)[0]
+# The shipdate-clustered lineitem layout is a session store whose
+# metadata is its manifest rows. Built once per session (a layout is a
+# property of the table, not of any one query) — same build-once/serve-many
+# policy as the inverted index and the LSH signature store. The manifest is
+# harvested ONCE, right after the layout write, by the distributed footer
+# pass and kept driver-side: that is exactly how Delta/Iceberg serve
+# planning — the scan planner replays file stats from the transaction log,
+# it never re-reads footers per query. Manifest size is O(files), never
+# O(rows).
+_CLUSTERED = SessionParquetStore("clustered_lineitem", _build_clustered)
 
 
 def pruned_files(
@@ -148,7 +137,7 @@ def pruned_files(
     """Plan-time pruning: intersect the range predicate with the cached
     manifest — pure driver-side work over O(files) rows, no Spark job
     (the scan-planning step of a table format's data skipping)."""
-    _path, manifest = clustered_lineitem_layout(spark, sf_dir)
+    manifest = _CLUSTERED.meta(spark, sf_dir)
     keep = manifest_keep(manifest, lo, hi)
     return keep, len(manifest)
 
@@ -218,7 +207,7 @@ def q111_minmax_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     src = (
         spark.read.parquet(*keep)
         if keep
-        else spark.read.parquet(clustered_lineitem_dir(spark, sf_dir))
+        else spark.read.parquet(_CLUSTERED.dir(spark, sf_dir))
     )
     return (
         src.filter(
@@ -256,8 +245,6 @@ Z_FILES = 16
 Z_DATE_EPOCH = "1995-01-01"
 Z_DATE_SPAN = 2500  # days covered by the lineitem shipdate domain
 Z_QTY_MAX = 50
-
-_ZORDER_DIR: dict[tuple[str, str], tuple[str, list[dict]]] = {}
 
 
 def _zvalue(d_bucket, q_bucket):
@@ -322,16 +309,9 @@ def file_stats_manifest_multi(
     )
 
 
-def zorder_lineitem_layout(
-    spark: SparkSession, sf_dir: str
-) -> tuple[str, list[dict]]:
-    """Materialize (once per session) lineitem Z-ordered on
-    (l_shipdate, l_quantity), plus a two-column stats manifest."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _ZORDER_DIR.get(key)
-    if cached is not None:
-        return cached
-    path = session_store_dir("zorder_lineitem")
+def _build_zorder(spark: SparkSession, sf_dir: str, path: str) -> list[dict]:
+    """Lineitem Z-ordered on (l_shipdate, l_quantity); returns its
+    two-column stats manifest."""
     n_buckets = 1 << Z_BITS
     d_bucket = F.least(
         F.lit(n_buckets - 1),
@@ -364,14 +344,15 @@ def zorder_lineitem_layout(
         for f in os.listdir(path)
         if f.endswith(".parquet")
     ]
-    manifest = [
+    return [
         r.asDict()
         for r in file_stats_manifest_multi(
             spark, files, ["l_shipdate", "l_quantity"], ["date", "double"]
         ).collect()
     ]
-    _ZORDER_DIR[key] = (path, manifest)
-    return path, manifest
+
+
+_ZORDER = SessionParquetStore("zorder_lineitem", _build_zorder)
 
 
 def manifest_keep_multi(manifest: list[dict], preds: list[tuple[int, object, object]]) -> list[str]:
@@ -429,7 +410,7 @@ ZQ_QTY_HI = 10
 def q112_zorder_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     import datetime as _dt
 
-    _path, manifest = zorder_lineitem_layout(spark, sf_dir)
+    manifest = _ZORDER.meta(spark, sf_dir)
     keep = manifest_keep_multi(
         manifest,
         [

@@ -110,11 +110,17 @@ def _build_bigram_lm_lp(spark, sf_dir: str) -> DataFrame:
 def q129_variants(spark):
     from bigdataindexing_spark.operators import text_analysis as ta
     from bigdataindexing_spark.tables import bounded_sort
-    from bigdataindexing_spark.sources.store_dirs import SessionParquetStore
+    from bigdataindexing_spark.sources.store_dirs import (
+        SessionParquetStore,
+        write_store,
+    )
     from bigdataindexing_spark.tables import table_view
 
     lm_v2_store = SessionParquetStore(
-        "bigram_lm_v2", _build_bigram_lm_lp, sort_cols=("a", "b")
+        "bigram_lm_v2",
+        lambda spark, sf_dir, path: write_store(
+            _build_bigram_lm_lp(spark, sf_dir), path, "a", "b"
+        ),
     )
     # build both stores untimed (bench charges build to pass 1; the row
     # is serve-tagged and min-of-5 reports serve cost)
@@ -228,7 +234,9 @@ def q125_variants(spark):
 def mor_variants(spark):
     from bigdataindexing_spark.sources import maintenance as mnt
 
-    path, manifest, mor = mnt._mor_layout(spark, SF_DIR)
+    path = mnt._MOR_LAYOUT.dir(spark, SF_DIR)
+    manifest = mnt._MOR_LAYOUT.meta(spark, SF_DIR)
+    mor = mnt._MOR_LAYOUT.df(spark, SF_DIR)
     delta_dir = os.path.join(path, "_delta")
     d = spark.read.parquet(delta_dir)
     ud_dir = os.path.join(path, "_delta_ud_probe")

@@ -217,3 +217,20 @@ def test_guard_rejects_slow_index_build():
     }
     violations = _guard_violations(fixture)
     assert violations and "index-build ratio" in violations[0]
+
+
+def test_bad_cpus_fails_before_the_run(monkeypatch):
+    """A non-integer SPARK_GRAFT_CPUS stops bench.py at startup with a
+    clear message, before any Spark session exists (ADVICE: it used to
+    crash in int(cpus) only after the full suite had run)."""
+    import pytest
+
+    import bench
+
+    def no_session(*a, **kw):
+        raise AssertionError("the run started despite a bad SPARK_GRAFT_CPUS")
+
+    monkeypatch.setattr(bench, "get_spark", no_session)
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "eight")
+    with pytest.raises(SystemExit, match="SPARK_GRAFT_CPUS must be an integer"):
+        bench.main()

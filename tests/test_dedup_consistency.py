@@ -142,19 +142,13 @@ def test_hot_shingle_df_cap_noop_on_corpus(spark, sf_dir, tmp_path, monkeypatch)
     it must be a no-op on this corpus (max observed shingle df at sf0.1 is
     25, far under the default 1000), and the capped plan must actually
     contain the df-filter anti-join stage."""
-    from bigdataindexing_spark.sources import store_dirs
+    import shutil
 
-    # build a capped store under a throwaway key so the session store for
-    # the real queries is untouched
+    # reclaiming the store directory forces a rebuild under the new cap
     def fresh_store(monkey_cap: int):
-        dedup._PAIRCOUNT_STORE_DIR.pop(
-            (spark.sparkContext.applicationId, sf_dir), None
-        )
-        dedup._PAIRCOUNT_VIEWS.pop(
-            (spark.sparkContext.applicationId, sf_dir), None
-        )
+        shutil.rmtree(dedup._PAIR_COUNTS.dir(spark, sf_dir))
         monkeypatch.setattr(dedup, "HOT_SHINGLE_DF_CAP", monkey_cap)
-        view = dedup.shingle_pair_counts_view(spark, sf_dir)
+        view = dedup._PAIR_COUNTS.view(spark, sf_dir)
         rows = sorted(
             map(tuple, spark.table(view).collect())
         )
@@ -167,10 +161,9 @@ def test_hot_shingle_df_cap_noop_on_corpus(spark, sf_dir, tmp_path, monkeypatch)
 
     # the df-filter stage exists: the store build plan anti-joins against
     # the hot-shingle relation (HAVING COUNT > cap)
-    dedup._PAIRCOUNT_STORE_DIR.pop((spark.sparkContext.applicationId, sf_dir), None)
-    dedup._PAIRCOUNT_VIEWS.pop((spark.sparkContext.applicationId, sf_dir), None)
+    shutil.rmtree(dedup._PAIR_COUNTS.dir(spark, sf_dir))
     monkeypatch.setattr(dedup, "HOT_SHINGLE_DF_CAP", 1000)
-    store = dedup.shingle_sig_view(spark, sf_dir)
+    store = dedup._SHINGLE_SIG.view(spark, sf_dir)
     plan = spark.sql(f"""
         WITH u AS (
           SELECT doc_id, size(shingles) AS n, explode(shingles) AS s
@@ -197,11 +190,10 @@ def test_pair_count_store_shared(spark, sf_dir):
 
     qs = queries()
     qs["dedup_ngram_jaccard"](spark, sf_dir).collect()
-    key = (spark.sparkContext.applicationId, sf_dir)
-    path = dedup._PAIRCOUNT_STORE_DIR[key]
+    path = dedup._PAIR_COUNTS.dir(spark, sf_dir)
     # containment reuses the same store path (no second build)
     qs["q104_containment_pairs"](spark, sf_dir).collect()
-    assert dedup._PAIRCOUNT_STORE_DIR[key] == path
+    assert dedup._PAIR_COUNTS.dir(spark, sf_dir) == path
     # the serve-side plans are scans of the store, not self-joins
     plan = qs["dedup_ngram_jaccard"](spark, sf_dir)._jdf.queryExecution().executedPlan().toString()
     assert "SortMergeJoin" not in plan and "ShuffledHashJoin" not in plan

@@ -16,7 +16,7 @@ import pytest
 
 from bigdataindexing_spark.sources.delta_log import (
     DELTA_READ_HI,
-    build_delta_table,
+    _DELTA_TABLE,
     delta_snapshot_files,
     read_delta_snapshot,
 )
@@ -24,7 +24,7 @@ from bigdataindexing_spark.sources.delta_log import (
 
 @pytest.fixture(scope="module")
 def table_dir(spark, sf_dir):
-    return build_delta_table(spark, sf_dir)
+    return _DELTA_TABLE.dir(spark, sf_dir)
 
 
 def test_log_layout_matches_protocol(table_dir):
@@ -82,6 +82,16 @@ def test_stats_pruning_reads_fewer_files(spark, table_dir):
     assert got == want
 
 
+def test_store_handle_is_the_latest_snapshot(spark, sf_dir, table_dir):
+    """The store's session handle reads the files the log keeps live, not
+    the data directory, which still holds the removed part-b beside its
+    rewrite part-b2."""
+    handle = _DELTA_TABLE.df(spark, sf_dir)
+    live = {os.path.join(table_dir, a["path"]) for a in delta_snapshot_files(table_dir)}
+    assert {f.removeprefix("file://") for f in handle.inputFiles()} == live
+    assert handle.count() == handle.select("doc_id").distinct().count()
+
+
 def test_stream_sink_exactly_once_under_replay(spark, sf_dir):
     """st18's version-gated commit: drain the SAME arrival directory a
     second time with a FRESH checkpoint (the file source re-delivers
@@ -90,15 +100,14 @@ def test_stream_sink_exactly_once_under_replay(spark, sf_dir):
     st14 double-drain contract on the Delta wire format."""
     from bigdataindexing_spark.sources.delta_log import (
         ST18_APP_ID,
-        _STREAM_TABLES,
-        build_stream_delta_table,
+        _STREAM_DELTA_TABLE,
         delta_snapshot_files,
         delta_stream_sink_batch,
         read_delta_snapshot,
     )
     from bigdataindexing_spark.streaming.core import run_foreach_batch
 
-    table_dir = build_stream_delta_table(spark, sf_dir)
+    table_dir = _STREAM_DELTA_TABLE.dir(spark, sf_dir)
     commits_before = sorted(
         os.listdir(os.path.join(table_dir, "_delta_log"))
     )
@@ -113,9 +122,7 @@ def test_stream_sink_exactly_once_under_replay(spark, sf_dir):
         assert len(txns) == 1 and txns[0]["appId"] == ST18_APP_ID
 
     # replay: fresh checkpoint, same source -> all batches re-delivered
-    src = _STREAM_TABLES[
-        (spark.sparkContext.applicationId, sf_dir)
-    ][1]
+    src = _STREAM_DELTA_TABLE.meta(spark, sf_dir)
     docs_schema = read_delta_snapshot(spark, table_dir).schema
     stream = (
         spark.readStream.schema(docs_schema)

@@ -116,13 +116,13 @@ def test_sibling_session_reregisters_cached_views(spark, sf_dir):
     cache hit used to hand it a view name absent from its catalog
     (AnalysisException). Every cached-view helper must re-register on a
     catalog miss (ADVICE r4)."""
-    from bigdataindexing_spark.operators.dedup import shingle_sig_view
+    from bigdataindexing_spark.operators.dedup import _SHINGLE_SIG
     from bigdataindexing_spark.registry import queries
     from bigdataindexing_spark.tables import table_view
 
     # prime the caches in the primary session
     v1 = table_view(spark, sf_dir, "documents")
-    s1 = shingle_sig_view(spark, sf_dir)
+    s1 = _SHINGLE_SIG.view(spark, sf_dir)
     assert spark.catalog.tableExists(v1) and spark.catalog.tableExists(s1)
 
     sibling = spark.newSession()
@@ -132,7 +132,7 @@ def test_sibling_session_reregisters_cached_views(spark, sf_dir):
     # cache hits must now re-register into the sibling's catalog
     assert table_view(sibling, sf_dir, "documents") == v1
     assert sibling.catalog.tableExists(v1)
-    assert shingle_sig_view(sibling, sf_dir) == s1
+    assert _SHINGLE_SIG.view(sibling, sf_dir) == s1
     assert sibling.catalog.tableExists(s1)
 
     # and a single-SQL store-served query runs end to end in the sibling

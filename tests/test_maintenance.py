@@ -362,7 +362,8 @@ def test_vacuum_horizon_registry_query_contract(spark, sf_dir):
     assert rows[0]["total_rows"] < rows[1]["total_rows"]
     assert rows[1]["total_rows"] == rows[2]["total_rows"]
     # the raise is real, not just a flag: pinning v1 must fail loudly
-    path, versions, _snaps = maintenance._vacuumed_layout(spark, sf_dir)
+    path = maintenance._VACUUMED_LAYOUT.dir(spark, sf_dir)
+    versions = maintenance._VACUUMED_LAYOUT.meta(spark, sf_dir)
     with pytest.raises(FileNotFoundError):
         maintenance.read_layout_snapshot(
             spark, maintenance.read_manifest_as_of(path, versions[1])
@@ -396,7 +397,9 @@ def test_merge_upsert_copy_on_write_contract(spark, sf_dir):
 
     # drive the registered lifecycle (session-cached)
     queries()["src_layout_merge_upsert"](spark, sf_dir).collect()
-    path, v0, v1, snap = maintenance._merged_layout(spark, sf_dir)
+    path = maintenance._MERGED_LAYOUT.dir(spark, sf_dir)
+    v0, v1 = maintenance._MERGED_LAYOUT.meta(spark, sf_dir)
+    snap = maintenance._MERGED_LAYOUT.df(spark, sf_dir)
     m0 = maintenance.read_manifest_as_of(path, v0)
     m1 = maintenance.read_manifest_as_of(path, v1)
     f0 = {m["file"] for m in m0}
@@ -446,7 +449,9 @@ def test_schema_evolution_is_metadata_only(spark, sf_dir):
     from bigdataindexing_spark.registry import queries
 
     queries()["src_layout_schema_evolution"](spark, sf_dir).collect()
-    path, v0, v1, snap = maintenance._evolved_layout(spark, sf_dir)
+    path = maintenance._EVOLVED_LAYOUT.dir(spark, sf_dir)
+    v0, v1 = maintenance._EVOLVED_LAYOUT.meta(spark, sf_dir)
+    snap = maintenance._EVOLVED_LAYOUT.df(spark, sf_dir)
     m0 = maintenance.read_manifest_as_of(path, v0)
     m1 = maintenance.read_manifest_as_of(path, v1)
     f0 = {m["file"]: m["num_rows"] for m in m0}
@@ -489,8 +494,8 @@ def test_stream_cdc_apply_version_gated_exactly_once(spark, sf_dir):
         tuple(r)
         for r in queries()["st14_stream_cdc_apply"](spark, sf_dir).collect()
     )
-    key = (spark.sparkContext.applicationId, sf_dir)
-    path, src, versions, _snap = maintenance._STREAM_MERGED[key]
+    path = maintenance._STREAM_MERGED_LAYOUT.dir(spark, sf_dir)
+    src, versions = maintenance._STREAM_MERGED_LAYOUT.meta(spark, sf_dir)
     assert versions == [0, 1, 2, 3]
     # every intermediate version still plans (nothing vacuumed)
     counts = [
@@ -541,8 +546,9 @@ def test_mor_read_equals_compacted_cow(spark, sf_dir):
     from bigdataindexing_spark.registry import queries
 
     queries()["src_layout_mor_read"](spark, sf_dir).collect()
-    key = (spark.sparkContext.applicationId, sf_dir)
-    path, manifest, mor = maintenance._MOR[key]
+    path = maintenance._MOR_LAYOUT.dir(spark, sf_dir)
+    manifest = maintenance._MOR_LAYOUT.meta(spark, sf_dir)
+    mor = maintenance._MOR_LAYOUT.df(spark, sf_dir)
     # base files untouched by the delta append: every manifest file
     # still exists and the manifest is still the committed v0
     assert maintenance.manifest_versions(path) == [0]
@@ -563,3 +569,34 @@ def test_mor_read_equals_compacted_cow(spark, sf_dir):
     # row-for-row multiset equality, both directions
     assert mor.exceptAll(compacted).count() == 0
     assert compacted.exceptAll(mor).count() == 0
+
+
+def test_signed_diff_matches_except_all_with_nulls(spark):
+    """The CDC hash-cancel must equal EXCEPT ALL in both directions on
+    NULL-bearing rows: an update that moves a NULL between columns, or
+    turns a value into NULL, is a change, not a cancel (Spark's xxhash64
+    skips NULL inputs, so the row hash alone cannot see either)."""
+    schema = "a INT, b INT, q DOUBLE"
+    old = spark.createDataFrame(
+        [(1, None, 1.0), (None, 2, 2.0), (3, 3, 3.0), (4, 4, 4.0),
+         (4, 4, 4.0), (5, 5, 5.0), (None, None, 6.0)],
+        schema,
+    )
+    new = spark.createDataFrame(
+        [(None, 1, 1.0), (2, None, 2.0), (3, None, 3.0), (4, 4, 4.0),
+         (5, 5, 5.0), (5, 5, 5.0), (None, None, 6.0)],
+        schema,
+    )
+    diff = maintenance.signed_diff(old, new, "q").collect()
+
+    def payloads(sign: int) -> list[float]:
+        """q of every row on one side, repeated by its multiplicity."""
+        return sorted(
+            r["q"] for r in diff if r["d"] * sign > 0 for _ in range(abs(r["d"]))
+        )
+
+    deletes = sorted(r["q"] for r in old.exceptAll(new).collect())
+    inserts = sorted(r["q"] for r in new.exceptAll(old).collect())
+    assert len(deletes) == len(inserts) == 4
+    assert payloads(1) == deletes
+    assert payloads(-1) == inserts

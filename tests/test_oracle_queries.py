@@ -50,3 +50,14 @@ def test_rows_only_runs(name, spark, sf_dir):
     df = spec.builder(spark, sf_dir)
     _assert_scalar_schema(name, df)
     assert df.count() >= 0
+
+
+def test_specs_order_oracle_first_then_registration():
+    """queries() order is one rule: oracle-bearing queries first, then the
+    no-oracle contracts, each group in registration order."""
+    registered = list(registry._REGISTRY)
+    with_oracle = [n for n in registered if SPECS[n].oracle is not None]
+    without = [n for n in registered if SPECS[n].oracle is None]
+    assert with_oracle and without
+    assert list(SPECS) == with_oracle + without
+    assert list(registry.queries()) == list(SPECS)

@@ -464,14 +464,12 @@ def test_serve_plans_match_committed_golden(spark, sf_dir):
     falling back to SMJ, a Python stage appearing on a JVM path, a pushed
     filter disappearing — or an improvement) fails until the golden is
     deliberately regenerated with scripts/gen_plan_golden.py and the diff
-    committed. PLANS.md stays the full human-readable audit; this is the
-    machine-checked subset."""
+    committed. tests/golden_plans.json is the repo's one plan audit."""
     import json
     import os
 
     from bigdataindexing_spark import registry, tables
-    from scripts.gen_plan_audit import audit
-    from scripts.gen_plan_golden import GOLDEN_FIELDS, GOLDEN_PATH
+    from scripts.gen_plan_golden import GOLDEN_PATH, audit
 
     with open(GOLDEN_PATH) as f:
         golden_all = json.load(f)
@@ -484,8 +482,7 @@ def test_serve_plans_match_committed_golden(spark, sf_dir):
     for name, spec in sorted(registry.all_specs().items()):
         if not spec.bench or "serve" not in spec.tags:
             continue
-        a = audit(spec.builder(spark, sf_dir))
-        current[name] = {k: a[k] for k in GOLDEN_FIELDS}
+        current[name] = audit(spec.builder(spark, sf_dir))
         tables.release_pinned()
         spark.catalog.clearCache()
 

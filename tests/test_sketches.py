@@ -94,7 +94,7 @@ def test_cms_counters_bounded_and_mergeable(spark, sf_dir):
     """The counter table never exceeds D×W rows (the fixed sketch
     state), and the sum over any hash row equals the total token count —
     the additivity that makes shard sketches merge by summation."""
-    cms = spark.table(sketches.cms_counters_view(spark, sf_dir))
+    cms = spark.table(sketches._CMS_STORE.view(spark, sf_dir))
     assert cms.count() <= sketches.CMS_D * sketches.CMS_W
     docs = table_view(spark, sf_dir, "documents")
     total = spark.sql(

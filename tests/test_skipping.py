@@ -13,7 +13,7 @@ from bigdataindexing_spark.tables import table
 def test_manifest_covers_every_file(spark, sf_dir):
     import os
 
-    layout = skipping.clustered_lineitem_dir(spark, sf_dir)
+    layout = skipping._CLUSTERED.dir(spark, sf_dir)
     files = [f for f in os.listdir(layout) if f.endswith(".parquet")]
     manifest = skipping.file_stats_manifest(
         spark, [os.path.join(layout, f) for f in files], "l_shipdate", "date"
@@ -56,7 +56,7 @@ def test_absent_stats_never_pruned():
 
 def test_manifest_cached_with_layout(spark, sf_dir):
     # planning consults the cached manifest: no new Spark job per query
-    skipping.clustered_lineitem_layout(spark, sf_dir)
+    skipping._CLUSTERED.meta(spark, sf_dir)
     before = spark.sparkContext.statusTracker().getJobIdsForGroup(None)
     skipping.pruned_files(spark, sf_dir, skipping.SKIP_LO, skipping.SKIP_HI)
     after = spark.sparkContext.statusTracker().getJobIdsForGroup(None)
@@ -66,7 +66,7 @@ def test_manifest_cached_with_layout(spark, sf_dir):
 def test_zorder_prunes_both_dimensions(spark, sf_dir):
     import datetime as dt
 
-    _path, manifest = skipping.zorder_lineitem_layout(spark, sf_dir)
+    manifest = skipping._ZORDER.meta(spark, sf_dir)
     date_pred = (
         0,
         dt.date.fromisoformat(skipping.ZQ_DATE_LO),
@@ -83,7 +83,7 @@ def test_zorder_prunes_both_dimensions(spark, sf_dir):
     # every date-clustered file spans the full quantity domain
     import os
 
-    layout = skipping.clustered_lineitem_dir(spark, sf_dir)
+    layout = skipping._CLUSTERED.dir(spark, sf_dir)
     files = [
         os.path.join(layout, f)
         for f in os.listdir(layout)

@@ -1,53 +1,126 @@
-"""Store-layer session-safety sweep (VERDICT r5 #8).
+"""Store-layer sweeps over every self-registered session store.
 
-Round 5 fixed sibling-``spark.newSession()`` cache hits reactively, store
-by store, as each bug surfaced. This sweep drives EVERY registered
-session-materialized store through a fresh sibling session in one
-parametrized pass, so the next store added cannot reintroduce the bug
-class: an application-keyed cache serving a temp view the new session's
-catalog lacks, or a DataFrame bound to the wrong session.
+Every build-once/serve-many store is a ``SessionParquetStore`` instance,
+registered in ``store_dirs.STORES`` when constructed. These sweeps drive
+each one through the hostile conditions the class exists to absorb: a
+sibling ``spark.newSession()`` (same application id, empty catalog,
+different session identity) and a store directory reclaimed from under
+the session.
 """
 
 from __future__ import annotations
 
+import os
 import re
+import shutil
 from pathlib import Path
 
 import pytest
+from pyspark.sql import DataFrame
 
-from bigdataindexing_spark.stores import NON_STORE_DIRS, STORE_REGISTRY
+from bigdataindexing_spark import registry
+from bigdataindexing_spark.sources.store_dirs import STORES
+
+registry.all_specs()  # imports every module, so every store has registered
+
+# session_store_dir() call sites that are scratch space, not stores:
+# checkpoints, per-invocation stream outputs, staging and arrival dirs
+SCRATCH_KINDS = {
+    "cc_checkpoint",
+    "stream_cms",
+    "stream_scd2",
+    "stream_quantile",
+    "stream_adaptive_quantile",
+    "delta_tmp",
+}
+
+
+def _tiers(store, spark, sf_dir) -> list:
+    """Every tier the store serves: its named ``*.parquet`` sub-tables if
+    it has them, else the default handle plus, for a DataFrame handle,
+    the temp view over it."""
+    path = store.dir(spark, sf_dir)
+    subs = sorted(
+        n for n in os.listdir(path)
+        if n.endswith(".parquet") and os.path.isdir(os.path.join(path, n))
+    )
+    if subs:
+        return [store.df(spark, sf_dir, n) for n in subs]
+    handle = store.df(spark, sf_dir)
+    if isinstance(handle, DataFrame):
+        return [handle, spark.table(store.view(spark, sf_dir))]
+    return [handle]
+
+
+def _rows(tiers) -> list:
+    """Row count per tier; handles holding several relations (per-version
+    snapshots, None for a vacuumed version) count each one."""
+    def count(h):
+        if h is None:
+            return None
+        if isinstance(h, (list, tuple)):
+            return [count(x) for x in h]
+        return h.count()
+
+    return [count(t) for t in tiers]
 
 
 def test_store_registry_covers_every_store_dir():
-    """Every ``session_store_dir("<name>")`` call site in the source tree
-    must be claimed by STORE_REGISTRY (or listed as deliberate non-store
-    scratch space) — a new store added without a registry entry fails
-    here instead of silently escaping the session sweep."""
+    """The only literal ``session_store_dir("<name>")`` call sites left are
+    scratch space: a store written by hand instead of through
+    SessionParquetStore fails here instead of escaping the sweeps."""
     src = Path(__file__).resolve().parent.parent / "bigdataindexing_spark"
     names = set()
     for py in src.rglob("*.py"):
         names.update(re.findall(r'session_store_dir\("([^"]+)"\)', py.read_text()))
-    assert names, "expected session_store_dir call sites"
-    uncovered = names - set(STORE_REGISTRY) - NON_STORE_DIRS
-    assert not uncovered, (
-        f"stores missing from bigdataindexing_spark.stores.STORE_REGISTRY: "
-        f"{sorted(uncovered)} — add an accessor so the newSession sweep "
-        "covers them"
-    )
+    assert names == SCRATCH_KINDS
+    assert not SCRATCH_KINDS & set(STORES)
 
 
-@pytest.mark.parametrize("store_name", sorted(STORE_REGISTRY))
-def test_store_survives_sibling_new_session(spark, sf_dir, store_name):
-    """Materialize the store on the base session, then access it from a
-    fresh ``spark.newSession()`` (same application id, EMPTY catalog):
-    the accessor must return a usable DataFrame with the same row count
-    — never a stale view name the new catalog can't resolve."""
-    accessor = STORE_REGISTRY[store_name]
-    base_df = accessor(spark, sf_dir)
-    base_count = base_df.count()
+def test_duplicate_store_kind_raises():
+    from bigdataindexing_spark.sources.store_dirs import SessionParquetStore
+
+    with pytest.raises(ValueError, match="duplicate store kind"):
+        SessionParquetStore("search_idx", lambda spark, sf_dir, path: None)
+
+
+# "<kind>_view" cases read only the temp view, so view() is the first tier
+# the sibling session reaches, with no df() handle opened before it: the
+# shingle and LSH signature stores, which queries join by view name
+VIEW_FIRST = ["lsh_sig_view", "shingle_sig_view"]
+
+
+def _view_tier(store, spark, sf_dir) -> list:
+    return [spark.table(store.view(spark, sf_dir))]
+
+
+@pytest.mark.parametrize("kind", sorted(STORES) + VIEW_FIRST)
+def test_store_survives_sibling_new_session(spark, sf_dir, kind):
+    """Materialize the store on the base session, then read every tier
+    from a fresh ``spark.newSession()`` (same application id, EMPTY
+    catalog): same row counts — never a stale view name the new catalog
+    can't resolve or a handle bound to the other session."""
+    tiers = _tiers
+    if kind in VIEW_FIRST:
+        kind, tiers = kind.removesuffix("_view"), _view_tier
+    store = STORES[kind]
+    base = _rows(tiers(store, spark, sf_dir))
 
     sibling = spark.newSession()
-    sib_df = accessor(sibling, sf_dir)
-    assert sib_df.count() == base_count
+    assert _rows(tiers(store, sibling, sf_dir)) == base
     # and the base session still works after the sibling touched the cache
-    assert accessor(spark, sf_dir).count() == base_count
+    assert _rows(tiers(store, spark, sf_dir)) == base
+
+
+@pytest.mark.parametrize("kind", sorted(STORES))
+def test_store_rebuilds_reclaimed_directory(spark, sf_dir, kind):
+    """Build the store and read every tier, then delete its directory (a
+    tmp reaper, an operator): every tier must rebuild and serve the same
+    row counts instead of failing on the vanished files."""
+    store = STORES[kind]
+    before = _rows(_tiers(store, spark, sf_dir))
+    path = store.dir(spark, sf_dir)
+    shutil.rmtree(path)
+
+    assert _rows(_tiers(store, spark, sf_dir)) == before
+    assert store.dir(spark, sf_dir) != path
