@@ -1,45 +1,40 @@
-"""Layout maintenance: incremental append and small-file compaction for
-the clustered, manifest-backed layouts in ``sources/skipping.py``.
+"""Layout maintenance on the table log: the append / compact / vacuum /
+sweep algebra for the range-clustered layouts, every step a Delta commit
+(``sources/delta_log.py``).
 
 A 100 TB table is never rewritten; it is MAINTAINED:
 
 - **Append**: each arriving batch lands as new files clustered the same
-  way as the base layout, and the manifest grows by exactly the new
-  files' footer stats — the add-file-log semantics of a table format.
-  Old files are never re-read and never re-harvested.
+  way as the base layout and commits as ``add`` actions carrying exactly
+  the new files' footer stats. Old files are never re-read and never
+  re-harvested. Appends are blind (adds only), so a lost commit race
+  simply retries at the next version.
 - **Compact**: streaming/batch appends accumulate small files, which tax
   listing, footers, and task scheduling. Compaction bin-packs ONLY the
   small files, rewriting them range-clustered so the layout keeps its
-  skipping power; full-size files are left untouched (rewrite cost is
-  proportional to the small-file backlog, not the table).
+  skipping power, and commits the rewrite as ``remove`` actions for the
+  superseded files plus ``add`` actions for the new ones; full-size files
+  are left untouched (rewrite cost is proportional to the small-file
+  backlog, not the table).
+- **Vacuum**: deletes exactly the snapshot's tombstones — files some
+  commit removed and no later commit re-added, so no live snapshot
+  references them. Older versions that still list them fall past the
+  retention horizon and raise on read instead of partial-reading.
+- **Sweep**: reclaims crash orphans, see :func:`sweep_orphans`.
 
 Commit protocol: every write stages into a scratch directory and then
 moves its files into the layout under a unique commit token, so "what
 did this commit add" is derived from the WRITE itself — never from a
 before/after directory diff. A concurrent writer appending to the same
-layout can therefore never be harvested into this caller's manifest,
-and a crash mid-commit leaves only token-prefixed orphans that no
-manifest references (garbage reclaimable by ``sweep_orphans``, not
-corruption).
+layout can therefore never be harvested into this caller's commit, and
+a crash mid-commit leaves only token-prefixed orphans that no commit
+references (garbage reclaimable by ``sweep_orphans``, not corruption).
 
-Deletion is equally explicit: ``compact_layout`` returns the list of
-files its rewrite superseded, and ``vacuum_layout`` deletes exactly that
-list (refusing anything the manifest still references). Vacuum can no
-longer be pointed at a stale manifest and wipe live data it has never
-heard of — the Delta OPTIMIZE/VACUUM split with the tombstone list made
-explicit. Crash-orphaned commit files (moved into the layout but never
-adopted by any manifest) are reclaimed separately by ``sweep_orphans``,
-which deletes only commit-token-prefixed files the manifest does not
-reference AND that are older than a retention window — the age guard is
-what makes the sweep safe against an in-flight concurrent commit whose
-files have landed but whose manifest adoption hasn't happened yet
-(Delta's VACUUM retention, applied to the add-file log).
-
-Both operations return the updated manifest, so planning stays a pure
-driver-side consult (``skipping.manifest_keep``) with no Spark job — the
-same contract the read path already honors. The reference has no
-analogue (its Redis keyspace has no layout at all); this is the
-operational layer any lakehouse deployment of this engine needs.
+Planning stays a pure driver-side consult of the log
+(``delta_log.manifest_keep`` over a replayed snapshot) with no Spark job
+— the same contract the read path honors. The reference has no analogue
+(its Redis keyspace has no layout at all); this is the operational layer
+any lakehouse deployment of this engine needs.
 """
 
 from __future__ import annotations
@@ -54,8 +49,25 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from bigdataindexing_spark.sources.skipping import file_stats_manifest
+from bigdataindexing_spark.sources.delta_log import (
+    ManifestConflictError,
+    commit,
+    harvest,
+    log_versions,
+    manifest_keep,
+    metadata_action,
+    open_latest,
+    read_commit,
+    read_snapshot,
+    remove_actions,
+    replay,
+    scan_files,
+    stream_sink,
+    table_header,
+)
+from bigdataindexing_spark.registry import register
 from bigdataindexing_spark.sources.store_dirs import SessionParquetStore
+from bigdataindexing_spark.tables import bounded_sort, table
 
 _commit_seq = itertools.count()
 
@@ -89,126 +101,122 @@ def _commit_files(layout_dir: str, write_fn) -> list[str]:
         shutil.rmtree(staging, ignore_errors=True)
 
 
+def _stage(
+    spark: SparkSession, layout_dir: str, df: DataFrame, cols: list[str]
+) -> list[dict]:
+    """Write ``df`` (its partitioning decides the files) through the
+    staged commit; returns the new files' ``add`` actions, stats on
+    ``cols``."""
+    files = _commit_files(
+        layout_dir, lambda d: df.write.mode("overwrite").parquet(d)
+    )
+    return [{"add": a} for a in harvest(spark, layout_dir, files, cols)]
+
+
+def create_table(
+    spark: SparkSession, layout_dir: str, df: DataFrame, cols: list[str]
+) -> None:
+    """Commit v0: protocol, ``df``'s schema as metaData, and its files."""
+    commit(
+        layout_dir,
+        0,
+        table_header(layout_dir, df.schema) + _stage(spark, layout_dir, df, cols),
+    )
+
+
 def append_to_layout(
     spark: SparkSession,
     layout_dir: str,
-    manifest: list[dict],
     batch: DataFrame,
     col: str,
-    value_type: str,
     n_files: int = 2,
-) -> list[dict]:
-    """Append ``batch`` as ``n_files`` new range-clustered files and
-    return the extended manifest.
+) -> int:
+    """Append ``batch`` as ``n_files`` new range-clustered files; returns
+    the committed version.
 
-    Only the NEW files are footer-harvested — the existing manifest rows
-    are reused verbatim, so append cost is O(batch) + O(new files),
-    independent of table size."""
-    new_files = _commit_files(
-        layout_dir,
-        lambda d: (
-            batch.repartitionByRange(n_files, F.col(col))
-            .write.mode("overwrite")
-            .parquet(d)
-        ),
+    Only the NEW files are footer-harvested — the existing files' add
+    actions stay in the log untouched, so append cost is O(batch) +
+    O(new files), independent of table size."""
+    adds = _stage(
+        spark, layout_dir, batch.repartitionByRange(n_files, F.col(col)), [col]
     )
-    added = [
-        r.asDict()
-        for r in file_stats_manifest(spark, new_files, col, value_type).collect()
-    ]
-    return manifest + added
+    while True:
+        version = log_versions(layout_dir)[-1] + 1
+        try:
+            commit(layout_dir, version, adds)
+            return version
+        except ManifestConflictError:
+            continue  # a blind append commutes: retry at the next version
 
 
 def compact_layout(
     spark: SparkSession,
     layout_dir: str,
-    manifest: list[dict],
     col: str,
-    value_type: str,
     small_rows: int,
     target_files: int,
-) -> tuple[list[dict], list[str]]:
+) -> int | None:
     """Rewrite every file under ``small_rows`` into ``target_files``
-    range-clustered files; leave full-size files untouched. Returns
-    ``(new_manifest, superseded_files)``.
+    range-clustered files; leave full-size files untouched. Returns the
+    committed version, or None when there is nothing to gain.
 
     The rewrite reads ONLY the small files (one bounded Spark job) and
     re-clusters them on the layout column so the compacted files keep
-    narrow min/max ranges. Nothing is deleted here: the MANIFEST is the
-    log — readers plan from it, never from a directory listing — so the
-    returned manifest (untouched rows verbatim + fresh stats for the
-    compacted files) is the atomic swap, and ``superseded_files`` is the
-    explicit tombstone list ``vacuum_layout`` reclaims later. A failure
-    at any point leaves either the old manifest (compacted files are
-    invisible orphans) or the new one (small files are orphans) — never
-    a reader that can see half a swap."""
-    small = [m for m in manifest if m["num_rows"] < small_rows]
+    narrow min/max ranges. Nothing is deleted here: the commit's
+    ``remove`` actions tombstone the small files and its ``add`` actions
+    adopt the rewrite in one atomic version, so a failure leaves either
+    the old version (the compacted files are invisible orphans) or the
+    new one — never a reader that can see half a swap. The commit is
+    snapshot-dependent, so a lost race raises rather than retries."""
+    snap = replay(layout_dir)
+    small = [f["path"] for f in snap.files if f["numRecords"] < small_rows]
     if len(small) <= target_files:
-        return manifest, []  # nothing to gain
-    keep_rows = [m for m in manifest if m["num_rows"] >= small_rows]
-    small_files = [m["file"] for m in small]
-
-    new_files = _commit_files(
+        return None  # nothing to gain
+    rewrite = scan_files(spark, layout_dir, small, snap.schema)
+    adds = _stage(
+        spark,
         layout_dir,
-        lambda d: (
-            spark.read.parquet(*small_files)
-            .repartitionByRange(target_files, F.col(col))
-            .write.mode("overwrite")
-            .parquet(d)
-        ),
+        rewrite.repartitionByRange(target_files, F.col(col)),
+        [col],
     )
-    added = [
-        r.asDict()
-        for r in file_stats_manifest(spark, new_files, col, value_type).collect()
-    ]
-    return keep_rows + added, small_files
+    commit(layout_dir, snap.version + 1, remove_actions(small) + adds)
+    return snap.version + 1
 
 
-def vacuum_layout(
-    layout_dir: str, manifest: list[dict], superseded: list[str]
-) -> int:
-    """Delete exactly the ``superseded`` files a compaction reported;
-    returns how many were removed. Refuses (raises) to delete any file
-    the manifest still references — so a caller holding a stale manifest
-    or a wrong tombstone list cannot destroy live data. Safe to run any
-    time AFTER the new manifest is adopted: the read path never lists
-    the directory, so superseded files are dead weight, not data."""
-    live = {m["file"] for m in manifest}
-    still_live = live.intersection(superseded)
-    if still_live:
-        raise ValueError(
-            f"refusing vacuum: {len(still_live)} superseded file(s) are "
-            f"still manifest-referenced, e.g. {sorted(still_live)[0]!r}"
-        )
+def vacuum_layout(layout_dir: str) -> int:
+    """Delete the latest snapshot's tombstones — files some commit
+    removed and none re-added since — and return how many went. The list
+    comes from the log itself, so vacuum can never be pointed at a stale
+    manifest and wipe a file the live snapshot still references. Safe
+    any time after the removing commit: the read path never lists the
+    directory, so tombstoned files are dead weight, not data."""
     removed = 0
-    for f in superseded:
+    for p in sorted(replay(layout_dir).tombstones):
+        f = os.path.join(layout_dir, p)
         if os.path.exists(f):
             os.remove(f)
             removed += 1
     return removed
 
 
-def sweep_orphans(
-    layout_dir: str, manifest: list[dict], min_age_sec: float = 86400.0
-) -> int:
+def sweep_orphans(layout_dir: str, min_age_sec: float = 86400.0) -> int:
     """Reclaim crash-orphaned commit files; returns how many were deleted.
 
     Deletes a file only when ALL of: (a) it carries a commit-token prefix
-    (only staged commits produce those — base-layout part files are never
-    candidates), (b) no manifest row references it (it was never adopted,
-    i.e. the writer crashed between the staging move and manifest
-    adoption — or its manifest was abandoned), and (c) it is older than
-    ``min_age_sec`` (default 24h). The age guard is the concurrency
-    contract: a live writer's files land before its manifest is adopted,
+    (only staged commits produce those), (b) no commit in the log ever
+    added it (live or tombstoned — tombstones are vacuum's job), i.e. the
+    writer crashed between the staging move and its log commit, and (c)
+    it is older than ``min_age_sec`` (default 24h). The age guard is the
+    concurrency contract: a live writer's files land before its commit,
     so a fresh unreferenced file may simply be mid-commit — only stale
     ones are provably dead."""
-    live = {m["file"] for m in manifest}
+    snap = replay(layout_dir)
+    referenced = {f["path"] for f in snap.files} | snap.tombstones
     now = time.time()
     removed = 0
     for f in _layout_files(layout_dir):
-        if f in live:
-            continue
-        if not os.path.basename(f).startswith("commit-"):
+        name = os.path.basename(f)
+        if name in referenced or not name.startswith("commit-"):
             continue
         try:
             age = now - os.path.getmtime(f)
@@ -221,119 +229,11 @@ def sweep_orphans(
     return removed
 
 
-# ---- manifest version log: snapshot isolation / time travel ------------
-#
-# The manifest IS the table state; committing each maintenance step's
-# manifest to a versioned log makes every historical state readable —
-# the Delta/Iceberg snapshot model. A reader pins a version and plans
-# from exactly that manifest's file list: writers appending v(N+1)
-# concurrently can never change what the pinned reader sees, because
-# adopted files are immutable and the log entry is an atomic rename.
-# VACUUM trades time-travel depth for space, exactly as in Delta: a
-# version whose superseded files were reclaimed is no longer readable
-# (``read_layout_snapshot`` raises on a missing file rather than
-# silently returning partial data).
-
-_MANIFEST_LOG_DIR = "_manifests"
-
-
-class ManifestConflictError(RuntimeError):
-    """A concurrent writer committed the version this commit targeted.
-
-    Manifests here are FULL snapshots (complete file lists), not
-    commutative append deltas — so the losing writer's manifest is
-    STALE: it was derived from a superseded snapshot and silently
-    re-committing it one version later would drop the winner's files
-    from the log head (a lost update). The loser must re-read the
-    latest manifest, re-apply its change, and commit again — the same
-    re-validate step Delta/Iceberg force on snapshot-replacing commits
-    (only blind appends get auto-retry there, and we have none)."""
-
-
-def commit_manifest(layout_dir: str, manifest: list[dict]) -> int:
-    """Append ``manifest`` to the layout's version log; returns the new
-    version number. Write-temp-then-LINK makes adoption atomic AND
-    put-if-absent: ``os.link`` fails with EEXIST if v{N}.json was
-    committed by a concurrent writer (a rename would silently clobber
-    it, violating the invariant that committed versions are immutable
-    to pinned readers). A lost race raises :class:`ManifestConflictError`
-    — never auto-retries — because this manifest was computed against a
-    now-stale snapshot (see the error's docstring)."""
-    import json
-
-    log_dir = os.path.join(layout_dir, _MANIFEST_LOG_DIR)
-    os.makedirs(log_dir, exist_ok=True)
-    tmp = os.path.join(log_dir, f".manifest.json.tmp-{uuid.uuid4().hex[:8]}")
-    with open(tmp, "w") as f:
-        json.dump(manifest, f, default=str)
-    try:
-        version = (max(manifest_versions(layout_dir), default=-1)) + 1
-        try:
-            os.link(tmp, os.path.join(log_dir, f"v{version}.json"))
-        except FileExistsError as exc:
-            raise ManifestConflictError(
-                f"version {version} in {layout_dir} was committed "
-                "concurrently; re-read the latest manifest, re-apply the "
-                "change, and commit again"
-            ) from exc
-        return version
-    finally:
-        os.unlink(tmp)
-
-
-def manifest_versions(layout_dir: str) -> list[int]:
-    log_dir = os.path.join(layout_dir, _MANIFEST_LOG_DIR)
-    if not os.path.isdir(log_dir):
-        return []
-    out = []
-    for name in os.listdir(log_dir):
-        if name.startswith("v") and name.endswith(".json"):
-            out.append(int(name[1:-5]))
-    return sorted(out)
-
-
-def read_manifest_as_of(layout_dir: str, version: int) -> list[dict]:
-    """Load the manifest as of ``version`` (raises KeyError if that
-    version was never committed)."""
-    import json
-
-    path = os.path.join(layout_dir, _MANIFEST_LOG_DIR, f"v{version}.json")
-    if not os.path.exists(path):
-        raise KeyError(
-            f"no manifest version {version} in {layout_dir} "
-            f"(have {manifest_versions(layout_dir)})"
-        )
-    with open(path) as f:
-        return json.load(f)
-
-
-def read_layout_snapshot(
-    spark: SparkSession, manifest: list[dict], merge_schema: bool = False
-) -> DataFrame:
-    """Plan a scan of exactly the manifest's file list — the snapshot
-    read. Raises FileNotFoundError for vacuumed files instead of letting
-    Spark silently skip them (a partial snapshot is corruption, not a
-    smaller result). ``merge_schema=True`` plans the union schema with
-    NULL fill for pre-evolution files (the schema-evolution read)."""
-    files = [m["file"] for m in manifest]
-    missing = [f for f in files if not os.path.exists(f)]
-    if missing:
-        raise FileNotFoundError(
-            f"snapshot references {len(missing)} vacuumed/missing file(s), "
-            f"e.g. {missing[0]!r} — this version is beyond the vacuum "
-            "retention horizon"
-        )
-    reader = spark.read
-    if merge_schema:
-        reader = reader.option("mergeSchema", "true")
-    return reader.parquet(*files)
-
-
 MAINT_LO = "1996-01-01"
 MAINT_HI = "1996-03-31"
 
 # CDC window for the MERGE lifecycle: every update/delete/insert targets
-# rows in this range, so the copy-on-write rewrite is manifest-prunable.
+# rows in this range, so the copy-on-write rewrite is stats-prunable.
 # HI is Feb 29 (1996 is a leap year) so the batch merge window tiles
 # exactly with the first two STREAM_MERGE_MONTHS entries below — the
 # r07 ADVICE caught the batch/streaming lifecycles silently covering
@@ -377,61 +277,38 @@ def _merge_oracle(lo: str, hi: str) -> str:
     )
 
 
-def _run_lifecycle(spark: SparkSession, sf_dir: str, path: str):
-    """The ONE base-write → footer-manifest → delta-append → compaction
-    lifecycle all three maintained-layout fixtures share (maintained /
-    time-travel / vacuum-horizon — they differ only in commit and vacuum
-    POLICY, applied by the callers). Writes into ``path``; returns
-    ``((m_base, m_append, m_compact), superseded)``.
+def _run_lifecycle(spark: SparkSession, sf_dir: str, path: str) -> None:
+    """The ONE base-write → delta-append → compaction lifecycle every
+    maintained-layout store shares (they differ only in vacuum POLICY and
+    what they commit afterwards, applied by the callers). Commits v0 (the
+    base write), v1 (the append) and v2 (the compaction) into ``path``.
 
     The compaction threshold sits AT the smallest base file's row count
     (strictly-smaller comparison): compaction must touch only the
     appended small-file backlog, never rewrite the base layout — the
     module's whole contract, and what keeps the vacuum-horizon
     lifecycle's v0 (base files only) readable after vacuum."""
-    from bigdataindexing_spark.tables import table
-
     li = table(spark, sf_dir, "lineitem")
     base = li.filter(F.col("l_orderkey") % 5 != 0)
-    (
-        base.repartitionByRange(4, F.col("l_shipdate"))
-        .write.mode("overwrite")
-        .parquet(path)
+    create_table(
+        spark, path, base.repartitionByRange(4, F.col("l_shipdate")), ["l_shipdate"]
     )
-    m_base = [
-        r.asDict()
-        for r in file_stats_manifest(
-            spark, _layout_files(path), "l_shipdate", "date"
-        ).collect()
-    ]
-    small = min(m["num_rows"] for m in m_base)
+    small = min(f["numRecords"] for f in replay(path).files)
     delta = li.filter(F.col("l_orderkey") % 5 == 0)
-    m_append = append_to_layout(
-        spark, path, m_base, delta, "l_shipdate", "date", n_files=2
-    )
-    m_compact, superseded = compact_layout(
-        spark, path, m_append, "l_shipdate", "date",
-        small_rows=small, target_files=1,
-    )
-    return (m_base, m_append, m_compact), superseded
+    append_to_layout(spark, path, delta, "l_shipdate", n_files=2)
+    compact_layout(spark, path, "l_shipdate", small_rows=small, target_files=1)
 
 
-def _build_maintained(spark: SparkSession, sf_dir: str, path: str) -> list[dict]:
-    """The layout AFTER the full append -> compact -> vacuum cycle; the
-    store's metadata is the maintained manifest."""
-    (_m0, _m1, manifest), superseded = _run_lifecycle(spark, sf_dir, path)
-    vacuum_layout(path, manifest, superseded)
-    return manifest
+def _build_maintained(spark: SparkSession, sf_dir: str, path: str) -> None:
+    """The layout AFTER the full append -> compact -> vacuum cycle."""
+    _run_lifecycle(spark, sf_dir, path)
+    vacuum_layout(path)
 
 
-_MAINTAINED_LAYOUT = SessionParquetStore("maint_serve", _build_maintained)
+_MAINTAINED_LAYOUT = SessionParquetStore("maint_serve", _build_maintained, open_latest)
 
 
 def _register() -> None:
-    from bigdataindexing_spark.registry import register
-    from bigdataindexing_spark.sources.skipping import manifest_keep
-    from bigdataindexing_spark.tables import bounded_sort
-
     @register(
         "src_layout_maintenance",
         oracle="SELECT CAST((SELECT COUNT(*) FROM lineitem) AS BIGINT) "
@@ -441,28 +318,25 @@ def _register() -> None:
         tags=("source", "layout", "maintenance", "ops"),
         bench=False,  # exercises a write/compact cycle, not a query plan;
         # a duckdb-ratio for it would compare a table rewrite to a SELECT
-        doc="End-to-end layout maintenance contract: base write -> "
-        "incremental append (manifest extends by exactly the new files' "
-        "footer stats) -> small-file compaction (range-clustered rewrite "
-        "of only the small files) -> vacuum (drop exactly the compaction's "
-        "superseded-file list, refusing manifest-referenced files). The "
-        "result is read back THROUGH the maintained manifest "
-        "— total rows and a skipping-pruned window count must equal the "
-        "source-of-truth scan (the oracle), proving the maintained "
-        "layout serves exactly the table at every step. The manifest is "
-        "the commit log: readers never list the directory, so every "
-        "transition is an atomic manifest swap (Delta's OPTIMIZE/VACUUM "
-        "split).",
+        doc="End-to-end layout maintenance contract on the Delta log: base "
+        "write -> incremental append (a commit adding exactly the new "
+        "files with their footer stats) -> small-file compaction (range-"
+        "clustered rewrite of only the small files, committed as remove + "
+        "add actions) -> vacuum (delete exactly the log's tombstones, "
+        "never a file the live snapshot references). The result is read "
+        "back THROUGH the log — total rows and a skipping-pruned window "
+        "count must equal the source-of-truth scan (the oracle), proving "
+        "the maintained layout serves exactly the table at every step. "
+        "Readers never list the directory, so every transition is an "
+        "atomic commit (Delta's OPTIMIZE/VACUUM split).",
     )
     def src_layout_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
-        manifest = _MAINTAINED_LAYOUT.meta(spark, sf_dir)
-        all_files = [m["file"] for m in manifest]
-        keep = manifest_keep(manifest, MAINT_LO, MAINT_HI)
-        total = spark.read.parquet(*all_files).select(
+        path = _MAINTAINED_LAYOUT.dir(spark, sf_dir)
+        total = _MAINTAINED_LAYOUT.df(spark, sf_dir).select(
             F.count(F.lit(1)).alias("total_rows")
         )
         window = (
-            spark.read.parquet(*keep)
+            read_snapshot(spark, path, ranges={"l_shipdate": (MAINT_LO, MAINT_HI)})
             .filter(F.col("l_shipdate").between(MAINT_LO, MAINT_HI))
             .select(F.count(F.lit(1)).alias("window_rows"))
         )
@@ -490,41 +364,39 @@ def _register() -> None:
             "ORDER BY version"
         ),
         tags=("source", "layout", "maintenance", "ops", "serve"),
-        doc="Manifest time travel / snapshot isolation: the maintenance "
-        "cycle commits each step's manifest to a versioned log (v0 base "
-        "write, v1 incremental append, v2 small-file compaction), and a "
-        "reader pinned to any version plans from exactly that manifest's "
-        "immutable file list — the Delta/Iceberg snapshot model, with "
-        "adoption an atomic rename so concurrent readers see whole "
-        "versions or nothing. The query reads ALL THREE snapshots and "
+        doc="Delta-log time travel / snapshot isolation: the maintenance "
+        "cycle commits each step to the layout's log (v0 base write, v1 "
+        "incremental append, v2 small-file compaction), and a reader "
+        "pinned to any version plans from exactly that version's "
+        "replayed, immutable file list — the Delta/Iceberg snapshot "
+        "model, each commit a put-if-absent link so concurrent readers "
+        "see whole versions or nothing. The query reads ALL THREE snapshots and "
         "reports per-version total and skipping-pruned window counts: v0 "
         "must see only the base rows (the append is invisible to a "
         "pinned reader), v1/v2 the full table, and v2's counts prove "
         "compaction is a pure layout change. Min/max file skipping "
         "(manifest_keep) composes with time travel — each version prunes "
-        "against its own manifest's stats. VACUUM trades time-travel "
+        "against its own snapshot's stats. VACUUM trades time-travel "
         "depth for space exactly as in Delta: this layout defers it, and "
-        "read_layout_snapshot raises (never partial-reads) past the "
+        "the snapshot reader raises (never partial-reads) past the "
         "retention horizon.",
     )
     def src_layout_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
-        # total_rows is answered FROM THE MANIFEST (sum of per-file
-        # num_rows — count-from-stats, exactly how Delta/Iceberg serve
+        # total_rows is answered FROM THE LOG (sum of per-file
+        # numRecords — count-from-stats, exactly how Delta/Iceberg serve
         # SELECT COUNT(*): the add-file log is the authority, no scan);
         # window_rows scans only each version's skipping-pruned file
         # set. Per-version relations are cached with the layout —
         # spark.read.parquet(*files) re-lists per plan otherwise, the
         # tables.table_view listing-amortization lesson (round 4). The
-        # snapshot-scan ≡ manifest-stats equivalence is pinned by
+        # snapshot-scan ≡ log-stats equivalence is pinned by
         # tests/test_maintenance.py, which counts the actual snapshots.
         layout_dir = _TIME_TRAVEL_LAYOUT.dir(spark, sf_dir)
         versions = _TIME_TRAVEL_LAYOUT.meta(spark, sf_dir)
         snaps = _TIME_TRAVEL_LAYOUT.df(spark, sf_dir)
         parts = []
         for v, (_snap, window_src) in zip(versions, snaps):
-            total = sum(
-                m["num_rows"] for m in read_manifest_as_of(layout_dir, v)
-            )
+            total = _log_rows(layout_dir, v)
             parts.append(
                 window_src.select(F.count(F.lit(1)).alias("window_rows"))
                 .select(
@@ -558,13 +430,13 @@ def _register() -> None:
         doc="The vacuum side of the time-travel trade (VERDICT r6 #6 — "
         "src_layout_time_travel deliberately defers it): the same "
         "v0 base / v1 append / v2 compact lifecycle, then VACUUM "
-        "reclaims the compaction's superseded files, pushing v1 past "
+        "reclaims the compaction's tombstoned files, pushing v1 past "
         "the retention horizon. Per version the query reports: "
-        "total_rows served from the surviving manifest log (count-from-"
+        "total_rows served from the surviving log (count-from-"
         "stats works for EVERY version, vacuumed or not — the log is "
         "never reclaimed), whether the snapshot is still readable, and "
         "the actual scan count for readable versions (NULL for v1 — "
-        "read_layout_snapshot raises rather than partial-reads, the "
+        "the snapshot reader raises rather than partial-reads, the "
         "loud-read guarantee driven here through the registered "
         "surface instead of only pytest). v0 stays readable (only the "
         "appended delta files were compacted away), v2 is the live "
@@ -578,9 +450,7 @@ def _register() -> None:
         snaps = _VACUUMED_LAYOUT.df(spark, sf_dir)
         parts = []
         for v, snap in zip(versions, snaps):
-            total = sum(
-                m["num_rows"] for m in read_manifest_as_of(path, v)
-            )
+            total = _log_rows(path, v)
             if snap is None:
                 parts.append(
                     spark.range(1).select(
@@ -613,14 +483,14 @@ def _register() -> None:
         "layout — the Delta/Iceberg bread-and-butter the append/compact/"
         "vacuum cycle was missing. A deterministic CDC batch scoped to a "
         "date window (updates: +100 qty; deletes; inserts under new "
-        "keys) merges in ONE pass: the manifest's min/max stats prune "
+        "keys) merges in ONE pass: the log's min/max stats prune "
         "the rewrite to files overlapping the window (the ON-clause "
         "partition predicate every production merge carries — the match "
         "key alone is non-unique here, exactly why real merges scope "
         "matches), those files LEFT-join the broadcast CDC key set with "
         "the window as a residual condition, op rows apply row-locally "
         "(D filters, U adjusts, I unions), and the rewrite commits as "
-        "new files + a put-if-absent manifest version — untouched files "
+        "remove + add actions in a put-if-absent commit — untouched files "
         "pass through by reference, so merge cost is O(touched files + "
         "CDC), never O(table). The serve query reads the merged "
         "snapshot and must reproduce the oracle's predicate-recomputed "
@@ -656,7 +526,7 @@ def _register() -> None:
         "Hudi compactor). Choose MoR when write amplification dominates "
         "(streaming upserts into huge files), CoW when read "
         "amplification does (hot analytic tables); this layout keeps "
-        "both paths against one manifest log.",
+        "both paths against one table log.",
     )
     def src_layout_mor_read(spark: SparkSession, sf_dir: str) -> DataFrame:
         out = _MOR_LAYOUT.df(spark, sf_dir).groupBy(
@@ -677,15 +547,15 @@ def _register() -> None:
         doc="ST14: streaming CDC apply — the copy-on-write MERGE (X32) "
         "driven by a change stream. Three month-scoped CDC batches "
         "arrive as micro-batches (maxFilesPerTrigger=1); each batch "
-        "applies the shared merge pass (manifest-pruned rewrite, "
-        "broadcast key join, U/D/I routing) and commits manifest "
-        "version batch_id+1 — and the commit is VERSION-GATED: a "
-        "replayed batch finds its target version already in the log and "
-        "skips, the Delta txnVersion idempotence pattern, so the sink "
+        "applies the shared merge pass (stats-pruned rewrite, "
+        "broadcast key join, U/D/I routing) and commits one Delta "
+        "version with a txn action through the version gate st18 shares "
+        "— a replayed batch finds its target version already in the log "
+        "and skips, the Delta txn idempotence pattern, so the sink "
         "is exactly-once however many times the source replays "
         "(pytest-pinned by a double drain). Every intermediate version "
-        "stays time-travel readable: the stream leaves v0..v3 in the "
-        "log. The final snapshot must reproduce the X32 oracle composed "
+        "stays time-travel readable: the stream leaves one version per "
+        "batch in the log. The final snapshot must reproduce the X32 oracle composed "
         "over all three windows — stream-applied merges ≡ one batch "
         "merge over the union, the st1/st13 contract at the table-"
         "format layer.",
@@ -715,18 +585,19 @@ def _register() -> None:
         tags=("source", "layout", "maintenance", "ops", "serve"),
         doc="Schema evolution as a metadata-only commit (the Delta/Iceberg "
         "ADD COLUMN path): the base layout commits at v0, then a delta "
-        "batch carrying a NEW column (l_priority_class) appends and "
-        "commits v1 — no base file is rewritten (pytest-pinned: every v0 "
-        "file passes into v1 by reference), each manifest row records "
-        "its file's column list, and the v1 read plans the union schema "
-        "with NULL fill for pre-evolution files (Spark's mergeSchema "
-        "over the manifest's file list). The serve query groups the "
+        "batch carrying a NEW column (l_priority_class) commits v1 as a "
+        "new metaData action plus its adds — no base file is rewritten "
+        "(pytest-pinned: every v0 file passes into v1 by reference), and "
+        "the v1 read scans every file under v1's schema, NULL-filling "
+        "the column in pre-evolution files (v0 readers keep v0's schema: "
+        "the reader takes the latest metaData at or before its version). "
+        "The serve query groups the "
         "merged snapshot by the evolved column, pre-evolution rows "
         "surfacing under a NULL-coalesced label, and must reproduce the "
         "oracle's predicate recomputation. At 100 TB this is why "
         "evolution must be O(metadata): rewriting a table to add a "
         "column is a full-table write, while schema-per-commit in the "
-        "log costs one manifest row per file and lets old files age out "
+        "log costs one metaData action and lets old files age out "
         "through normal compaction.",
     )
     def src_layout_schema_evolution(
@@ -762,14 +633,14 @@ def _register() -> None:
         tags=("source", "layout", "maintenance", "ops", "serve"),
         doc="Derived CDC read (Delta table_changes / Iceberg incremental "
         "read) between two committed snapshots of the merged layout: the "
-        "changelog is computed from the MANIFEST DIFF — files removed by "
-        "v1 hold the before-images, files added hold the after-images, "
+        "changelog is computed from the merge COMMIT — files its remove "
+        "actions name hold the before-images, its adds the after-images, "
         "and rows common to both (pass-through rows inside rewritten "
         "files) cancel under EXCEPT ALL multiset difference — so an "
         "update surfaces as its delete+insert pair without the writer "
         "ever logging row-level changes. Cost is O(rewritten files), "
-        "never O(table): pass-through files appear in both manifests and "
-        "are never read. The oracle recomputes the same changelog from "
+        "never O(table): pass-through files appear in neither action list "
+        "and are never read. The oracle recomputes the same changelog from "
         "the CDC predicates, proving the derived diff is exactly the "
         "applied change. At 100 TB this is how downstream incremental "
         "consumers (index maintenance, aggregate refresh) subscribe to a "
@@ -777,24 +648,18 @@ def _register() -> None:
     )
     def src_layout_cdc_read(spark: SparkSession, sf_dir: str) -> DataFrame:
         path = _MERGED_LAYOUT.dir(spark, sf_dir)
-        v0, v1 = _MERGED_LAYOUT.meta(spark, sf_dir)
-        snap = _MERGED_LAYOUT.df(spark, sf_dir)
-        m0 = read_manifest_as_of(path, v0)
-        m1 = read_manifest_as_of(path, v1)
-        f0 = {m["file"] for m in m0}
-        f1 = {m["file"] for m in m1}
+        _v0, v1 = _MERGED_LAYOUT.meta(spark, sf_dir)
+        actions = read_commit(path, v1)
+        schema = replay(path, v1).schema
 
-        # an empty diff side (e.g. an append-only merge variant) must
-        # yield an empty relation, not a zero-argument parquet() error
-        # (ADVICE r7); the snapshot supplies the schema — passed to the
-        # reader explicitly so no per-serve footer-inference pass runs
-        def side(files: set) -> DataFrame:
-            if files:
-                return spark.read.schema(snap.schema).parquet(*sorted(files))
-            return spark.createDataFrame([], snap.schema)
+        # an empty side (e.g. an append-only merge variant) is an empty
+        # relation: the snapshot reader's rule (ADVICE r7)
+        def side(kind: str) -> DataFrame:
+            paths = sorted(a[kind]["path"] for a in actions if kind in a)
+            return scan_files(spark, path, paths, schema)
 
-        old = side(f0 - f1)
-        new = side(f1 - f0)
+        old = side("remove")
+        new = side("add")
         diff = signed_diff(old, new, "l_quantity")
         out = (
             diff.withColumn(
@@ -812,27 +677,29 @@ def _register() -> None:
         return bounded_sort(out, "change_type")
 
 
+def _log_rows(layout_dir: str, version: int) -> int:
+    """COUNT(*) of a version from its files' stats — no scan."""
+    return sum(f["numRecords"] for f in replay(layout_dir, version).files)
+
+
 def _build_time_travel(spark: SparkSession, sf_dir: str, path: str) -> list[int]:
     """The versioned (non-vacuumed) time-travel layout; the store's
-    metadata is its committed versions."""
-    manifests, _superseded = _run_lifecycle(spark, sf_dir, path)
-    # each step's manifest commits to the version log; NO vacuum:
-    # superseded files stay until the retention horizon so v0/v1 remain
-    # readable — the Delta retention trade, deliberate here (the vacuum
-    # side is _build_vacuumed's job)
-    return [commit_manifest(path, m) for m in manifests]
+    metadata is its committed versions. NO vacuum: the compaction's
+    tombstones stay until the retention horizon so v0/v1 remain readable
+    — the Delta retention trade, deliberate here (the vacuum side is
+    _build_vacuumed's job)."""
+    _run_lifecycle(spark, sf_dir, path)
+    return log_versions(path)
 
 
 def _snapshot_relations(spark: SparkSession, layout_dir: str, version: int):
-    """(snapshot_df, window_df) for one manifest version — the resolved
-    relations the serve query reuses across invocations. window_df is the
+    """(snapshot_df, window_df) for one version — the resolved relations
+    the serve query reuses across invocations. window_df is the
     skipping-pruned scan with the window predicate re-applied."""
-    from bigdataindexing_spark.sources.skipping import manifest_keep
-
-    manifest = read_manifest_as_of(layout_dir, version)
-    snap = read_layout_snapshot(spark, manifest)
-    keep = manifest_keep(manifest, MAINT_LO, MAINT_HI)
-    return snap, spark.read.parquet(*keep).filter(
+    window = read_snapshot(
+        spark, layout_dir, version, ranges={"l_shipdate": (MAINT_LO, MAINT_HI)}
+    )
+    return read_snapshot(spark, layout_dir, version), window.filter(
         F.col("l_shipdate").between(MAINT_LO, MAINT_HI)
     )
 
@@ -850,29 +717,26 @@ _TIME_TRAVEL_LAYOUT = SessionParquetStore(
 
 # The VACUUMED time-travel layout: same v0 base / v1 append / v2 compact
 # lifecycle as _build_time_travel, then vacuum reclaims the compaction's
-# superseded files — v1 (which references the compacted-away delta files)
+# tombstones — v1 (which references the compacted-away delta files)
 # falls past the retention horizon while v0 (base files only, none
-# superseded: compaction takes strictly-smaller-than-minimum files, and
+# removed: compaction takes strictly-smaller-than-minimum files, and
 # the delta's 2 files each hold ~half a base file's rows) and v2 stay
 # readable. Metadata: the committed versions; handle: one snapshot_df per
 # version, None marking an unreadable snapshot.
 def _build_vacuumed(spark: SparkSession, sf_dir: str, path: str) -> list[int]:
-    manifests, superseded = _run_lifecycle(spark, sf_dir, path)
-    versions = [commit_manifest(path, m) for m in manifests]
-    # VACUUM past retention — the step _build_time_travel defers. The
-    # manifests survive (the log is never vacuumed, so count-from-stats
-    # still serves every version); only v1's FILES are reclaimed.
-    vacuum_layout(path, manifests[-1], superseded)
-    return versions
+    _run_lifecycle(spark, sf_dir, path)
+    # VACUUM past retention — the step _build_time_travel defers. The log
+    # survives (it is never vacuumed, so count-from-stats still serves
+    # every version); only v1's FILES are reclaimed.
+    vacuum_layout(path)
+    return log_versions(path)
 
 
 def _open_vacuumed(spark: SparkSession, path: str, versions: list[int]) -> list:
     snaps = []
     for v in versions:
         try:
-            snaps.append(
-                read_layout_snapshot(spark, read_manifest_as_of(path, v))
-            )
+            snaps.append(read_snapshot(spark, path, v))
         except FileNotFoundError:
             snaps.append(None)
     return snaps
@@ -916,38 +780,30 @@ def _merge_rows(
 
 
 def mor_merge_view(
-    spark: SparkSession,
-    manifest: list[dict],
-    delta_dir: str,
-    lo: str,
-    hi: str,
+    spark: SparkSession, path: str, version: int, lo: str, hi: str
 ) -> DataFrame:
-    """The read-time merge: base snapshot left-joins the broadcast delta
-    key set (window-scoped), drops D keys, adjusts U keys row-locally,
-    unions the insert records. Same single-pass shape as the CoW merge
-    — executed per READ instead of once per write. The log stores TYPED
-    sidecars (r11; guide §2.4): ``keys/`` holds the already-deduped
-    (key, op) change vectors, ``inserts/`` the insert row images — the
-    Hudi log-block split — so every read skips the double scan of a
-    mixed record dir, the op-routing filters, and the per-read
-    ``.distinct()`` exchange that used to re-dedup the vectors on each
-    serve."""
-    base = read_layout_snapshot(spark, manifest)
-    ud = spark.read.parquet(os.path.join(delta_dir, "keys"))
-    inserts = spark.read.parquet(os.path.join(delta_dir, "inserts"))
+    """The read-time merge: the base snapshot at ``version`` left-joins
+    the broadcast delta key set (window-scoped), drops D keys, adjusts U
+    keys row-locally, unions the insert records. Same single-pass shape
+    as the CoW merge — executed per READ instead of once per write. The
+    delta log under ``<path>/_delta`` stores TYPED sidecars (r11; guide
+    §2.4): ``keys/`` holds the already-deduped (key, op) change vectors,
+    ``inserts/`` the insert row images — the Hudi log-block split — so
+    every read skips the double scan of a mixed record dir, the
+    op-routing filters, and the per-read ``.distinct()`` exchange that
+    used to re-dedup the vectors on each serve."""
+    base = read_snapshot(spark, path, version)
+    ud = spark.read.parquet(os.path.join(path, "_delta", "keys"))
+    inserts = spark.read.parquet(os.path.join(path, "_delta", "inserts"))
     return _merge_rows(base, ud, inserts, lo, hi)
 
 
-def _build_mor(spark: SparkSession, sf_dir: str, path: str) -> list[dict]:
-    """The MERGE-ON-READ lifecycle: base commits once, the CDC batch
-    appends to the delta log, reads merge base + deltas. Metadata: the
-    base manifest; handle: the merge-on-read relation."""
-    from bigdataindexing_spark.tables import table
-
-    manifests, superseded = _run_lifecycle(spark, sf_dir, path)
-    manifest = manifests[-1]
-    vacuum_layout(path, manifest, superseded)
-    commit_manifest(path, manifest)
+def _build_mor(spark: SparkSession, sf_dir: str, path: str) -> int:
+    """The MERGE-ON-READ lifecycle: the maintained base commits once, the
+    CDC batch appends to the delta log, reads merge base + deltas.
+    Metadata: the base version; handle: the merge-on-read relation."""
+    _run_lifecycle(spark, sf_dir, path)
+    vacuum_layout(path)
     # the CDC batch appends DELTA RECORDS — (key, op) change vectors and
     # insert row images — to the delta log; no base file is touched
     li = table(spark, sf_dir, "lineitem")
@@ -979,66 +835,60 @@ def _build_mor(spark: SparkSession, sf_dir: str, path: str) -> list[dict]:
     inserts.drop("op").write.mode("overwrite").parquet(
         os.path.join(delta_dir, "inserts")
     )
-    return manifest
+    return log_versions(path)[-1]
 
 
 _MOR_LAYOUT = SessionParquetStore(
     "maint_mor",
     _build_mor,
-    lambda spark, path, manifest: mor_merge_view(
-        spark, manifest, os.path.join(path, "_delta"), MERGE_LO, MERGE_HI
+    lambda spark, path, version: mor_merge_view(
+        spark, path, version, MERGE_LO, MERGE_HI
     ),
 )
 
+ST14_APP_ID = "bdi-st14-cdc-apply"
 
-def cdc_apply_batch(path: str):
+
+def cdc_apply_batch(path: str, base_version: int):
     """foreachBatch sink: one copy-on-write merge per CDC micro-batch,
-    committing manifest version ``batch_id + 1``. VERSION-GATED for
-    exactly-once: a replayed batch finds its target version already in
-    the log and returns without touching the table — Delta's
-    txnAppId/txnVersion idempotence, expressed as the manifest log
-    itself being the transaction ledger."""
+    committed as version ``base_version + 1 + batch_id`` through the
+    version gate st18 shares — a replayed batch finds its version
+    already in the log and returns without touching the table."""
 
-    def fn(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        target = batch_id + 1
-        log = os.path.join(path, _MANIFEST_LOG_DIR, f"v{target}.json")
-        if os.path.exists(log):
-            return  # replay: this batch's merge already committed
+    def merge(batch_df: DataFrame, batch_id: int) -> list[dict]:
         row = batch_df.agg(
             F.min("l_shipdate").alias("lo"), F.max("l_shipdate").alias("hi")
         ).collect()[0]
         if row["lo"] is None:
             raise RuntimeError(
                 f"empty CDC batch {batch_id}: the version chain would skip "
-                f"v{target}"
+                f"v{base_version + 1 + batch_id}"
             )
-        lo = str(row["lo"].date())
-        hi = str(row["hi"].date())
-        manifest = read_manifest_as_of(path, target - 1)
-        new_manifest = _apply_cdc_merge(
-            spark, path, manifest, batch_df, lo, hi
+        return _apply_cdc_merge(
+            batch_df.sparkSession,
+            path,
+            base_version + batch_id,
+            batch_df,
+            str(row["lo"].date()),
+            str(row["hi"].date()),
         )
-        v = commit_manifest(path, new_manifest)
-        assert v == target, (v, target)
 
-    return fn
+    return stream_sink(path, ST14_APP_ID, base_version, merge)
 
 
 def _build_stream_merged(spark: SparkSession, sf_dir: str, path: str):
     """The STREAMING merge lifecycle (st14). Metadata: (arrivals_src,
-    [versions]); handle: the final snapshot. The arrivals live inside the
-    store directory, so they go when it is reclaimed."""
+    [pre-stream version, one version per micro-batch]); handle: the final
+    snapshot. The arrivals live inside the store directory, so they go
+    when it is reclaimed."""
     from bigdataindexing_spark.streaming.core import (
         run_foreach_batch,
         write_arrivals,
     )
-    from bigdataindexing_spark.tables import table
 
-    manifests, superseded = _run_lifecycle(spark, sf_dir, path)
-    manifest = manifests[-1]
-    vacuum_layout(path, manifest, superseded)
-    commit_manifest(path, manifest)  # v0: the pre-stream table
+    _run_lifecycle(spark, sf_dir, path)
+    vacuum_layout(path)
+    base_version = log_versions(path)[-1]  # the pre-stream table
     li = table(spark, sf_dir, "lineitem")
     src = os.path.join(path, "_arrivals")
     write_arrivals(
@@ -1053,41 +903,26 @@ def _build_stream_merged(spark: SparkSession, sf_dir: str, path: str):
         .option("maxFilesPerTrigger", "1")
         .parquet(src)
     )
-    run_foreach_batch(stream, cdc_apply_batch(path))
-    return src, manifest_versions(path)
+    run_foreach_batch(stream, cdc_apply_batch(path, base_version))
+    return src, log_versions(path)[base_version:]
 
 
 _STREAM_MERGED_LAYOUT = SessionParquetStore(
-    "maint_stream_merge",
-    _build_stream_merged,
-    lambda spark, path, meta: read_layout_snapshot(
-        spark, read_manifest_as_of(path, meta[1][-1])
-    ),
+    "maint_stream_merge", _build_stream_merged, open_latest
 )
 
 
 def _build_evolved(spark: SparkSession, sf_dir: str, path: str):
     """The SCHEMA-EVOLUTION lifecycle: base columns commit at v0, a delta
-    batch carrying a new column commits at v1 with zero base-file
-    rewrites. Metadata: (v0, v1); handle: the v1 relation, planned over
-    the union schema with NULL fill."""
-    from bigdataindexing_spark.tables import table
-
+    batch carrying a new column commits v1 — a new metaData action plus
+    its adds, zero base-file rewrites. Metadata: (v0, v1); handle: the v1
+    relation, every file scanned under v1's schema (NULL fill for the
+    pre-evolution files)."""
     li = table(spark, sf_dir, "lineitem")
     base = li.filter(F.col("l_orderkey") % 5 != 0)
-    (
-        base.repartitionByRange(3, F.col("l_shipdate"))
-        .write.mode("overwrite")
-        .parquet(path)
+    create_table(
+        spark, path, base.repartitionByRange(3, F.col("l_shipdate")), ["l_shipdate"]
     )
-    base_cols = base.columns
-    m0 = [
-        dict(r.asDict(), columns=base_cols)
-        for r in file_stats_manifest(
-            spark, _layout_files(path), "l_shipdate", "date"
-        ).collect()
-    ]
-    v0 = commit_manifest(path, m0)
     # the evolved delta: same rows as the arriving batch, plus a NEW
     # derived column — committed without touching any v0 file
     delta = li.filter(F.col("l_orderkey") % 5 == 0).withColumn(
@@ -1096,60 +931,30 @@ def _build_evolved(spark: SparkSession, sf_dir: str, path: str):
             F.lit("small")
         ),
     )
-    new_files = _commit_files(
-        path,
-        lambda d: (
-            delta.repartitionByRange(2, F.col("l_shipdate"))
-            .write.mode("overwrite")
-            .parquet(d)
-        ),
+    adds = _stage(
+        spark, path, delta.repartitionByRange(2, F.col("l_shipdate")), ["l_shipdate"]
     )
-    added = [
-        dict(r.asDict(), columns=delta.columns)
-        for r in file_stats_manifest(
-            spark, new_files, "l_shipdate", "date"
-        ).collect()
-    ]
-    v1 = commit_manifest(path, m0 + added)
-    return v0, v1
+    commit(path, 1, [metadata_action(path, delta.schema)] + adds)
+    return 0, 1
 
 
-_EVOLVED_LAYOUT = SessionParquetStore(
-    "schema_evo",
-    _build_evolved,
-    lambda spark, path, meta: read_layout_snapshot(
-        spark, read_manifest_as_of(path, meta[1]), merge_schema=True
-    ),
-)
+_EVOLVED_LAYOUT = SessionParquetStore("schema_evo", _build_evolved, open_latest)
 
 
 def _build_merged(spark: SparkSession, sf_dir: str, path: str):
-    """The MERGE lifecycle: maintained layout committed as v0, then one
-    copy-on-write CDC merge committed as v1. Metadata: (v0, v1); handle:
-    the merged v1 snapshot."""
-    from bigdataindexing_spark.tables import table
-
-    manifests, superseded = _run_lifecycle(spark, sf_dir, path)
-    manifest = manifests[-1]
-    vacuum_layout(path, manifest, superseded)
-    v0 = commit_manifest(path, manifest)
-
+    """The MERGE lifecycle: the maintained layout, then one copy-on-write
+    CDC merge committed on top. Metadata: (pre-merge version, merged
+    version); handle: the merged snapshot."""
+    _run_lifecycle(spark, sf_dir, path)
+    vacuum_layout(path)
+    v0 = log_versions(path)[-1]
     li = table(spark, sf_dir, "lineitem")
     win = li.filter(F.col("l_shipdate").between(MERGE_LO, MERGE_HI))
-    new_manifest = _apply_cdc_merge(
-        spark, path, manifest, win, MERGE_LO, MERGE_HI
-    )
-    v1 = commit_manifest(path, new_manifest)
-    return v0, v1
+    commit(path, v0 + 1, _apply_cdc_merge(spark, path, v0, win, MERGE_LO, MERGE_HI))
+    return v0, v0 + 1
 
 
-_MERGED_LAYOUT = SessionParquetStore(
-    "maint_merge",
-    _build_merged,
-    lambda spark, path, meta: read_layout_snapshot(
-        spark, read_manifest_as_of(path, meta[1])
-    ),
-)
+_MERGED_LAYOUT = SessionParquetStore("maint_merge", _build_merged, open_latest)
 
 
 def signed_diff(old: DataFrame, new: DataFrame, payload: str) -> DataFrame:
@@ -1189,22 +994,21 @@ def signed_diff(old: DataFrame, new: DataFrame, payload: str) -> DataFrame:
 def _apply_cdc_merge(
     spark: SparkSession,
     path: str,
-    manifest: list[dict],
+    version: int,
     win: DataFrame,
     lo: str,
     hi: str,
 ) -> list[dict]:
-    """One copy-on-write MERGE pass: derive the deterministic CDC batch
-    from the window's change-feed rows (op is a pure function of the
-    match key, l_orderkey % 7, so the DISTINCT key set is consistent
-    even though (l_orderkey, l_linenumber) repeats), prune the rewrite
-    to window-overlapping files, apply U/D row-locally and union the
-    inserts, and return the new manifest (untouched rows by reference +
-    fresh stats for the rewritten files). Shared by the batch merge
-    lifecycle and the streaming CDC apply (st14) — one merge semantics,
-    two drivers."""
-    from bigdataindexing_spark.sources.skipping import manifest_keep
-
+    """One copy-on-write MERGE pass against snapshot ``version``: derive
+    the deterministic CDC batch from the window's change-feed rows (op is
+    a pure function of the match key, l_orderkey % 7, so the DISTINCT key
+    set is consistent even though (l_orderkey, l_linenumber) repeats),
+    prune the rewrite to window-overlapping files, apply U/D row-locally
+    and union the inserts. Returns the commit's actions for version + 1:
+    removes for the rewritten files, adds (fresh stats) for their
+    replacements; untouched files pass through by reference. Shared by
+    the batch merge lifecycle and the streaming CDC apply (st14) — one
+    merge semantics, two drivers."""
     opmod = F.col("l_orderkey") % 7
     cdc_ud = (
         win.filter(opmod.isin(0, 1))
@@ -1223,26 +1027,14 @@ def _apply_cdc_merge(
 
     # Copy-on-write scope: ONLY files whose min/max overlaps the CDC
     # window are rewritten; everything else passes through by reference.
-    touched_set = set(manifest_keep(manifest, lo, hi))
-    touched = [m for m in manifest if m["file"] in touched_set]
-    untouched = [m for m in manifest if m["file"] not in touched_set]
-    tdf = spark.read.parquet(*[m["file"] for m in touched])
+    snap = replay(path, version)
+    touched = manifest_keep(snap.files, {"l_shipdate": (lo, hi)})
+    tdf = scan_files(spark, path, touched, snap.schema)
     merged = _merge_rows(tdf, cdc_ud, inserts, lo, hi)
-    new_files = _commit_files(
-        path,
-        lambda d: (
-            merged.repartitionByRange(2, F.col("l_shipdate"))
-            .write.mode("overwrite")
-            .parquet(d)
-        ),
+    adds = _stage(
+        spark, path, merged.repartitionByRange(2, F.col("l_shipdate")), ["l_shipdate"]
     )
-    added = [
-        r.asDict()
-        for r in file_stats_manifest(
-            spark, new_files, "l_shipdate", "date"
-        ).collect()
-    ]
-    return untouched + added
+    return remove_actions(touched) + adds
 
 
 _register()

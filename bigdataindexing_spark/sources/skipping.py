@@ -1,6 +1,5 @@
-"""File-level min/max data skipping: a manifest of per-file column stats
-plus a range-clustered layout whose scans prune FILES before Spark ever
-lists them.
+"""File-level min/max data skipping: range-clustered layouts on the
+table log, whose scans prune FILES before Spark ever lists them.
 
 This is the table-format technique (Delta/Iceberg data skipping, Parquet
 row-group pruning lifted one level up) expressed minimally:
@@ -11,169 +10,67 @@ row-group pruning lifted one level up) expressed minimally:
   file spanning the whole domain and nothing can be skipped; the
   reference's Redis keyspace has no such lever at all, its KEYS scan
   always touches everything — PlanService.java:106).
-- **Manifest**: per-file (num_rows, min, max) of the clustering column,
-  harvested from Parquet FOOTERS ONLY by a distributed Arrow pass — no
-  data pages are read. At 100 TB the manifest is thousands of rows
-  (one per file), a broadcast-sized relation maintained incrementally on
-  ingest exactly like the postings store (index/build.py).
-- **Pruned scan**: a range predicate consults the manifest first and
-  hands Spark only the overlapping files. Catalyst's own row-group
-  pruning (PushedFilters) still applies INSIDE each surviving file; the
-  manifest saves the listing/footer/scheduling cost of files that cannot
-  match — the dominant cost of a narrow range query over a huge table.
+- **Stats**: each layout is a Delta table (``sources/delta_log.py``)
+  whose v0 commit adds every file with its (numRecords, min, max)
+  harvested from Parquet FOOTERS ONLY by the log's one distributed Arrow
+  pass — no data pages are read. At 100 TB that is thousands of add
+  actions (one per file), maintained incrementally on ingest exactly like
+  the postings store (index/build.py).
+- **Pruned scan**: a range predicate replays the log's stats first and
+  hands Spark only the overlapping files (``delta_log.manifest_keep``,
+  driver-side, no Spark job). Catalyst's own row-group pruning
+  (PushedFilters) still applies INSIDE each surviving file; the stats
+  save the listing/footer/scheduling cost of files that cannot match —
+  the dominant cost of a narrow range query over a huge table.
 
 Correctness is pruning-independent by construction (the same predicate is
 re-applied to the surviving rows), so the oracle is the plain full-scan
 SQL — skipping must be a pure I/O reduction, the same contract as
-q39/q96's "salting is an execution-plan change only".
+q39/q96's "salting is an execution-plan change only". When no file
+survives, the snapshot reader returns an empty relation with the log's
+schema.
 """
 
 from __future__ import annotations
-
-import os
-from collections.abc import Iterator
-
-import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from bigdataindexing_spark.registry import register
+from bigdataindexing_spark.sources.delta_log import open_latest, read_snapshot
+from bigdataindexing_spark.sources.maintenance import create_table
 from bigdataindexing_spark.sources.store_dirs import SessionParquetStore
 from bigdataindexing_spark.tables import bounded_sort, table
 
 N_CLUSTER_FILES = 16
 
 
-def _footer_stats(col: str):
-    """mapInPandas worker: per-file (path, rows, min, max) from Parquet
-    footer metadata only — no data pages are decoded."""
+def _build_clustered(spark: SparkSession, sf_dir: str, path: str) -> None:
+    """Lineitem range-clustered by l_shipdate into N_CLUSTER_FILES files,
+    committed with their l_shipdate stats.
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import pyarrow.parquet as pq
-
-        for pdf in batches:
-            out = []
-            for path in pdf["file"]:
-                meta = pq.ParquetFile(path).metadata
-                idx = meta.schema.names.index(col)
-                mins, maxs = [], []
-                for g in range(meta.num_row_groups):
-                    st = meta.row_group(g).column(idx).statistics
-                    if st is not None and st.has_min_max:
-                        mins.append(st.min)
-                        maxs.append(st.max)
-                out.append(
-                    {
-                        "file": path,
-                        "num_rows": meta.num_rows,
-                        "min_v": min(mins) if mins else None,
-                        "max_v": max(maxs) if maxs else None,
-                    }
-                )
-            yield pd.DataFrame(out)
-
-    return gen
-
-
-def file_stats_manifest(
-    spark: SparkSession, files: list[str], col: str, value_type: str
-) -> DataFrame:
-    """Distributed footer harvest: one manifest row per data file.
-
-    ``files`` is the layout's file listing (at real scale: the table
-    format's add-file log); the stat harvest runs on executors via an
-    Arrow pass, one footer read per file, so manifest build cost is
-    O(files), independent of data volume."""
-    paths = spark.createDataFrame([(f,) for f in sorted(files)], "file string")
-    schema = (
-        f"file string, num_rows bigint, min_v {value_type}, max_v {value_type}"
+    The stats are harvested by ONE distributed footer pass at write time
+    and live in the log — bounded by FILE COUNT — so query planning
+    later replays a list, not a Spark job."""
+    create_table(
+        spark,
+        path,
+        table(spark, sf_dir, "lineitem").repartitionByRange(
+            N_CLUSTER_FILES, F.col("l_shipdate")
+        ),
+        ["l_shipdate"],
     )
-    return paths.mapInPandas(_footer_stats(col), schema)
 
 
-def _build_clustered(spark: SparkSession, sf_dir: str, path: str) -> list[dict]:
-    """Lineitem range-clustered by l_shipdate into N_CLUSTER_FILES files;
-    returns its file-stats manifest.
-
-    The manifest is harvested by ONE distributed footer pass at write time
-    and collect()ed — bounded by FILE COUNT, the same driver-side metadata
-    a table format replays from its log — so query planning later consults
-    a list, not a Spark job."""
-    (
-        table(spark, sf_dir, "lineitem")
-        .repartitionByRange(N_CLUSTER_FILES, F.col("l_shipdate"))
-        .write.mode("overwrite")
-        .parquet(path)
-    )
-    files = [
-        os.path.join(path, f)
-        for f in os.listdir(path)
-        if f.endswith(".parquet")
-    ]
-    return [
-        r.asDict()
-        for r in file_stats_manifest(
-            spark, files, "l_shipdate", "date"
-        ).collect()
-    ]
-
-
-# The shipdate-clustered lineitem layout is a session store whose
-# metadata is its manifest rows. Built once per session (a layout is a
-# property of the table, not of any one query) — same build-once/serve-many
-# policy as the inverted index and the LSH signature store. The manifest is
-# harvested ONCE, right after the layout write, by the distributed footer
-# pass and kept driver-side: that is exactly how Delta/Iceberg serve
-# planning — the scan planner replays file stats from the transaction log,
-# it never re-reads footers per query. Manifest size is O(files), never
+# The shipdate-clustered lineitem layout is a session store: built once
+# per session (a layout is a property of the table, not of any one query)
+# — same build-once/serve-many policy as the inverted index and the LSH
+# signature store. Its file stats are harvested ONCE, right after the
+# layout write, into the log: that is exactly how Delta/Iceberg serve
+# planning — the scan planner replays file stats from the transaction
+# log, it never re-reads footers per query. Log size is O(files), never
 # O(rows).
-_CLUSTERED = SessionParquetStore("clustered_lineitem", _build_clustered)
-
-
-def pruned_files(
-    spark: SparkSession, sf_dir: str, lo, hi
-) -> tuple[list[str], int]:
-    """Plan-time pruning: intersect the range predicate with the cached
-    manifest — pure driver-side work over O(files) rows, no Spark job
-    (the scan-planning step of a table format's data skipping)."""
-    manifest = _CLUSTERED.meta(spark, sf_dir)
-    keep = manifest_keep(manifest, lo, hi)
-    return keep, len(manifest)
-
-
-def _coerce_bound(bound, stat):
-    """Give ``bound`` the stat's type so comparisons are typed, never
-    lexicographic: an ISO string bound against a date stat parses to a
-    date; numeric stats expect numeric bounds and pass through (a string
-    bound against an int stat would mis-prune — '9' > '10')."""
-    import datetime as _dt
-
-    if isinstance(stat, _dt.datetime) and isinstance(bound, str):
-        return _dt.datetime.fromisoformat(bound)
-    if isinstance(stat, _dt.date) and isinstance(bound, str):
-        return _dt.date.fromisoformat(bound)
-    return bound
-
-
-def manifest_keep(manifest: list[dict], lo, hi) -> list[str]:
-    """Files the range predicate cannot rule out. A file with absent
-    stats CANNOT be pruned — skipping may only drop files proven
-    non-overlapping (the conservative contract every table format
-    honors; dropping an unproven file would change results). BOTH bounds
-    must be present to prune: a one-sided stat (possible if a stats
-    harvester records min/max independently) conservatively keeps the
-    file rather than comparing against None."""
-    out = []
-    for m in manifest:
-        mn, mx = m["min_v"], m["max_v"]
-        if (
-            mn is None
-            or mx is None
-            or (mn <= _coerce_bound(hi, mn) and mx >= _coerce_bound(lo, mx))
-        ):
-            out.append(m["file"])
-    return out
+_CLUSTERED = SessionParquetStore("clustered_lineitem", _build_clustered, open_latest)
 
 
 SKIP_LO = "1995-06-01"
@@ -189,25 +86,23 @@ SKIP_HI = "1995-08-31"
     tags=("source", "skipping", "layout", "serve"),
     doc="File-level min/max data skipping (the Delta/Iceberg manifest "
     "technique): lineitem is range-clustered by l_shipdate at write time "
-    "(once per session), a footer-only manifest records each file's "
-    "(min, max) once at write time, and this 3-month range query consults "
-    "the cached manifest DRIVER-SIDE at plan time (no Spark job — the "
+    "(once per session), the table log records each file's footer "
+    "(min, max) once at write time, and this 3-month range query replays "
+    "those stats DRIVER-SIDE at plan time (no Spark job — the "
     "Delta/Iceberg log-replay pattern) to scan ONLY the files whose "
     "range overlaps — ~3/16 of the layout at sf0.1 — then re-applies the "
     "predicate so results are pruning-independent. At 100 TB the "
-    "manifest stays file-count-sized and broadcastable while the saved "
+    "log stays file-count-sized while the saved "
     "work (listing, footers, task scheduling for non-matching files) "
     "grows with the table; tests/test_skipping.py asserts both the "
     "pruning (surviving files < total) and result equality with the "
     "full scan. Oracle: the plain full-scan SQL over lineitem.",
 )
 def q111_minmax_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
-    keep, _total = pruned_files(spark, sf_dir, SKIP_LO, SKIP_HI)
-    # An empty survivor set still needs a valid (empty) scan of the schema
-    src = (
-        spark.read.parquet(*keep)
-        if keep
-        else spark.read.parquet(_CLUSTERED.dir(spark, sf_dir))
+    src = read_snapshot(
+        spark,
+        _CLUSTERED.dir(spark, sf_dir),
+        ranges={"l_shipdate": (SKIP_LO, SKIP_HI)},
     )
     return (
         src.filter(
@@ -236,7 +131,7 @@ def q111_minmax_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
 # 6-bit equal-width bucket (row-local arithmetic; production systems use
 # range ranks from column quantiles for skewed domains — same interleave
 # afterwards), the 12-bit z-value range-partitions the write, and the
-# manifest records per-file min/max of BOTH raw columns, so pruning
+# log records per-file min/max of BOTH raw columns, so pruning
 # correctness never depends on the bucketing at all.
 
 Z_BITS = 6
@@ -269,49 +164,9 @@ def _zvalue(d_bucket, q_bucket):
     return functools.reduce(operator.add, terms)
 
 
-def _footer_stats_multi(cols: list[str]):
-    """mapInPandas worker: per-file (path, rows, min_i/max_i per col) from
-    Parquet footer metadata only."""
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import pyarrow.parquet as pq
-
-        for pdf in batches:
-            out = []
-            for path in pdf["file"]:
-                meta = pq.ParquetFile(path).metadata
-                row = {"file": path, "num_rows": meta.num_rows}
-                for ci, col in enumerate(cols):
-                    idx = meta.schema.names.index(col)
-                    mins, maxs = [], []
-                    for g in range(meta.num_row_groups):
-                        st = meta.row_group(g).column(idx).statistics
-                        if st is not None and st.has_min_max:
-                            mins.append(st.min)
-                            maxs.append(st.max)
-                    row[f"min_{ci}"] = min(mins) if mins else None
-                    row[f"max_{ci}"] = max(maxs) if maxs else None
-                out.append(row)
-            yield pd.DataFrame(out)
-
-    return gen
-
-
-def file_stats_manifest_multi(
-    spark: SparkSession, files: list[str], cols: list[str], value_types: list[str]
-) -> DataFrame:
-    paths = spark.createDataFrame([(f,) for f in sorted(files)], "file string")
-    stat_cols = ", ".join(
-        f"min_{i} {t}, max_{i} {t}" for i, t in enumerate(value_types)
-    )
-    return paths.mapInPandas(
-        _footer_stats_multi(cols), f"file string, num_rows bigint, {stat_cols}"
-    )
-
-
-def _build_zorder(spark: SparkSession, sf_dir: str, path: str) -> list[dict]:
-    """Lineitem Z-ordered on (l_shipdate, l_quantity); returns its
-    two-column stats manifest."""
+def _build_zorder(spark: SparkSession, sf_dir: str, path: str) -> None:
+    """Lineitem Z-ordered on (l_shipdate, l_quantity), committed with
+    stats on both columns."""
     n_buckets = 1 << Z_BITS
     d_bucket = F.least(
         F.lit(n_buckets - 1),
@@ -331,52 +186,16 @@ def _build_zorder(spark: SparkSession, sf_dir: str, path: str) -> list[dict]:
             (F.col("l_quantity") * n_buckets / (Z_QTY_MAX + 1)).cast("int"),
         ),
     )
-    (
+    zordered = (
         table(spark, sf_dir, "lineitem")
         .withColumn("_z", _zvalue(d_bucket, q_bucket))
         .repartitionByRange(Z_FILES, F.col("_z"))
         .drop("_z")
-        .write.mode("overwrite")
-        .parquet(path)
     )
-    files = [
-        os.path.join(path, f)
-        for f in os.listdir(path)
-        if f.endswith(".parquet")
-    ]
-    return [
-        r.asDict()
-        for r in file_stats_manifest_multi(
-            spark, files, ["l_shipdate", "l_quantity"], ["date", "double"]
-        ).collect()
-    ]
+    create_table(spark, path, zordered, ["l_shipdate", "l_quantity"])
 
 
-_ZORDER = SessionParquetStore("zorder_lineitem", _build_zorder)
-
-
-def manifest_keep_multi(manifest: list[dict], preds: list[tuple[int, object, object]]) -> list[str]:
-    """Files no predicate dimension can rule out. ``preds`` is a list of
-    (column index, lo, hi); bounds are compared TYPED against the stats
-    (ISO strings coerce to the stat's date/datetime type, numerics pass
-    through — never lexicographic). A file is pruned only when some
-    dimension PROVES disjointness; absent or one-sided stats keep the
-    file (same conservative contract as manifest_keep)."""
-    keep = []
-    for m in manifest:
-        pruned = False
-        for ci, lo, hi in preds:
-            mn, mx = m.get(f"min_{ci}"), m.get(f"max_{ci}")
-            if (
-                mn is not None
-                and mx is not None
-                and (mn > _coerce_bound(hi, mn) or mx < _coerce_bound(lo, mx))
-            ):
-                pruned = True
-                break
-        if not pruned:
-            keep.append(m["file"])
-    return keep
+_ZORDER = SessionParquetStore("zorder_lineitem", _build_zorder, open_latest)
 
 
 ZQ_DATE_LO = "1996-01-01"
@@ -399,8 +218,8 @@ ZQ_QTY_HI = 10
     "buckets row-locally, bit-interleaved into a z-value, and lineitem "
     "is range-partitioned on z at write time — each file then covers a "
     "small RECTANGLE of the (date, quantity) plane, so this conjunctive "
-    "two-range query prunes files on BOTH dimensions from the cached "
-    "two-column manifest (driver-side plan-time consult, like "
+    "two-range query prunes files on BOTH dimensions from the log's "
+    "two-column stats (driver-side plan-time consult, like "
     "q111_minmax_skipping; a single-column layout can never prune on "
     "the second predicate — tests/test_skipping.py proves the "
     "difference). The predicate is re-applied to surviving rows, so "
@@ -408,21 +227,14 @@ ZQ_QTY_HI = 10
     "SQL.",
 )
 def q112_zorder_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import datetime as _dt
-
-    manifest = _ZORDER.meta(spark, sf_dir)
-    keep = manifest_keep_multi(
-        manifest,
-        [
-            (
-                0,
-                _dt.date.fromisoformat(ZQ_DATE_LO),
-                _dt.date.fromisoformat(ZQ_DATE_HI),
-            ),
-            (1, ZQ_QTY_LO, ZQ_QTY_HI),
-        ],
+    src = read_snapshot(
+        spark,
+        _ZORDER.dir(spark, sf_dir),
+        ranges={
+            "l_shipdate": (ZQ_DATE_LO, ZQ_DATE_HI),
+            "l_quantity": (ZQ_QTY_LO, ZQ_QTY_HI),
+        },
     )
-    src = spark.read.parquet(*keep) if keep else spark.read.parquet(_path)
     return (
         src.filter(
             F.col("l_shipdate").between(F.lit(ZQ_DATE_LO), F.lit(ZQ_DATE_HI))

@@ -1,12 +1,12 @@
 """Session-materialized stores: one class for every build-once/serve-many
 relation the engine keeps (dedup signature stores, postings and search
 indexes, sketches, rollups, clustered / Z-ordered / partitioned layouts,
-Delta tables, maintained manifest layouts).
+Delta tables and the maintained layouts on the Delta log).
 
 A store is a :class:`SessionParquetStore` instance. Its **build** contract
 is ``build(spark, sf_dir, path) -> metadata``: write the store into the
-given fresh directory and optionally return driver-side metadata (a
-file-stats manifest, committed versions, PQ codebooks). Inputs the build
+given fresh directory and optionally return driver-side metadata (the
+committed versions, PQ codebooks). Inputs the build
 keeps for later (the arrivals a stream replays) go under ``path`` too, so
 they are reclaimed with the store. Its **open**
 contract is ``open(spark, path, metadata) -> handle``: the session-bound

@@ -10,9 +10,6 @@ Targets (VERDICT r10 "Next round" items 2-5):
   q125   current 4-leg dq audit (4 single-row aggregates unioned) vs
          fused variant (legs emit violation labels, ONE groupBy('chk')
          counts them, 5-row names frame restores zero-count checks).
-  mor    current merge-on-read (mixed delta dir scanned twice + read-
-         time distinct) vs typed-sidecar variant (change vectors pre-
-         deduped at log-append time, insert images separate).
 
 Each timed run = full noop-sink execution under bench-session knobs
 (parts=4, AQE off, maxPartitionBytes=4m). Variants alternate A,B,A,B...
@@ -228,70 +225,10 @@ def q125_variants(spark):
     }
 
 
-# --- mor: mixed delta dir vs typed sidecars ----------------------------------
-
-
-def mor_variants(spark):
-    from bigdataindexing_spark.sources import maintenance as mnt
-
-    path = mnt._MOR_LAYOUT.dir(spark, SF_DIR)
-    manifest = mnt._MOR_LAYOUT.meta(spark, SF_DIR)
-    mor = mnt._MOR_LAYOUT.df(spark, SF_DIR)
-    delta_dir = os.path.join(path, "_delta")
-    d = spark.read.parquet(delta_dir)
-    ud_dir = os.path.join(path, "_delta_ud_probe")
-    ins_dir = os.path.join(path, "_delta_ins_probe")
-    if not os.path.isdir(ud_dir):
-        (
-            d.filter(F.col("op").isin("U", "D"))
-            .select(
-                F.col("l_orderkey").alias("c_orderkey"),
-                F.col("l_linenumber").alias("c_linenumber"),
-                "op",
-            )
-            .distinct()
-            .coalesce(1)
-            .write.mode("overwrite")
-            .parquet(ud_dir)
-        )
-        d.filter(F.col("op") == "I").drop("op").coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(ins_dir)
-
-    def new():
-        base = mnt.read_layout_snapshot(spark, manifest)
-        ud = spark.read.parquet(ud_dir)
-        inserts = spark.read.parquet(ins_dir)
-        merged = mnt._merge_rows(base, ud, inserts, mnt.MERGE_LO, mnt.MERGE_HI)
-        from bigdataindexing_spark.tables import bounded_sort
-
-        out = merged.groupBy(
-            F.date_format("l_shipdate", "yyyy-MM").alias("month")
-        ).agg(
-            F.count(F.lit(1)).alias("n_rows"),
-            F.round(F.sum("l_quantity"), 2).alias("sum_qty"),
-        )
-        return bounded_sort(out, "month")
-
-    def cur():
-        from bigdataindexing_spark.tables import bounded_sort
-
-        out = mor.groupBy(
-            F.date_format("l_shipdate", "yyyy-MM").alias("month")
-        ).agg(
-            F.count(F.lit(1)).alias("n_rows"),
-            F.round(F.sum("l_quantity"), 2).alias("sum_qty"),
-        )
-        return bounded_sort(out, "month")
-
-    return {"A_current": cur, "B_sidecars": new}
-
-
 TARGETS = {
     "q80": q80_variants,
     "q129": q129_variants,
     "q125": q125_variants,
-    "mor": mor_variants,
 }
 
 

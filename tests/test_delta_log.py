@@ -17,8 +17,8 @@ import pytest
 from bigdataindexing_spark.sources.delta_log import (
     DELTA_READ_HI,
     _DELTA_TABLE,
-    delta_snapshot_files,
-    read_delta_snapshot,
+    read_snapshot,
+    replay,
 )
 
 
@@ -51,32 +51,30 @@ def test_log_layout_matches_protocol(table_dir):
 
 
 def test_state_reconstruction_across_versions(table_dir):
-    v0 = {a["path"] for a in delta_snapshot_files(table_dir, 0)}
-    v1 = {a["path"] for a in delta_snapshot_files(table_dir, 1)}
-    v2 = {a["path"] for a in delta_snapshot_files(table_dir, 2)}
+    v0 = {a["path"] for a in replay(table_dir, 0).files}
+    v1 = {a["path"] for a in replay(table_dir, 1).files}
+    v2 = {a["path"] for a in replay(table_dir, 2).files}
     assert v0 < v1, "append must strictly grow the file set"
     # the CoW delete swaps exactly one file for its rewrite
     assert "part-b.parquet" in v1 and "part-b.parquet" not in v2
     assert "part-b2.parquet" in v2
     # latest == explicit-latest-version
-    latest = {a["path"] for a in delta_snapshot_files(table_dir)}
+    latest = {a["path"] for a in replay(table_dir).files}
     assert latest == v2
 
 
 def test_reader_refuses_unknown_version(table_dir):
     with pytest.raises(ValueError):
-        delta_snapshot_files(table_dir, 99)
+        replay(table_dir, 99)
 
 
 def test_stats_pruning_reads_fewer_files(spark, table_dir):
-    all_files = delta_snapshot_files(table_dir)
-    pruned = read_delta_snapshot(
-        spark, table_dir, doc_id_range=(0, DELTA_READ_HI)
-    )
+    all_files = replay(table_dir).files
+    pruned = read_snapshot(spark, table_dir, ranges={"doc_id": (0, DELTA_READ_HI)})
     n_read = len(pruned.inputFiles())
     assert n_read < len(all_files), (n_read, len(all_files))
     # pruning is sound: no row in the dropped files matches the range
-    full = read_delta_snapshot(spark, table_dir)
+    full = read_snapshot(spark, table_dir)
     want = full.filter(f"doc_id <= {DELTA_READ_HI}").count()
     got = pruned.filter(f"doc_id <= {DELTA_READ_HI}").count()
     assert got == want
@@ -87,7 +85,7 @@ def test_store_handle_is_the_latest_snapshot(spark, sf_dir, table_dir):
     the data directory, which still holds the removed part-b beside its
     rewrite part-b2."""
     handle = _DELTA_TABLE.df(spark, sf_dir)
-    live = {os.path.join(table_dir, a["path"]) for a in delta_snapshot_files(table_dir)}
+    live = {os.path.join(table_dir, a["path"]) for a in replay(table_dir).files}
     assert {f.removeprefix("file://") for f in handle.inputFiles()} == live
     assert handle.count() == handle.select("doc_id").distinct().count()
 
@@ -101,9 +99,7 @@ def test_stream_sink_exactly_once_under_replay(spark, sf_dir):
     from bigdataindexing_spark.sources.delta_log import (
         ST18_APP_ID,
         _STREAM_DELTA_TABLE,
-        delta_snapshot_files,
         delta_stream_sink_batch,
-        read_delta_snapshot,
     )
     from bigdataindexing_spark.streaming.core import run_foreach_batch
 
@@ -111,7 +107,7 @@ def test_stream_sink_exactly_once_under_replay(spark, sf_dir):
     commits_before = sorted(
         os.listdir(os.path.join(table_dir, "_delta_log"))
     )
-    rows_before = read_delta_snapshot(spark, table_dir).count()
+    rows_before = read_snapshot(spark, table_dir).count()
     assert len(commits_before) == 4  # v0 base + 3 streamed batches
 
     # txn actions present on every streamed commit
@@ -123,7 +119,7 @@ def test_stream_sink_exactly_once_under_replay(spark, sf_dir):
 
     # replay: fresh checkpoint, same source -> all batches re-delivered
     src = _STREAM_DELTA_TABLE.meta(spark, sf_dir)
-    docs_schema = read_delta_snapshot(spark, table_dir).schema
+    docs_schema = read_snapshot(spark, table_dir).schema
     stream = (
         spark.readStream.schema(docs_schema)
         .option("maxFilesPerTrigger", "1")
@@ -133,8 +129,8 @@ def test_stream_sink_exactly_once_under_replay(spark, sf_dir):
 
     commits_after = sorted(os.listdir(os.path.join(table_dir, "_delta_log")))
     assert commits_after == commits_before, "replay must not add commits"
-    assert read_delta_snapshot(spark, table_dir).count() == rows_before
-    assert {a["path"] for a in delta_snapshot_files(table_dir)} == {
+    assert read_snapshot(spark, table_dir).count() == rows_before
+    assert {a["path"] for a in replay(table_dir).files} == {
         "part-base.parquet",
         "part-s0.parquet",
         "part-s1.parquet",

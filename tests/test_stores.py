@@ -24,14 +24,13 @@ from bigdataindexing_spark.sources.store_dirs import STORES
 registry.all_specs()  # imports every module, so every store has registered
 
 # session_store_dir() call sites that are scratch space, not stores:
-# checkpoints, per-invocation stream outputs, staging and arrival dirs
+# checkpoints and per-invocation stream outputs
 SCRATCH_KINDS = {
     "cc_checkpoint",
     "stream_cms",
     "stream_scd2",
     "stream_quantile",
     "stream_adaptive_quantile",
-    "delta_tmp",
 }
 
 
