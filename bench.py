@@ -468,6 +468,12 @@ def _stdout_queries(timings: dict[str, float], out: dict) -> dict[str, float]:
     day (the old "60 slowest this run" rule produced six false
     dropped_from_bench rows per round)."""
     sel = {k: round(timings[k], 2) for k in STDOUT_PINNED if k in timings}
+    pinned_line = json.dumps({**out, "queries": sel}, separators=(",", ":"))
+    if len(pinned_line) > 1900:
+        raise ValueError(
+            f"STDOUT_PINNED alone makes a {len(pinned_line)}-char stdout "
+            "line, over the 1900-char budget: shorten the pinned list"
+        )
     for k in sorted(timings):
         if k in sel:
             continue

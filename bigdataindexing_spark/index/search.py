@@ -1,22 +1,42 @@
-"""Search queries served through the inverted index (SURVEY.md §2.9 X5).
+"""Search queries over the inverted index (SURVEY.md §2.9 X5).
 
-The declared queries run the index build inside the plan (build + lookup in
-one DAG) so the oracle can verify end-to-end equivalence with a raw scan
-formulation (`LIKE`-padded containment ≡ posting-list membership under
-space tokenization).
+Two kinds of query live here. The inline ones run the index build inside
+the plan (build + lookup in one DAG), so the oracle verifies end-to-end
+equivalence with a raw scan formulation (`LIKE`-padded containment ≡
+posting-list membership under space tokenization). The ``*_serve`` and
+merge queries read materialized index SEGMENTS (index/build.write_segment)
+the way a search tier reads Elasticsearch:
+
+- ``search_idx`` — the segment over all documents plus per-posting BM25
+  impacts and per-term max impacts; :func:`search_index_table` is its
+  one public read;
+- ``segment_base`` / ``segment_delta`` — the same segment layout over the
+  documents with ``doc_id % 10 < 8`` and ``>= 8``: the index as of the
+  last build and the newly arrived 20%, for incremental maintenance;
+- ``positional_postings`` / ``positional_packed_base`` — the positional
+  tier for phrase search and its incremental merge.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from bigdataindexing_spark.index.build import (  # noqa: F401 (BM25_* re-exported)
+    BM25_B,
+    BM25_K1,
+    bm25_oracle,
+    bm25_weight,
+    corpus_stats,
+    doc_terms,
+    term_rows,
+    write_segment,
+)
+from bigdataindexing_spark.registry import register
 from bigdataindexing_spark.sources.store_dirs import (
     SessionParquetStore,
     write_store,
 )
-
-from bigdataindexing_spark.index.build import term_rows
-from bigdataindexing_spark.registry import register
 from bigdataindexing_spark.tables import bounded_sort, spread, table
 
 
@@ -38,6 +58,16 @@ def idx_term_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _top_df(rows: DataFrame) -> DataFrame:
+    """The ten highest-df tokens of (doc_id, token) distinct-pair rows."""
+    return (
+        rows.groupBy("token")
+        .agg(F.count(F.lit(1)).alias("df"))
+        .orderBy(F.col("df").desc(), "token")
+        .limit(10)
+    )
+
+
 @register(
     "idx_top_terms",
     oracle="WITH u AS (SELECT DISTINCT doc_id, UNNEST(string_split(lower(text), ' ')) "
@@ -53,21 +83,7 @@ def idx_term_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
     "token aggregation the naive formulation pays.",
 )
 def idx_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from bigdataindexing_spark.functions.text import tokens
-
-    toks = (
-        spread(table(spark, sf_dir, "documents"))
-        .select(
-            F.explode(F.array_distinct(tokens("text"))).alias("token")
-        )
-        .filter(F.col("token") != "")
-    )
-    return (
-        toks.groupBy("token")
-        .agg(F.count(F.lit(1)).alias("df"))
-        .orderBy(F.col("df").desc(), "token")
-        .limit(10)
-    )
+    return _top_df(doc_terms(spread(table(spark, sf_dir, "documents"))))
 
 
 @register(
@@ -84,42 +100,38 @@ def idx_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     "the surviving documents.",
 )
 def idx_delete_anti_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from bigdataindexing_spark.functions.text import tokens
-
     docs = spread(table(spark, sf_dir, "documents"))
-    # row-local per-doc dedupe (df counts documents, not occurrences),
-    # then the anti-join against the tombstone set runs on the flat
+    # the anti-join against the tombstone set runs on the flat distinct
     # (doc_id, token) rows and the single rebuild aggregate keys on token
-    rows = docs.select(
-        "doc_id",
-        F.explode(F.array_distinct(tokens("text"))).alias("token"),
-    ).filter(F.col("token") != "")
     deletes = docs.select("doc_id").filter(F.col("doc_id") < 100)
-    remaining = rows.join(F.broadcast(deletes), "doc_id", "left_anti")
-    return (
-        remaining.groupBy("token")
-        .agg(F.count(F.lit(1)).alias("df"))
-        .orderBy(F.col("df").desc(), "token")
-        .limit(10)
+    return _top_df(
+        doc_terms(docs).join(F.broadcast(deletes), "doc_id", "left_anti")
     )
 
 
-# The BASE postings store (docs with doc_id % 10 < 8): the "index as of
-# the last build" that incremental maintenance merges new arrivals into.
-# Materialized once per session — an incremental-maintenance benchmark
-# where the base is rebuilt per query would be measuring a full rebuild,
-# the exact thing merging exists to avoid.
-def _build_base_postings(spark: SparkSession, sf_dir: str, path: str) -> None:
-    from bigdataindexing_spark.index.build import postings
-
-    docs = spread(table(spark, sf_dir, "documents"))
-    write_store(
-        postings(docs.filter(F.col("doc_id") % 10 < 8)).sortWithinPartitions("token"),
-        path,
+# The index as two SEGMENTS over disjoint documents: the BASE (doc_id %
+# 10 < 8, "the index as of the last build") and the DELTA (>= 8, the
+# newly arrived 20%). Incremental maintenance reads the base segment and
+# folds the delta in; a query benchmarked over a base rebuilt per call
+# would be measuring a full rebuild, the exact thing merging avoids.
+def _segment(kind: str, where: str) -> SessionParquetStore:
+    return SessionParquetStore(
+        kind,
+        lambda spark, sf_dir, path: write_segment(
+            spread(table(spark, sf_dir, "documents")).filter(where), path
+        ),
     )
 
 
-_BASE_POSTINGS = SessionParquetStore("base_postings", _build_base_postings)
+_BASE_SEGMENT = _segment("segment_base", "doc_id % 10 < 8")
+_DELTA_SEGMENT = _segment("segment_delta", "doc_id % 10 >= 8")
+
+
+def _segments_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """One named table of both segments, as one relation."""
+    return _BASE_SEGMENT.df(spark, sf_dir, f"{name}.parquet").unionByName(
+        _DELTA_SEGMENT.df(spark, sf_dir, f"{name}.parquet")
+    )
 
 
 @register(
@@ -133,10 +145,10 @@ _BASE_POSTINGS = SessionParquetStore("base_postings", _build_base_postings)
     tags=("index", "incremental", "serve"),
     doc="Incremental index maintenance: merge a DELTA postings table "
     "(newly arrived docs, doc_id % 10 >= 8) into the MATERIALIZED BASE "
-    "postings store without touching already-indexed documents again — "
-    "full-outer join on token, df adds, posting lists concat row-locally "
+    "segment's postings without touching already-indexed documents again "
+    "— full-outer join on token, df adds, posting lists concat row-locally "
     "(both inputs are per-doc-sorted and disjoint, so one sort_array "
-    "over the concatenation restores order). The base store exists "
+    "over the concatenation restores order). The base segment exists "
     "before the query, exactly like a serving index does (built once "
     "per session, the same policy as the BM25 store): the benched work "
     "is tokenizing ONLY the 20% delta plus a vocabulary-sized merge "
@@ -151,12 +163,12 @@ def idx_postings_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     from bigdataindexing_spark.tables import table_view
 
     docs = table_view(spark, sf_dir, "documents")
-    base = _BASE_POSTINGS.view(spark, sf_dir)
     # one SQL statement = one driver round-trip (see tables.table_view);
     # same plan as the Column form: delta postings in one shuffle
     # (row-local array_distinct), vocabulary-sized full-outer merge,
     # row-local list concat + re-sort
-    merged = spark.sql(f"""
+    merged = spark.sql(
+        f"""
         WITH delta AS (
           SELECT token, COUNT(1) AS df,
                  sort_array(collect_list(doc_id)) AS doc_ids
@@ -170,8 +182,10 @@ def idx_postings_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
                sort_array(concat(
                  coalesce(b.doc_ids, CAST(array() AS array<bigint>)),
                  coalesce(d.doc_ids, CAST(array() AS array<bigint>)))) AS ids
-        FROM {base} b FULL OUTER JOIN delta d USING (token)
-    """)
+        FROM {{base}} b FULL OUTER JOIN delta d USING (token)
+    """,
+        base=_BASE_SEGMENT.df(spark, sf_dir, "postings.parquet"),
+    )
     return bounded_sort(
         merged.selectExpr(
             "token",
@@ -249,28 +263,9 @@ def idx_tfidf_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     """)
 
 
-BM25_K1 = 1.2
-BM25_B = 0.75
-
-
 @register(
     "idx_bm25_search",
-    oracle="WITH tok AS (SELECT doc_id, UNNEST(string_split(lower(text), ' ')) "
-    "AS token FROM documents), "
-    "lens AS (SELECT doc_id, len(string_split(lower(text), ' ')) AS dl "
-    "FROM documents), "
-    "stats AS (SELECT COUNT(*) AS n, AVG(dl) AS avgdl FROM lens), "
-    "tf AS (SELECT doc_id, token, COUNT(*) AS tf FROM tok "
-    "WHERE token IN ('spark', 'data') GROUP BY doc_id, token), "
-    "df AS (SELECT token, COUNT(DISTINCT doc_id) AS df FROM tok "
-    "WHERE token IN ('spark', 'data') GROUP BY token) "
-    "SELECT doc_id, ROUND(SUM("
-    "LN(1 + (stats.n - df.df + 0.5) / (df.df + 0.5)) "
-    f"* (tf.tf * ({BM25_K1} + 1)) "
-    f"/ (tf.tf + {BM25_K1} * (1 - {BM25_B} + {BM25_B} * lens.dl / stats.avgdl))"
-    "), 4) AS score "
-    "FROM tf JOIN df USING (token) JOIN lens USING (doc_id) CROSS JOIN stats "
-    "GROUP BY doc_id ORDER BY score DESC, doc_id LIMIT 10",
+    oracle=bm25_oracle(("spark", "data")),
     tags=("index", "search"),
     doc="BM25 ranked retrieval (k1=1.2, b=0.75, Lucene's ln(1+(N-df+.5)/"
     "(df+.5)) idf) — the scorer Elasticsearch actually uses for the "
@@ -309,13 +304,8 @@ def idx_bm25_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     df_cols = ", ".join(
         f"count_if(tf_{i} > 0) AS df_{i}" for i in range(len(terms))
     )
-    k1p1 = BM25_K1 + 1
-    one_minus_b = 1 - BM25_B
     score = " + ".join(
-        f"CASE WHEN tf_{i} > 0 THEN "
-        f"ln(1 + (n_docs - df_{i} + 0.5D) / (df_{i} + 0.5D)) "
-        f"* (tf_{i} * {k1p1}D) "
-        f"/ (tf_{i} + {BM25_K1}D * ({one_minus_b}D + {BM25_B}D * dl / avgdl)) "
+        f"CASE WHEN tf_{i} > 0 THEN {bm25_weight(f'tf_{i}', f'df_{i}')} "
         f"ELSE CAST(0.0 AS DOUBLE) END"
         for i in range(len(terms))
     )
@@ -359,90 +349,41 @@ def idx_phrase_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """)
 
 
-# The materialized search index: the token-sorted term_rows/postings
-# tables (index/build.write_index) plus a doc-length sidecar and a 1-row
-# corpus-stats table, each a named sub-table ``<name>.parquet``. This is
+# The materialized search index: the segment over ALL documents
+# (index/build.write_segment) plus per-posting BM25 impacts and the
+# per-term max impact, each a named sub-table ``<name>.parquet``. This is
 # the reference's actual serving architecture — IndexingListener.java:23-45
 # maintains an Elasticsearch index asynchronously and queries hit the
 # INDEX, never raw documents; the inline build+search queries above keep
 # their end-to-end oracles, while the *_serve variants below read this
 # store the way a search tier reads ES.
 def _build_search_index(spark: SparkSession, sf_dir: str, path: str) -> None:
-    from bigdataindexing_spark.functions.text import tokens
-    from bigdataindexing_spark.index.build import write_index
+    write_segment(spread(table(spark, sf_dir, "documents")), path)
 
-    docs = spread(table(spark, sf_dir, "documents"))
-    write_index(docs, path)
-    lens = docs.select("doc_id", F.size(tokens("text")).alias("dl"))
-    stats = lens.agg(
-        F.count(F.lit(1)).alias("n_docs"), F.avg("dl").alias("avgdl")
-    )
-    write_store(stats, f"{path}/stats.parquet")
-    # Per-doc and per-term scoring constants PRECOMPUTED at build
-    # time — what Lucene/ES segments actually store: the BM25 length
-    # norm k1*(1-b+b*dl/avgdl) depends only on (dl, avgdl) and the
-    # idf only on (n_docs, df), all fixed once the build commits, so
-    # the serve path pays zero corpus-level aggregation per query.
+    def sub(name: str) -> DataFrame:
+        return spark.read.parquet(f"{path}/{name}.parquet")
+
+    # Per-posting PRECOMPUTED impacts (token, doc_id, w) — the Lucene
+    # impact layout: w depends only on build-fixed segment columns (tf,
+    # df, dl) and the corpus stats, so the serving paths read it straight
+    # off a token-sorted scan with the query-term filter pushed down
+    # (r10; guide §2.4 — the joins belong in the build, not the serve).
     write_store(
-        lens.crossJoin(F.broadcast(stats)).select(
-            "doc_id",
-            "dl",
-            (
-                BM25_K1 * (1 - BM25_B + BM25_B * F.col("dl") / F.col("avgdl"))
-            ).alias("norm"),
-        ),
-        f"{path}/doclens.parquet",
-        "doc_id",
-    )
-    write_store(
-        spark.read.parquet(f"{path}/postings.parquet").crossJoin(
-            F.broadcast(stats)
-        ).select(
-            "token",
-            "df",
-            F.log(
-                1 + (F.col("n_docs") - F.col("df") + 0.5) / (F.col("df") + 0.5)
-            ).alias("idf"),
-        ),
-        f"{path}/termmeta.parquet",
-        "token",
-    )
-    tr = spark.read.parquet(f"{path}/term_rows.parquet")
-    tm = spark.read.parquet(f"{path}/termmeta.parquet")
-    dl = spark.read.parquet(f"{path}/doclens.parquet")
-    # Per-posting PRECOMPUTED impacts (token, doc_id, w) — the other
-    # half of the Lucene impact layout: w is a pure function of
-    # build-fixed store columns (idf, tf, norm), so serving paths
-    # that used to recompute it per query via two joins (term_rows ⋈
-    # termmeta ⋈ doclens) now read it straight off a token-sorted
-    # scan with the query-term filter pushed down (r10; guide §2.4 —
-    # the joins belonged in the build, not the serve).
-    write_store(
-        tr.join(F.broadcast(tm.select("token", "idf")), "token").join(
-            dl.select("doc_id", "norm"), "doc_id"
-        ).select(
-            "token",
-            "doc_id",
-            (
-                F.col("idf")
-                * (F.col("tf") * (BM25_K1 + 1))
-                / (F.col("tf") + F.col("norm"))
-            ).alias("w"),
-        ),
+        sub("term_rows")
+        .join(F.broadcast(sub("postings").select("token", "df")), "token")
+        .join(sub("doclens"), "doc_id")
+        .crossJoin(F.broadcast(corpus_stats(sub("stats"))))
+        .select("token", "doc_id", F.expr(bm25_weight()).alias("w")),
         f"{path}/term_impacts.parquet",
         "token",
         "doc_id",
     )
-    # Per-term MAX impact — the WAND/MaxScore sidecar: the largest
-    # BM25 contribution any single posting of this term can make,
-    # fixed at build time like idf/norm. Early-termination serves
-    # (idx_maxscore_topk) prune with these bounds instead of
-    # enumerating low-impact postings. Derived from the impacts
-    # table (bit-identical w, one less join tree in the build).
+    # Per-term MAX impact — the WAND/MaxScore sidecar: the largest BM25
+    # contribution any single posting of this term can make, fixed at
+    # build time. Early-termination serves (idx_maxscore_topk) prune with
+    # these bounds instead of enumerating low-impact postings.
     write_store(
-        spark.read.parquet(f"{path}/term_impacts.parquet")
-        .groupBy("token")
-        .agg(F.max("w").alias("maxw")),
+        sub("term_impacts").groupBy("token").agg(F.max("w").alias("maxw")),
         f"{path}/term_maxw.parquet",
         "token",
     )
@@ -462,30 +403,14 @@ def search_index_table(
 
 @register(
     "idx_bm25_serve",
-    oracle="WITH tok AS (SELECT doc_id, UNNEST(string_split(lower(text), ' ')) "
-    "AS token FROM documents), "
-    "lens AS (SELECT doc_id, len(string_split(lower(text), ' ')) AS dl "
-    "FROM documents), "
-    "stats AS (SELECT COUNT(*) AS n, AVG(dl) AS avgdl FROM lens), "
-    "tf AS (SELECT doc_id, token, COUNT(*) AS tf FROM tok "
-    "WHERE token IN ('spark', 'data') GROUP BY doc_id, token), "
-    "df AS (SELECT token, COUNT(DISTINCT doc_id) AS df FROM tok "
-    "WHERE token IN ('spark', 'data') GROUP BY token) "
-    "SELECT doc_id, ROUND(SUM("
-    "LN(1 + (stats.n - df.df + 0.5) / (df.df + 0.5)) "
-    f"* (tf.tf * ({BM25_K1} + 1)) "
-    f"/ (tf.tf + {BM25_K1} * (1 - {BM25_B} + {BM25_B} * lens.dl / stats.avgdl))"
-    "), 4) AS score "
-    "FROM tf JOIN df USING (token) JOIN lens USING (doc_id) CROSS JOIN stats "
-    "GROUP BY doc_id ORDER BY score DESC, doc_id LIMIT 10",
+    oracle=bm25_oracle(("spark", "data")),
     tags=("index", "search", "serve"),
     doc="BM25 served from the MATERIALIZED index (same scorer and oracle "
     "as idx_bm25_search, which keeps the inline build-and-search "
-    "formulation): term_rows is written token-sorted, so the query-term "
-    "filter both pushes to the parquet scan and skips row groups — the "
-    "serve path touches only the query terms' postings plus two "
-    "precomputed sidecars (per-term idf, per-doc length norm — the "
-    "Lucene segment layout), never a raw document and never a "
+    "formulation): the per-posting impacts are written token-sorted, so "
+    "the query-term filter both pushes to the parquet scan and skips row "
+    "groups — the serve path touches only the query terms' postings "
+    "(the Lucene impact layout), never a raw document and never a "
     "query-time corpus aggregate. This is the reference's search tier: "
     "IndexingListener.java maintains the ES index asynchronously and "
     "PlanController queries hit the index alone. The oracle (raw-scan "
@@ -495,10 +420,8 @@ def search_index_table(
 def idx_bm25_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
     terms = ["spark", "data"]
     # every scoring term comes PRECOMPUTED from the store's per-posting
-    # impacts table (w = idf * tf*(k1+1)/(tf+norm), fixed at build — the
-    # Lucene impact layout): the serve is ONE pushed token-filtered scan
-    # + top-k, zero joins and zero corpus aggregation per query (r10;
-    # the previous shape re-joined termmeta and doclens per serve)
+    # impacts table: the serve is ONE pushed token-filtered scan + top-k,
+    # zero joins and zero corpus aggregation per query
     scored = search_index_table(spark, sf_dir, "term_impacts").filter(
         F.col("token").isin(terms)
     )
@@ -518,194 +441,53 @@ def idx_bm25_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
 # already-indexed document. The production answer (Lucene's) is to store
 # per-doc length dl and per-(token, doc) tf — both append-only under
 # growth — and derive idf/norm AT SCORE TIME from current stats, which
-# themselves maintain ADDITIVELY: (n, sum_dl) base + delta is a scalar
-# add because dl is an integer token count (exact under BIGINT sum, one
-# double division at the end — deterministic across engines). So the
-# incremental refresh pays: delta tokenize + a two-scalar stat add +
-# query-term-bounded postings reads from both stores. Never a corpus
-# re-tokenize, never a stored-norm rewrite.
+# themselves maintain ADDITIVELY: each segment stores one stats row, and
+# the global stats are scalar adds over them. So the incremental refresh
+# pays: delta segment build + query-term-bounded reads from both
+# segments. Never a corpus re-tokenize, never a stored-norm rewrite.
 BM25_INC_TERMS = ("stream", "filter")
-
-_BM25_BASE_ROWS = SessionParquetStore(
-    "bm25_base_rows",
-    lambda spark, sf_dir, path: write_store(
-        term_rows(
-            spread(table(spark, sf_dir, "documents")).filter(
-                F.col("doc_id") % 10 < 8
-            )
-        ),
-        path, "token",
-    ),
-)
-_BM25_BASE_LENS = SessionParquetStore(
-    "bm25_base_lens",
-    lambda spark, sf_dir, path: write_store(
-        _doc_lens(
-            spread(table(spark, sf_dir, "documents")).filter(
-                F.col("doc_id") % 10 < 8
-            )
-        ),
-        path, "doc_id",
-    ),
-)
-_BM25_DELTA_ROWS = SessionParquetStore(
-    "bm25_delta_rows",
-    lambda spark, sf_dir, path: write_store(
-        term_rows(
-            spread(table(spark, sf_dir, "documents")).filter(
-                F.col("doc_id") % 10 >= 8
-            )
-        ),
-        path, "token",
-    ),
-)
-_BM25_DELTA_LENS = SessionParquetStore(
-    "bm25_delta_lens",
-    lambda spark, sf_dir, path: write_store(
-        _doc_lens(
-            spread(table(spark, sf_dir, "documents")).filter(
-                F.col("doc_id") % 10 >= 8
-            )
-        ),
-        path, "doc_id",
-    ),
-)
-
-def _doc_lens(docs: DataFrame) -> DataFrame:
-    from bigdataindexing_spark.functions.text import tokens
-
-    return docs.select("doc_id", F.size(tokens("text")).alias("dl"))
-
-
-# Per-SEGMENT additive sidecars, stored at build exactly as the serve
-# docstring prescribes for deployments ("stores the pair per segment and
-# adds scalars"): a 1-row (n, sum_dl) stats table and a (token, df)
-# term-df table per segment. Segments are disjoint by construction, so
-# global stats are BIGINT-exact scalar adds over segment rows and global
-# df is the sum of segment dfs — the serve no longer re-aggregates the
-# doc-count-sized doclens or the query terms' postings per invocation
-# (r10; guide §2.4 — those aggregations belonged in the build).
-_BM25_BASE_STATS = SessionParquetStore(
-    "bm25_base_stats",
-    lambda spark, sf_dir, path: write_store(
-        _BM25_BASE_LENS.df(spark, sf_dir).agg(
-            F.count(F.lit(1)).alias("n"), F.sum("dl").alias("sum_dl")
-        ),
-        path,
-    ),
-)
-_BM25_DELTA_STATS = SessionParquetStore(
-    "bm25_delta_stats",
-    lambda spark, sf_dir, path: write_store(
-        _BM25_DELTA_LENS.df(spark, sf_dir).agg(
-            F.count(F.lit(1)).alias("n"), F.sum("dl").alias("sum_dl")
-        ),
-        path,
-    ),
-)
-_BM25_BASE_TERMDF = SessionParquetStore(
-    "bm25_base_termdf",
-    lambda spark, sf_dir, path: write_store(
-        _BM25_BASE_ROWS.df(spark, sf_dir)
-        .groupBy("token")
-        .agg(F.count(F.lit(1)).alias("df")),
-        path, "token",
-    ),
-)
-_BM25_DELTA_TERMDF = SessionParquetStore(
-    "bm25_delta_termdf",
-    lambda spark, sf_dir, path: write_store(
-        _BM25_DELTA_ROWS.df(spark, sf_dir)
-        .groupBy("token")
-        .agg(F.count(F.lit(1)).alias("df")),
-        path, "token",
-    ),
-)
 
 
 @register(
     "idx_bm25_incremental_serve",
-    oracle="WITH tok AS (SELECT doc_id, UNNEST(string_split(lower(text), ' ')) "
-    "AS token FROM documents), "
-    "lens AS (SELECT doc_id, len(string_split(lower(text), ' ')) AS dl "
-    "FROM documents), "
-    "stats AS (SELECT COUNT(*) AS n, AVG(dl) AS avgdl FROM lens), "
-    "tf AS (SELECT doc_id, token, COUNT(*) AS tf FROM tok "
-    f"WHERE token IN {BM25_INC_TERMS} GROUP BY doc_id, token), "
-    "df AS (SELECT token, COUNT(DISTINCT doc_id) AS df FROM tok "
-    f"WHERE token IN {BM25_INC_TERMS} GROUP BY token) "
-    "SELECT doc_id, ROUND(SUM("
-    "LN(1 + (stats.n - df.df + 0.5) / (df.df + 0.5)) "
-    f"* (tf.tf * ({BM25_K1} + 1)) "
-    f"/ (tf.tf + {BM25_K1} * (1 - {BM25_B} + {BM25_B} * lens.dl / stats.avgdl))"
-    "), 4) AS score "
-    "FROM tf JOIN df USING (token) JOIN lens USING (doc_id) CROSS JOIN stats "
-    "GROUP BY doc_id ORDER BY score DESC, doc_id LIMIT 10",
+    oracle=bm25_oracle(BM25_INC_TERMS),
     tags=("index", "incremental", "search", "serve"),
     doc="BM25 serve over an INCREMENTALLY GROWN index — the global-stats "
     "maintenance subtlety raw postings merges don't face: new documents "
     "(doc_id % 10 >= 8) shift n_docs and avgdl, re-weighting every "
     "term's idf and every existing doc's length norm. Following "
-    "Lucene's layout, the stores hold only append-only relations — "
-    "(token, doc_id, tf) and (doc_id, dl) for base and delta — and the "
-    "serve derives idf/norm at score time from global stats that "
-    "maintain ADDITIVELY: (n, sum_dl) is BIGINT-exact and "
-    "segment-summable (a deployment stores the pair per segment and "
-    "adds scalars; here it aggregates the stored dl columns — "
-    "doc-count-bounded, never the text), one double division at the "
-    "end, bit-identical across engines. Refresh cost: delta tokenize + "
-    "the stat add; never a corpus re-tokenize, never a stored-norm "
-    "rewrite. The oracle computes BM25 from the FULL raw corpus — "
-    "incremental-serve ≡ batch-rebuild is the hash contract.",
+    "Lucene's layout, the base and delta segments hold only append-only "
+    "relations — (token, doc_id, tf), (token, df) and (doc_id, dl) — "
+    "and the serve derives idf/norm at score time from global stats "
+    "summed over the segments' one-row stats: document count, non-NULL "
+    "length count and length sum are BIGINT-exact scalar adds, and "
+    "avgdl divides by the non-NULL count exactly as AVG does. Global "
+    "df is the sum of the disjoint segments' per-term df. Refresh cost: "
+    "the delta segment build; never a corpus re-tokenize, never a "
+    "stored-norm rewrite. The oracle computes BM25 from the FULL raw "
+    "corpus — incremental-serve ≡ batch-rebuild is the hash contract.",
 )
 def idx_bm25_incremental_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
     terms = list(BM25_INC_TERMS)
-    rows = (
-        _BM25_BASE_ROWS.df(spark, sf_dir)
-        .unionByName(_BM25_DELTA_ROWS.df(spark, sf_dir))
-        .filter(F.col("token").isin(terms))
+    rows = _segments_table(spark, sf_dir, "term_rows").filter(
+        F.col("token").isin(terms)
     )
-    lens = _BM25_BASE_LENS.df(spark, sf_dir).unionByName(
-        _BM25_DELTA_LENS.df(spark, sf_dir)
-    )
-    # additive global stats: the per-segment (n, sum_dl) sidecars sum
-    # by scalar add (BIGINT-exact, order-free) — one row per segment
-    # read per serve, never the doc-count-sized doclens
-    stats = (
-        _BM25_BASE_STATS.df(spark, sf_dir)
-        .unionByName(_BM25_DELTA_STATS.df(spark, sf_dir))
-        .agg(F.sum("n").alias("n"), F.sum("sum_dl").alias("sum_dl"))
-        .select("n", (F.col("sum_dl") / F.col("n")).alias("avgdl"))
-    )
-    # global df = sum of the disjoint segments' stored per-term dfs —
-    # a pushed 2-token read of each sidecar, not a COUNT DISTINCT over
-    # the query terms' postings per serve
+    # a pushed query-term read of each segment's postings, not a COUNT
+    # DISTINCT over the query terms' rows per serve
     dfreq = (
-        _BM25_BASE_TERMDF.df(spark, sf_dir)
-        .unionByName(_BM25_DELTA_TERMDF.df(spark, sf_dir))
+        _segments_table(spark, sf_dir, "postings")
+        .select("token", "df")
         .filter(F.col("token").isin(terms))
         .groupBy("token")
         .agg(F.sum("df").alias("df"))
     )
+    # one stats row read per segment, never the doc-count-sized doclens
+    stats = corpus_stats(_segments_table(spark, sf_dir, "stats"))
     scored = (
         rows.join(F.broadcast(dfreq), "token")
-        .join(lens, "doc_id")
+        .join(_segments_table(spark, sf_dir, "doclens"), "doc_id")
         .crossJoin(F.broadcast(stats))
-        .select(
-            "doc_id",
-            (
-                F.log(
-                    1
-                    + (F.col("n") - F.col("df") + 0.5) / (F.col("df") + 0.5)
-                )
-                * (F.col("tf") * (BM25_K1 + 1))
-                / (
-                    F.col("tf")
-                    + BM25_K1
-                    * (1 - BM25_B + BM25_B * F.col("dl") / F.col("avgdl"))
-                )
-            ).alias("w"),
-        )
+        .select("doc_id", F.expr(bm25_weight()).alias("w"))
     )
     return (
         scored.groupBy("doc_id")
@@ -747,27 +529,12 @@ def _essential_terms(maxw: "dict[str, float]", theta: float) -> "list[str]":
 
 @register(
     "idx_maxscore_topk",
-    oracle="WITH tok AS (SELECT doc_id, UNNEST(string_split(lower(text), ' ')) "
-    "AS token FROM documents), "
-    "lens AS (SELECT doc_id, len(string_split(lower(text), ' ')) AS dl "
-    "FROM documents), "
-    "stats AS (SELECT COUNT(*) AS n, AVG(dl) AS avgdl FROM lens), "
-    "tf AS (SELECT doc_id, token, COUNT(*) AS tf FROM tok "
-    f"WHERE token IN {MAXSCORE_TERMS} GROUP BY doc_id, token), "
-    "df AS (SELECT token, COUNT(DISTINCT doc_id) AS df FROM tok "
-    f"WHERE token IN {MAXSCORE_TERMS} GROUP BY token) "
-    "SELECT doc_id, ROUND(SUM("
-    "LN(1 + (stats.n - df.df + 0.5) / (df.df + 0.5)) "
-    f"* (tf.tf * ({BM25_K1} + 1)) "
-    f"/ (tf.tf + {BM25_K1} * (1 - {BM25_B} + {BM25_B} * lens.dl / stats.avgdl))"
-    "), 4) AS score "
-    "FROM tf JOIN df USING (token) JOIN lens USING (doc_id) CROSS JOIN stats "
-    f"GROUP BY doc_id ORDER BY score DESC, doc_id LIMIT {MAXSCORE_K}",
+    oracle=bm25_oracle(MAXSCORE_TERMS, MAXSCORE_K),
     tags=("index", "search", "serve"),
     doc="MaxScore/WAND-style early-termination top-k (Turtle & Flood; the "
     "Lucene disjunctive-query executor): a 4-term disjunction where the "
-    "store's per-term MAX-impact sidecar (term_maxw, fixed at build like "
-    "idf/norm) bounds what any posting can contribute. Serve (two Spark "
+    "store's per-term MAX-impact sidecar (term_maxw, fixed at build) "
+    "bounds what any posting can contribute. Serve (two Spark "
     "actions total, VERDICT r9 #2): (1) ONE combined job collects both "
     "the 4-row term_maxw bound fetch and the theta seed — the k-th full "
     "score among the HIGHEST-impact term's docs, the top term picked "

@@ -28,8 +28,6 @@ do.
 
 from __future__ import annotations
 
-import os
-
 import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
@@ -76,12 +74,10 @@ SIMHASH_BITS = 32
 # (dedup_minhash_lsh, dedup_delta_vs_corpus, streaming lsh_dedup)
 # compute true uncapped Jaccard and keep the uncapped oracle.
 #
-# Env override: both the store build (_build_pair_counts) and the
-# registered capped oracles resolve the env var THROUGH _current_cap()
-# at build/check time (the oracles are lazy callables — ADVICE r6), so a
-# post-import override takes effect identically on both sides of the
-# driver gate. This constant is only the default when the env is unset.
-HOT_SHINGLE_DF_CAP = int(os.environ.get("BDI_HOT_SHINGLE_DF_CAP", "1000"))
+# Both the store build (_build_pair_counts) and the capped oracles (lazy
+# callables — ADVICE r6) read this constant when they are called, so the
+# two sides of the oracle gate always apply the same cap.
+HOT_SHINGLE_DF_CAP = 1000
 
 _SHINGLE_SQL = (
     "WITH tok AS (SELECT doc_id, string_split(lower(text), ' ') AS t FROM documents), "
@@ -93,20 +89,11 @@ _SHINGLE_SQL = (
     "JOIN u b ON a.s = b.s AND a.doc_id < b.doc_id GROUP BY 1, 2) "
 )
 
-def _current_cap() -> int:
-    """The hot-shingle df cap as of NOW. Store builds
-    (_build_pair_counts) and the lazy capped oracles below both
-    resolve the env through this one function at their respective build/
-    check times, so the two sides of the driver gate can never compare
-    differently-capped computations (ADVICE r6)."""
-    return int(os.environ.get("BDI_HOT_SHINGLE_DF_CAP", str(HOT_SHINGLE_DF_CAP)))
-
-
 # Same shape with the hot-shingle df cap applied before the self-join —
 # the oracle twin of _build_pair_counts. `sizes` stays uncapped
 # (denominators are exact on both sides). A FUNCTION, not a constant:
 # the cap resolves when the oracle text is requested (registry
-# oracle_text()), mirroring the store build's own env re-read.
+# oracle_text()), as the store build resolves it when it runs.
 def _shingle_capped_sql() -> str:
     return (
         "WITH tok AS (SELECT doc_id, string_split(lower(text), ' ') AS t FROM documents), "
@@ -114,7 +101,7 @@ def _shingle_capped_sql() -> str:
         "i -> t[i+1] || ' ' || t[i+2] || ' ' || t[i+3])) AS ss FROM tok WHERE len(t) >= 3), "
         "u AS (SELECT doc_id, UNNEST(ss) AS s FROM sh), "
         "sizes AS (SELECT doc_id, COUNT(*) AS n FROM u GROUP BY doc_id), "
-        f"hot AS (SELECT s FROM u GROUP BY s HAVING COUNT(*) > {_current_cap()}), "
+        f"hot AS (SELECT s FROM u GROUP BY s HAVING COUNT(*) > {HOT_SHINGLE_DF_CAP}), "
         "uc AS (SELECT * FROM u WHERE s NOT IN (SELECT s FROM hot)), "
         "inter AS (SELECT a.doc_id AS da, b.doc_id AS db, COUNT(*) AS i FROM uc a "
         "JOIN uc b ON a.s = b.s AND a.doc_id < b.doc_id GROUP BY 1, 2) "
@@ -185,10 +172,7 @@ _SHINGLE_SIG = SessionParquetStore(
 # overlap-count job, many downstream screens.
 def _build_pair_counts(spark: SparkSession, sf_dir: str, path: str) -> None:
     store = _SHINGLE_SIG.view(spark, sf_dir)
-    # re-resolve the env override at BUILD time (a post-import override
-    # must not silently no-op — ADVICE r5); the lazy oracles read the
-    # same function at check time (ADVICE r6)
-    cap = _current_cap()
+    cap = HOT_SHINGLE_DF_CAP  # read at build time, as the oracles read it
     write_store(
         spark.sql(f"""
             WITH u AS (

@@ -607,7 +607,11 @@ def _build_stream_delta_table(spark: SparkSession, sf_dir: str, table_dir: str) 
         .option("maxFilesPerTrigger", "1")
         .parquet(src)
     )
-    run_foreach_batch(stream, delta_stream_sink_batch(table_dir, 0))
+    run_foreach_batch(
+        stream,
+        delta_stream_sink_batch(table_dir, 0),
+        os.path.join(table_dir, "_checkpoint"),
+    )
     return src
 
 

@@ -71,8 +71,15 @@ def ingest_stream(spark: SparkSession, in_path: str, out_dir: str) -> None:
     """Continuous-ingest path (availableNow replay in tests): each
     micro-batch validates + shreds + appends idempotent batchId-keyed
     partials — the Spark replacement for the reference's per-request
-    Redis writes + RabbitMQ enqueue (PlanController.java:100–108)."""
-    run_foreach_batch(stream_documents(spark, in_path), _append_partials(out_dir))
+    Redis writes + RabbitMQ enqueue (PlanController.java:100–108).
+    The checkpoint lives under ``out_dir/_checkpoint``, beside the table
+    directories the store reads, so a later call ingests only the input
+    files added since."""
+    run_foreach_batch(
+        stream_documents(spark, in_path),
+        _append_partials(out_dir),
+        f"{out_dir}/_checkpoint",
+    )
 
 
 def read_store(spark: SparkSession, out_dir: str, streaming: bool = False) -> ShreddedTables:

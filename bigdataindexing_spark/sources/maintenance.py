@@ -903,7 +903,11 @@ def _build_stream_merged(spark: SparkSession, sf_dir: str, path: str):
         .option("maxFilesPerTrigger", "1")
         .parquet(src)
     )
-    run_foreach_batch(stream, cdc_apply_batch(path, base_version))
+    run_foreach_batch(
+        stream,
+        cdc_apply_batch(path, base_version),
+        os.path.join(path, "_checkpoint"),
+    )
     return src, log_versions(path)[base_version:]
 
 

@@ -115,17 +115,14 @@ def write_arrivals(dfs, base_dir: str) -> list[str]:
     return paths
 
 
-def run_foreach_batch(
-    sdf: DataFrame,
-    fn,
-    checkpoint: str | None = None,
-) -> None:
-    """Drain a streaming DataFrame through ``foreachBatch(fn)`` (availableNow)."""
-    ckpt = checkpoint or tempfile.mkdtemp(prefix="ckpt_")
+def run_foreach_batch(sdf: DataFrame, fn, checkpoint: str) -> None:
+    """Drain a streaming DataFrame through ``foreachBatch(fn)`` (availableNow).
+    The checkpoint records what was consumed: a later call with the same
+    checkpoint processes only input added since."""
     query = (
         sdf.writeStream.trigger(availableNow=True)
         .foreachBatch(fn)
-        .option("checkpointLocation", ckpt)
+        .option("checkpointLocation", checkpoint)
         .start()
     )
     query.awaitTermination()

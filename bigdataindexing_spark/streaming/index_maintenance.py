@@ -27,14 +27,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from bigdataindexing_spark.index.build import term_rows
+from bigdataindexing_spark.index.build import doc_terms
 from bigdataindexing_spark.streaming.core import run_foreach_batch, stream_table
 
 
 def _partial_postings(docs_batch: DataFrame) -> DataFrame:
     """Per-batch partial: (token, df) — one shuffle keyed by token."""
     return (
-        term_rows(docs_batch)
+        doc_terms(docs_batch)
         .groupBy("token")
         .agg(F.count(F.lit(1)).alias("df"))
     )
@@ -77,7 +77,9 @@ def streaming_index_build(
     max_files_per_trigger: int | None = None,
 ) -> DataFrame:
     """Stream the documents table through the incremental index maintenance
-    pipeline, then return the merged postings view."""
+    pipeline, then return the merged postings view. The checkpoint lives
+    under ``index_dir/_checkpoint`` (a hidden path the partial scan
+    skips), so a later call processes only documents added since."""
     docs = stream_table(spark, sf_dir, "documents")
     if max_files_per_trigger is not None:
         # re-read with the trigger cap so the run exercises multi-batch paths
@@ -88,5 +90,5 @@ def streaming_index_build(
             .option("maxFilesPerTrigger", str(max_files_per_trigger))
             .parquet(sf_dir)
         )
-    run_foreach_batch(docs, upsert_batch(index_dir))
+    run_foreach_batch(docs, upsert_batch(index_dir), f"{index_dir}/_checkpoint")
     return read_postings(spark, index_dir)

@@ -525,7 +525,7 @@ FROM cnts CROSS JOIN ds GROUP BY 1, 2 ORDER BY d, w
         # replay is the point), but still atexit-reclaimed
         cms_dir = session_store_dir("stream_cms")
         docs = stream_table(spark, sf_dir, "documents")
-        run_foreach_batch(docs, cms_upsert_batch(cms_dir))
+        run_foreach_batch(docs, cms_upsert_batch(cms_dir), f"{cms_dir}/_checkpoint")
         return bounded_sort(read_cms(spark, cms_dir), "d", "w")
 
 
@@ -757,7 +757,7 @@ def _st13_register() -> None:
             .option("maxFilesPerTrigger", "1")
             .parquet(src)
         )
-        run_foreach_batch(stream, scd2_upsert_batch(dim_dir))
+        run_foreach_batch(stream, scd2_upsert_batch(dim_dir), f"{dim_dir}/_checkpoint")
         return bounded_sort(
             read_scd2_dimension(spark, dim_dir), "user_id", "valid_from",
             barrier=True,
@@ -823,7 +823,7 @@ def _st15_register() -> None:
                 .parquet(f"{hist_dir}/batch={batch_id}")
             )
 
-        run_foreach_batch(stream, fn)
+        run_foreach_batch(stream, fn, f"{hist_dir}/_checkpoint")
         partials = spark.read.option("recursiveFileLookup", "true").parquet(
             hist_dir
         )
@@ -903,7 +903,7 @@ def _st16_register() -> None:
                 .parquet(f"{hist_dir}/batch={batch_id}")
             )
 
-        run_foreach_batch(stream, fn)
+        run_foreach_batch(stream, fn, f"{hist_dir}/_checkpoint")
         partials = spark.read.option("recursiveFileLookup", "true").parquet(
             hist_dir
         )

@@ -209,6 +209,19 @@ def test_stdout_query_selection_is_stable():
     assert len(json.dumps(out, separators=(",", ":"))) <= 1950
 
 
+def test_oversized_pinned_list_raises(monkeypatch):
+    """A pinned list whose names alone overflow the 1900-char budget must
+    fail loudly instead of printing a line over the tail-parse limit."""
+    import pytest
+
+    import bench
+
+    pinned = [f"pinned_query_name_{i:03d}" for i in range(100)]
+    monkeypatch.setattr(bench, "STDOUT_PINNED", pinned)
+    with pytest.raises(ValueError, match="1900-char budget"):
+        bench._stdout_queries({n: 1.0 for n in pinned}, {"metric": "m"})
+
+
 def test_guard_rejects_slow_index_build():
     fixture = {
         "host_steal_sec": 3.0,

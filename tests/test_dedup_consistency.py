@@ -206,9 +206,9 @@ def test_hot_shingle_cap_binding_matches_capped_oracle(spark, tmp_path, monkeypa
     Jaccard, containment, AND cluster-cc (ADVICE r5: capped Spark vs
     uncapped oracle diverged above the cap). The oracles are taken
     verbatim from the registry: since they are lazy callables (ADVICE
-    r6), the env override set HERE — long after import — must flow into
-    both the store build and the oracle text; any cap-semantics drift on
-    either side fails this test."""
+    r6), the cap set HERE — long after import — must flow into both the
+    store build and the oracle text; any cap-semantics drift on either
+    side fails this test."""
     import duckdb as _duckdb
 
     from bigdataindexing_spark.registry import all_specs
@@ -231,7 +231,7 @@ def test_hot_shingle_cap_binding_matches_capped_oracle(spark, tmp_path, monkeypa
         f"{sf}/documents.parquet"
     )
     cap = 4  # hot trigram df=6 > 4 -> the cap binds
-    monkeypatch.setenv("BDI_HOT_SHINGLE_DF_CAP", str(cap))
+    monkeypatch.setattr(dedup, "HOT_SHINGLE_DF_CAP", cap)
     con = _duckdb.connect()
     con.execute(
         "CREATE VIEW documents AS SELECT * FROM "

@@ -90,7 +90,7 @@ def test_store_handle_is_the_latest_snapshot(spark, sf_dir, table_dir):
     assert handle.count() == handle.select("doc_id").distinct().count()
 
 
-def test_stream_sink_exactly_once_under_replay(spark, sf_dir):
+def test_stream_sink_exactly_once_under_replay(spark, sf_dir, tmp_path):
     """st18's version-gated commit: drain the SAME arrival directory a
     second time with a FRESH checkpoint (the file source re-delivers
     every batch), and the log must not grow, the snapshot must not
@@ -125,7 +125,9 @@ def test_stream_sink_exactly_once_under_replay(spark, sf_dir):
         .option("maxFilesPerTrigger", "1")
         .parquet(src)
     )
-    run_foreach_batch(stream, delta_stream_sink_batch(table_dir, 0))
+    run_foreach_batch(
+        stream, delta_stream_sink_batch(table_dir, 0), str(tmp_path / "ckpt")
+    )
 
     commits_after = sorted(os.listdir(os.path.join(table_dir, "_delta_log")))
     assert commits_after == commits_before, "replay must not add commits"

@@ -57,6 +57,42 @@ def test_stream_ingest_equals_batch(spark, tmp_path):
         assert b == s, name
 
 
+def test_stream_ingest_resumes_from_its_checkpoint(spark, tmp_path):
+    """A second ingest_stream call over a grown input directory ingests
+    only the added file, as batch=1, and the store then equals a batch
+    ingest of every file."""
+    import json
+
+    from bigdataindexing_spark.documents.schema import make_plan
+
+    in_dir, out_dir = tmp_path / "in", str(tmp_path / "store")
+    in_dir.mkdir()
+
+    def arrive(name: str, ids: range) -> None:
+        (in_dir / name).write_text(
+            "".join(json.dumps(make_plan(i)) + "\n" for i in ids)
+        )
+
+    arrive("part-0.jsonl", range(6))
+    ingest_stream(spark, str(in_dir), out_dir)
+    arrive("part-1.jsonl", range(6, 10))
+    ingest_stream(spark, str(in_dir), out_dir)
+
+    assert sorted(os.listdir(f"{out_dir}/plans")) == ["batch=0", "batch=1"]
+    new = spark.read.parquet(f"{out_dir}/plans/batch=1").select("object_id")
+    assert sorted(r[0] for r in new.collect()) == sorted(
+        make_plan(i)["objectId"] for i in range(6, 10)
+    )
+    batch_dir = str(tmp_path / "batch_store")
+    ingest_batch(spark, str(in_dir), batch_dir)
+    batch_store = read_store(spark, batch_dir)
+    stream_store = read_store(spark, out_dir, streaming=True)
+    for name in TABLE_NAMES:
+        b = sorted(map(tuple, getattr(batch_store, name).collect()))
+        s = sorted(map(tuple, getattr(stream_store, name).collect()))
+        assert b == s, name
+
+
 def test_stream_ingest_replay_is_idempotent(spark, tmp_path):
     from bigdataindexing_spark.sources.json_ingest import _append_partials
 

@@ -445,7 +445,7 @@ def test_schema_evolution_is_metadata_only(spark, sf_dir):
     )
 
 
-def test_stream_cdc_apply_version_gated_exactly_once(spark, sf_dir):
+def test_stream_cdc_apply_version_gated_exactly_once(spark, sf_dir, tmp_path):
     """st14: the streaming CDC apply leaves the full version chain
     (the pre-stream version + one version per micro-batch, each with its
     txn action) time-travel readable, and REPLAYING the whole stream
@@ -479,7 +479,9 @@ def test_stream_cdc_apply_version_gated_exactly_once(spark, sf_dir):
         .option("maxFilesPerTrigger", "1")
         .parquet(src)
     )
-    run_foreach_batch(stream, maintenance.cdc_apply_batch(path, base))
+    run_foreach_batch(
+        stream, maintenance.cdc_apply_batch(path, base), str(tmp_path / "ckpt")
+    )
     assert log_versions(path)[base:] == versions
     for v, before in zip(versions, commits_before):
         assert read_commit(path, v) == before

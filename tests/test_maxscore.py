@@ -24,29 +24,21 @@ from pyspark.sql import functions as F
 
 
 def _exact_impacts(spark, sf_dir):
-    """Unpruned per-posting BM25 impacts straight off the store — the
-    relation idx_maxscore_topk prunes; used by every contract below."""
-    from bigdataindexing_spark.index.search import BM25_K1
+    """Unpruned per-posting BM25 impacts recomputed from the segment's
+    term_rows, postings, doclens and stats — the relation
+    idx_maxscore_topk prunes; used by every contract below."""
+    from bigdataindexing_spark.index.build import bm25_weight, corpus_stats
 
     rows = search_index_table(spark, sf_dir, "term_rows").filter(
         F.col("token").isin(list(MAXSCORE_TERMS))
     )
-    lens = search_index_table(spark, sf_dir, "doclens")
-    meta = search_index_table(spark, sf_dir, "termmeta").filter(
-        F.col("token").isin(list(MAXSCORE_TERMS))
-    )
+    dfreq = search_index_table(spark, sf_dir, "postings").select("token", "df")
+    stats = corpus_stats(search_index_table(spark, sf_dir, "stats"))
     return (
-        rows.join(F.broadcast(meta.select("token", "idf")), "token")
-        .join(lens.select("doc_id", "norm"), "doc_id")
-        .select(
-            "doc_id",
-            "token",
-            (
-                F.col("idf")
-                * (F.col("tf") * (BM25_K1 + 1))
-                / (F.col("tf") + F.col("norm"))
-            ).alias("w"),
-        )
+        rows.join(F.broadcast(dfreq), "token")
+        .join(search_index_table(spark, sf_dir, "doclens"), "doc_id")
+        .crossJoin(F.broadcast(stats))
+        .select("doc_id", "token", F.expr(bm25_weight()).alias("w"))
     )
 
 

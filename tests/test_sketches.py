@@ -129,7 +129,9 @@ def test_cms_stream_multibatch_additivity(spark, sf_dir, tmp_path):
         .parquet(src)
     )
     cms_dir = str(tmp_path / "cms")
-    sq.run_foreach_batch(stream, sq.cms_upsert_batch(cms_dir))
+    sq.run_foreach_batch(
+        stream, sq.cms_upsert_batch(cms_dir), str(tmp_path / "ckpt")
+    )
     batches = [n for n in os.listdir(cms_dir) if n.startswith("batch=")]
     assert len(batches) >= 3  # really ran multi-batch
     merged = {

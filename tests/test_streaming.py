@@ -65,7 +65,7 @@ def test_stream_index_equals_batch(spark, sf_dir, tmp_path):
         .option("maxFilesPerTrigger", "1")
         .parquet(src)
     )
-    run_foreach_batch(stream, upsert_batch(index_dir))
+    run_foreach_batch(stream, upsert_batch(index_dir), str(tmp_path / "ckpt"))
 
     streamed = {r["token"]: r["df"] for r in read_postings(spark, index_dir).collect()}
     batch = {
@@ -469,7 +469,7 @@ def test_st13_scd2_merge_paths_and_replay(spark, tmp_path):
     write_arrivals(arrivals, src)
     dim_dir = str(tmp_path / "dim")
 
-    def drain():
+    def drain(ckpt: str):
         stream = (
             spark.readStream.schema(schema)
             .option("maxFilesPerTrigger", "1")
@@ -477,13 +477,15 @@ def test_st13_scd2_merge_paths_and_replay(spark, tmp_path):
         )
         from bigdataindexing_spark.streaming.core import run_foreach_batch
 
-        run_foreach_batch(stream, scd2_upsert_batch(dim_dir))
+        run_foreach_batch(
+            stream, scd2_upsert_batch(dim_dir), str(tmp_path / ckpt)
+        )
         return sorted(
             tuple(r)
             for r in read_scd2_dimension(spark, dim_dir).collect()
         )
 
-    first = drain()
+    first = drain("ckpt_first")
     expected = sorted(
         [
             (1, "a", t(0), t(3), 3),  # extended across batches 0->1, closed in 1
@@ -492,5 +494,5 @@ def test_st13_scd2_merge_paths_and_replay(spark, tmp_path):
         ]
     )
     assert first == expected
-    # full replay into the same store: identical end state
-    assert drain() == expected
+    # full replay (fresh checkpoint) into the same store: identical end state
+    assert drain("ckpt_replay") == expected
