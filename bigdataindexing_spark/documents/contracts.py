@@ -192,9 +192,9 @@ def _replacement_docs(spark: SparkSession) -> DataFrame:
     oracle=None,
     tags=("documents",),
     bench=False,
-    doc="Full-replace (PUT) semantics: replace ≡ cascade-delete closure + "
-    "save in ONE composed transform (PlanService.java:202–215), and "
-    "replace ≠ merge — children absent from the replacement (ps-3-0/1/2) "
+    doc="Full-replace (PUT) semantics: replace ≡ cascade delete of the "
+    "replaced plans + save over one store snapshot (PlanService.java:202–215), "
+    "and replace ≠ merge — children absent from the replacement (ps-3-0/1/2) "
     "vanish under replace but survive under merge.",
 )
 def doc_replace_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -243,8 +243,9 @@ def doc_replace_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=None,
     tags=("documents",),
     bench=False,
-    doc="Cascade delete removes exactly the victim's closure "
-    "(PlanService.java:135–200 equivalent, via edges traversal).",
+    doc="Cascade delete removes exactly the victim plan and every object "
+    "reachable from it (PlanService.java:135–200 equivalent: victims "
+    "collected by an edges walk, each table pruned by a key filter).",
 )
 def doc_cascade_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     after = del_mod.cascade_delete(_store(spark), ["plan-7"])

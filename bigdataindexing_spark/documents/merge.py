@@ -17,7 +17,7 @@ Everything is joins + coalesce: no cascade delete/rewrite of the whole
 tree (the reference's updatePlan deletes and re-inserts everything,
 PlanService.java:202–215 — write amplification we deliberately avoid for
 PATCH). True PUT semantics — absent fields must vanish — is
-:func:`replace`: cascade-delete closure + save composed in one DAG.
+:func:`replace`: a cascade delete of the replaced plans + save.
 """
 
 from __future__ import annotations
@@ -25,7 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from bigdataindexing_spark.documents.delete import cascade_delete_roots
+from bigdataindexing_spark.documents.delete import cascade_delete
 from bigdataindexing_spark.documents.shred import ShreddedTables, shred
 
 ARRAY_FIELD = "linkedPlanServices"
@@ -34,24 +34,25 @@ ARRAY_FIELD = "linkedPlanServices"
 def replace(
     current: ShreddedTables, replacement_docs: DataFrame, doc_col: str = "doc"
 ) -> ShreddedTables:
-    """Full-replace (PUT) semantics: delete-closure-then-save, composed as
-    ONE lazy transform.
+    """Full-replace (PUT) semantics: cascade delete, then save.
 
     The reference's ``updatePlan`` deletes the stored plan tree and saves
     the request body (PlanService.java:202–215); the defining consequence
     is that fields and children ABSENT from the replacement document
-    VANISH — unlike :func:`merge`, which keeps them. Here the delete and
-    the save are branches of a single DAG over the same store snapshot, so
-    a reader of the returned tables never observes the half-deleted
+    VANISH — unlike :func:`merge`, which keeps them. The replacement
+    documents' plan ids are collected (one small job) and handed to
+    :func:`~bigdataindexing_spark.documents.delete.cascade_delete`; each
+    returned table is that key-filtered table unioned with the shredded
+    replacement. Delete and save read the same store snapshot, so a
+    reader of the returned tables never observes the half-deleted
     intermediate state the reference's two-step delete-then-reinsert
     exposes (§4.2-3).
     """
     repl = shred(replacement_docs, doc_col)
-    roots = replacement_docs.select(
-        F.lit("plan").alias("obj_type"),
-        F.col(doc_col).getField("objectId").alias("obj_id"),
-    ).distinct()
-    pruned = cascade_delete_roots(current, roots)
+    plan_ids = [
+        r[0] for r in replacement_docs.select(F.col(doc_col).getField("objectId")).collect()
+    ]
+    pruned = cascade_delete(current, plan_ids)
     return ShreddedTables(
         plans=pruned.plans.unionByName(repl.plans),
         plan_services=pruned.plan_services.unionByName(repl.plan_services),

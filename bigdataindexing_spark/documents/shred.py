@@ -30,6 +30,8 @@ from pyspark.sql import functions as F
 
 @dataclass
 class ShreddedTables:
+    """One DataFrame per table of the store, in :data:`TABLE_NAMES` order."""
+
     plans: DataFrame
     plan_services: DataFrame
     services: DataFrame
@@ -38,6 +40,9 @@ class ShreddedTables:
 
     def as_dict(self) -> dict[str, DataFrame]:
         return {f.name: getattr(self, f.name) for f in fields(self)}
+
+
+TABLE_NAMES = tuple(f.name for f in fields(ShreddedTables))
 
 
 def _cost_share_rows(col: F.Column) -> list[F.Column]:
@@ -151,8 +156,5 @@ def write_tables(tables: ShreddedTables, out_dir: str) -> None:
 
 def read_tables(spark, out_dir: str) -> ShreddedTables:
     return ShreddedTables(
-        **{
-            name: spark.read.parquet(f"{out_dir}/{name}.parquet")
-            for name in ("plans", "plan_services", "services", "member_cost_shares", "edges")
-        }
+        **{name: spark.read.parquet(f"{out_dir}/{name}.parquet") for name in TABLE_NAMES}
     )

@@ -17,12 +17,15 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from bigdataindexing_spark.documents.shred import ShreddedTables, shred
+from bigdataindexing_spark.documents.shred import (
+    TABLE_NAMES,
+    ShreddedTables,
+    shred,
+    write_tables,
+)
 from bigdataindexing_spark.documents.validate import validate
 from bigdataindexing_spark.registry import register
 from bigdataindexing_spark.streaming.core import run_foreach_batch
-
-TABLE_NAMES = ("plans", "plan_services", "services", "member_cost_shares", "edges")
 
 
 def read_documents(spark: SparkSession, path: str) -> DataFrame:
@@ -46,8 +49,7 @@ def ingest_batch(
     raw = read_documents(spark, in_path)
     valid, quarantine = validate(raw)
     tables = shred(valid)
-    for name, df in tables.as_dict().items():
-        df.write.mode("overwrite").parquet(f"{out_dir}/{name}.parquet")
+    write_tables(tables, out_dir)
     quarantine.write.mode("overwrite").parquet(f"{out_dir}/quarantine.parquet")
     return tables, quarantine
 

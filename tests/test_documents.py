@@ -175,6 +175,33 @@ def test_cascade_delete(spark, store):
     assert rebuilt["plan-6"] == _docs_json(parsed_plans(spark, N_DOCS))["plan-6"]
 
 
+def test_cascade_delete_empty_id_list_is_noop(store):
+    after = del_mod.cascade_delete(store, [])
+    for name, df in after.as_dict().items():
+        before = getattr(store, name)
+        assert sorted(map(tuple, df.collect())) == sorted(map(tuple, before.collect())), name
+
+
+def test_update_plans_have_no_join_or_exchange(spark, tmp_path):
+    """DELETE and PUT prune every table with a key filter over victims
+    collected once: each returned table executes as scan → filter (∪ the
+    shredded replacement), with no join and no shuffle."""
+    from bigdataindexing_spark.documents import contracts as C
+    from bigdataindexing_spark.documents.shred import read_tables, write_tables
+
+    write_tables(shred(parsed_plans(spark, N_DOCS)), str(tmp_path))
+    on_disk = read_tables(spark, str(tmp_path))
+    updates = {
+        "delete": del_mod.cascade_delete(on_disk, ["plan-7", "plan-3"]),
+        "replace": merge_mod.replace(on_disk, C._replacement_docs(spark)),
+    }
+    for kind, tables in updates.items():
+        for name, df in tables.as_dict().items():
+            df.collect()
+            p = df._jdf.queryExecution().executedPlan().toString()
+            assert "Exchange" not in p and "Join" not in p, (kind, name, p)
+
+
 def test_etag_contract(spark, store):
     docs = reassemble(store)
     tagged = etag_mod.with_etag(docs)

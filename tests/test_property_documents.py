@@ -10,7 +10,11 @@ input:
 - merge is idempotent (applying the same patch twice = once);
 - a patch carrying only objectIds is a no-op;
 - replace (PUT) reproduces exactly the replacement documents — children
-  absent from the replacement vanish (the merge/replace distinction).
+  absent from the replacement vanish (the merge/replace distinction);
+- cascade_delete and replace, which collect the victims once and prune
+  each table with a key filter, equal the naive set-oriented formulation
+  (edges join closure + ``left_anti`` per table) on adversarial stores:
+  NULL keys, shared children, dangling edges, unknown/duplicate roots.
 
 Examples are kept small (each one runs real Spark jobs); the point is
 shape coverage, not volume.
@@ -20,10 +24,14 @@ from __future__ import annotations
 
 import json
 
-from hypothesis import HealthCheck, given, settings
+from collections import Counter
+
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from bigdataindexing_spark.documents import delete as del_mod
 from bigdataindexing_spark.documents import merge as merge_mod
 from bigdataindexing_spark.documents.reassemble import reassemble
 from bigdataindexing_spark.documents.schema import (
@@ -31,7 +39,7 @@ from bigdataindexing_spark.documents.schema import (
     local_strings_df,
     make_plan,
 )
-from bigdataindexing_spark.documents.shred import shred
+from bigdataindexing_spark.documents.shred import ShreddedTables, shred
 
 SETTINGS = dict(
     max_examples=5,
@@ -170,3 +178,158 @@ def test_replace_reproduces_replacement_exactly(spark, docs, data):
     for d in docs:
         if d["objectId"] != victim["objectId"]:
             assert _canon(out[d["objectId"]]) == _canon(d)
+
+
+# --- cascade delete against the naive join oracle ---------------------------
+
+TABLE_COLS = {
+    "plans": (("object_id", "string"), ("org", "string"), ("plan_type", "string"),
+              ("creation_date", "string")),
+    "plan_services": (("object_id", "string"), ("org", "string")),
+    "services": (("object_id", "string"), ("org", "string"), ("name", "string")),
+    "member_cost_shares": (("object_id", "string"), ("org", "string"),
+                           ("deductible", "int"), ("copay", "int")),
+    "edges": (("parent_type", "string"), ("parent_id", "string"), ("field", "string"),
+              ("ord", "int"), ("child_type", "string"), ("child_id", "string")),
+}
+TABLE_TYPE = {
+    "plans": "plan",
+    "plan_services": "planservice",
+    "services": "service",
+    "member_cost_shares": "membercostshare",
+}
+# a small id pool so roots repeat, children are shared by several parents,
+# replacement children (make_plan ids) collide with stored rows, and
+# "ghost" ids sit in no table at all
+IDS = ("plan-1", "plan-2", "ps-1-0", "ps-2-0", "svc-1-0", "mcs-p1", "mcs-p2", "ghost", None)
+TYPES = ("plan", "planservice", "service", "membercostshare", "ghost", None)
+VALUES = {"string": ("a", None), "int": (1, None)}
+
+
+def _table(spark, cols, rows) -> DataFrame:
+    """A driver-literal table (JVM-side, like schema.local_strings_df)."""
+    if not rows:
+        return spark.createDataFrame([], ", ".join(f"{n} {t}" for n, t in cols))
+    return spark.range(1).select(
+        F.inline(
+            F.array(
+                *[
+                    F.struct(*[F.lit(v).cast(t).alias(n) for (n, t), v in zip(cols, row)])
+                    for row in rows
+                ]
+            )
+        )
+    )
+
+
+@st.composite
+def adversarial_stores(draw):
+    ids, types = st.sampled_from(IDS), st.sampled_from(TYPES)
+    rows = {}
+    for name, cols in TABLE_COLS.items():
+        if name == "edges":
+            # typed hierarchy edges plus arbitrary (possibly NULL, possibly
+            # dangling or cyclic) ones
+            row = st.tuples(types, ids, st.just("f"), st.integers(0, 2), types, ids)
+        else:
+            row = st.tuples(ids, *[st.sampled_from(VALUES[t]) for _, t in cols[1:]])
+        rows[name] = draw(st.lists(row, max_size=6))
+    hierarchy = [
+        ("plan", "plan-1", "f", 0, "planservice", "ps-1-0"),
+        ("plan", "plan-2", "f", 0, "planservice", "ps-1-0"),  # shared child
+        ("planservice", "ps-1-0", "f", 0, "service", "svc-1-0"),
+        ("plan", "plan-1", "f", 1, "membercostshare", "mcs-p1"),
+        ("planservice", "ps-2-0", "f", 0, "membercostshare", "mcs-p2"),
+    ]
+    rows["edges"] += draw(st.lists(st.sampled_from(hierarchy), max_size=5))
+    roots = draw(st.lists(ids, max_size=4))
+    return rows, roots
+
+
+# every adversarial shape at once, so each run checks it whatever is drawn
+ADVERSARIAL = (
+    {
+        "plans": [("plan-1", "a", None, "a"), ("plan-2", None, "a", None), (None, "a", "a", "a")],
+        "plan_services": [("ps-1-0", "a"), ("ps-2-0", None), (None, "a")],
+        "services": [("svc-1-0", "a", "a"), (None, None, None)],
+        "member_cost_shares": [("mcs-p1", "a", 1, None), ("mcs-p2", None, None, 1), (None, "a", 1, 1)],
+        "edges": [
+            ("plan", "plan-1", "f", 0, "planservice", "ps-1-0"),
+            ("plan", "plan-2", "f", 0, "planservice", "ps-1-0"),  # shared child
+            ("planservice", "ps-1-0", "f", 0, "service", "svc-1-0"),
+            ("plan", "plan-1", "f", 1, "service", "ghost"),  # child in no table
+            ("plan", None, "f", 0, "membercostshare", "mcs-p2"),
+            (None, "plan-1", "f", 0, "membercostshare", "mcs-p2"),
+            ("plan", "plan-1", "f", 2, "membercostshare", None),
+        ],
+    },
+    ["plan-1", "plan-1", "plan-9", None],  # duplicate, unknown and NULL roots
+)
+
+
+def _store_of(spark, rows) -> ShreddedTables:
+    return ShreddedTables(**{n: _table(spark, TABLE_COLS[n], r) for n, r in rows.items()})
+
+
+def _naive_delete(spark, t: ShreddedTables, plan_ids) -> ShreddedTables:
+    """Two edge-join hops from the plan roots, then ``left_anti`` per table."""
+    roots = _table(
+        spark, (("obj_type", "string"), ("obj_id", "string")), [("plan", i) for i in plan_ids]
+    )
+    frontier = seen = roots
+    for _ in range(2):
+        frontier = (
+            t.edges.join(
+                frontier,
+                (t.edges.parent_type == frontier.obj_type)
+                & (t.edges.parent_id == frontier.obj_id),
+            )
+            .select(F.col("child_type").alias("obj_type"), F.col("child_id").alias("obj_id"))
+            .distinct()
+        )
+        seen = seen.unionByName(frontier).distinct()
+
+    def prune(name):
+        vs = seen.filter(F.col("obj_type") == TABLE_TYPE[name]).select(
+            F.col("obj_id").alias("object_id")
+        )
+        return getattr(t, name).join(vs, "object_id", "left_anti")
+
+    edges = t.edges.join(
+        seen,
+        (t.edges.parent_type == seen.obj_type) & (t.edges.parent_id == seen.obj_id),
+        "left_anti",
+    )
+    return ShreddedTables(**{n: prune(n) for n in TABLE_TYPE}, edges=edges)
+
+
+def _rows(t: ShreddedTables) -> dict[str, Counter]:
+    return {n: Counter(map(tuple, df.collect())) for n, df in t.as_dict().items()}
+
+
+@given(case=adversarial_stores())
+@example(case=ADVERSARIAL)
+@settings(**SETTINGS)
+def test_cascade_delete_equals_join_oracle(spark, case):
+    rows, roots = case
+    store = _store_of(spark, rows)
+    assert _rows(del_mod.cascade_delete(store, roots)) == _rows(
+        _naive_delete(spark, store, roots)
+    )
+
+
+@given(case=adversarial_stores(), idxs=st.lists(st.integers(1, 3), min_size=1, max_size=3))
+@example(case=ADVERSARIAL, idxs=[1, 1, 3])
+@settings(**SETTINGS)
+def test_replace_equals_join_oracle(spark, case, idxs):
+    rows, _ = case
+    store = _store_of(spark, rows)
+    # replacement ids repeat (idxs may), hit stored plans (plan-1/2) and
+    # miss the store (plan-3)
+    repl = _parse(spark, [make_plan(i) for i in idxs])
+    pruned = _naive_delete(spark, store, sorted({f"plan-{i}" for i in idxs}))
+    saved = shred(repl)
+    expected = ShreddedTables(
+        **{n: df.unionByName(getattr(saved, n)) for n, df in pruned.as_dict().items()}
+    )
+    assert _rows(merge_mod.replace(store, repl)) == _rows(expected)
