@@ -148,10 +148,45 @@ def shred(docs: DataFrame, doc_col: str = "doc") -> ShreddedTables:
     return ShreddedTables(plans, plan_services, services, member_cost_shares, edges)
 
 
+def planned_bytes(df: DataFrame) -> int:
+    """Catalyst's size estimate of ``df`` (``optimizedPlan.stats.sizeInBytes``),
+    the number the planner sizes broadcasts by. An unknown estimate is
+    ``spark.sql.defaultSizeInBytes`` (Long.MaxValue by default)."""
+    return int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+
+
+def sized(df: DataFrame) -> DataFrame:
+    """``df`` coalesced to ``n = max(1, ceil(planned_bytes / target))``
+    partitions, where the target is ``spark.sql.files.maxPartitionBytes``,
+    the read-split size, so a written file holds about one later read split
+    at most (as far as Catalyst's estimate is right). ``coalesce`` never
+    raises the partition count, so this never writes more files than the
+    plan has partitions, and an unknown estimate leaves the plan as it
+    is."""
+    target = df.sparkSession._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
+    n = max(1, -(-planned_bytes(df) // target))
+    return df.coalesce(min(n, 2**31 - 1))
+
+
+def write_sized(df: DataFrame, path: str) -> None:
+    """Overwrite ``path`` with ``df`` as Parquet, in :func:`sized` files.
+    Every document-table write (store, quarantine, stream partials) goes
+    through here."""
+    sized(df).write.mode("overwrite").parquet(path)
+
+
 def write_tables(tables: ShreddedTables, out_dir: str) -> None:
-    """Materialize the shredded store as Parquet (the Redis replacement)."""
+    """Materialize the shredded store as Parquet (the Redis replacement),
+    ``<out_dir>/<table>.parquet`` per table.
+
+    Each table is written in ``max(1, ceil(planned_bytes /
+    spark.sql.files.maxPartitionBytes))`` files at most (:func:`sized`), so
+    the file count follows the table's estimated bytes, not the number of
+    unions and shuffles its plan went through; at test and bench scale
+    every table is one file written by one task.
+    """
     for name, df in tables.as_dict().items():
-        df.write.mode("overwrite").parquet(f"{out_dir}/{name}.parquet")
+        write_sized(df, f"{out_dir}/{name}.parquet")
 
 
 def read_tables(spark, out_dir: str) -> ShreddedTables:

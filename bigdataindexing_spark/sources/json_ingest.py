@@ -21,6 +21,7 @@ from bigdataindexing_spark.documents.shred import (
     TABLE_NAMES,
     ShreddedTables,
     shred,
+    write_sized,
     write_tables,
 )
 from bigdataindexing_spark.documents.validate import validate
@@ -45,12 +46,13 @@ def ingest_batch(
 
     Returns the shredded tables and the quarantine DataFrame (written to
     ``<out_dir>/quarantine.parquet`` with the violation reasons, the batch
-    analogue of the reference's HTTP 400)."""
+    analogue of the reference's HTTP 400). Every table, the quarantine
+    too, is written in sized files (``shred.write_sized``)."""
     raw = read_documents(spark, in_path)
     valid, quarantine = validate(raw)
     tables = shred(valid)
     write_tables(tables, out_dir)
-    quarantine.write.mode("overwrite").parquet(f"{out_dir}/quarantine.parquet")
+    write_sized(quarantine, f"{out_dir}/quarantine.parquet")
     return tables, quarantine
 
 
@@ -59,12 +61,8 @@ def _append_partials(out_dir: str):
         valid, quarantine = validate(batch_df)
         tables = shred(valid)
         for name, df in tables.as_dict().items():
-            df.write.mode("overwrite").parquet(
-                f"{out_dir}/{name}/batch={batch_id}"
-            )
-        quarantine.write.mode("overwrite").parquet(
-            f"{out_dir}/quarantine/batch={batch_id}"
-        )
+            write_sized(df, f"{out_dir}/{name}/batch={batch_id}")
+        write_sized(quarantine, f"{out_dir}/quarantine/batch={batch_id}")
 
     return fn
 

@@ -21,11 +21,12 @@ from bigdataindexing_spark.documents.reassemble import reassemble
 from bigdataindexing_spark.documents.schema import (
     PLAN_SCHEMA,
     REQUIRED_PATHS,
+    local_strings_df,
     make_plan,
     parsed_plans,
     raw_plan_json,
 )
-from bigdataindexing_spark.documents.shred import shred
+from bigdataindexing_spark.documents.shred import ShreddedTables, shred
 from bigdataindexing_spark.documents.validate import validate
 
 N_DOCS = 20
@@ -40,6 +41,12 @@ def store(spark):
     yield t
     for df in t.as_dict().values():
         df.unpersist()
+
+
+def _parsed(spark, docs):
+    return local_strings_df(spark, [json.dumps(d) for d in docs]).select(
+        F.from_json("value", PLAN_SCHEMA).alias("doc")
+    )
 
 
 def _docs_json(df, doc_col="doc"):
@@ -154,6 +161,73 @@ def test_merge_array_upsert_new_appends(spark, store):
     ]
 
 
+def test_merge_keeps_untouched_null_field_edges(spark, store):
+    """Rows a patch does not touch pass through unchanged, a NULL-field
+    edge of another plan too."""
+    odd = local_strings_df(spark, ["x"]).select(
+        F.lit("plan").alias("parent_type"),
+        F.lit("plan-x").alias("parent_id"),
+        F.lit(None).cast("string").alias("field"),
+        F.lit(0).alias("ord"),
+        F.lit("membercostshare").alias("child_type"),
+        F.lit("mcs-x").alias("child_id"),
+    )
+    edges = store.edges.unionByName(odd)
+    t = ShreddedTables(**{**store.as_dict(), "edges": edges})
+    merged = merge_mod.merge(t, _parsed(spark, [{"objectId": "plan-1", "planType": "x"}]))
+    before = sorted(map(tuple, edges.collect()), key=repr)
+    assert sorted(map(tuple, merged.edges.collect()), key=repr) == before
+    assert ("plan", "plan-x", None, 0, "membercostshare", "mcs-x") in before
+
+
+def test_update_writes_are_one_file_per_table(spark, tmp_path):
+    """Ingest, then PATCH, PUT and DELETE, each written into a fresh
+    directory: every table of every store is one file at this scale."""
+    from bigdataindexing_spark.documents import contracts as C
+    from bigdataindexing_spark.documents.shred import TABLE_NAMES, read_tables, write_tables
+    from bigdataindexing_spark.sources.json_ingest import ingest_batch
+
+    in_dir = str(tmp_path / "in")
+    raw_plan_json(spark, N_DOCS, include_invalid=True).coalesce(2).write.text(in_dir)
+    ingest_batch(spark, in_dir, str(tmp_path / "s0"))
+    updates = [
+        lambda t: merge_mod.merge(t, _parsed(spark, [{"objectId": "plan-7", "planType": "x"}])),
+        lambda t: merge_mod.replace(t, C._replacement_docs(spark)),
+        lambda t: del_mod.cascade_delete(t, ["plan-5"]),
+    ]
+    for k, update in enumerate(updates, 1):
+        write_tables(update(read_tables(spark, str(tmp_path / f"s{k - 1}"))), str(tmp_path / f"s{k}"))
+    for k in range(len(updates) + 1):
+        names = TABLE_NAMES + (("quarantine",) if k == 0 else ())
+        files = {n: len(_parquet_files(tmp_path / f"s{k}" / f"{n}.parquet")) for n in names}
+        assert files == dict.fromkeys(names, 1), (k, files)
+
+
+def test_sized_writes_scale_with_planned_bytes(spark, tmp_path):
+    """With a small read-split size the store is written in more than one
+    file, never more than ceil(planned bytes / split size)."""
+    from bigdataindexing_spark.documents.shred import TABLE_NAMES, planned_bytes
+    from bigdataindexing_spark.sources.json_ingest import ingest_batch
+
+    in_dir = str(tmp_path / "in")
+    raw_plan_json(spark, 200).write.text(in_dir)
+    key, target = "spark.sql.files.maxPartitionBytes", 16 * 1024
+    old = spark.conf.get(key)
+    spark.conf.set(key, str(target))
+    try:
+        tables, _ = ingest_batch(spark, in_dir, str(tmp_path / "store"))
+        bound = {n: -(-planned_bytes(getattr(tables, n)) // target) for n in TABLE_NAMES}
+    finally:
+        spark.conf.set(key, old)
+    files = {n: len(_parquet_files(tmp_path / "store" / f"{n}.parquet")) for n in TABLE_NAMES}
+    assert all(1 <= files[n] <= bound[n] for n in TABLE_NAMES), (files, bound)
+    assert files["edges"] > 1, (files, bound)
+
+
+def _parquet_files(path) -> list:
+    return [f for f in path.iterdir() if f.name.endswith(".parquet")]
+
+
 def test_cascade_delete(spark, store):
     after = del_mod.cascade_delete(store, ["plan-7"])
     assert after.plans.filter(F.col("object_id") == "plan-7").count() == 0
@@ -184,16 +258,27 @@ def test_cascade_delete_empty_id_list_is_noop(store):
 
 def test_update_plans_have_no_join_or_exchange(spark, tmp_path):
     """DELETE and PUT prune every table with a key filter over victims
-    collected once: each returned table executes as scan → filter (∪ the
-    shredded replacement), with no join and no shuffle."""
+    collected once, and PATCH filters out the rows it replaces: each
+    returned table executes as scan → filter (∪ the shredded replacement or
+    the merged rows), with no join and no shuffle."""
     from bigdataindexing_spark.documents import contracts as C
     from bigdataindexing_spark.documents.shred import read_tables, write_tables
 
     write_tables(shred(parsed_plans(spark, N_DOCS)), str(tmp_path))
     on_disk = read_tables(spark, str(tmp_path))
+    patch = {
+        "objectId": "plan-7",
+        "planType": "outOfNetwork",
+        "planCostShares": {"objectId": "mcs-p7", "copay": 1},
+        "linkedPlanServices": [
+            {"objectId": "ps-7-1", "linkedService": {"objectId": "svc-7-1", "name": "x"}},
+            {"objectId": "ps-7-99", "_org": "example.com"},
+        ],
+    }
     updates = {
         "delete": del_mod.cascade_delete(on_disk, ["plan-7", "plan-3"]),
         "replace": merge_mod.replace(on_disk, C._replacement_docs(spark)),
+        "merge": merge_mod.merge(on_disk, _parsed(spark, [patch])),
     }
     for kind, tables in updates.items():
         for name, df in tables.as_dict().items():

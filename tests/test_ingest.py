@@ -55,6 +55,10 @@ def test_stream_ingest_equals_batch(spark, tmp_path):
         b = sorted(map(tuple, getattr(batch_store, name).collect()))
         s = sorted(map(tuple, getattr(stream_store, name).collect()))
         assert b == s, name
+    # every partial is one sized file, as the batch store's tables are
+    for name in TABLE_NAMES + ("quarantine",):
+        part = os.path.join(stream_dir, name, "batch=0")
+        assert len([f for f in os.listdir(part) if f.endswith(".parquet")]) == 1, name
 
 
 def test_stream_ingest_resumes_from_its_checkpoint(spark, tmp_path):

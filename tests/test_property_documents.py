@@ -14,7 +14,10 @@ input:
 - cascade_delete and replace, which collect the victims once and prune
   each table with a key filter, equal the naive set-oriented formulation
   (edges join closure + ``left_anti`` per table) on adversarial stores:
-  NULL keys, shared children, dangling edges, unknown/duplicate roots.
+  NULL keys, shared children, dangling edges, unknown/duplicate roots;
+- merge, which upserts the touched rows on the driver, equals the
+  full-outer-join upsert and the join formulation of the edge rules on
+  adversarial stores and patches.
 
 Examples are kept small (each one runs real Spark jobs); the point is
 shape coverage, not volume.
@@ -28,7 +31,7 @@ from collections import Counter
 
 from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from bigdataindexing_spark.documents import delete as del_mod
@@ -67,6 +70,10 @@ def plan_doc_sets(draw):
 
 
 def _parse(spark, docs):
+    if not docs:
+        return spark.createDataFrame([], "value string").select(
+            F.from_json("value", PLAN_SCHEMA).alias("doc")
+        )
     return local_strings_df(spark, [json.dumps(d) for d in docs]).select(
         F.from_json("value", PLAN_SCHEMA).alias("doc")
     )
@@ -333,3 +340,139 @@ def test_replace_equals_join_oracle(spark, case, idxs):
         **{n: df.unionByName(getattr(saved, n)) for n, df in pruned.as_dict().items()}
     )
     assert _rows(merge_mod.replace(store, repl)) == _rows(expected)
+
+
+# --- merge against the full-outer-join oracle --------------------------------
+
+ARRAY_FIELD = merge_mod.ARRAY_FIELD
+FIELDS = ("planCostShares", ARRAY_FIELD, "linkedService", "planserviceCostShares", None)
+
+
+def _oracle_upsert(current: DataFrame, patch: DataFrame) -> DataFrame:
+    """Row-level upsert with field-level coalesce (patch wins where set)."""
+    cols = [c for c in current.columns if c != "object_id"]
+    c, p = current.alias("c"), patch.alias("p")
+    return c.join(p, on="object_id", how="full_outer").select(
+        F.col("object_id"),
+        *[F.coalesce(F.col(f"p.{x}"), F.col(f"c.{x}")).alias(x) for x in cols],
+    )
+
+
+def _oracle_merge(current: ShreddedTables, patch_docs: DataFrame) -> ShreddedTables:
+    """The set-oriented merge: a full outer join per typed table, and for
+    edges a ``left_anti`` on the single-object key plus the array append
+    by ``(parent_id, child_id)`` after the parent's max ordinal. The field
+    split is NULL-safe (a NULL-field edge is a single-object edge), and the
+    append order breaks ``ord`` ties by ``child_id`` so the expected
+    ordinals are deterministic."""
+    p = shred(patch_docs)
+    cur_e, pat_e = current.edges, p.edges
+    is_arr = F.col("field").eqNullSafe(ARRAY_FIELD)
+    key = ["parent_type", "parent_id", "field"]
+    cur_single, pat_single = cur_e.filter(~is_arr), pat_e.filter(~is_arr)
+    kept_single = cur_single.join(pat_single.select(*key).distinct(), key, "left_anti")
+    cur_arr, pat_arr = cur_e.filter(is_arr), pat_e.filter(is_arr)
+    new_children = pat_arr.join(
+        cur_arr.select("parent_id", "child_id"), ["parent_id", "child_id"], "left_anti"
+    )
+    max_ord = cur_arr.groupBy("parent_id").agg(F.max("ord").alias("max_ord"))
+    w = Window.partitionBy("parent_id").orderBy("ord", "child_id")
+    appended = (
+        new_children.join(max_ord, "parent_id", "left")
+        .withColumn("ord", F.coalesce(F.col("max_ord"), F.lit(-1)) + F.row_number().over(w))
+        .select(*cur_arr.columns)
+    )
+    return ShreddedTables(
+        **{n: _oracle_upsert(getattr(current, n), getattr(p, n)) for n in TABLE_TYPE},
+        edges=kept_single.unionByName(pat_single).unionByName(cur_arr).unionByName(appended),
+    )
+
+
+def _cost_share(oid, copay):
+    return {"objectId": oid, "objectType": "membercostshare", "_org": "b", "copay": copay}
+
+
+@st.composite
+def merge_cases(draw):
+    """An adversarial store (NULL keys and fields, duplicate keys, a child
+    shared by two plans, array edges under a non-plan parent of a plan's
+    id) and a sparse patch (NULL and absent ids, duplicate documents,
+    children old and new, possibly empty)."""
+    ids, types = st.sampled_from(IDS), st.sampled_from(TYPES)
+    rows = {}
+    for name, cols in TABLE_COLS.items():
+        if name == "edges":
+            row = st.tuples(
+                types, ids, st.sampled_from(FIELDS), st.sampled_from((0, 1, 2, None)), types, ids
+            )
+        else:
+            row = st.tuples(ids, *[st.sampled_from(VALUES[t]) for _, t in cols[1:]])
+        rows[name] = draw(st.lists(row, max_size=6))
+    plan_ids = st.sampled_from(("plan-1", "plan-2", "plan-3", None))
+    child_ids = st.sampled_from(("ps-1-0", "ps-2-0", "ps-new", None))
+    docs = []
+    for _ in range(draw(st.integers(0, 3))):
+        d = {"objectId": draw(plan_ids)}
+        if draw(st.booleans()):
+            d["planType"] = draw(st.sampled_from(("x", "y")))
+        if draw(st.booleans()):
+            d["planCostShares"] = _cost_share(
+                draw(st.sampled_from(("mcs-p1", "mcs-p2", "mcs-new", None))), draw(st.integers(0, 9))
+            )
+        if draw(st.booleans()):
+            lps = []
+            for _ in range(draw(st.integers(0, 3))):
+                ps = {"objectId": draw(child_ids), "_org": draw(st.sampled_from(("b", None)))}
+                if draw(st.booleans()):
+                    ps["linkedService"] = {"objectId": draw(st.sampled_from(("svc-1-0", "svc-new"))),
+                                           "name": "n"}
+                if draw(st.booleans()):
+                    ps["planserviceCostShares"] = _cost_share("mcs-p2", draw(st.integers(0, 9)))
+                lps.append(ps)
+            d["linkedPlanServices"] = lps
+        docs.append(d)
+    return rows, docs
+
+
+# every merge shape at once, so each run checks it whatever is drawn
+MERGE_ADVERSARIAL = (
+    {
+        "plans": [("plan-1", "a", "a", "a"), ("plan-1", None, "b", None), (None, "a", "a", "a"),
+                  ("plan-2", "a", "a", "a")],
+        "plan_services": [("ps-1-0", "a"), ("ps-2-0", None), (None, "a")],
+        "services": [("svc-1-0", "a", "a"), (None, None, None)],
+        "member_cost_shares": [("mcs-p1", "a", 1, None), ("mcs-p2", None, None, 1),
+                               (None, "a", 1, 1)],
+        "edges": [
+            ("plan", "plan-1", "planCostShares", 0, "membercostshare", "mcs-p1"),
+            ("plan", "plan-1", ARRAY_FIELD, 0, "planservice", "ps-1-0"),
+            ("plan", "plan-2", ARRAY_FIELD, 0, "planservice", "ps-1-0"),  # shared child
+            ("planservice", "plan-1", ARRAY_FIELD, 5, "planservice", "ps-x"),  # same id, other type
+            ("plan", "plan-x", None, 0, "membercostshare", "mcs-p2"),  # NULL field
+            ("plan", None, "planCostShares", 0, "membercostshare", "mcs-p2"),
+            (None, "plan-1", "planCostShares", 0, "membercostshare", "mcs-p2"),
+            ("plan", "plan-1", ARRAY_FIELD, None, "planservice", None),
+        ],
+    },
+    [
+        {"objectId": "plan-1", "planType": "x",
+         "planCostShares": _cost_share("mcs-p1", 7),
+         "linkedPlanServices": [{"objectId": "ps-1-0", "_org": "b"},
+                                {"objectId": "ps-new", "linkedService": {"objectId": "svc-1-0"}}]},
+        {"objectId": "plan-1", "planType": "y"},  # duplicate patch key
+        {"objectId": "plan-3", "linkedPlanServices": [{"objectId": "ps-2-0"}]},  # not stored
+        {"objectId": None, "planType": "x",
+         "linkedPlanServices": [{"objectId": "ps-new"}, {"objectId": "ps-1-0"}]},
+    ],
+)
+
+
+@given(case=merge_cases())
+@example(case=MERGE_ADVERSARIAL)
+@example(case=(MERGE_ADVERSARIAL[0], []))  # empty patch
+@settings(**SETTINGS)
+def test_merge_equals_upsert_oracle(spark, case):
+    rows, docs = case
+    store = _store_of(spark, rows)
+    patch = _parse(spark, docs)
+    assert _rows(merge_mod.merge(store, patch)) == _rows(_oracle_merge(store, patch))
