@@ -14,16 +14,21 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from bigdataindexing_spark.documents.schema import PLAN_SCHEMA
 from bigdataindexing_spark.documents.shred import ShreddedTables
 
 
-def _cost_share_struct(cs: DataFrame, prefix: str) -> F.Column:
-    return F.struct(
-        F.col(f"{prefix}object_id").alias("objectId"),
-        F.lit("membercostshare").alias("objectType"),
-        F.col(f"{prefix}org").alias("_org"),
-        F.col(f"{prefix}deductible").alias("deductible"),
-        F.col(f"{prefix}copay").alias("copay"),
+def _cost_shares(t: ShreddedTables, doc_field: str) -> DataFrame:
+    """(cs_id, <doc_field>): each member_cost_shares row as its sub-document."""
+    return t.member_cost_shares.select(
+        F.col("object_id").alias("cs_id"),
+        F.struct(
+            F.col("object_id").alias("objectId"),
+            F.lit("membercostshare").alias("objectType"),
+            F.col("org").alias("_org"),
+            F.col("deductible").alias("deductible"),
+            F.col("copay").alias("copay"),
+        ).alias(doc_field),
     )
 
 
@@ -49,22 +54,12 @@ def reassemble(t: ShreddedTables) -> DataFrame:
             F.col("name").alias("name"),
         ).alias("linkedService"),
     )
-    cs = t.member_cost_shares.select(
-        F.col("object_id").alias("cs_id"),
-        F.struct(
-            F.col("object_id").alias("objectId"),
-            F.lit("membercostshare").alias("objectType"),
-            F.col("org").alias("_org"),
-            F.col("deductible").alias("deductible"),
-            F.col("copay").alias("copay"),
-        ).alias("planserviceCostShares"),
-    )
     ps_doc = (
         t.plan_services.select(F.col("object_id").alias("ps_id"), F.col("org"))
         .join(svc_edge, "ps_id", "left")
         .join(svc, "svc_id", "left")
         .join(pscs_edge, "ps_id", "left")
-        .join(cs, "cs_id", "left")
+        .join(_cost_shares(t, "planserviceCostShares"), "cs_id", "left")
         .select(
             "ps_id",
             F.struct(
@@ -81,16 +76,6 @@ def reassemble(t: ShreddedTables) -> DataFrame:
     pcs_edge = t.edges.filter(
         (F.col("field") == "planCostShares") & (F.col("parent_type") == "plan")
     ).select(F.col("parent_id").alias("plan_id"), F.col("child_id").alias("cs_id"))
-    pcs = t.member_cost_shares.select(
-        F.col("object_id").alias("cs_id"),
-        F.struct(
-            F.col("object_id").alias("objectId"),
-            F.lit("membercostshare").alias("objectType"),
-            F.col("org").alias("_org"),
-            F.col("deductible").alias("deductible"),
-            F.col("copay").alias("copay"),
-        ).alias("planCostShares"),
-    )
     lps_edge = t.edges.filter(F.col("field") == "linkedPlanServices").select(
         F.col("parent_id").alias("plan_id"),
         F.col("ord"),
@@ -114,7 +99,7 @@ def reassemble(t: ShreddedTables) -> DataFrame:
         )
         .join(pcs_edge, F.col("object_id") == F.col("plan_id"), "left")
         .drop("plan_id")
-        .join(pcs, "cs_id", "left")
+        .join(_cost_shares(t, "planCostShares"), "cs_id", "left")
         .join(lps.withColumnRenamed("plan_id", "object_id"), "object_id", "left")
         .select(
             "object_id",
@@ -127,13 +112,7 @@ def reassemble(t: ShreddedTables) -> DataFrame:
                 F.col("planCostShares"),
                 F.coalesce(
                     F.col("linkedPlanServices"),
-                    F.array().cast(
-                        "array<struct<objectId:string,objectType:string,_org:string,"
-                        "linkedService:struct<objectId:string,objectType:string,"
-                        "_org:string,name:string>,"
-                        "planserviceCostShares:struct<objectId:string,"
-                        "objectType:string,_org:string,deductible:bigint,copay:bigint>>>"
-                    ),
+                    F.array().cast(PLAN_SCHEMA["linkedPlanServices"].dataType),
                 ).alias("linkedPlanServices"),
             ).alias("doc"),
         )

@@ -3,13 +3,8 @@
 Spark-native equivalent of the reference's recursive Redis shredding
 (PlanService.java:26–85): where the reference writes one KV pair per nested
 object plus string-encoded relation keys, we produce one DataFrame per
-objectType plus an ``edges`` relation — the adjacency list as a real table:
-
-    plans(object_id, org, plan_type, creation_date)
-    plan_services(object_id, org)
-    services(object_id, org, name)
-    member_cost_shares(object_id, org, deductible, copay)
-    edges(parent_type, parent_id, field, ord, child_type, child_id)
+objectType plus an ``edges`` relation — the adjacency list as a real table
+(columns and types in :data:`TABLE_SCHEMAS`, the store's one format).
 
 Array order (the reference's ``Arrays.toString`` rendering,
 PlanService.java:66) is carried as the explicit ``ord`` column from
@@ -26,6 +21,7 @@ from dataclasses import dataclass, fields
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 
 @dataclass
@@ -43,6 +39,26 @@ class ShreddedTables:
 
 
 TABLE_NAMES = tuple(f.name for f in fields(ShreddedTables))
+
+
+def _columns(**types: T.DataType) -> T.StructType:
+    return T.StructType([T.StructField(name, t) for name, t in types.items()])
+
+
+_S = T.StringType()
+# The store's on-disk format: the column names and types :func:`shred`
+# produces for each table, so the reader needs no schema inference.
+TABLE_SCHEMAS: dict[str, T.StructType] = {
+    "plans": _columns(object_id=_S, org=_S, plan_type=_S, creation_date=_S),
+    "plan_services": _columns(object_id=_S, org=_S),
+    "services": _columns(object_id=_S, org=_S, name=_S),
+    "member_cost_shares": _columns(
+        object_id=_S, org=_S, deductible=T.LongType(), copay=T.LongType()
+    ),
+    "edges": _columns(
+        parent_type=_S, parent_id=_S, field=_S, ord=T.IntegerType(), child_type=_S, child_id=_S
+    ),
+}
 
 
 def _cost_share_rows(col: F.Column) -> list[F.Column]:
@@ -175,6 +191,12 @@ def write_sized(df: DataFrame, path: str) -> None:
     sized(df).write.mode("overwrite").parquet(path)
 
 
+def table_path(out_dir: str, name: str) -> str:
+    """Where the store at ``out_dir`` keeps table ``name``: every Parquet
+    file beneath ``<out_dir>/<name>.parquet``, at any depth."""
+    return f"{out_dir}/{name}.parquet"
+
+
 def write_tables(tables: ShreddedTables, out_dir: str) -> None:
     """Materialize the shredded store as Parquet (the Redis replacement),
     ``<out_dir>/<table>.parquet`` per table.
@@ -186,10 +208,20 @@ def write_tables(tables: ShreddedTables, out_dir: str) -> None:
     every table is one file written by one task.
     """
     for name, df in tables.as_dict().items():
-        write_sized(df, f"{out_dir}/{name}.parquet")
+        write_sized(df, table_path(out_dir, name))
 
 
 def read_tables(spark, out_dir: str) -> ShreddedTables:
+    """The one store reader: every Parquet file under each
+    :func:`table_path`, recursively, so a batch write's files and each
+    stream micro-batch's ``batch=<id>`` partial beneath them read as one
+    table. The declared :data:`TABLE_SCHEMAS` are given to the reader,
+    so opening a store starts no Spark job (no footer schema inference)."""
     return ShreddedTables(
-        **{name: spark.read.parquet(f"{out_dir}/{name}.parquet") for name in TABLE_NAMES}
+        **{
+            name: spark.read.schema(schema)
+            .option("recursiveFileLookup", "true")
+            .parquet(table_path(out_dir, name))
+            for name, schema in TABLE_SCHEMAS.items()
+        }
     )

@@ -20,38 +20,23 @@ from bigdataindexing_spark.documents.schema import (
 )
 
 
-def _missing_required(doc: F.Column) -> F.Column:
-    """Array of violated required-field paths for a parsed doc."""
-    # for each required path, emit the path string when the leaf is null
-    parts = []
-    for p in REQUIRED_PATHS:
-        c = doc
-        for seg in p.split("."):
-            c = c.getField(seg)
-        parts.append(F.when(c.isNull(), F.lit(p)))
-    # per-element requireds inside linkedPlanServices
-    arr = doc.getField("linkedPlanServices")
-
-    def _elem_null(path: str):
-        def f(x):
-            c = x
-            for seg in path.split("."):
-                c = c.getField(seg)
-            return c.isNull()
-
-        return f
-
-    for p in REQUIRED_ELEMENT_PATHS:
-        any_bad = F.exists(F.coalesce(arr, F.array()), _elem_null(p))
-        parts.append(F.when(any_bad, F.lit(f"linkedPlanServices[].{p}")))
-    return F.array_compact(F.array(*parts))
-
-
 def _nested(doc: F.Column, path: str) -> F.Column:
     c = doc
     for seg in path.split("."):
         c = c.getField(seg)
     return c
+
+
+def _missing_required(doc: F.Column) -> F.Column:
+    """Array of violated required-field paths for a parsed doc."""
+    # for each required path, emit the path string when the leaf is null
+    parts = [F.when(_nested(doc, p).isNull(), F.lit(p)) for p in REQUIRED_PATHS]
+    # per-element requireds inside linkedPlanServices
+    arr = F.coalesce(doc.getField("linkedPlanServices"), F.array())
+    for p in REQUIRED_ELEMENT_PATHS:
+        any_bad = F.exists(arr, lambda x: _nested(x, p).isNull())
+        parts.append(F.when(any_bad, F.lit(f"linkedPlanServices[].{p}")))
+    return F.array_compact(F.array(*parts))
 
 
 def validate(raw: DataFrame, value_col: str = "value") -> tuple[DataFrame, DataFrame]:

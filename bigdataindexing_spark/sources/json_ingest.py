@@ -5,25 +5,24 @@ Spark-native equivalent of the reference's write path
 accepts one HTTP body at a time, validates it, shreds it into Redis and
 enqueues an index action, we ingest a *directory* of JSON-lines files —
 batch for backfill, Structured Streaming for continuous ingest — through
-the same validate → shred → store pipeline, set-oriented end to end.
+one validate → shred → write step (:func:`ingest`), set-oriented end to end.
 
-Scale notes: ingest is embarrassingly parallel until the per-type writes
-(narrow projections + one posexplode); the streaming variant appends
-batchId-keyed partial directories (idempotent under replay, same pattern
-as the index maintenance sink) so a restart never double-writes documents.
+The store has one layout, read by one reader (:func:`read_store`):
+``<out_dir>/<table>.parquet`` per table and ``<out_dir>/quarantine.parquet``.
+A batch ingest writes those directories; each stream micro-batch writes
+the partial ``<table>.parquet/batch=<batchId>`` beneath them, an overwrite
+keyed by batch id (idempotent under replay, the same pattern as the index
+maintenance sink), so a restart never double-writes documents.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from bigdataindexing_spark.documents.shred import (
-    TABLE_NAMES,
-    ShreddedTables,
-    shred,
-    write_sized,
-    write_tables,
-)
+from bigdataindexing_spark.documents.shred import TABLE_NAMES  # noqa: F401  (re-exported)
+from bigdataindexing_spark.documents.shred import ShreddedTables, shred, table_path, write_sized
+# the store's one reader, for every store either ingest path writes
+from bigdataindexing_spark.documents.shred import read_tables as read_store  # noqa: F401
 from bigdataindexing_spark.documents.validate import validate
 from bigdataindexing_spark.registry import register
 from bigdataindexing_spark.streaming.core import run_foreach_batch
@@ -34,61 +33,45 @@ def read_documents(spark: SparkSession, path: str) -> DataFrame:
     return spark.read.text(path)
 
 
-def stream_documents(spark: SparkSession, path: str) -> DataFrame:
-    """Continuous ingest source over the same directory layout."""
-    return spark.readStream.text(path)
+def ingest(
+    raw: DataFrame, out_dir: str, batch_id: int | None = None
+) -> tuple[ShreddedTables, DataFrame]:
+    """Validate + shred + write raw bodies into the store at ``out_dir``:
+    each table, and the quarantine with its violation reasons (the batch
+    analogue of the reference's HTTP 400), overwrites
+    ``<out_dir>/<name>.parquet``, or its ``batch=<batch_id>`` partial when
+    a micro-batch id is given. Every write is sized
+    (``shred.write_sized``). Returns the shredded tables and the
+    quarantine DataFrame."""
+    valid, quarantine = validate(raw)
+    tables = shred(valid)
+    part = "" if batch_id is None else f"/batch={batch_id}"
+    for name, df in {**tables.as_dict(), "quarantine": quarantine}.items():
+        write_sized(df, table_path(out_dir, name) + part)
+    return tables, quarantine
 
 
 def ingest_batch(
     spark: SparkSession, in_path: str, out_dir: str
 ) -> tuple[ShreddedTables, DataFrame]:
-    """Backfill path: validate + shred + overwrite the store.
-
-    Returns the shredded tables and the quarantine DataFrame (written to
-    ``<out_dir>/quarantine.parquet`` with the violation reasons, the batch
-    analogue of the reference's HTTP 400). Every table, the quarantine
-    too, is written in sized files (``shred.write_sized``)."""
-    raw = read_documents(spark, in_path)
-    valid, quarantine = validate(raw)
-    tables = shred(valid)
-    write_tables(tables, out_dir)
-    write_sized(quarantine, f"{out_dir}/quarantine.parquet")
-    return tables, quarantine
-
-
-def _append_partials(out_dir: str):
-    def fn(batch_df: DataFrame, batch_id: int) -> None:
-        valid, quarantine = validate(batch_df)
-        tables = shred(valid)
-        for name, df in tables.as_dict().items():
-            write_sized(df, f"{out_dir}/{name}/batch={batch_id}")
-        write_sized(quarantine, f"{out_dir}/quarantine/batch={batch_id}")
-
-    return fn
+    """Backfill path: :func:`ingest` of every file under ``in_path``,
+    overwriting the store."""
+    return ingest(read_documents(spark, in_path), out_dir)
 
 
 def ingest_stream(spark: SparkSession, in_path: str, out_dir: str) -> None:
     """Continuous-ingest path (availableNow replay in tests): each
-    micro-batch validates + shreds + appends idempotent batchId-keyed
+    micro-batch is one :func:`ingest` into its ``batch=<batchId>``
     partials — the Spark replacement for the reference's per-request
     Redis writes + RabbitMQ enqueue (PlanController.java:100–108).
     The checkpoint lives under ``out_dir/_checkpoint``, beside the table
-    directories the store reads, so a later call ingests only the input
-    files added since."""
+    directories, so a later call ingests only the input files added
+    since."""
     run_foreach_batch(
-        stream_documents(spark, in_path),
-        _append_partials(out_dir),
+        spark.readStream.text(in_path),
+        lambda batch_df, batch_id: ingest(batch_df, out_dir, batch_id),
         f"{out_dir}/_checkpoint",
     )
-
-
-def read_store(spark: SparkSession, out_dir: str, streaming: bool = False) -> ShreddedTables:
-    """Read the shredded store written by either ingest path."""
-    def rd(name: str) -> DataFrame:
-        path = f"{out_dir}/{name}" if streaming else f"{out_dir}/{name}.parquet"
-        return spark.read.option("recursiveFileLookup", "true").parquet(path)
-
-    return ShreddedTables(**{name: rd(name) for name in TABLE_NAMES})
 
 
 @register(
@@ -101,12 +84,11 @@ def read_store(spark: SparkSession, out_dir: str, streaming: bool = False) -> Sh
     "quarantine count.",
 )
 def src_json_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     from bigdataindexing_spark.documents.schema import raw_plan_json
+    from bigdataindexing_spark.sources.store_dirs import session_store_dir
 
-    in_dir = tempfile.mkdtemp(prefix="ingest_in_")
-    out_dir = tempfile.mkdtemp(prefix="ingest_out_")
+    root = session_store_dir("json_ingest")
+    in_dir, out_dir = f"{root}/in", f"{root}/out"
     raw_plan_json(spark, n=40, include_invalid=True).coalesce(1).write.mode(
         "overwrite"
     ).text(in_dir)

@@ -50,14 +50,14 @@ def test_stream_ingest_equals_batch(spark, tmp_path):
     ingest_stream(spark, in_dir, stream_dir)
 
     batch_store = read_store(spark, batch_dir)
-    stream_store = read_store(spark, stream_dir, streaming=True)
+    stream_store = read_store(spark, stream_dir)
     for name in TABLE_NAMES:
         b = sorted(map(tuple, getattr(batch_store, name).collect()))
         s = sorted(map(tuple, getattr(stream_store, name).collect()))
         assert b == s, name
     # every partial is one sized file, as the batch store's tables are
     for name in TABLE_NAMES + ("quarantine",):
-        part = os.path.join(stream_dir, name, "batch=0")
+        part = os.path.join(stream_dir, f"{name}.parquet", "batch=0")
         assert len([f for f in os.listdir(part) if f.endswith(".parquet")]) == 1, name
 
 
@@ -82,15 +82,15 @@ def test_stream_ingest_resumes_from_its_checkpoint(spark, tmp_path):
     arrive("part-1.jsonl", range(6, 10))
     ingest_stream(spark, str(in_dir), out_dir)
 
-    assert sorted(os.listdir(f"{out_dir}/plans")) == ["batch=0", "batch=1"]
-    new = spark.read.parquet(f"{out_dir}/plans/batch=1").select("object_id")
+    assert sorted(os.listdir(f"{out_dir}/plans.parquet")) == ["batch=0", "batch=1"]
+    new = spark.read.parquet(f"{out_dir}/plans.parquet/batch=1").select("object_id")
     assert sorted(r[0] for r in new.collect()) == sorted(
         make_plan(i)["objectId"] for i in range(6, 10)
     )
     batch_dir = str(tmp_path / "batch_store")
     ingest_batch(spark, str(in_dir), batch_dir)
     batch_store = read_store(spark, batch_dir)
-    stream_store = read_store(spark, out_dir, streaming=True)
+    stream_store = read_store(spark, out_dir)
     for name in TABLE_NAMES:
         b = sorted(map(tuple, getattr(batch_store, name).collect()))
         s = sorted(map(tuple, getattr(stream_store, name).collect()))
@@ -98,17 +98,51 @@ def test_stream_ingest_resumes_from_its_checkpoint(spark, tmp_path):
 
 
 def test_stream_ingest_replay_is_idempotent(spark, tmp_path):
-    from bigdataindexing_spark.sources.json_ingest import _append_partials
+    from bigdataindexing_spark.sources.json_ingest import ingest
 
     in_dir = _write_input(spark, tmp_path, n=5, include_invalid=False)
     out_dir = str(tmp_path / "store")
     raw = spark.read.text(in_dir)
-    fn = _append_partials(out_dir)
-    fn(raw, 0)
-    once = sorted(map(tuple, read_store(spark, out_dir, streaming=True).plans.collect()))
-    fn(raw, 0)  # replayed micro-batch
-    twice = sorted(map(tuple, read_store(spark, out_dir, streaming=True).plans.collect()))
+    ingest(raw, out_dir, 0)
+    once = sorted(map(tuple, read_store(spark, out_dir).plans.collect()))
+    ingest(raw, out_dir, 0)  # replayed micro-batch
+    twice = sorted(map(tuple, read_store(spark, out_dir).plans.collect()))
     assert once == twice
+
+
+def _job_ids(spark) -> set[int]:
+    return set(spark.sparkContext.statusTracker().getJobIdsForGroup(None))
+
+
+def test_reading_a_store_starts_no_spark_job(spark, tmp_path):
+    """The reader is given the declared table schemas, so opening a store
+    (a batch store, or the stream partials beneath it) infers nothing from
+    Parquet footers: no Spark job starts until the tables are queried."""
+    in_dir = _write_input(spark, tmp_path, n=5)
+    out_dir = str(tmp_path / "store")
+    ingest_batch(spark, in_dir, out_dir)
+    ingest_stream(spark, in_dir, out_dir)
+    before = _job_ids(spark)
+    store = read_store(spark, out_dir)
+    opened = _job_ids(spark)
+    assert opened == before
+    # the batch files and the batch=0 partials are one table, and the
+    # count's job is seen, so the tracker does see this thread's jobs
+    assert store.plans.count() == 10
+    assert _job_ids(spark) > opened
+
+
+def test_table_schemas_match_shred(spark):
+    """The declared store format is exactly what shred produces: same
+    tables, column names and types, so the typed reader cannot drift."""
+    from bigdataindexing_spark.documents.schema import parsed_plans
+    from bigdataindexing_spark.documents.shred import TABLE_SCHEMAS, shred
+
+    tables = shred(parsed_plans(spark, 4)).as_dict()
+    assert tuple(TABLE_SCHEMAS) == tuple(tables) == TABLE_NAMES
+    for name, df in tables.items():
+        got = [(f.name, f.dataType) for f in df.schema.fields]
+        assert got == [(f.name, f.dataType) for f in TABLE_SCHEMAS[name].fields], name
 
 
 def test_schema_evolution_merge_schema(spark, tmp_path):

@@ -24,9 +24,10 @@ from bigdataindexing_spark.sources.store_dirs import STORES
 registry.all_specs()  # imports every module, so every store has registered
 
 # session_store_dir() call sites that are scratch space, not stores:
-# checkpoints and per-invocation stream outputs
+# checkpoints and per-invocation outputs
 SCRATCH_KINDS = {
     "cc_checkpoint",
+    "json_ingest",
     "stream_cms",
     "stream_scd2",
     "stream_quantile",
