@@ -23,6 +23,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from bigdataindexing_spark.streaming.core import read_partials
+
 
 @dataclass
 class ShreddedTables:
@@ -219,9 +221,7 @@ def read_tables(spark, out_dir: str) -> ShreddedTables:
     so opening a store starts no Spark job (no footer schema inference)."""
     return ShreddedTables(
         **{
-            name: spark.read.schema(schema)
-            .option("recursiveFileLookup", "true")
-            .parquet(table_path(out_dir, name))
+            name: read_partials(spark, table_path(out_dir, name), schema)
             for name, schema in TABLE_SCHEMAS.items()
         }
     )

@@ -587,8 +587,8 @@ def _build_stream_delta_table(spark: SparkSession, sf_dir: str, table_dir: str) 
     every document. Returns the arrival directory (the replay input),
     kept inside the table directory so it goes when the store does."""
     from bigdataindexing_spark.streaming.core import (
+        replay_stream,
         run_foreach_batch,
-        write_arrivals,
     )
 
     docs = table(spark, sf_dir, "documents")
@@ -599,13 +599,8 @@ def _build_stream_delta_table(spark: SparkSession, sf_dir: str, table_dir: str) 
         table_header(table_dir, docs.schema) + _write_parts(spark, table_dir, base),
     )
     src = os.path.join(table_dir, "_arrivals")
-    write_arrivals(
+    stream = replay_stream(
         [docs.filter(F.col("doc_id") % 4 == r) for r in (1, 2, 3)], src
-    )
-    stream = (
-        spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
     )
     run_foreach_batch(
         stream,

@@ -882,8 +882,8 @@ def _build_stream_merged(spark: SparkSession, sf_dir: str, path: str):
     snapshot. The arrivals live inside the store directory, so they go
     when it is reclaimed."""
     from bigdataindexing_spark.streaming.core import (
+        replay_stream,
         run_foreach_batch,
-        write_arrivals,
     )
 
     _run_lifecycle(spark, sf_dir, path)
@@ -891,17 +891,12 @@ def _build_stream_merged(spark: SparkSession, sf_dir: str, path: str):
     base_version = log_versions(path)[-1]  # the pre-stream table
     li = table(spark, sf_dir, "lineitem")
     src = os.path.join(path, "_arrivals")
-    write_arrivals(
+    stream = replay_stream(
         [
             li.filter(F.col("l_shipdate").between(lo, hi))
             for lo, hi in STREAM_MERGE_MONTHS
         ],
         src,
-    )
-    stream = (
-        spark.readStream.schema(li.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
     )
     run_foreach_batch(
         stream,

@@ -1,4 +1,5 @@
-"""Structured Streaming plumbing (SURVEY.md §2.8).
+"""Structured Streaming plumbing (SURVEY.md §2.8): the one module that knows
+the micro-batch store format and the replay harness.
 
 The reference's only asynchronous dataflow is a RabbitMQ queue between the
 write path and the Elasticsearch index build (PlanController.java:100–108 →
@@ -7,23 +8,44 @@ Spark-native replacement: file-source ``readStream`` over the ingest
 directory, transformations, and ``foreachBatch`` / memory sinks, with
 watermarks and windowed aggregations as first-class operators.
 
-Design notes for scale:
-- every helper here takes an explicit schema from a one-off batch read, so
-  the stream never pays schema inference per micro-batch;
-- ``run_available_now`` drains the source with the availableNow trigger —
-  the batch-replay mode that makes streaming plans deterministically
-  testable (stream result ≡ batch result on the same input);
-- checkpoint dirs are caller-owned; on a cluster they'd be durable storage.
+**Partial-store contract.** A batch-keyed partial store is a directory of
+``<out_dir>/batch=<batchId>`` subdirectories, one per micro-batch:
+
+- :func:`partial_sink` is the ``foreachBatch`` fn that overwrites
+  ``batch=<id>`` with ``build(batch_df)`` (:func:`write_partial` writes one
+  partial), so a replayed batch (restart after a failure) replaces its own
+  directory and the store is exactly-once on plain Parquet;
+- :func:`read_partials` reads every partial recursively with the schema
+  the store declares for its partials, so opening a store starts no Spark
+  job (no footer schema inference); serving is merge-on-read over that
+  relation. Paths starting with ``_`` (a ``_checkpoint`` kept inside the
+  store) are skipped by the reader;
+- :func:`latest_partial` finds the newest ``batch=<id>`` below a batch id,
+  for stores whose partials are snapshots rather than additive deltas.
+
+**Replay contract.** :func:`replay_stream` writes each DataFrame as one
+file-source arrival into a caller-given directory and returns the
+``maxFilesPerTrigger=1`` stream over them with their schema: arrival ``i``
+is micro-batch ``i``, the deterministic harness for multi-batch semantics
+(watermark advancement, late-data drop, state carry-over) that wall-clock
+arrival order cannot give. ``run_available_now`` / ``run_foreach_batch``
+drain a stream with the availableNow trigger, the batch-replay mode that
+makes streaming plans testable (stream result ≡ batch result on the same
+input).
+
+Checkpoints are caller-owned; on a cluster they would be durable storage.
 """
 
 from __future__ import annotations
 
 import itertools
-import tempfile
+import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from bigdataindexing_spark.sources.store_dirs import session_store_dir
 
 _qname_counter = itertools.count()
 
@@ -60,11 +82,6 @@ def stream_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     )
 
 
-def stream_dir(spark: SparkSession, path: str, schema) -> DataFrame:
-    """readStream over a caller-owned ingest directory (the change-log)."""
-    return spark.readStream.schema(schema).parquet(path)
-
-
 def run_available_now(
     sdf: DataFrame,
     output_mode: str = "complete",
@@ -73,7 +90,7 @@ def run_available_now(
     """Drain a streaming DataFrame with availableNow into a memory sink and
     return the result as a batch DataFrame."""
     qname = f"stream_result_{next(_qname_counter)}"
-    ckpt = checkpoint or tempfile.mkdtemp(prefix="ckpt_")
+    ckpt = checkpoint or session_store_dir("ckpt")
     query = (
         sdf.writeStream.trigger(availableNow=True)
         .format("memory")
@@ -84,35 +101,6 @@ def run_available_now(
     )
     query.awaitTermination()
     return sdf.sparkSession.table(qname)
-
-
-def write_arrivals(dfs, base_dir: str) -> list[str]:
-    """Write each DataFrame as one file-source 'arrival'. Explicit mtimes
-    force the FileStreamSource to pick the files up in list order under
-    ``maxFilesPerTrigger=1`` — the deterministic replay harness for
-    multi-batch semantics (watermark advancement, late-data drop, state
-    carry-over) that wall-clock arrival order can't guarantee in a test."""
-    import os
-
-    paths = []
-    for i, df in enumerate(dfs):
-        sub = os.path.join(base_dir, f"arrival_{i}")
-        df.coalesce(1).write.mode("overwrite").parquet(sub)
-        parts = sorted(n for n in os.listdir(sub) if n.endswith(".parquet"))
-        # coalesce(1) above makes this structural; assert anyway so a
-        # future multi-part write fails loudly instead of silently
-        # renaming every part onto the same dst (ADVICE r4)
-        if len(parts) != 1:
-            raise AssertionError(
-                f"arrival {i} wrote {len(parts)} parquet parts; exactly one "
-                "file per arrival is required for deterministic replay"
-            )
-        full = os.path.join(sub, parts[0])
-        dst = os.path.join(base_dir, f"file_{i}.parquet")
-        os.rename(full, dst)
-        os.utime(dst, (1_000_000 + i * 1000, 1_000_000 + i * 1000))
-        paths.append(dst)
-    return paths
 
 
 def run_foreach_batch(sdf: DataFrame, fn, checkpoint: str) -> None:
@@ -126,3 +114,72 @@ def run_foreach_batch(sdf: DataFrame, fn, checkpoint: str) -> None:
         .start()
     )
     query.awaitTermination()
+
+
+def replay_stream(dfs, src: str) -> DataFrame:
+    """Write each DataFrame in ``dfs`` as one arrival file under ``src`` and
+    return the ``maxFilesPerTrigger=1`` stream over them, with the first
+    arrival's schema. Explicit mtimes make the FileStreamSource pick the
+    files up in list order, so arrival ``i`` is micro-batch ``i``."""
+    for i, df in enumerate(dfs):
+        sub = os.path.join(src, f"arrival_{i}")
+        df.coalesce(1).write.mode("overwrite").parquet(sub)
+        parts = sorted(n for n in os.listdir(sub) if n.endswith(".parquet"))
+        # coalesce(1) above makes this structural; check anyway so a
+        # future multi-part write fails loudly instead of silently
+        # renaming every part onto the same file
+        if len(parts) != 1:
+            raise AssertionError(
+                f"arrival {i} wrote {len(parts)} parquet parts; exactly one "
+                "file per arrival is required for deterministic replay"
+            )
+        dst = os.path.join(src, f"file_{i}.parquet")
+        os.rename(os.path.join(sub, parts[0]), dst)
+        os.utime(dst, (1_000_000 + i * 1000, 1_000_000 + i * 1000))
+    return (
+        dfs[0].sparkSession.readStream.schema(dfs[0].schema)
+        .option("maxFilesPerTrigger", "1")
+        .parquet(src)
+    )
+
+
+def write_partial(df: DataFrame, out_dir: str, batch_id: int) -> None:
+    """Overwrite the partial ``<out_dir>/batch=<batch_id>`` with ``df``."""
+    df.write.mode("overwrite").parquet(f"{out_dir}/batch={batch_id}")
+
+
+def partial_sink(out_dir: str, build):
+    """The ``foreachBatch`` fn of a partial store: each micro-batch
+    overwrites its own ``batch=<id>`` with ``build(batch_df)``, so a
+    replayed batch is idempotent."""
+
+    def fn(batch_df: DataFrame, batch_id: int) -> None:
+        write_partial(build(batch_df), out_dir, batch_id)
+
+    return fn
+
+
+def read_partials(spark: SparkSession, out_dir: str, schema) -> DataFrame:
+    """Every partial under ``out_dir``, read recursively as one relation
+    with the store's declared partial ``schema``: no Spark job starts."""
+    return (
+        spark.read.schema(schema)
+        .option("recursiveFileLookup", "true")
+        .parquet(out_dir)
+    )
+
+
+def latest_partial(out_dir: str, before: int | None = None) -> str | None:
+    """The path of the newest ``batch=<id>`` partial under ``out_dir`` with
+    ``id < before`` (any id when ``before`` is None), or None when there is
+    none. Replay-safe: a reprocessed batch finds the same predecessor it
+    found the first time."""
+    if not os.path.isdir(out_dir):
+        return None
+    ids = [
+        int(d.split("=", 1)[1])
+        for d in os.listdir(out_dir)
+        if d.startswith("batch=")
+    ]
+    ids = [i for i in ids if before is None or i < before]
+    return os.path.join(out_dir, f"batch={max(ids)}") if ids else None

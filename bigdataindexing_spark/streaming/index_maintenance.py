@@ -5,18 +5,15 @@ Spark-native replacement for the reference's RabbitMQ→Elasticsearch pipeline
 a ``foreachBatch`` sink that maintains the inverted-index tables
 incrementally as document micro-batches arrive.
 
-Exactly-once on plain Parquet (no Delta in this container) uses the
-*batchId-keyed partial directory* pattern:
-
-- each micro-batch writes its PARTIAL postings (token, df) to
-  ``<index_dir>/batch=<batchId>/`` with ``mode=overwrite`` — a replayed
-  batch (restart after failure) overwrites its own directory, so the result
-  is idempotent;
-- the serve-time view is merge-on-read: scan all partials and re-aggregate
-  ``groupBy(token).sum(df)``. At 100 TB this is the right trade: the write
-  path never rewrites existing index data (no read-modify-write
-  amplification), and the periodic compaction job (``compact``) folds
-  partials into one base when the partial count grows.
+The index is a batch-keyed partial store (:mod:`..streaming.core`): each
+micro-batch overwrites its PARTIAL postings ``(token, df)`` under
+``<index_dir>/batch=<batchId>/``, so a replayed batch is idempotent, and
+the serve-time view is merge-on-read, ``groupBy(token).sum(df)`` over every
+partial. The store stays plain Parquet partials rather than a table on the
+Delta log (:mod:`..sources.delta_log`) because ``df`` is additive: a batch
+only adds its own counts, so the write path never needs the read-modify-
+write a log's MERGE would do, and the periodic ``compact`` folds the
+partials into one base when their count grows.
 
 This makes stream-built index state ≡ batch-built state by construction,
 which is the declared ST1 check.
@@ -28,7 +25,15 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from bigdataindexing_spark.index.build import doc_terms
-from bigdataindexing_spark.streaming.core import run_foreach_batch, stream_table
+from bigdataindexing_spark.streaming.core import (
+    partial_sink,
+    read_partials,
+    run_foreach_batch,
+    stream_table,
+)
+
+# the declared schema of one partial: what _partial_postings produces
+POSTINGS_SCHEMA = "token STRING, df BIGINT"
 
 
 def _partial_postings(docs_batch: DataFrame) -> DataFrame:
@@ -42,21 +47,16 @@ def _partial_postings(docs_batch: DataFrame) -> DataFrame:
 
 def upsert_batch(index_dir: str):
     """foreachBatch function: idempotent partial write keyed by batchId."""
-
-    def fn(batch_df: DataFrame, batch_id: int) -> None:
-        (
-            _partial_postings(batch_df)
-            .write.mode("overwrite")
-            .parquet(f"{index_dir}/batch={batch_id}")
-        )
-
-    return fn
+    return partial_sink(index_dir, _partial_postings)
 
 
 def read_postings(spark: SparkSession, index_dir: str) -> DataFrame:
     """Merge-on-read view over the partial directories."""
-    partials = spark.read.option("recursiveFileLookup", "true").parquet(index_dir)
-    return partials.groupBy("token").agg(F.sum("df").alias("df"))
+    return (
+        read_partials(spark, index_dir, POSTINGS_SCHEMA)
+        .groupBy("token")
+        .agg(F.sum("df").alias("df"))
+    )
 
 
 def compact(spark: SparkSession, index_dir: str, out_dir: str) -> None:
@@ -71,24 +71,12 @@ def compact(spark: SparkSession, index_dir: str, out_dir: str) -> None:
 
 
 def streaming_index_build(
-    spark: SparkSession,
-    sf_dir: str,
-    index_dir: str,
-    max_files_per_trigger: int | None = None,
+    spark: SparkSession, sf_dir: str, index_dir: str
 ) -> DataFrame:
     """Stream the documents table through the incremental index maintenance
     pipeline, then return the merged postings view. The checkpoint lives
     under ``index_dir/_checkpoint`` (a hidden path the partial scan
     skips), so a later call processes only documents added since."""
     docs = stream_table(spark, sf_dir, "documents")
-    if max_files_per_trigger is not None:
-        # re-read with the trigger cap so the run exercises multi-batch paths
-        schema = spark.read.parquet(f"{sf_dir}/documents.parquet").schema
-        docs = (
-            spark.readStream.schema(schema)
-            .option("pathGlobFilter", "documents.parquet")
-            .option("maxFilesPerTrigger", str(max_files_per_trigger))
-            .parquet(sf_dir)
-        )
     run_foreach_batch(docs, upsert_batch(index_dir), f"{index_dir}/_checkpoint")
     return read_postings(spark, index_dir)

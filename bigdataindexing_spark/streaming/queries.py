@@ -13,16 +13,22 @@ deployment; the availableNow trigger is just the deterministic replay mode.
 
 from __future__ import annotations
 
-import tempfile
+import itertools
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from bigdataindexing_spark.registry import register
+from bigdataindexing_spark.sources.store_dirs import session_store_dir
 from bigdataindexing_spark.streaming.core import (
+    latest_partial,
+    partial_sink,
+    read_partials,
+    replay_stream,
     run_available_now,
     run_foreach_batch,
     stream_table,
+    write_partial,
 )
 from bigdataindexing_spark.streaming.index_maintenance import streaming_index_build
 
@@ -41,7 +47,7 @@ from bigdataindexing_spark.streaming.index_maintenance import streaming_index_bu
     "stream-built postings must equal the batch-built/scan formulation.",
 )
 def st1_stream_index_build(spark: SparkSession, sf_dir: str) -> DataFrame:
-    index_dir = tempfile.mkdtemp(prefix="stream_index_")
+    index_dir = session_store_dir("stream_index")
     postings = streaming_index_build(spark, sf_dir, index_dir)
     return postings.orderBy(F.col("df").desc(), "token").limit(10)
 
@@ -167,21 +173,12 @@ def q29_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     "session boundary, count, and start timestamp must match exactly).",
 )
 def st4_stream_session(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-
-    from bigdataindexing_spark.streaming.core import write_arrivals
     from bigdataindexing_spark.tables import table
 
     events = table(spark, sf_dir, "events").select("event_id", "ts", "user_id")
-    src = tempfile.mkdtemp(prefix="st4_src_")
-    os.makedirs(src, exist_ok=True)
-    write_arrivals(
-        [events.filter(F.col("event_id") % 3 == i) for i in range(3)], src
-    )
-    stream = (
-        spark.readStream.schema("event_id BIGINT, ts TIMESTAMP, user_id BIGINT")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
+    stream = replay_stream(
+        [events.filter(F.col("event_id") % 3 == i) for i in range(3)],
+        session_store_dir("st4_src"),
     )
     agg = stream.groupBy(F.session_window("ts", "30 minutes"), "user_id").agg(
         F.count(F.lit(1)).alias("cnt")
@@ -194,18 +191,30 @@ def st4_stream_session(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("user_id", "session_start")
 
 
+def dedup_events(events: DataFrame) -> DataFrame:
+    """ST6's operator: drop a repeated event_id that arrives within the
+    10-minute watermark delay of its first occurrence. An id's state row
+    is evicted once the watermark passes its first ts + 10 minutes, so the
+    state holds the ids inside the watermark, not every id the stream has
+    seen (``dropDuplicates`` on a key without the event-time column never
+    evicts)."""
+    return events.withWatermark("ts", "10 minutes").dropDuplicatesWithinWatermark(
+        ["event_id"]
+    )
+
+
 @register(
     "st6_stream_dedup",
     oracle="SELECT COUNT(DISTINCT event_id) AS cnt FROM events",
     tags=("streaming", "dedup"),
     bench=False,
-    doc="ST6: stateful streaming dedup — withWatermark + dropDuplicates on "
-    "event_id (state evicted past the watermark); the drained append-mode "
-    "output must contain exactly the distinct ids.",
+    doc="ST6: stateful streaming dedup — withWatermark + "
+    "dropDuplicatesWithinWatermark on event_id (an id's state evicted once "
+    "the watermark passes it); the drained append-mode output must contain "
+    "exactly the distinct ids.",
 )
 def st6_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    events = stream_table(spark, sf_dir, "events")
-    deduped = events.withWatermark("ts", "10 minutes").dropDuplicates(["event_id"])
+    deduped = dedup_events(stream_table(spark, sf_dir, "events"))
     result = run_available_now(deduped, output_mode="append")
     return result.agg(F.count(F.lit(1)).alias("cnt"))
 
@@ -233,24 +242,12 @@ def st6_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     "asserts every flag and that the replayed window is present.",
 )
 def st5_watermark_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-
-    from bigdataindexing_spark.streaming.core import write_arrivals
     from bigdataindexing_spark.tables import table
 
     events = table(spark, sf_dir, "events").select("event_id", "ts", "user_id")
     late = events.orderBy("ts", "event_id").limit(1)
     buffer = events.orderBy(F.desc("ts"), "event_id").limit(1)
-    src = tempfile.mkdtemp(prefix="st5_src_")
-    os.makedirs(src, exist_ok=True)
-    write_arrivals([events, buffer, late], src)
-
-    schema = "event_id BIGINT, ts TIMESTAMP, user_id BIGINT"
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-    )
+    stream = replay_stream([events, buffer, late], session_store_dir("st5_src"))
     agg = (
         stream.withWatermark("ts", "10 minutes")
         .groupBy(F.window("ts", "10 minutes"))
@@ -441,6 +438,10 @@ def st10_stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- ST12: streaming count-min-sketch maintenance -----------------------------
 
+# the declared schema of one partial: what cms_partial_counters produces
+CMS_PARTIAL_SCHEMA = "d INT, w BIGINT, cnt BIGINT"
+
+
 def cms_partial_counters(batch_df: DataFrame) -> DataFrame:
     """Per-batch PARTIAL CMS counters (d, w, cnt) — the additivity that
     makes the sketch streamable: batch partials sum into the corpus
@@ -466,23 +467,18 @@ def cms_upsert_batch(cms_dir: str):
     """foreachBatch sink: idempotent batchId-keyed partial write (the ST1
     exactly-once-on-Parquet pattern — a replayed batch overwrites its own
     directory)."""
-
-    def fn(batch_df: DataFrame, batch_id: int) -> None:
-        (
-            cms_partial_counters(batch_df)
-            .write.mode("overwrite")
-            .parquet(f"{cms_dir}/batch={batch_id}")
-        )
-
-    return fn
+    return partial_sink(cms_dir, cms_partial_counters)
 
 
 def read_cms(spark: SparkSession, cms_dir: str) -> DataFrame:
     """Merge-on-read view: counters are additive, so the serve-time
     sketch is SUM over partials — at most D×W rows however many batches
     contributed."""
-    partials = spark.read.option("recursiveFileLookup", "true").parquet(cms_dir)
-    return partials.groupBy("d", "w").agg(F.sum("cnt").alias("cnt"))
+    return (
+        read_partials(spark, cms_dir, CMS_PARTIAL_SCHEMA)
+        .groupBy("d", "w")
+        .agg(F.sum("cnt").alias("cnt"))
+    )
 
 
 def _st12_register() -> None:
@@ -518,7 +514,6 @@ FROM cnts CROSS JOIN ds GROUP BY 1, 2 ORDER BY d, w
         "in tests/test_sketches.py.",
     )
     def st12_stream_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
-        from bigdataindexing_spark.sources.store_dirs import session_store_dir
         from bigdataindexing_spark.tables import bounded_sort
 
         # per-invocation stream output (NOT a build-once store — each
@@ -564,23 +559,21 @@ def _scd2_batch_runs(batch_df: DataFrame) -> DataFrame:
     )
 
 
-def _latest_open_snapshot(spark: SparkSession, dim_dir: str, before: int):
-    """The open-interval snapshot of the newest committed batch < ``before``
-    (None when this is the first batch). Replay-safe: a reprocessed batch
-    reads the same predecessor snapshot it read the first time."""
-    import os
+# the declared schemas of the two partial stores under a dimension dir:
+# closed/batch=<id> holds the intervals batch <id> closed, open/batch=<id>
+# the open-interval snapshot after batch <id>
+SCD2_CLOSED_SCHEMA = (
+    "user_id BIGINT, state STRING, valid_from TIMESTAMP, valid_to TIMESTAMP, "
+    "n_events BIGINT"
+)
+SCD2_OPEN_SCHEMA = "user_id BIGINT, state STRING, valid_from TIMESTAMP, n_events BIGINT"
 
-    root = os.path.join(dim_dir, "open")
-    if not os.path.isdir(root):
-        return None
-    ids = sorted(
-        int(d.split("=", 1)[1])
-        for d in os.listdir(root)
-        if d.startswith("batch=") and int(d.split("=", 1)[1]) < before
-    )
-    if not ids:
-        return None
-    return spark.read.parquet(os.path.join(root, f"batch={ids[-1]}"))
+
+def _open_snapshot(spark: SparkSession, dim_dir: str, before: int | None = None):
+    """The open-interval snapshot of the newest committed batch < ``before``
+    (any batch when ``before`` is None; None when there is none yet)."""
+    path = latest_partial(f"{dim_dir}/open", before)
+    return None if path is None else read_partials(spark, path, SCD2_OPEN_SCHEMA)
 
 
 def scd2_upsert_batch(dim_dir: str):
@@ -604,12 +597,9 @@ def scd2_upsert_batch(dim_dir: str):
         runs = _scd2_batch_runs(
             batch_df.select("user_id", "ts", "event_id", "event_type")
         )
-        prev = _latest_open_snapshot(spark, dim_dir, batch_id)
+        prev = _open_snapshot(spark, dim_dir, batch_id)
         if prev is None:
-            prev = spark.createDataFrame(
-                [], "user_id long, state string, valid_from timestamp, "
-                "n_events long"
-            )
+            prev = spark.createDataFrame([], SCD2_OPEN_SCHEMA)
         first = runs.filter("is_first").select(
             "user_id",
             F.col("state").alias("f_state"),
@@ -659,12 +649,8 @@ def scd2_upsert_batch(dim_dir: str):
             .select("user_id", "state", "valid_from", "n_events")
             .unionByName(carry_open)
         )
-        closed.write.mode("overwrite").parquet(
-            f"{dim_dir}/closed/batch={batch_id}"
-        )
-        new_open.write.mode("overwrite").parquet(
-            f"{dim_dir}/open/batch={batch_id}"
-        )
+        write_partial(closed, f"{dim_dir}/closed", batch_id)
+        write_partial(new_open, f"{dim_dir}/open", batch_id)
 
     return fn
 
@@ -672,19 +658,10 @@ def scd2_upsert_batch(dim_dir: str):
 def read_scd2_dimension(spark: SparkSession, dim_dir: str) -> DataFrame:
     """Serve the stream-maintained dimension: all closed intervals (append-
     only, immutable) plus the latest open snapshot with valid_to NULL."""
-    import os
-
-    closed = spark.read.option("recursiveFileLookup", "true").parquet(
-        os.path.join(dim_dir, "closed")
+    closed = read_partials(spark, f"{dim_dir}/closed", SCD2_CLOSED_SCHEMA)
+    open_ = _open_snapshot(spark, dim_dir).withColumn(
+        "valid_to", F.lit(None).cast("timestamp")
     )
-    ids = sorted(
-        int(d.split("=", 1)[1])
-        for d in os.listdir(os.path.join(dim_dir, "open"))
-        if d.startswith("batch=")
-    )
-    open_ = spark.read.parquet(
-        os.path.join(dim_dir, "open", f"batch={ids[-1]}")
-    ).withColumn("valid_to", F.lit(None).cast("timestamp"))
     return closed.unionByName(
         open_.select("user_id", "state", "valid_from", "valid_to", "n_events")
     ).select(
@@ -721,13 +698,9 @@ def _st13_register() -> None:
         "each active user's LAST interval, never the corpus history.",
     )
     def st13_stream_scd2(spark: SparkSession, sf_dir: str) -> DataFrame:
-        import os
-
         from pyspark.sql import Window
 
         from bigdataindexing_spark.operators.behavioral import SCD2_COHORT
-        from bigdataindexing_spark.sources.store_dirs import session_store_dir
-        from bigdataindexing_spark.streaming.core import write_arrivals
         from bigdataindexing_spark.tables import bounded_sort, table
 
         ev = (
@@ -739,24 +712,11 @@ def _st13_register() -> None:
         # batch k+1's, the arrival order an in-order CDC feed guarantees
         tile = F.ntile(3).over(Window.orderBy("ts", "event_id"))
         chunks = ev.withColumn("tile", tile)
-        src = tempfile.mkdtemp(prefix="st13_src_")
-        os.makedirs(src, exist_ok=True)
-        write_arrivals(
-            [
-                chunks.filter(F.col("tile") == i).drop("tile")
-                for i in (1, 2, 3)
-            ],
-            src,
+        stream = replay_stream(
+            [chunks.filter(F.col("tile") == i).drop("tile") for i in (1, 2, 3)],
+            session_store_dir("st13_src"),
         )
         dim_dir = session_store_dir("stream_scd2")
-        stream = (
-            spark.readStream.schema(
-                "user_id BIGINT, ts TIMESTAMP, event_id BIGINT, "
-                "event_type STRING"
-            )
-            .option("maxFilesPerTrigger", "1")
-            .parquet(src)
-        )
         run_foreach_batch(stream, scd2_upsert_batch(dim_dir), f"{dim_dir}/_checkpoint")
         return bounded_sort(
             read_scd2_dimension(spark, dim_dir), "user_id", "valid_from",
@@ -768,6 +728,31 @@ _st13_register()
 
 
 # --- ST15: streaming quantile-sketch maintenance ------------------------------
+
+# the declared schema of one partial: what qh_partial_hist produces
+QH_PARTIAL_SCHEMA = "bin BIGINT, cnt BIGINT"
+
+
+def qh_partial_hist(batch_df: DataFrame) -> DataFrame:
+    """Per-batch PARTIAL fixed-grid histogram (bin, cnt) over n_chars;
+    counts are additive, so partials merge into the corpus histogram."""
+    from bigdataindexing_spark.operators.sketches import QH_W
+
+    return batch_df.groupBy(F.floor(F.col("n_chars") / QH_W).alias("bin")).agg(
+        F.count(F.lit(1)).alias("cnt")
+    )
+
+
+def _doc_arrivals(spark: SparkSession, sf_dir: str, src: str) -> DataFrame:
+    """The documents' (doc_id, n_chars) replayed from ``src`` as three
+    micro-batches split by doc_id % 3."""
+    from bigdataindexing_spark.tables import table
+
+    docs = table(spark, sf_dir, "documents").select("doc_id", "n_chars")
+    return replay_stream(
+        [docs.filter(F.col("doc_id") % 3 == i) for i in range(3)], src
+    )
+
 
 def _st15_register() -> None:
     from bigdataindexing_spark.operators.sketches import _QH_SERVE, QH_W
@@ -794,41 +779,15 @@ def _st15_register() -> None:
         "re-aggregation.",
     )
     def st15_stream_quantile(spark: SparkSession, sf_dir: str) -> DataFrame:
-        import os
+        from bigdataindexing_spark.tables import bounded_sort
 
-        from bigdataindexing_spark.sources.store_dirs import session_store_dir
-        from bigdataindexing_spark.streaming.core import write_arrivals
-        from bigdataindexing_spark.tables import bounded_sort, table
-
-        docs = table(spark, sf_dir, "documents").select("doc_id", "n_chars")
-        src = tempfile.mkdtemp(prefix="st15_src_")
-        os.makedirs(src, exist_ok=True)
-        write_arrivals(
-            [docs.filter(F.col("doc_id") % 3 == i) for i in range(3)], src
-        )
+        stream = _doc_arrivals(spark, sf_dir, session_store_dir("st15_src"))
         hist_dir = session_store_dir("stream_quantile")
-        stream = (
-            spark.readStream.schema("doc_id BIGINT, n_chars BIGINT")
-            .option("maxFilesPerTrigger", "1")
-            .parquet(src)
-        )
-
-        def fn(batch_df: DataFrame, batch_id: int) -> None:
-            (
-                batch_df.groupBy(
-                    F.floor(F.col("n_chars") / QH_W).alias("bin")
-                )
-                .agg(F.count(F.lit(1)).alias("cnt"))
-                .write.mode("overwrite")
-                .parquet(f"{hist_dir}/batch={batch_id}")
-            )
-
-        run_foreach_batch(stream, fn, f"{hist_dir}/_checkpoint")
-        partials = spark.read.option("recursiveFileLookup", "true").parquet(
-            hist_dir
+        run_foreach_batch(
+            stream, partial_sink(hist_dir, qh_partial_hist), f"{hist_dir}/_checkpoint"
         )
         view = f"bdi_st15_{abs(hash(hist_dir)) % 10**8}"
-        partials.createOrReplaceTempView(view)
+        read_partials(spark, hist_dir, QH_PARTIAL_SCHEMA).createOrReplaceTempView(view)
         out = spark.sql(
             _QH_SERVE.format(src=view, w=QH_W).rsplit("ORDER BY q", 1)[0]
         )
@@ -840,12 +799,32 @@ _st15_register()
 
 # --- ST16: streaming ADAPTIVE quantile-sketch maintenance ---------------------
 
+# the declared schema of one partial: what aq_partial_hist's build produces
+AQ_PARTIAL_SCHEMA = "bin BIGINT, blo BIGINT, bhi BIGINT, cnt BIGINT"
+_aq_view_seq = itertools.count()
+
+
+def aq_partial_hist(mn: int, span: int, lo: list, k: list, off: list):
+    """The per-batch build of the adaptive sketch: bin a micro-batch
+    against the FROZEN pass-1 layout into (bin, blo, bhi, cnt) partials,
+    the q126 pass-2 SQL."""
+    from bigdataindexing_spark.operators.sketches import _aq_pass2_sql
+
+    def build(batch_df: DataFrame) -> DataFrame:
+        view = f"bdi_st16_batch_{next(_aq_view_seq)}"
+        batch_df.withColumn("shard", F.lit(0)).createOrReplaceTempView(view)
+        return batch_df.sparkSession.sql(
+            _aq_pass2_sql(view, "shard", mn, span, lo, k, off)
+        ).drop("shard")
+
+    return build
+
+
 def _st16_register() -> None:
     from bigdataindexing_spark.operators.sketches import (
         _AQ_ORACLE_SRC,
         _AQ_SERVE,
         _aq_layout,
-        _aq_pass2_sql,
     )
 
     @register(
@@ -869,46 +848,18 @@ def _st16_register() -> None:
     def st16_stream_adaptive_quantile(
         spark: SparkSession, sf_dir: str
     ) -> DataFrame:
-        import os
-
-        from bigdataindexing_spark.sources.store_dirs import session_store_dir
-        from bigdataindexing_spark.streaming.core import write_arrivals
-        from bigdataindexing_spark.tables import bounded_sort, table
+        from bigdataindexing_spark.tables import bounded_sort
 
         _n, mn, span, lo, k, off = _aq_layout(spark, sf_dir)
-        docs = table(spark, sf_dir, "documents").select("doc_id", "n_chars")
-        src = tempfile.mkdtemp(prefix="st16_src_")
-        os.makedirs(src, exist_ok=True)
-        write_arrivals(
-            [docs.filter(F.col("doc_id") % 3 == i) for i in range(3)], src
-        )
+        stream = _doc_arrivals(spark, sf_dir, session_store_dir("st16_src"))
         hist_dir = session_store_dir("stream_adaptive_quantile")
-        stream = (
-            spark.readStream.schema("doc_id BIGINT, n_chars BIGINT")
-            .option("maxFilesPerTrigger", "1")
-            .parquet(src)
-        )
-
-        def fn(batch_df: DataFrame, batch_id: int) -> None:
-            view = f"bdi_st16_batch_{batch_id}"
-            batch_df.withColumn("shard", F.lit(0)).createOrReplaceTempView(
-                view
-            )
-            (
-                batch_df.sparkSession.sql(
-                    _aq_pass2_sql(view, "shard", mn, span, lo, k, off)
-                )
-                .drop("shard")
-                .write.mode("overwrite")
-                .parquet(f"{hist_dir}/batch={batch_id}")
-            )
-
-        run_foreach_batch(stream, fn, f"{hist_dir}/_checkpoint")
-        partials = spark.read.option("recursiveFileLookup", "true").parquet(
-            hist_dir
+        run_foreach_batch(
+            stream,
+            partial_sink(hist_dir, aq_partial_hist(mn, span, lo, k, off)),
+            f"{hist_dir}/_checkpoint",
         )
         view = f"bdi_st16_{abs(hash(hist_dir)) % 10**8}"
-        partials.createOrReplaceTempView(view)
+        read_partials(spark, hist_dir, AQ_PARTIAL_SCHEMA).createOrReplaceTempView(view)
         out = spark.sql(_AQ_SERVE.format(src=view).rsplit("ORDER BY q", 1)[0])
         return bounded_sort(out, "q")
 

@@ -166,10 +166,12 @@ def _ingest_path(sf_dir: str, name: str) -> str:
             if meta.num_row_groups >= n_files:
                 out = src  # already splittable — real-scale layout
             else:
-                import tempfile
+                from bigdataindexing_spark.sources.store_dirs import (
+                    session_store_dir,
+                )
 
                 tbl = pq.read_table(src)
-                out = tempfile.mkdtemp(prefix=f"bdi_ingest_{name}_")
+                out = session_store_dir("ingest_chunks")
                 rows = tbl.num_rows
                 step = max(1, -(-rows // n_files))
                 for i, lo in enumerate(range(0, rows, step)):

@@ -101,7 +101,7 @@ def test_stream_sink_exactly_once_under_replay(spark, sf_dir, tmp_path):
         _STREAM_DELTA_TABLE,
         delta_stream_sink_batch,
     )
-    from bigdataindexing_spark.streaming.core import run_foreach_batch
+    from bigdataindexing_spark.streaming.core import replay_stream, run_foreach_batch
 
     table_dir = _STREAM_DELTA_TABLE.dir(spark, sf_dir)
     commits_before = sorted(
@@ -117,13 +117,12 @@ def test_stream_sink_exactly_once_under_replay(spark, sf_dir, tmp_path):
         txns = [a["txn"] for a in actions if "txn" in a]
         assert len(txns) == 1 and txns[0]["appId"] == ST18_APP_ID
 
-    # replay: fresh checkpoint, same source -> all batches re-delivered
+    # replay: fresh checkpoint, the same three arrivals -> all batches
+    # re-delivered
     src = _STREAM_DELTA_TABLE.meta(spark, sf_dir)
-    docs_schema = read_snapshot(spark, table_dir).schema
-    stream = (
-        spark.readStream.schema(docs_schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
+    stream = replay_stream(
+        [spark.read.parquet(os.path.join(src, f"file_{i}.parquet")) for i in range(3)],
+        str(tmp_path / "src"),
     )
     run_foreach_batch(
         stream, delta_stream_sink_batch(table_dir, 0), str(tmp_path / "ckpt")

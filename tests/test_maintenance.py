@@ -454,7 +454,7 @@ def test_stream_cdc_apply_version_gated_exactly_once(spark, sf_dir, tmp_path):
     the log are byte-identical after the second drain (the Delta txn
     idempotence contract, through the gate st18 shares)."""
     from bigdataindexing_spark.registry import queries
-    from bigdataindexing_spark.streaming.core import run_foreach_batch
+    from bigdataindexing_spark.streaming.core import replay_stream, run_foreach_batch
 
     result1 = sorted(
         tuple(r)
@@ -471,13 +471,11 @@ def test_stream_cdc_apply_version_gated_exactly_once(spark, sf_dir, tmp_path):
     counts = [read_snapshot(spark, path, v).count() for v in versions]
     assert len(set(counts)) > 1  # deletes/inserts actually moved rows
     commits_before = [read_commit(path, v) for v in versions]
-    # full replay: fresh checkpoint re-fires batches 0..2 against the
-    # same layout; the version gate must skip every one
-    li = table(spark, sf_dir, "lineitem")
-    stream = (
-        spark.readStream.schema(li.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
+    # full replay: fresh checkpoint re-fires batches 0..2 (the same three
+    # arrivals) against the same layout; the version gate must skip every one
+    stream = replay_stream(
+        [spark.read.parquet(os.path.join(src, f"file_{i}.parquet")) for i in range(3)],
+        str(tmp_path / "src"),
     )
     run_foreach_batch(
         stream, maintenance.cdc_apply_batch(path, base), str(tmp_path / "ckpt")

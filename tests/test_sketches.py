@@ -117,16 +117,13 @@ def test_cms_stream_multibatch_additivity(spark, sf_dir, tmp_path):
     import os
 
     from bigdataindexing_spark.streaming import queries as sq
+    from bigdataindexing_spark.streaming.core import replay_stream
     from bigdataindexing_spark.tables import table
 
     docs = table(spark, sf_dir, "documents").select("doc_id", "text")
-    src = str(tmp_path / "chunks")
-    docs.repartition(3).write.parquet(src)
-    schema = spark.read.parquet(src).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
+    stream = replay_stream(
+        [docs.filter(F.col("doc_id") % 3 == i) for i in range(3)],
+        str(tmp_path / "chunks"),
     )
     cms_dir = str(tmp_path / "cms")
     sq.run_foreach_batch(

@@ -10,6 +10,7 @@ the session.
 
 from __future__ import annotations
 
+import ast
 import os
 import re
 import shutil
@@ -24,14 +25,23 @@ from bigdataindexing_spark.sources.store_dirs import STORES
 registry.all_specs()  # imports every module, so every store has registered
 
 # session_store_dir() call sites that are scratch space, not stores:
-# checkpoints and per-invocation outputs
+# checkpoints, per-invocation outputs, replay arrivals and re-chunked
+# table copies
 SCRATCH_KINDS = {
     "cc_checkpoint",
+    "ckpt",
+    "ingest_chunks",
     "json_ingest",
     "stream_cms",
+    "stream_index",
     "stream_scd2",
     "stream_quantile",
     "stream_adaptive_quantile",
+    "st4_src",
+    "st5_src",
+    "st13_src",
+    "st15_src",
+    "st16_src",
 }
 
 
@@ -75,6 +85,41 @@ def test_store_registry_covers_every_store_dir():
         names.update(re.findall(r'session_store_dir\("([^"]+)"\)', py.read_text()))
     assert names == SCRATCH_KINDS
     assert not SCRATCH_KINDS & set(STORES)
+
+
+def _mkdtemp_callers(tree: ast.AST) -> list:
+    """The innermost enclosing function name of each ``mkdtemp`` call."""
+    found = []
+
+    def visit(node, fn):
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            fn = node.name
+        if isinstance(node, ast.Call):
+            f = node.func
+            if (f.attr if isinstance(f, ast.Attribute) else getattr(f, "id", None)) == "mkdtemp":
+                found.append(fn)
+        for child in ast.iter_child_nodes(node):
+            visit(child, fn)
+
+    visit(tree, None)
+    return found
+
+
+def test_only_self_cleaning_helpers_make_temp_dirs():
+    """The package makes temp directories in two places only, and both
+    remove them: ``session_store_dir`` at process exit, and
+    ``maintenance._commit_files`` (its staging directory) before it
+    returns. Any other ``mkdtemp`` leaks one directory per call."""
+    src = Path(__file__).resolve().parent.parent / "bigdataindexing_spark"
+    callers = {
+        (py.relative_to(src).as_posix(), fn)
+        for py in src.rglob("*.py")
+        for fn in _mkdtemp_callers(ast.parse(py.read_text()))
+    }
+    assert callers == {
+        ("sources/store_dirs.py", "session_store_dir"),
+        ("sources/maintenance.py", "_commit_files"),
+    }
 
 
 def test_duplicate_store_kind_raises():

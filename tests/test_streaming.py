@@ -17,9 +17,9 @@ from pyspark.sql import functions as F
 
 from bigdataindexing_spark.index.build import postings as batch_postings
 from bigdataindexing_spark.streaming.core import (
+    replay_stream,
     run_available_now,
     run_foreach_batch,
-    stream_dir,
 )
 from bigdataindexing_spark.streaming.index_maintenance import (
     compact,
@@ -27,23 +27,6 @@ from bigdataindexing_spark.streaming.index_maintenance import (
     upsert_batch,
 )
 from bigdataindexing_spark.tables import table
-
-
-def _write_ordered_files(dfs, base_dir):
-    """Write each DataFrame as one file-source 'arrival'; mtimes force the
-    FileStreamSource to pick them up in order with maxFilesPerTrigger=1."""
-    paths = []
-    for i, df in enumerate(dfs):
-        sub = os.path.join(base_dir, f"arrival_{i}")
-        df.coalesce(1).write.mode("overwrite").parquet(sub)
-        for name in os.listdir(sub):
-            if name.endswith(".parquet"):
-                full = os.path.join(sub, name)
-                dst = os.path.join(base_dir, f"file_{i}.parquet")
-                os.rename(full, dst)
-                os.utime(dst, (1_000_000 + i * 1000, 1_000_000 + i * 1000))
-                paths.append(dst)
-    return paths
 
 
 def _ts(h, m):
@@ -55,16 +38,9 @@ def test_stream_index_equals_batch(spark, sf_dir, tmp_path):
     postings as one batch job over the identical data."""
     docs = table(spark, sf_dir, "documents").select("doc_id", "text")
     splits = docs.randomSplit([1.0, 1.0, 1.0], seed=42)
-    src = str(tmp_path / "ingest")
-    os.makedirs(src)
-    _write_ordered_files(splits, src)
+    stream = replay_stream(splits, str(tmp_path / "ingest"))
 
     index_dir = str(tmp_path / "index")
-    stream = (
-        spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-    )
     run_foreach_batch(stream, upsert_batch(index_dir), str(tmp_path / "ckpt"))
 
     streamed = {r["token"]: r["df"] for r in read_postings(spark, index_dir).collect()}
@@ -109,9 +85,7 @@ def test_crash_replay_exactly_once_index(spark, sf_dir, tmp_path):
 
     docs = table(spark, sf_dir, "documents").select("doc_id", "text")
     splits = docs.randomSplit([1.0, 1.0, 1.0], seed=42)
-    src = str(tmp_path / "ingest")
-    os.makedirs(src)
-    _write_ordered_files(splits, src)
+    stream = replay_stream(splits, str(tmp_path / "ingest"))
 
     index_dir = str(tmp_path / "index")
     ckpt = str(tmp_path / "ckpt")
@@ -129,25 +103,13 @@ def test_crash_replay_exactly_once_index(spark, sf_dir, tmp_path):
             raise RuntimeError("simulated executor loss mid-batch")
         real(batch_df, batch_id)
 
-    def run(fn):
-        q = (
-            spark.readStream.schema(docs.schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(src)
-            .writeStream.trigger(availableNow=True)
-            .foreachBatch(fn)
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
-        q.awaitTermination()
-
     with pytest.raises(Exception, match="simulated executor loss"):
-        run(crashing_fn)
+        run_foreach_batch(stream, crashing_fn, ckpt)
     assert os.path.exists(crash_marker)  # the partial write happened
 
     # restart on the same checkpoint: batch 1 was never committed, so it
     # replays; its keyed overwrite replaces the partial directory
-    run(crashing_fn)
+    run_foreach_batch(stream, crashing_fn, ckpt)
 
     streamed = {
         r["token"]: r["df"] for r in read_postings(spark, index_dir).collect()
@@ -180,15 +142,7 @@ def test_watermark_drops_late_rows(spark, tmp_path):
          Row(event_id=4, ts=_ts(3, 0), user_id=1)],
         schema,
     )
-    src = str(tmp_path / "src")
-    os.makedirs(src)
-    _write_ordered_files([batch1, batch2, batch3], src)
-
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-    )
+    stream = replay_stream([batch1, batch2, batch3], str(tmp_path / "src"))
     agg = (
         stream.withWatermark("ts", "10 minutes")
         .groupBy(F.window("ts", "10 minutes"))
@@ -240,15 +194,7 @@ def test_stateful_dedup_across_batches(spark, tmp_path):
          Row(event_id=3, ts=_ts(0, 4), user_id=1)],
         schema,
     )
-    src = str(tmp_path / "src")
-    os.makedirs(src)
-    _write_ordered_files([batch1, batch2], src)
-
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-    )
+    stream = replay_stream([batch1, batch2], str(tmp_path / "src"))
     deduped = stream.withWatermark("ts", "1 hour").dropDuplicates(["event_id"])
     result = run_available_now(deduped, output_mode="append")
     ids = sorted(r["event_id"] for r in result.collect())
@@ -270,15 +216,7 @@ def test_stateful_sessionize_state_crosses_batches(spark, tmp_path):
     batch2 = spark.createDataFrame(
         [Row(user_id=1, ts=_ts(0, 20)), Row(user_id=1, ts=_ts(2, 0))], schema
     )
-    src = str(tmp_path / "src")
-    os.makedirs(src)
-    _write_ordered_files([batch1, batch2], src)
-
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-    )
+    stream = replay_stream([batch1, batch2], str(tmp_path / "src"))
     result = run_available_now(sessionize(stream), output_mode="append")
     rows = [(r["user_id"], r["session_start"], r["cnt"]) for r in result.collect()]
     # exactly one closed session: started 00:00, 3 events; the 02:00
@@ -304,15 +242,7 @@ def test_stream_lsh_dedup_state_crosses_batches(spark, sf_dir, tmp_path):
     splits = [
         docs.filter(F.col("doc_id") % 3 == i) for i in range(3)
     ]
-    src = str(tmp_path / "docs_src")
-    os.makedirs(src)
-    _write_ordered_files(splits, src)
-
-    stream = (
-        spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-    )
+    stream = replay_stream(splits, str(tmp_path / "docs_src"))
     pairs = run_available_now(
         stream_lsh_candidates(stream), output_mode="append"
     ).distinct()
@@ -445,7 +375,6 @@ def test_st13_scd2_merge_paths_and_replay(spark, tmp_path):
     batchId-keyed writes make reprocessing idempotent."""
     import datetime as dt
 
-    from bigdataindexing_spark.streaming.core import write_arrivals
     from bigdataindexing_spark.streaming.queries import (
         read_scd2_dimension,
         scd2_upsert_batch,
@@ -465,18 +394,10 @@ def test_st13_scd2_merge_paths_and_replay(spark, tmp_path):
         ),
         spark.createDataFrame([(1, t(4), 14, "b")], schema),
     ]
-    src = str(tmp_path / "src")
-    write_arrivals(arrivals, src)
+    stream = replay_stream(arrivals, str(tmp_path / "src"))
     dim_dir = str(tmp_path / "dim")
 
     def drain(ckpt: str):
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(src)
-        )
-        from bigdataindexing_spark.streaming.core import run_foreach_batch
-
         run_foreach_batch(
             stream, scd2_upsert_batch(dim_dir), str(tmp_path / ckpt)
         )
@@ -496,3 +417,142 @@ def test_st13_scd2_merge_paths_and_replay(spark, tmp_path):
     assert first == expected
     # full replay (fresh checkpoint) into the same store: identical end state
     assert drain("ckpt_replay") == expected
+
+
+def _job_ids(spark) -> set[int]:
+    return set(spark.sparkContext.statusTracker().getJobIdsForGroup(None))
+
+
+def test_opening_a_partial_store_starts_no_spark_job(spark, tmp_path):
+    """The index and CMS partial stores are read with their declared
+    partial schemas, so opening either one infers nothing from Parquet
+    footers: no Spark job starts until the view is queried."""
+    from bigdataindexing_spark.streaming.queries import cms_upsert_batch, read_cms
+
+    docs = spark.createDataFrame(
+        [(1, "a b"), (2, "b c")], "doc_id BIGINT, text STRING"
+    )
+    index_dir, cms_dir = str(tmp_path / "index"), str(tmp_path / "cms")
+    upsert_batch(index_dir)(docs, 0)
+    cms_upsert_batch(cms_dir)(docs, 0)
+    before = _job_ids(spark)
+    postings = read_postings(spark, index_dir)
+    cms = read_cms(spark, cms_dir)
+    opened = _job_ids(spark)
+    assert opened == before
+    # the counts' jobs are seen, so the tracker does see this thread's jobs
+    assert sorted(map(tuple, postings.collect())) == [("a", 1), ("b", 2), ("c", 1)]
+    assert cms.count() > 0
+    assert _job_ids(spark) > opened
+
+
+def test_declared_partial_schemas_match_their_builders(spark, sf_dir, tmp_path):
+    """Each partial store's declared schema is exactly what its builder
+    writes: same column names and types, so the typed readers cannot
+    drift from the partials on disk."""
+    from bigdataindexing_spark.operators.sketches import _aq_layout
+    from bigdataindexing_spark.streaming import queries as sq
+    from bigdataindexing_spark.streaming.index_maintenance import (
+        POSTINGS_SCHEMA,
+        _partial_postings,
+    )
+
+    def fields(schema):
+        return [(f.name, f.dataType) for f in schema.fields]
+
+    def declared(ddl):
+        return fields(spark.createDataFrame([], ddl).schema)
+
+    docs = table(spark, sf_dir, "documents").limit(20)
+    _n, mn, span, lo, k, off = _aq_layout(spark, sf_dir)
+    built = {
+        "postings": (_partial_postings(docs), POSTINGS_SCHEMA),
+        "cms": (sq.cms_partial_counters(docs), sq.CMS_PARTIAL_SCHEMA),
+        "qh": (sq.qh_partial_hist(docs), sq.QH_PARTIAL_SCHEMA),
+        "aq": (sq.aq_partial_hist(mn, span, lo, k, off)(docs), sq.AQ_PARTIAL_SCHEMA),
+    }
+    for name, (df, ddl) in built.items():
+        assert fields(df.schema) == declared(ddl), name
+
+    # SCD2 writes two partials per batch: compare what two batches wrote
+    schema = "user_id BIGINT, ts TIMESTAMP, event_id BIGINT, event_type STRING"
+    dim_dir = str(tmp_path / "dim")
+    fn = sq.scd2_upsert_batch(dim_dir)
+    fn(spark.createDataFrame([(1, _ts(0, 0), 1, "a")], schema), 0)
+    fn(spark.createDataFrame([(1, _ts(0, 1), 2, "b")], schema), 1)
+    for sub, ddl in (("closed", sq.SCD2_CLOSED_SCHEMA), ("open", sq.SCD2_OPEN_SCHEMA)):
+        written = spark.read.parquet(f"{dim_dir}/{sub}/batch=1").schema
+        assert fields(written) == declared(ddl), sub
+
+
+def _drain_to_memory(sdf, name: str, ckpt: str):
+    """Drain ``sdf`` (availableNow, append) into the memory table ``name``
+    and return the finished query, whose progress reports its state."""
+    q = (
+        sdf.writeStream.trigger(availableNow=True)
+        .format("memory")
+        .queryName(name)
+        .outputMode("append")
+        .option("checkpointLocation", ckpt)
+        .start()
+    )
+    q.awaitTermination()
+    return q
+
+
+def test_stream_dedup_state_bounded_by_watermark(spark, tmp_path):
+    """ST6's dedup keeps state only for the ids inside the watermark.
+    Six micro-batches an hour of event time apart each bring 20 new ids
+    (and one repeat of an id from the same batch); after the last batch
+    the state holds at most the ids whose first ts + 10 minutes is past
+    the watermark that batch evicts against (max ts before it − 10
+    minutes), not every id the stream has seen."""
+    from bigdataindexing_spark.streaming.queries import dedup_events
+
+    n_batches, per_batch, delay = 6, 20, dt.timedelta(minutes=10)
+    rows = [
+        [(b * per_batch + i, _ts(b, i % 10), 1) for i in range(per_batch)]
+        + [(b * per_batch, _ts(b, 9), 1)]
+        for b in range(n_batches)
+    ]
+    schema = "event_id BIGINT, ts TIMESTAMP, user_id BIGINT"
+    stream = replay_stream(
+        [spark.createDataFrame(r, schema) for r in rows], str(tmp_path / "src")
+    )
+    q = _drain_to_memory(dedup_events(stream), "dedup_state_bound", str(tmp_path / "ckpt"))
+
+    out = sorted(r["event_id"] for r in spark.table("dedup_state_bound").collect())
+    assert out == list(range(n_batches * per_batch))
+    watermark = max(ts for r in rows[:-1] for _, ts, _ in r) - delay
+    inside = {i for r in rows for i, ts, _ in r if ts + delay > watermark}
+    state = q.lastProgress["stateOperators"][0]["numRowsTotal"]
+    assert state <= len(inside) < n_batches * per_batch
+
+
+def test_sessionize_state_bounded_by_users(spark, tmp_path):
+    """``stateful.sessionize`` keeps one state row per user: across six
+    micro-batches of advancing event time, in which sessions close and
+    reopen, the state never holds more rows than there are users."""
+    from bigdataindexing_spark.streaming.stateful import sessionize
+
+    users, n_batches = 3, 6
+    schema = "user_id BIGINT, ts TIMESTAMP"
+    arrivals = [
+        spark.createDataFrame(
+            [(u, _ts(b, m)) for u in range(users) for m in (0, 10)], schema
+        )
+        for b in range(n_batches)
+    ]
+    stream = replay_stream(arrivals, str(tmp_path / "src"))
+    q = _drain_to_memory(sessionize(stream), "session_state_bound", str(tmp_path / "ckpt"))
+
+    # every batch but the last closes each user's previous session
+    closed = spark.table("session_state_bound").collect()
+    assert len(closed) == users * (n_batches - 1)
+    states = [
+        p["stateOperators"][0]["numRowsTotal"]
+        for p in q.recentProgress
+        if p["stateOperators"]
+    ]
+    assert len(states) >= n_batches
+    assert 0 < max(states) <= users
