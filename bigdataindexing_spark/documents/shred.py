@@ -6,13 +6,18 @@ object plus string-encoded relation keys, we produce one DataFrame per
 objectType plus an ``edges`` relation — the adjacency list as a real table
 (columns and types in :data:`TABLE_SCHEMAS`, the store's one format).
 
-Array order (the reference's ``Arrays.toString`` rendering,
-PlanService.java:66) is carried as the explicit ``ord`` column from
-``posexplode`` so reassembly is deterministic through any shuffle.
+Each table is one ``selectExpr`` over the doc column, its SQL text built
+once at import: ``plans`` is a plain projection, and each other table is
+one ``inline`` generator over an array built per document (its cost
+shares and edges ``concat`` the plan-level object onto a ``transform`` of
+linkedPlanServices). So every table reads each document once, with no
+union and no shuffle, and a call costs five plans, not hundreds of py4j
+column calls.
 
-At scale: shredding is a handful of narrow projections + one posexplode —
-no shuffle at all until the per-type writes; each output table can be
-written partitioned/bucketed by object_id.
+Array order (the reference's ``Arrays.toString`` rendering,
+PlanService.java:66) is carried as the explicit ``ord`` column, the
+element's 0-based array position, so reassembly is deterministic through
+any shuffle.
 """
 
 from __future__ import annotations
@@ -63,107 +68,70 @@ TABLE_SCHEMAS: dict[str, T.StructType] = {
 }
 
 
-def _cost_share_rows(col: F.Column) -> list[F.Column]:
-    return [
-        col.getField("objectId").alias("object_id"),
-        col.getField("_org").alias("org"),
-        col.getField("deductible").alias("deductible"),
-        col.getField("copay").alias("copay"),
-    ]
+# linkedPlanServices elements ``ps`` with their 0-based array position ``i``
+# (the ordinal posexplode gives); a NULL or absent array has none
+_PS = "transform(coalesce(d.linkedPlanServices, array()), (ps, i) -> {})"
+_COST_SHARE = (
+    "named_struct('object_id', {0}.objectId, 'org', {0}._org, "
+    "'deductible', {0}.deductible, 'copay', {0}.copay)"
+)
+_EDGE = (
+    "named_struct('parent_type', '{}', 'parent_id', {}, 'field', '{}', 'ord', {}, "
+    "'child_type', '{}', 'child_id', {})"
+)
+# a row per struct of the array whose key field is not NULL: a sparse patch
+# may omit a child object, and a NULL key is "field not present", not a row
+_ROWS = "inline(filter({}, r -> r.{} IS NOT NULL))"
+
+# each table's selectExpr over the doc struct ``d``
+_TABLE_SQL = {
+    "plans": ["d.objectId AS object_id", "d._org AS org",
+              "d.planType AS plan_type", "d.creationDate AS creation_date"],
+    "plan_services": [
+        _ROWS.format(
+            _PS.format("named_struct('object_id', ps.objectId, 'org', ps._org)"), "object_id"
+        )
+    ],
+    "services": [
+        _ROWS.format(
+            _PS.format(
+                "named_struct('object_id', ps.linkedService.objectId, "
+                "'org', ps.linkedService._org, 'name', ps.linkedService.name)"
+            ),
+            "object_id",
+        )
+    ],
+    "member_cost_shares": [
+        _ROWS.format(
+            f"concat(array({_COST_SHARE.format('d.planCostShares')}), "
+            f"{_PS.format(_COST_SHARE.format('ps.planserviceCostShares'))})",
+            "object_id",
+        )
+    ],
+    "edges": [
+        _ROWS.format(
+            "concat(array({}), flatten({}))".format(
+                _EDGE.format("plan", "d.objectId", "planCostShares", 0,
+                             "membercostshare", "d.planCostShares.objectId"),
+                _PS.format("array({}, {}, {})".format(
+                    _EDGE.format("plan", "d.objectId", "linkedPlanServices", "i",
+                                 "planservice", "ps.objectId"),
+                    _EDGE.format("planservice", "ps.objectId", "linkedService", 0,
+                                 "service", "ps.linkedService.objectId"),
+                    _EDGE.format("planservice", "ps.objectId", "planserviceCostShares", 0,
+                                 "membercostshare", "ps.planserviceCostShares.objectId"),
+                )),
+            ),
+            "child_id",
+        )
+    ],
+}
 
 
 def shred(docs: DataFrame, doc_col: str = "doc") -> ShreddedTables:
     """Normalize parsed plan docs (struct column) into per-type tables."""
-    d = F.col(doc_col)
-    plans = docs.select(
-        d.getField("objectId").alias("object_id"),
-        d.getField("_org").alias("org"),
-        d.getField("planType").alias("plan_type"),
-        d.getField("creationDate").alias("creation_date"),
-    )
-
-    pcs = docs.select(d.getField("planCostShares").alias("cs"))
-    # linkedPlanServices elements with their ordinal
-    lps = docs.select(
-        d.getField("objectId").alias("plan_id"),
-        F.posexplode_outer(d.getField("linkedPlanServices")).alias("ord", "ps"),
-    ).filter(F.col("ps").isNotNull())
-
-    plan_services = lps.select(
-        F.col("ps").getField("objectId").alias("object_id"),
-        F.col("ps").getField("_org").alias("org"),
-    ).filter(F.col("object_id").isNotNull())
-    services = lps.select(
-        F.col("ps").getField("linkedService").getField("objectId").alias("object_id"),
-        F.col("ps").getField("linkedService").getField("_org").alias("org"),
-        F.col("ps").getField("linkedService").getField("name").alias("name"),
-    ).filter(F.col("object_id").isNotNull())
-    pscs = lps.select(F.col("ps").getField("planserviceCostShares").alias("cs"))
-    member_cost_shares = (
-        pcs.select(*_cost_share_rows(F.col("cs")))
-        .unionByName(pscs.select(*_cost_share_rows(F.col("cs"))))
-        .filter(F.col("object_id").isNotNull())
-    )
-
-    def edge(parent_type, parent_id, field, ord_col, child_type, child_id):
-        return [
-            F.lit(parent_type).alias("parent_type"),
-            parent_id.alias("parent_id"),
-            F.lit(field).alias("field"),
-            ord_col.alias("ord"),
-            F.lit(child_type).alias("child_type"),
-            child_id.alias("child_id"),
-        ]
-
-    e1 = docs.select(
-        *edge(
-            "plan",
-            d.getField("objectId"),
-            "planCostShares",
-            F.lit(0),
-            "membercostshare",
-            d.getField("planCostShares").getField("objectId"),
-        )
-    )
-    e2 = lps.select(
-        *edge(
-            "plan",
-            F.col("plan_id"),
-            "linkedPlanServices",
-            F.col("ord"),
-            "planservice",
-            F.col("ps").getField("objectId"),
-        )
-    )
-    e3 = lps.select(
-        *edge(
-            "planservice",
-            F.col("ps").getField("objectId"),
-            "linkedService",
-            F.lit(0),
-            "service",
-            F.col("ps").getField("linkedService").getField("objectId"),
-        )
-    )
-    e4 = lps.select(
-        *edge(
-            "planservice",
-            F.col("ps").getField("objectId"),
-            "planserviceCostShares",
-            F.lit(0),
-            "membercostshare",
-            F.col("ps").getField("planserviceCostShares").getField("objectId"),
-        )
-    )
-    # sparse patch documents may omit child objects entirely — a null
-    # child_id is "field not present", not an edge
-    edges = (
-        e1.unionByName(e2)
-        .unionByName(e3)
-        .unionByName(e4)
-        .filter(F.col("child_id").isNotNull())
-    )
-    return ShreddedTables(plans, plan_services, services, member_cost_shares, edges)
+    d = docs.select(F.col(doc_col).alias("d"))
+    return ShreddedTables(**{name: d.selectExpr(*sql) for name, sql in _TABLE_SQL.items()})
 
 
 def planned_bytes(df: DataFrame) -> int:

@@ -3,9 +3,11 @@
 Spark-native equivalent of the reference's everit JSON-Schema check on
 every POST/PUT/PATCH (PlanController.java:88–95, 170–176, 232–238): shape
 and types come from ``from_json`` against the declared StructType; draft-07
-``required`` sets become null-check predicates. Invalid rows are not
-dropped (the reference throws HTTP 400) — they are routed to a quarantine
-DataFrame with a reason column, which is the batch/stream analogue.
+``required`` sets become one SQL ``reason`` expression, built once at
+import. Invalid rows are not dropped (the reference throws HTTP 400) —
+they are routed to a quarantine DataFrame with a reason column, which is
+the batch/stream analogue. :func:`validate` is :func:`annotate` (parse and
+check) then :func:`split`; a caller writing both sides persists between.
 """
 
 from __future__ import annotations
@@ -20,23 +22,36 @@ from bigdataindexing_spark.documents.schema import (
 )
 
 
-def _nested(doc: F.Column, path: str) -> F.Column:
-    c = doc
-    for seg in path.split("."):
-        c = c.getField(seg)
-    return c
+# Every violated required-field path of the parsed ``doc``, in
+# REQUIRED_PATHS then REQUIRED_ELEMENT_PATHS order (an element path is
+# violated when any linkedPlanServices element lacks it), or
+# ``malformed_json`` when the body did not parse.
+_REASON_SQL = (
+    "CASE WHEN doc IS NULL THEN array('malformed_json') ELSE array_compact(array("
+    + ", ".join(
+        [f"CASE WHEN doc.{p} IS NULL THEN '{p}' END" for p in REQUIRED_PATHS]
+        + [
+            f"CASE WHEN exists(coalesce(doc.linkedPlanServices, array()), x -> x.{p} IS NULL)"
+            f" THEN 'linkedPlanServices[].{p}' END"
+            for p in REQUIRED_ELEMENT_PATHS
+        ]
+    )
+    + ")) END"
+)
 
 
-def _missing_required(doc: F.Column) -> F.Column:
-    """Array of violated required-field paths for a parsed doc."""
-    # for each required path, emit the path string when the leaf is null
-    parts = [F.when(_nested(doc, p).isNull(), F.lit(p)) for p in REQUIRED_PATHS]
-    # per-element requireds inside linkedPlanServices
-    arr = F.coalesce(doc.getField("linkedPlanServices"), F.array())
-    for p in REQUIRED_ELEMENT_PATHS:
-        any_bad = F.exists(arr, lambda x: _nested(x, p).isNull())
-        parts.append(F.when(any_bad, F.lit(f"linkedPlanServices[].{p}")))
-    return F.array_compact(F.array(*parts))
+def annotate(raw: DataFrame, value_col: str = "value") -> DataFrame:
+    """``raw`` with its body parsed to the typed ``doc`` struct column and
+    the ``reason`` array of violations (empty for a valid body)."""
+    parsed = raw.withColumn("doc", F.from_json(F.col(value_col), PLAN_SCHEMA))
+    return parsed.withColumn("reason", F.expr(_REASON_SQL))
+
+
+def split(annotated: DataFrame, value_col: str = "value") -> tuple[DataFrame, DataFrame]:
+    """(valid, quarantine) rows of an :func:`annotate` result."""
+    valid = annotated.filter("size(reason) = 0").select(value_col, "doc")
+    quarantine = annotated.filter("size(reason) > 0").select(value_col, "reason")
+    return valid, quarantine
 
 
 def validate(raw: DataFrame, value_col: str = "value") -> tuple[DataFrame, DataFrame]:
@@ -48,14 +63,4 @@ def validate(raw: DataFrame, value_col: str = "value") -> tuple[DataFrame, DataF
     routes land in quarantine, mirroring BadRequestException at
     PlanController.java:94.
     """
-    parsed = raw.withColumn("doc", F.from_json(F.col(value_col), PLAN_SCHEMA))
-    missing = _missing_required(F.col("doc"))
-    annotated = parsed.withColumn(
-        "reason",
-        F.when(F.col("doc").isNull(), F.array(F.lit("malformed_json"))).otherwise(
-            missing
-        ),
-    )
-    valid = annotated.filter(F.size("reason") == 0).select(value_col, "doc")
-    quarantine = annotated.filter(F.size("reason") > 0).select(value_col, "reason")
-    return valid, quarantine
+    return split(annotate(raw, value_col), value_col)

@@ -5,12 +5,14 @@ Spark-native equivalent of the reference's write path
 accepts one HTTP body at a time, validates it, shreds it into Redis and
 enqueues an index action, we ingest a *directory* of JSON-lines files —
 batch for backfill, Structured Streaming for continuous ingest — through
-one validate → shred → write step (:func:`ingest`), set-oriented end to end.
+one validate → shred → write step (:func:`ingest`), set-oriented end to end,
+that parses each body once (persist → six writes → unpersist).
 
 The store has one layout, read by one reader (:func:`read_store`):
 ``<out_dir>/<table>.parquet`` per table and ``<out_dir>/quarantine.parquet``.
 A batch ingest writes those directories; each stream micro-batch writes
-the partial ``<table>.parquet/batch=<batchId>`` beneath them, an overwrite
+the partial ``<table>.parquet/batch=<batchId>`` beneath them
+(``streaming.core.partial_path``), an overwrite
 keyed by batch id (idempotent under replay, the same pattern as the index
 maintenance sink), so a restart never double-writes documents.
 """
@@ -20,12 +22,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from bigdataindexing_spark.documents.shred import TABLE_NAMES  # noqa: F401  (re-exported)
-from bigdataindexing_spark.documents.shred import ShreddedTables, shred, table_path, write_sized
+from bigdataindexing_spark.documents.shred import ShreddedTables, planned_bytes, shred
+from bigdataindexing_spark.documents.shred import table_path, write_sized
 # the store's one reader, for every store either ingest path writes
 from bigdataindexing_spark.documents.shred import read_tables as read_store  # noqa: F401
-from bigdataindexing_spark.documents.validate import validate
+from bigdataindexing_spark.documents.validate import annotate, split
 from bigdataindexing_spark.registry import register
-from bigdataindexing_spark.streaming.core import run_foreach_batch
+from bigdataindexing_spark.streaming.core import partial_path, run_foreach_batch
 
 
 def read_documents(spark: SparkSession, path: str) -> DataFrame:
@@ -40,14 +43,27 @@ def ingest(
     each table, and the quarantine with its violation reasons (the batch
     analogue of the reference's HTTP 400), overwrites
     ``<out_dir>/<name>.parquet``, or its ``batch=<batch_id>`` partial when
-    a micro-batch id is given. Every write is sized
-    (``shred.write_sized``). Returns the shredded tables and the
-    quarantine DataFrame."""
-    valid, quarantine = validate(raw)
+    a micro-batch id is given, in sized files (``shred.write_sized``).
+    Each body is parsed once: the validated batch is persisted, the six
+    writes read it, and it is unpersisted however they end (the Structured
+    Streaming idiom for a ``foreachBatch`` writing several sinks). Returns
+    the shredded tables and the quarantine DataFrame."""
+    annotated = annotate(raw)
+    valid, quarantine = split(annotated)
     tables = shred(valid)
-    part = "" if batch_id is None else f"/batch={batch_id}"
-    for name, df in {**tables.as_dict(), "quarantine": quarantine}.items():
-        write_sized(df, table_path(out_dir, name) + part)
+    outputs = {**tables.as_dict(), "quarantine": quarantine}
+    # planned before the persist: a returned frame used later never rebuilds
+    # (and keeps) the released cache, and write_sized sizes each write by this
+    # estimate of the input; each write's own plan, made inside, reads the cache
+    for df in outputs.values():
+        planned_bytes(df)
+    annotated.persist()
+    try:
+        for name, df in outputs.items():
+            path = table_path(out_dir, name)
+            write_sized(df, path if batch_id is None else partial_path(path, batch_id))
+    finally:
+        annotated.unpersist()
     return tables, quarantine
 
 

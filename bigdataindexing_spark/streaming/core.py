@@ -143,9 +143,15 @@ def replay_stream(dfs, src: str) -> DataFrame:
     )
 
 
+def partial_path(out_dir: str, batch_id: int) -> str:
+    """``<out_dir>/batch=<batch_id>``: the one spelling of a micro-batch's
+    partial, for every partial writer and :func:`latest_partial`."""
+    return f"{out_dir}/batch={batch_id}"
+
+
 def write_partial(df: DataFrame, out_dir: str, batch_id: int) -> None:
     """Overwrite the partial ``<out_dir>/batch=<batch_id>`` with ``df``."""
-    df.write.mode("overwrite").parquet(f"{out_dir}/batch={batch_id}")
+    df.write.mode("overwrite").parquet(partial_path(out_dir, batch_id))
 
 
 def partial_sink(out_dir: str, build):
@@ -182,4 +188,4 @@ def latest_partial(out_dir: str, before: int | None = None) -> str | None:
         if d.startswith("batch=")
     ]
     ids = [i for i in ids if before is None or i < before]
-    return os.path.join(out_dir, f"batch={max(ids)}") if ids else None
+    return partial_path(out_dir, max(ids)) if ids else None

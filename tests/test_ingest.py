@@ -4,8 +4,12 @@ streaming ingest ≡ batch ingest over identical input."""
 from __future__ import annotations
 
 import os
+import re
+
+import pytest
 
 from bigdataindexing_spark.documents.schema import raw_plan_json
+from bigdataindexing_spark.sources import json_ingest
 from bigdataindexing_spark.sources.json_ingest import (
     TABLE_NAMES,
     ingest_batch,
@@ -110,8 +114,11 @@ def test_stream_ingest_replay_is_idempotent(spark, tmp_path):
     assert once == twice
 
 
-def _job_ids(spark) -> set[int]:
-    return set(spark.sparkContext.statusTracker().getJobIdsForGroup(None))
+def _newest_job(spark) -> int:
+    """The newest job id the status tracker holds. Ids only grow, while the
+    tracker drops the oldest jobs past ``spark.ui.retainedJobs``, so the
+    newest id, not the retained set, shows whether a job started."""
+    return max(spark.sparkContext.statusTracker().getJobIdsForGroup(None), default=-1)
 
 
 def test_reading_a_store_starts_no_spark_job(spark, tmp_path):
@@ -122,14 +129,14 @@ def test_reading_a_store_starts_no_spark_job(spark, tmp_path):
     out_dir = str(tmp_path / "store")
     ingest_batch(spark, in_dir, out_dir)
     ingest_stream(spark, in_dir, out_dir)
-    before = _job_ids(spark)
+    before = _newest_job(spark)
     store = read_store(spark, out_dir)
-    opened = _job_ids(spark)
+    opened = _newest_job(spark)
     assert opened == before
     # the batch files and the batch=0 partials are one table, and the
     # count's job is seen, so the tracker does see this thread's jobs
     assert store.plans.count() == 10
-    assert _job_ids(spark) > opened
+    assert _newest_job(spark) > opened
 
 
 def test_table_schemas_match_shred(spark):
@@ -143,6 +150,74 @@ def test_table_schemas_match_shred(spark):
     for name, df in tables.items():
         got = [(f.name, f.dataType) for f in df.schema.fields]
         assert got == [(f.name, f.dataType) for f in TABLE_SCHEMAS[name].fields], name
+
+
+def test_shred_tables_read_each_document_once(spark, tmp_path):
+    """Each shredded table is one projection of the parsed documents: its
+    optimized plan has no Union and at most one Generate, so the input is
+    scanned and parsed once per table."""
+    from bigdataindexing_spark.documents.shred import shred
+    from bigdataindexing_spark.documents.validate import validate
+
+    valid, _ = validate(spark.read.text(_write_input(spark, tmp_path, n=5)))
+    for name, df in shred(valid).as_dict().items():
+        plan = df._jdf.queryExecution().optimizedPlan().toString()
+        assert "Union" not in plan, (name, plan)
+        assert len(re.findall(r"^[\s:|+-]*Generate ", plan, re.M)) <= 1, (name, plan)
+
+
+def test_every_ingest_write_reads_the_persisted_batch(spark, tmp_path, monkeypatch):
+    """The five tables and the quarantine are written from the one
+    persisted, parsed and validated batch: each write's executed plan
+    scans it in memory instead of re-reading and re-parsing the input."""
+    from bigdataindexing_spark.documents.shred import sized
+
+    plans, write = [], json_ingest.write_sized
+
+    def spy(df, path):
+        plans.append(sized(df)._jdf.queryExecution().executedPlan().toString())
+        write(df, path)
+
+    monkeypatch.setattr(json_ingest, "write_sized", spy)
+    ingest_batch(spark, _write_input(spark, tmp_path, n=5), str(tmp_path / "store"))
+    assert len(plans) == len(TABLE_NAMES) + 1
+    assert all("InMemoryTableScan" in p for p in plans), plans
+
+
+def _persisted(spark) -> set:
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+
+def test_ingest_leaves_nothing_persisted(spark, tmp_path):
+    """A batch ingest and a stream micro-batch release the batch they
+    persist, and using the returned frames afterwards does not cache it
+    again."""
+    before = _persisted(spark)
+    in_dir = _write_input(spark, tmp_path, n=5)
+    tables, quarantine = ingest_batch(spark, in_dir, str(tmp_path / "batch"))
+    assert _persisted(spark) == before
+    for df in (*tables.as_dict().values(), quarantine):
+        df.collect()
+    assert _persisted(spark) == before
+    ingest_stream(spark, in_dir, str(tmp_path / "stream"))
+    assert _persisted(spark) == before
+
+
+def test_failed_ingest_leaves_nothing_persisted(spark, tmp_path, monkeypatch):
+    """A write that raises midway still releases the persisted batch."""
+    before, write, calls = _persisted(spark), json_ingest.write_sized, []
+
+    def failing(df, path):
+        calls.append(path)
+        if len(calls) == 3:
+            raise OSError("disk full")
+        write(df, path)
+
+    monkeypatch.setattr(json_ingest, "write_sized", failing)
+    with pytest.raises(OSError, match="disk full"):
+        ingest_batch(spark, _write_input(spark, tmp_path, n=5), str(tmp_path / "store"))
+    assert len(calls) == 3
+    assert _persisted(spark) == before
 
 
 def test_schema_evolution_merge_schema(spark, tmp_path):

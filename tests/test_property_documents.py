@@ -17,7 +17,11 @@ input:
   NULL keys, shared children, dangling edges, unknown/duplicate roots;
 - merge, which upserts the touched rows on the driver, equals the
   full-outer-join upsert and the join formulation of the edge rules on
-  adversarial stores and patches.
+  adversarial stores and patches;
+- shred and validate, each table one SQL expression, equal the
+  Column-API formulation (a union of per-field selects over a
+  ``posexplode_outer``) row for row and type for type, on NULL, sparse,
+  duplicate, type-violating and malformed bodies.
 
 Examples are kept small (each one runs real Spark jobs); the point is
 shape coverage, not volume.
@@ -39,10 +43,13 @@ from bigdataindexing_spark.documents import merge as merge_mod
 from bigdataindexing_spark.documents.reassemble import reassemble
 from bigdataindexing_spark.documents.schema import (
     PLAN_SCHEMA,
+    REQUIRED_ELEMENT_PATHS,
+    REQUIRED_PATHS,
     local_strings_df,
     make_plan,
 )
 from bigdataindexing_spark.documents.shred import ShreddedTables, shred
+from bigdataindexing_spark.documents.validate import validate
 
 SETTINGS = dict(
     max_examples=5,
@@ -476,3 +483,211 @@ def test_merge_equals_upsert_oracle(spark, case):
     store = _store_of(spark, rows)
     patch = _parse(spark, docs)
     assert _rows(merge_mod.merge(store, patch)) == _rows(_oracle_merge(store, patch))
+
+
+# --- shred / validate against the Column-API formulation ---------------------
+
+
+def _column_api_shred(docs: DataFrame, doc_col: str = "doc") -> ShreddedTables:
+    """Per-field selects over a ``posexplode_outer`` of linkedPlanServices,
+    cost shares and edges unioned from one select per source."""
+    d = F.col(doc_col)
+
+    def cost_share_rows(col):
+        return [col.getField(f).alias(a) for f, a in
+                (("objectId", "object_id"), ("_org", "org"), ("deductible", "deductible"),
+                 ("copay", "copay"))]
+
+    def edge(parent_type, parent_id, field, ord_col, child_type, child_id):
+        return [F.lit(parent_type).alias("parent_type"), parent_id.alias("parent_id"),
+                F.lit(field).alias("field"), ord_col.alias("ord"),
+                F.lit(child_type).alias("child_type"), child_id.alias("child_id")]
+
+    plans = docs.select(
+        d.getField("objectId").alias("object_id"),
+        d.getField("_org").alias("org"),
+        d.getField("planType").alias("plan_type"),
+        d.getField("creationDate").alias("creation_date"),
+    )
+    lps = docs.select(
+        d.getField("objectId").alias("plan_id"),
+        F.posexplode_outer(d.getField("linkedPlanServices")).alias("ord", "ps"),
+    ).filter(F.col("ps").isNotNull())
+    ps, svc = F.col("ps"), F.col("ps").getField("linkedService")
+    pscs = ps.getField("planserviceCostShares")
+    plan_services = lps.select(
+        ps.getField("objectId").alias("object_id"), ps.getField("_org").alias("org")
+    ).filter(F.col("object_id").isNotNull())
+    services = lps.select(
+        svc.getField("objectId").alias("object_id"),
+        svc.getField("_org").alias("org"),
+        svc.getField("name").alias("name"),
+    ).filter(F.col("object_id").isNotNull())
+    member_cost_shares = (
+        docs.select(*cost_share_rows(d.getField("planCostShares")))
+        .unionByName(lps.select(*cost_share_rows(pscs)))
+        .filter(F.col("object_id").isNotNull())
+    )
+    edges = (
+        docs.select(*edge("plan", d.getField("objectId"), "planCostShares", F.lit(0),
+                          "membercostshare", d.getField("planCostShares").getField("objectId")))
+        .unionByName(lps.select(*edge("plan", F.col("plan_id"), "linkedPlanServices",
+                                      F.col("ord"), "planservice", ps.getField("objectId"))))
+        .unionByName(lps.select(*edge("planservice", ps.getField("objectId"), "linkedService",
+                                      F.lit(0), "service", svc.getField("objectId"))))
+        .unionByName(lps.select(*edge("planservice", ps.getField("objectId"),
+                                      "planserviceCostShares", F.lit(0), "membercostshare",
+                                      pscs.getField("objectId"))))
+        .filter(F.col("child_id").isNotNull())
+    )
+    return ShreddedTables(plans, plan_services, services, member_cost_shares, edges)
+
+
+def _column_api_validate(raw: DataFrame, value_col: str = "value"):
+    """One ``when`` per required path over chained ``getField`` calls."""
+
+    def nested(c, path):
+        for seg in path.split("."):
+            c = c.getField(seg)
+        return c
+
+    doc = F.col("doc")
+    parts = [F.when(nested(doc, p).isNull(), F.lit(p)) for p in REQUIRED_PATHS]
+    arr = F.coalesce(doc.getField("linkedPlanServices"), F.array())
+    for p in REQUIRED_ELEMENT_PATHS:
+        parts.append(F.when(F.exists(arr, lambda x: nested(x, p).isNull()),
+                            F.lit(f"linkedPlanServices[].{p}")))
+    annotated = raw.withColumn("doc", F.from_json(F.col(value_col), PLAN_SCHEMA)).withColumn(
+        "reason",
+        F.when(doc.isNull(), F.array(F.lit("malformed_json"))).otherwise(
+            F.array_compact(F.array(*parts))
+        ),
+    )
+    return (
+        annotated.filter(F.size("reason") == 0).select(value_col, "doc"),
+        annotated.filter(F.size("reason") > 0).select(value_col, "reason"),
+    )
+
+
+MALFORMED = ("{not valid json", "", "[]", "null", '"plan-1"', '{"objectId": ')
+
+
+def _perturb(draw, doc: dict) -> dict:
+    """One drawn defect in a valid plan: a NULL or absent field or child,
+    a NULL, empty or absent linkedPlanServices, a NULL element, a NULL or
+    repeated id, or a type violation."""
+    lps = doc.get("linkedPlanServices")
+    el = draw(st.sampled_from(lps)) if lps else {}
+    kind = draw(st.sampled_from((
+        "root_id", "pcs", "pcs_id", "copay", "lps_null", "lps_empty", "lps_absent",
+        "null_el", "dup_el", "el_id", "svc", "svc_id", "pscs", "pscs_id",
+    )))
+    gone = draw(st.sampled_from(("null", "absent")))
+
+    def drop(obj, key):
+        if gone == "null":
+            obj[key] = None
+        else:
+            obj.pop(key, None)
+
+    if kind == "root_id":
+        drop(doc, "objectId")
+    elif kind == "pcs":
+        drop(doc, "planCostShares")
+    elif kind == "pcs_id" and doc.get("planCostShares"):
+        drop(doc["planCostShares"], "objectId")
+    elif kind == "copay" and doc.get("planCostShares"):
+        doc["planCostShares"]["copay"] = "not-a-number"
+    elif kind == "lps_null":
+        doc["linkedPlanServices"] = None
+    elif kind == "lps_empty":
+        doc["linkedPlanServices"] = []
+    elif kind == "lps_absent":
+        doc.pop("linkedPlanServices")
+    elif kind == "null_el" and lps is not None:
+        lps.insert(draw(st.integers(0, len(lps))), None)
+    elif kind == "dup_el" and el:
+        lps.append(json.loads(json.dumps(el)))
+    elif kind == "el_id" and el:
+        drop(el, "objectId")
+    elif kind in ("svc", "pscs") and el:
+        drop(el, {"svc": "linkedService", "pscs": "planserviceCostShares"}[kind])
+    elif kind in ("svc_id", "pscs_id") and el:
+        child = el.get({"svc_id": "linkedService", "pscs_id": "planserviceCostShares"}[kind])
+        if child:
+            drop(child, "objectId")
+    return doc
+
+
+@st.composite
+def raw_bodies(draw):
+    """Plan bodies, some repeated (duplicate ids), each valid, perturbed
+    one to three times, or malformed."""
+    bodies = []
+    for _ in range(draw(st.integers(1, 5))):
+        shape = draw(st.sampled_from(("valid", "perturbed", "perturbed", "malformed")))
+        if shape == "malformed":
+            bodies.append(draw(st.sampled_from(MALFORMED)))
+            continue
+        doc = make_plan(draw(st.integers(0, 7)))
+        for _ in range(draw(st.integers(1, 3)) if shape == "perturbed" else 0):
+            doc = _perturb(draw, doc)
+        bodies.append(json.dumps(doc))
+    return bodies
+
+
+def _absent(i: int, key: str) -> str:
+    doc = make_plan(i)
+    doc.pop(key)
+    return json.dumps(doc)
+
+
+# every defect at once, so each run checks it whatever is drawn
+BODIES_ADVERSARIAL = [
+    json.dumps(make_plan(3)),
+    json.dumps(make_plan(3)),  # duplicate document
+    json.dumps(dict(make_plan(2), objectId=None)),
+    json.dumps(dict(make_plan(2), linkedPlanServices=None)),
+    json.dumps(dict(make_plan(5), linkedPlanServices=[])),
+    _absent(6, "linkedPlanServices"),
+    _absent(6, "planCostShares"),
+    json.dumps(dict(make_plan(3), linkedPlanServices=[
+        None,
+        {"objectId": "ps-x", "_org": "b"},  # no children
+        {"objectId": None, "linkedService": {"objectId": "svc-x"},
+         "planserviceCostShares": {"objectId": "mcs-x", "copay": 1}},
+        {"objectId": "ps-y", "linkedService": {"objectId": None, "name": "n"},
+         "planserviceCostShares": None},
+        None,
+    ])),
+    json.dumps(dict(make_plan(1), planCostShares=dict(make_plan(1)["planCostShares"], copay="x"))),
+    *MALFORMED,
+]
+
+
+def _multiset(df: DataFrame) -> Counter:
+    return Counter(
+        tuple(tuple(v) if isinstance(v, list) else v for v in row) for row in df.collect()
+    )
+
+
+def _typed(df: DataFrame) -> list:
+    return [(f.name, f.dataType) for f in df.schema.fields]
+
+
+@given(bodies=raw_bodies())
+@example(bodies=BODIES_ADVERSARIAL)
+@settings(**SETTINGS)
+def test_shred_and_validate_equal_column_api_oracle(spark, bodies):
+    raw = local_strings_df(spark, bodies)
+    for got, want in zip(validate(raw), _column_api_validate(raw)):
+        assert _typed(got) == _typed(want)
+        assert _multiset(got.select("value", F.to_json(got.columns[1]))) == _multiset(
+            want.select("value", F.to_json(want.columns[1]))
+        )
+    # every parsed body, valid or not: NULL ids and children reach shred
+    docs = raw.select(F.from_json("value", PLAN_SCHEMA).alias("doc"))
+    want = _column_api_shred(docs).as_dict()
+    for name, got in shred(docs).as_dict().items():
+        assert _typed(got) == _typed(want[name]), name
+        assert _multiset(got) == _multiset(want[name]), name

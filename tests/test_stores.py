@@ -87,16 +87,17 @@ def test_store_registry_covers_every_store_dir():
     assert not SCRATCH_KINDS & set(STORES)
 
 
-def _mkdtemp_callers(tree: ast.AST) -> list:
-    """The innermost enclosing function name of each ``mkdtemp`` call."""
+def _callers(tree: ast.AST, names: set) -> list:
+    """The innermost enclosing function node (None at module level) of
+    each call of a function or method named in ``names``."""
     found = []
 
     def visit(node, fn):
         if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
-            fn = node.name
+            fn = node
         if isinstance(node, ast.Call):
             f = node.func
-            if (f.attr if isinstance(f, ast.Attribute) else getattr(f, "id", None)) == "mkdtemp":
+            if (f.attr if isinstance(f, ast.Attribute) else getattr(f, "id", None)) in names:
                 found.append(fn)
         for child in ast.iter_child_nodes(node):
             visit(child, fn)
@@ -105,21 +106,40 @@ def _mkdtemp_callers(tree: ast.AST) -> list:
     return found
 
 
+PACKAGE = Path(__file__).resolve().parent.parent / "bigdataindexing_spark"
+
+
 def test_only_self_cleaning_helpers_make_temp_dirs():
     """The package makes temp directories in two places only, and both
     remove them: ``session_store_dir`` at process exit, and
     ``maintenance._commit_files`` (its staging directory) before it
     returns. Any other ``mkdtemp`` leaks one directory per call."""
-    src = Path(__file__).resolve().parent.parent / "bigdataindexing_spark"
     callers = {
-        (py.relative_to(src).as_posix(), fn)
-        for py in src.rglob("*.py")
-        for fn in _mkdtemp_callers(ast.parse(py.read_text()))
+        (py.relative_to(PACKAGE).as_posix(), fn.name)
+        for py in PACKAGE.rglob("*.py")
+        for fn in _callers(ast.parse(py.read_text()), {"mkdtemp"})
     }
     assert callers == {
         ("sources/store_dirs.py", "session_store_dir"),
         ("sources/maintenance.py", "_commit_files"),
     }
+
+
+def test_every_persist_is_released():
+    """Every ``.persist()`` / ``.cache()`` in the package is either
+    ``tables.pin`` (released by ``release_pinned``) or sits in a function
+    that also calls ``unpersist``. Any other cache stays in executor
+    memory for the rest of the session."""
+    sites, leaks = set(), []
+    for py in PACKAGE.rglob("*.py"):
+        for fn in _callers(ast.parse(py.read_text()), {"persist", "cache"}):
+            site = (py.relative_to(PACKAGE).as_posix(), fn.name if fn else None)
+            sites.add(site[0])
+            if site != ("tables.py", "pin") and not (fn and _callers(fn, {"unpersist"})):
+                leaks.append(site)
+    assert leaks == []
+    # the walk does see the package's caches
+    assert {"tables.py", "operators/dedup.py", "sources/json_ingest.py"} <= sites
 
 
 def test_duplicate_store_kind_raises():
