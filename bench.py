@@ -219,7 +219,7 @@ def main() -> None:
         # queries at sf0.1. Results are identical either way; on a real
         # cluster the session default (AQE on, session.py) governs.
         spark.conf.set("spark.sql.adaptive.enabled", "false")
-        # one scan task per ingest-re-chunked file (tables._ingest_path):
+        # one scan task per ingest-re-chunked file (tables._build_table):
         # with maxPartitionBytes <= openCostInBytes the bin-packer stops
         # packing chunk files back into a single task. Only sane when the
         # per-file payload is tiny (it is: <=1MB chunks at sf<=0.1); real

@@ -223,7 +223,7 @@ def idx_postings_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     "materialized postings instead of scanning raw documents.",
 )
 def idx_tfidf_search(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from bigdataindexing_spark.tables import pin, table_view
+    from bigdataindexing_spark.tables import pin_view, table_view
 
     terms = ["spark", "data"]
     docs = table_view(spark, sf_dir, "documents")
@@ -235,14 +235,15 @@ def idx_tfidf_search(spark: SparkSession, sf_dir: str) -> DataFrame:
         f"size(filter(t, w -> w = '{term}')) AS tf_{i}"
         for i, term in enumerate(terms)
     )
-    per_doc = pin(
+    view = pin_view(
+        spark,
+        sf_dir,
+        "tfidf_perdoc",
         spark.sql(
             f"SELECT doc_id, {tf_cols} FROM "
             f"(SELECT doc_id, split(lower(text), ' ') AS t FROM {docs})"
-        )
+        ),
     )
-    view = f"bdi_tfidf_perdoc_{abs(hash((spark.sparkContext.applicationId, sf_dir))) % 10**8}"
-    per_doc.createOrReplaceTempView(view)
     df_cols = ", ".join(
         f"count_if(tf_{i} > 0) AS df_{i}" for i in range(len(terms))
     )
@@ -280,7 +281,7 @@ def idx_tfidf_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     "runs during build.",
 )
 def idx_bm25_search(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from bigdataindexing_spark.tables import pin, table_view
+    from bigdataindexing_spark.tables import pin_view, table_view
 
     terms = ["spark", "data"]
     docs = table_view(spark, sf_dir, "documents")
@@ -293,14 +294,15 @@ def idx_bm25_search(spark: SparkSession, sf_dir: str) -> DataFrame:
         f"size(filter(t, w -> w = '{term}')) AS tf_{i}"
         for i, term in enumerate(terms)
     )
-    per_doc = pin(
+    view = pin_view(
+        spark,
+        sf_dir,
+        "bm25_perdoc",
         spark.sql(
             f"SELECT doc_id, size(t) AS dl, {tf_cols} FROM "
             f"(SELECT doc_id, split(lower(text), ' ') AS t FROM {docs})"
-        )
+        ),
     )
-    view = f"bdi_bm25_perdoc_{abs(hash((spark.sparkContext.applicationId, sf_dir))) % 10**8}"
-    per_doc.createOrReplaceTempView(view)
     df_cols = ", ".join(
         f"count_if(tf_{i} > 0) AS df_{i}" for i in range(len(terms))
     )

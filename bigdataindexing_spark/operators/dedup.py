@@ -1031,7 +1031,7 @@ ORDER BY dup_frac DESC, doc_id LIMIT 100
     "shards to 100 TB.",
 )
 def dedup_span_fraction(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from bigdataindexing_spark.tables import table_view
+    from bigdataindexing_spark.tables import pin_view, table_view
 
     # Project the token array FIRST (inner subquery): the span transform
     # references its input once per span, and handing it the raw split()
@@ -1039,7 +1039,10 @@ def dedup_span_fraction(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (measured 16x on this query). The span relation is pinned because
     # the shared-span aggregate and the per-doc totals both consume it.
     docs_view = table_view(spark, sf_dir, "documents")
-    docs = pin(
+    view = pin_view(
+        spark,
+        sf_dir,
+        "spans",
         spark.sql(f"""
             SELECT doc_id,
                    array_distinct(transform(
@@ -1049,10 +1052,8 @@ def dedup_span_fraction(spark: SparkSession, sf_dir: str) -> DataFrame:
             FROM (SELECT doc_id, split(lower(text), ' ') AS t
                   FROM {docs_view})
             WHERE size(t) >= {SPAN_N}
-        """)
+        """),
     )
-    view = f"bdi_spans_{abs(hash((spark.sparkContext.applicationId, sf_dir))) % 10**8}"
-    docs.createOrReplaceTempView(view)
     return spark.sql(f"""
         WITH sp AS (SELECT doc_id, explode(spans) AS s FROM {view}),
         shared AS (

@@ -914,7 +914,7 @@ FROM sel WHERE cum <= {TOKEN_BUDGET} GROUP BY lang ORDER BY lang
     "(lang, docs, tokens) budget report out, one plan.",
 )
 def q114_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from bigdataindexing_spark.tables import pin, table_view
+    from bigdataindexing_spark.tables import pin_view, table_view
 
     # tokenize ONCE into the pinned relation: the quality gate and the
     # decontamination shingler both consume the token array, and without
@@ -925,14 +925,15 @@ def q114_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     # whole staged dataflow is then ONE SQL statement over a view of the
     # pinned relation (one driver round-trip, see tables.table_view).
     docs_view = table_view(spark, sf_dir, "documents")
-    docs = pin(
+    view = pin_view(
+        spark,
+        sf_dir,
+        "q114_docs",
         spark.sql(
             f"SELECT doc_id, lang, text, split(lower(text), ' ') AS t "
             f"FROM {docs_view}"
-        )
+        ),
     )
-    view = f"bdi_q114_docs_{abs(hash((spark.sparkContext.applicationId, sf_dir))) % 10**8}"
-    docs.createOrReplaceTempView(view)
     budget = TOKEN_BUDGET
     selected = spark.sql(f"""
         WITH surv AS (

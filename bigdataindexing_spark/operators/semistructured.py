@@ -172,24 +172,25 @@ def q58_variant_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     "is bit-identical across engines.",
 )
 def q92_gap_fill_ffill(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from bigdataindexing_spark.tables import pin, table_view
+    from bigdataindexing_spark.tables import pin_view, table_view
 
     # pinned: both the grid (min/max per user) and the left join consume
     # pts, and Catalyst does not CSE across DataFrame branches — without
     # the persist the events scan + hourly aggregate run twice. The fill
     # dataflow is one SQL statement over a view of the pinned relation.
     ev = table_view(spark, sf_dir, "events")
-    pts = pin(
+    view = pin_view(
+        spark,
+        sf_dir,
+        "q92_pts",
         spark.sql(
             f"SELECT user_id, date_trunc('hour', ts) AS h, "
             f"(2 * CAST(SUM(CAST(value AS DECIMAL(12,2))) * 100 AS BIGINT) "
             f"* 100 + COUNT(*)) DIV (2 * COUNT(*)) / 1e4 AS v FROM {ev} "
             f"WHERE event_type = 'purchase' AND user_id <= 20 "
             f"GROUP BY user_id, date_trunc('hour', ts)"
-        )
+        ),
     )
-    view = f"bdi_q92_pts_{abs(hash((spark.sparkContext.applicationId, sf_dir))) % 10**8}"
-    pts.createOrReplaceTempView(view)
     return spark.sql(f"""
         WITH grid AS (
           SELECT user_id,

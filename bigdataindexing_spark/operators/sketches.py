@@ -53,22 +53,12 @@ _SHINGLE_SPARK = (
     f"i -> array_join(slice(t, i, {BLOOM_N}), ' '))))"
 )
 
-# (applicationId, sf_dir) -> the M-bit mask as M/64 longs. A driver-side
-# list, not a DataFrame: the collect is M-bounded (1024 rows) — the
-# fixed sketch size, NOT data-proportional — and the mask re-broadcasts
-# per query as a 1-row literal frame, so there is no session-bound
-# DataFrame handle to go stale (the ADVICE-r4 hazard class).
-_BLOOM_MASKS: dict[tuple[str, str], list[int]] = {}
-
-
-def bloom_mask(spark: SparkSession, sf_dir: str) -> list[int]:
-    """Build (once per session) the Bloom bitset over the eval split's
-    distinct shingles: one aggregation jobs the bit positions into
-    M/64 bit-or'd words; absent words are zero."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    mask = _BLOOM_MASKS.get(key)
-    if mask is not None:
-        return mask
+def _build_bloom_mask(spark: SparkSession, sf_dir: str, path: str) -> list[int]:
+    """The Bloom bitset over the eval split's distinct shingles: one
+    aggregation jobs the bit positions into M/64 bit-or'd words; absent
+    words are zero. The collect is M-bounded (1024 rows) — the fixed
+    sketch size, NOT data-proportional. The mask is written as the one-row
+    ``mask ARRAY<BIGINT>`` table the serve broadcasts, and returned."""
     docs = table_view(spark, sf_dir, "documents")
     rows = spark.sql(f"""
         WITH ev AS (
@@ -90,8 +80,16 @@ def bloom_mask(spark: SparkSession, sf_dir: str) -> list[int]:
     mask = [0] * (BLOOM_M // 64)
     for r in rows:
         mask[r["word"]] = r["bits"]
-    _BLOOM_MASKS[key] = mask
+    write_store(spark.createDataFrame([(mask,)], "mask ARRAY<BIGINT>"), path)
     return mask
+
+
+_BLOOM_MASK = SessionParquetStore("bloom_mask", _build_bloom_mask)
+
+
+def bloom_mask(spark: SparkSession, sf_dir: str) -> list[int]:
+    """The session's Bloom bitset as M/64 longs (built once per session)."""
+    return _BLOOM_MASK.meta(spark, sf_dir)
 
 
 _BLOOM_ORACLE = f"""
@@ -129,7 +127,7 @@ FROM per GROUP BY lang ORDER BY lang
     f"{BLOOM_N}-gram shingles compress into a {BLOOM_M}-bit / "
     f"{BLOOM_K}-hash Bloom mask built once per session (one aggregation "
     "to M/64 bit-or'd words, an M-bounded driver collect); the serve "
-    "query broadcasts the mask as a 1-row literal frame and flags "
+    "query broadcasts the one-row mask store and flags "
     "training documents whose shingles hit all K bits — a row-local "
     "forall over element_at/shiftleft inside the scan stage, NO join "
     "and NO shuffle until the per-lang rollup. One-sided error by "
@@ -144,14 +142,7 @@ FROM per GROUP BY lang ORDER BY lang
 )
 def dedup_bloom_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = table_view(spark, sf_dir, "documents")
-    mask = bloom_mask(spark, sf_dir)
-    # view name keyed by (applicationId, sf_dir) like every session
-    # store view: a fixed name would race between two invocations for
-    # DIFFERENT sf_dirs in one session (probe the wrong corpus's mask)
-    key = (spark.sparkContext.applicationId, sf_dir)
-    mask_view = f"bdi_bloom_mask_{abs(hash(key)) % 10**8}"
-    mask_df = spark.createDataFrame([(mask,)], "mask ARRAY<BIGINT>")
-    mask_df.createOrReplaceTempView(mask_view)
+    mask_view = _BLOOM_MASK.view(spark, sf_dir)
     out = spark.sql(f"""
         WITH d AS (
           SELECT doc_id, lang, {_SHINGLE_SPARK} AS s

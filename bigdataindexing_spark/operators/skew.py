@@ -18,17 +18,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from bigdataindexing_spark.registry import register
+from bigdataindexing_spark.sources.store_dirs import SessionParquetStore, write_store
 from bigdataindexing_spark.tables import bounded_sort, spread, table
 
 N_SALTS = 16
-
-# (applicationId, semantic key) -> list of hot-key rows from the sampled
-# probe in salted_join. Skew statistics are a TABLE property, not a query
-# property: a catalog serves them from analyze-time stats rather than
-# re-sampling per query, so the probe runs once per session per input
-# signature and every later salted join plans from the cached result.
-_HOT_KEY_CACHE: dict[tuple, list] = {}
-
 
 def salted_agg(
     df: DataFrame, key: str, agg_col: str, n_salts: int = N_SALTS
@@ -79,35 +72,20 @@ HOT_KEY_ROWS = 100_000
 HOT_SAMPLE_FRACTION = 0.05
 
 
-def _hot_keys(
-    big: DataFrame,
-    big_key: str,
-    hot_key_rows: int,
-    stats_key: tuple | None,
-) -> list:
-    """The sampled hot-key probe behind salted_join, cached per session
-    when the caller names its input (``stats_key``). The result is
-    bounded by construction — at most sample_size / threshold keys — so
-    holding it driver-side is the same contract as AQE's per-partition
-    skew statistics."""
-    ck = None
-    if stats_key is not None:
-        ck = (big.sparkSession.sparkContext.applicationId,) + tuple(stats_key)
-        if ck in _HOT_KEY_CACHE:
-            return _HOT_KEY_CACHE[ck]
-    rows = (
+def _hot_key_probe(big: DataFrame, big_key: str, hot_key_rows: int) -> DataFrame:
+    """The sampled hot-key probe: ``__hk`` for each key whose estimated
+    row count exceeds ``hot_key_rows``. The result is bounded by
+    construction — at most sample_size / threshold keys — so holding it
+    driver-side is the same contract as AQE's per-partition skew
+    statistics."""
+    return (
         big.select(F.col(big_key).alias("__hk"))
         .sample(False, HOT_SAMPLE_FRACTION, seed=7)
         .groupBy("__hk")
         .agg(F.count(F.lit(1)).alias("__c"))
         .filter(F.col("__c") >= int(hot_key_rows * HOT_SAMPLE_FRACTION))
         .select("__hk")
-        .collect()
     )
-    hot = [r["__hk"] for r in rows]
-    if ck is not None:
-        _HOT_KEY_CACHE[ck] = hot
-    return hot
 
 
 def salted_join(
@@ -117,24 +95,35 @@ def salted_join(
     small_key: str,
     n_salts: int = N_SALTS,
     hot_key_rows: int = HOT_KEY_ROWS,
-    stats_key: tuple | None = None,
 ) -> DataFrame:
     """Skew-safe equi-join that salts ONLY observed-hot keys.
 
     A sampled count of the big side's key column (column-pruned scan,
     5% sample — at 100 TB you'd sample row groups the same way) finds
-    keys whose estimated cardinality exceeds ``hot_key_rows``. Those keys
-    fan out to ``n_salts`` sub-keys and the small side replicates
-    per-salt for them alone; every other key joins with salt 0 and a
-    single small-side row. With no skew the hot map is empty and the
-    plan degenerates to the plain join — blanket 16x replication of the
-    small side (the previous form) burned n_salts-fold shuffle volume
-    demonstrating a pathology the data may not have. Each big row
-    carries exactly one salt and matches exactly one replica — semantics
-    identical to the plain join. Pass ``stats_key`` (a stable name for
-    the big-side input) to serve the probe from the session stats cache
-    the way a catalog serves analyze-time statistics."""
-    hot_list = _hot_keys(big, big_key, hot_key_rows, stats_key)
+    keys whose estimated cardinality exceeds ``hot_key_rows``; the join
+    itself is :func:`_salt_hot_keys`."""
+    hot = _hot_key_probe(big, big_key, hot_key_rows).collect()
+    return _salt_hot_keys(
+        big, small, big_key, small_key, [r["__hk"] for r in hot], n_salts
+    )
+
+
+def _salt_hot_keys(
+    big: DataFrame,
+    small: DataFrame,
+    big_key: str,
+    small_key: str,
+    hot_list: list,
+    n_salts: int,
+) -> DataFrame:
+    """The join given the big side's hot keys: those keys fan out to
+    ``n_salts`` sub-keys and the small side replicates per-salt for them
+    alone; every other key joins with salt 0 and a single small-side row.
+    With no skew the hot list is empty and the plan degenerates to the
+    plain join — blanket 16x replication of the small side (the previous
+    form) burned n_salts-fold shuffle volume demonstrating a pathology
+    the data may not have. Each big row carries exactly one salt and
+    matches exactly one replica — semantics identical to the plain join."""
     if not hot_list:
         # no observed skew: hand Catalyst the PLAIN join (it will
         # broadcast a small enough side — a broadcast join has no skew
@@ -180,6 +169,23 @@ def salted_join(
     ).drop("__salt")
 
 
+def _build_hot_keys(spark: SparkSession, sf_dir: str, path: str) -> list:
+    """Write lineitem's hot ``l_orderkey`` values; return them as a list."""
+    write_store(
+        _hot_key_probe(table(spark, sf_dir, "lineitem"), "l_orderkey", HOT_KEY_ROWS),
+        path,
+        "__hk",
+    )
+    return [r["__hk"] for r in spark.read.parquet(path).collect()]
+
+
+# Skew statistics are a TABLE property, not a query property: a catalog
+# serves them from analyze-time stats rather than re-sampling per query,
+# so q96's probe of lineitem's join key is a session store and every
+# later salted join plans from it.
+_LINEITEM_HOT_KEYS = SessionParquetStore("hot_keys", _build_hot_keys)
+
+
 @register(
     "q96_salted_join",
     oracle="SELECT o_orderpriority, COUNT(*) AS cnt, "
@@ -214,12 +220,13 @@ def q96_salted_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("o_orderkey", "o_orderpriority")
     )
     return (
-        salted_join(
+        _salt_hot_keys(
             li,
             orders,
             "l_orderkey",
             "o_orderkey",
-            stats_key=(sf_dir, "lineitem", "l_orderkey"),
+            _LINEITEM_HOT_KEYS.meta(spark, sf_dir),
+            N_SALTS,
         )
         .groupBy("o_orderpriority")
         .agg(

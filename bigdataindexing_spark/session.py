@@ -123,7 +123,7 @@ def get_spark(
 def tune_for_local_tests(spark: SparkSession) -> SparkSession:
     """Apply runtime-settable knobs for small local data (tests)."""
     spark.conf.set("spark.sql.shuffle.partitions", "8")
-    # one scan task per ingest-re-chunked file (tables._ingest_path);
+    # one scan task per ingest-re-chunked file (tables._build_table);
     # harmless for unchunked tiny files, never set on a real cluster
     spark.conf.set("spark.sql.files.maxPartitionBytes", "4m")
     return spark

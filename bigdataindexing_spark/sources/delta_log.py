@@ -57,8 +57,11 @@ remaining depth gap ("no real Delta/Iceberg format compatibility").
 from __future__ import annotations
 
 import datetime as dt
+import itertools
 import json
 import os
+import shutil
+import tempfile
 import time
 import uuid
 from decimal import Decimal
@@ -127,6 +130,30 @@ def commit(table_dir: str, version: int, actions: list[dict]) -> None:
         ) from exc
     finally:
         os.unlink(tmp)
+
+
+_commit_seq = itertools.count()
+
+
+def commit_files(layout_dir: str, write_fn) -> list[str]:
+    """Run ``write_fn(staging_dir)`` and move its parquet output into the
+    layout under a unique commit token, returning exactly the files this
+    commit added. The staged write plus per-commit naming is what makes
+    concurrent writers safe: each caller harvests only its own files."""
+    staging = tempfile.mkdtemp(prefix="bdi_commit_stage_")
+    try:
+        write_fn(staging)
+        token = f"commit-{uuid.uuid4().hex[:8]}-{next(_commit_seq)}"
+        out = []
+        for i, name in enumerate(sorted(os.listdir(staging))):
+            if not name.endswith(".parquet"):
+                continue
+            dst = os.path.join(layout_dir, f"{token}-{i:05d}.parquet")
+            shutil.move(os.path.join(staging, name), dst)
+            out.append(dst)
+        return out
+    finally:
+        shutil.rmtree(staging, ignore_errors=True)
 
 
 def metadata_action(table_dir: str, schema: T.StructType) -> dict:
@@ -405,12 +432,10 @@ def stream_sink(table_dir: str, app_id: str, base_version: int, write_batch):
 def _write_parts(spark: SparkSession, table_dir: str, parts: dict) -> list[dict]:
     """Write each ``{name: df}`` as the one data file ``name`` through the
     staged commit and return the ``add`` actions of the non-empty ones."""
-    from bigdataindexing_spark.sources.maintenance import _commit_files
-
     files = []
     for name, df in parts.items():
         # coalesce(1): one staged file, or none for an empty split
-        for f in _commit_files(
+        for f in commit_files(
             table_dir, lambda d: df.coalesce(1).write.mode("overwrite").parquet(d)
         ):
             files.append(os.path.join(table_dir, name))

@@ -89,7 +89,9 @@ def bucketed_join(spark: SparkSession, db: str = "bdi") -> DataFrame:
 
 # applicationId -> sf_dir the bucketed tables currently hold: the catalog
 # names are application-global, so switching sf_dir mid-session must
-# rewrite them (a stale-layout read would silently serve the wrong SF)
+# rewrite them (a stale-layout read would silently serve the wrong SF).
+# Not a SessionParquetStore: saveAsTable names are per application, not
+# per sf_dir, so two sf_dirs cannot each keep a built copy.
 _BUCKETED_SF: dict[str, str] = {}
 
 

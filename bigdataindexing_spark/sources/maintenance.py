@@ -39,12 +39,8 @@ any lakehouse deployment of this engine needs.
 
 from __future__ import annotations
 
-import itertools
 import os
-import shutil
-import tempfile
 import time
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -52,6 +48,7 @@ from pyspark.sql import functions as F
 from bigdataindexing_spark.sources.delta_log import (
     ManifestConflictError,
     commit,
+    commit_files,
     harvest,
     log_versions,
     manifest_keep,
@@ -69,9 +66,6 @@ from bigdataindexing_spark.registry import register
 from bigdataindexing_spark.sources.store_dirs import SessionParquetStore
 from bigdataindexing_spark.tables import bounded_sort, table
 
-_commit_seq = itertools.count()
-
-
 def _layout_files(layout_dir: str) -> list[str]:
     return sorted(
         os.path.join(layout_dir, f)
@@ -80,34 +74,13 @@ def _layout_files(layout_dir: str) -> list[str]:
     )
 
 
-def _commit_files(layout_dir: str, write_fn) -> list[str]:
-    """Run ``write_fn(staging_dir)`` and move its parquet output into the
-    layout under a unique commit token, returning exactly the files this
-    commit added. The staged write plus per-commit naming is what makes
-    concurrent writers safe: each caller harvests only its own files."""
-    staging = tempfile.mkdtemp(prefix="bdi_commit_stage_")
-    try:
-        write_fn(staging)
-        token = f"commit-{uuid.uuid4().hex[:8]}-{next(_commit_seq)}"
-        out = []
-        for i, name in enumerate(sorted(os.listdir(staging))):
-            if not name.endswith(".parquet"):
-                continue
-            dst = os.path.join(layout_dir, f"{token}-{i:05d}.parquet")
-            shutil.move(os.path.join(staging, name), dst)
-            out.append(dst)
-        return out
-    finally:
-        shutil.rmtree(staging, ignore_errors=True)
-
-
 def _stage(
     spark: SparkSession, layout_dir: str, df: DataFrame, cols: list[str]
 ) -> list[dict]:
     """Write ``df`` (its partitioning decides the files) through the
     staged commit; returns the new files' ``add`` actions, stats on
     ``cols``."""
-    files = _commit_files(
+    files = commit_files(
         layout_dir, lambda d: df.write.mode("overwrite").parquet(d)
     )
     return [{"add": a} for a in harvest(spark, layout_dir, files, cols)]

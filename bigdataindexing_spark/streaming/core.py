@@ -42,10 +42,9 @@ import itertools
 import os
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from bigdataindexing_spark.sources.store_dirs import session_store_dir
+from bigdataindexing_spark.tables import events_ts, table_schema
 
 _qname_counter = itertools.count()
 
@@ -54,32 +53,17 @@ def stream_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """readStream over one driver test table (Parquet file source).
 
     Uses ``pathGlobFilter`` so the stream sees exactly the one table file in
-    the shared sf directory. The ``events`` table may be Parquet
-    TIMESTAMP(NANOS) (earlier test-data generations); as in
-    :func:`bigdataindexing_spark.tables.table` we read nanos as longs and
-    truncate to micros, and pass a native MICROS timestamp through untouched.
+    the shared sf directory. The reader is given the file schema the
+    table's store recorded, so opening the stream starts no Spark job;
+    ``events`` gets the same ``ts`` fix as
+    :func:`bigdataindexing_spark.tables.table`.
     """
-    if name == "events":
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-        raw = (
-            spark.readStream.schema(schema)
-            .option("pathGlobFilter", "events.parquet")
-            .parquet(sf_dir)
-        )
-        if isinstance(schema["ts"].dataType, T.LongType):
-            raw = raw.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
-        else:
-            # NTZ → session-time TIMESTAMP (UTC session: value-preserving);
-            # withWatermark requires the LTZ type.
-            raw = raw.withColumn("ts", F.col("ts").cast("timestamp"))
-        return raw
-    schema = spark.read.parquet(f"{sf_dir}/{name}.parquet").schema
-    return (
-        spark.readStream.schema(schema)
+    raw = (
+        spark.readStream.schema(table_schema(spark, sf_dir, name))
         .option("pathGlobFilter", f"{name}.parquet")
         .parquet(sf_dir)
     )
+    return events_ts(spark, raw) if name == "events" else raw
 
 
 def run_available_now(

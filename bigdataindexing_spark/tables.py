@@ -1,18 +1,27 @@
 """Table catalog over the driver-materialized Parquet test tables.
 
-The ten tables (TESTDATA.md) are plain Parquet files; we read them lazily so
-Catalyst gets full pushdown (column pruning + predicate pushdown reach the
-Parquet scan — verify with ``df.explain('formatted')``: look for
-``PushedFilters`` / ``ReadSchema``).
+The ten tables (TESTDATA.md) are plain Parquet files. Each is one
+:class:`~bigdataindexing_spark.sources.store_dirs.SessionParquetStore`
+(kind ``table_<name>``): its build re-chunks a big single-row-group file
+into the store directory and records the scan path and the file schema;
+its open reads that path with that schema, so no later read infers
+anything from Parquet footers. :func:`table` is the store's handle and
+:func:`table_view` its temp view. Scans stay lazy, so Catalyst gets full
+pushdown (column pruning + predicate pushdown reach the Parquet scan —
+verify with ``df.explain('formatted')``: look for ``PushedFilters`` /
+``ReadSchema``).
 """
 
 from __future__ import annotations
 
 import os
+from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from bigdataindexing_spark.sources.store_dirs import SessionParquetStore
 
 TABLE_NAMES = (
     "region",
@@ -31,21 +40,12 @@ TABLE_NAMES = (
 BROADCAST_TABLES = frozenset({"region", "nation", "supplier", "customer", "part"})
 
 
-# (applicationId, sf_dir, name) -> DataFrame. A DataFrame is an immutable
-# logical plan bound to its session, so handing the same object to every
-# builder is safe and skips the per-call parquet footer read that
-# spark.read.parquet does for schema discovery (~10-30ms x 10 tables x
-# ~100 builder calls per correctness/bench sweep, pure driver-side cost).
-# Keyed by applicationId (unique per SparkContext) so a stopped-and-
-# recreated session never sees plans bound to a dead context.
-_TABLE_CACHE: dict[tuple[str, str, str], DataFrame] = {}
-
-
 # DataFrames persist()ed by operator builders (the multi-branch dedup /
 # LSH relations that Spark would otherwise recompute per join branch).
 # A builder cannot unpersist before its caller materializes the result,
 # so pins accumulate; long-lived sessions call release_pinned() between
 # queries (bench.py does; one-shot driver/test sessions don't need to).
+# A release list, not a memo: nothing is ever served from it.
 _PINNED: list[DataFrame] = []
 
 
@@ -56,6 +56,16 @@ def pin(df: DataFrame) -> DataFrame:
     return df
 
 
+def pin_view(spark: SparkSession, sf_dir: str, tag: str, df: DataFrame) -> str:
+    """:func:`pin` ``df`` and register it as the temp view
+    ``bdi_<tag>_<hash>`` for a single-SQL builder; returns the name. The
+    name is keyed by ``(applicationId, sf_dir)``, so two sf_dirs in one
+    session never serve each other's relation."""
+    view = f"bdi_{tag}_{abs(hash((spark.sparkContext.applicationId, sf_dir))) % 10**8}"
+    pin(df).createOrReplaceTempView(view)
+    return view
+
+
 def release_pinned() -> int:
     """Unpersist every pin()ed relation; returns how many were released."""
     n = len(_PINNED)
@@ -64,69 +74,19 @@ def release_pinned() -> int:
     return n
 
 
-def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    if name not in TABLE_NAMES:
-        raise KeyError(f"unknown table {name!r}; known: {TABLE_NAMES}")
-    key = (spark.sparkContext.applicationId, sf_dir, name)
-    cached = _TABLE_CACHE.get(key)
-    # the cached DataFrame is bound to the SparkSession that created it
-    # (createOrReplaceTempView etc. act on that session's catalog), so a
-    # hit from a sibling spark.newSession() must rebuild (ADVICE r4)
-    if cached is not None and cached.sparkSession is spark:
-        return cached
-    df = _read_table(spark, sf_dir, name)
-    _TABLE_CACHE[key] = df
-    return df
-
-
-_VIEW_CACHE: dict[tuple[str, str, str], str] = {}
-_VIEW_SEQ = 0
-
-
-def table_view(spark: SparkSession, sf_dir: str, name: str) -> str:
-    """Temp-view name over :func:`table`, for single-SQL builders.
-
-    A Column-API builder spends one py4j round-trip per transformation
-    (hundreds per complex query, ~0.25 s of pure driver-side plan
-    construction measured on the LSH builder); a ``spark.sql`` string is
-    ONE round-trip and parses to the identical logical plan. The view
-    wraps the session-cached DataFrame, so its already-resolved file
-    index is reused — a ``parquet.`path``` reference would re-list the
-    directory on every analysis. View names carry a per-registration
-    sequence so two sf_dirs in one session never collide.
-
-    Temp views are SESSION-scoped while the cache key is application-
-    scoped (``spark.newSession()`` shares the applicationId but not the
-    catalog), so a cache hit re-registers the view whenever this
-    session's catalog lacks the name — one tableExists round-trip per
-    build instead of an AnalysisException in the second session
-    (ADVICE r4)."""
-    global _VIEW_SEQ
-    key = (spark.sparkContext.applicationId, sf_dir, name)
-    view = _VIEW_CACHE.get(key)
-    if view is None:
-        _VIEW_SEQ += 1
-        view = f"bdi_{name}_{_VIEW_SEQ}"
-        table(spark, sf_dir, name).createOrReplaceTempView(view)
-        _VIEW_CACHE[key] = view
-    elif not spark.catalog.tableExists(view):
-        table(spark, sf_dir, name).createOrReplaceTempView(view)
-    return view
-
-
 # --- ingest re-chunking -----------------------------------------------
 # Parquet can only split across row groups, and the driver-generated test
 # files are written as ONE row group — so a 600k-row lineitem scan (or the
 # CPU-bound tokenize over documents) runs as a single task no matter how
 # many cores the session has. Real multi-TB tables never look like this:
 # they arrive as many files / many row groups and scans parallelize for
-# free. The ingest layer below restores that property locally: the first
-# table() call per session re-chunks any big single-row-group file into
-# N_CHUNK_FILES plain parquet files (pure byte-level rewrite via pyarrow,
-# schema and values untouched) and serves every later scan from the
-# re-chunked copy. One-time cost ~0.5s for the whole sf0.1 directory;
-# at real scale the gate below (multi-row-group or small file) makes this
-# a no-op passthrough.
+# free. Each table store's build restores that property locally: it
+# re-chunks a big single-row-group file into N_CHUNK_FILES plain parquet
+# files in the store directory (pure byte-level rewrite via pyarrow,
+# schema and values untouched) and every scan reads the re-chunked copy.
+# One-time cost ~0.5s for the whole sf0.1 directory; at real scale the
+# gate below (multi-row-group or small file) makes this a no-op
+# passthrough that scans the original file.
 #
 # Pair with spark.sql.files.maxPartitionBytes <= spark.sql.files.
 # openCostInBytes (bench.py / tune_for_local_tests set 4m) so each chunk
@@ -140,80 +100,117 @@ _INGEST_CHUNKS = {  # files ~= target scan parallelism per table
     "documents": 16,  # tokenize/shingle passes are CPU-bound per byte
     "embeddings": 8,
 }
-# (sf_dir, name) -> re-chunked directory; process-wide (the rewrite is
-# session-independent plain parquet, so a restarted SparkSession reuses it)
-_INGESTED: dict[tuple[str, str], str] = {}
+
+# events.ts may be Parquet TIMESTAMP(NANOS) (earlier test-data
+# generations), which the vectorized reader rejects unless this is set.
+# The conf is session-global and must STAY set: execution is lazy, so
+# restoring it after a read would break the NANOS scan when it actually
+# runs (also set in session.get_spark).
+_NANOS_AS_LONG = "spark.sql.legacy.parquet.nanosAsLong"
 
 
-def _ingest_path(sf_dir: str, name: str) -> str:
-    """Return the path to scan for ``name``: the re-chunked copy for big
-    single-row-group files, else the original file."""
+def _build_table(
+    name: str, spark: SparkSession, sf_dir: str, path: str
+) -> tuple[str, T.StructType]:
+    """Re-chunk a big single-row-group ``name`` into ``path``; return the
+    path to scan (``path``, or the original file) and the file schema."""
     src = f"{sf_dir}/{name}.parquet"
-    if name not in _INGEST_CHUNKS:
-        return src
-    key = (sf_dir, name)
-    cached = _INGESTED.get(key)
-    if cached is not None:
-        return cached
-    try:
-        import pyarrow.parquet as pq
+    scan = src
+    if name in _INGEST_CHUNKS:
+        try:
+            import pyarrow.parquet as pq
 
-        if os.path.getsize(src) < _INGEST_MIN_BYTES:
-            out = src
-        else:
-            meta = pq.ParquetFile(src).metadata
             n_files = _INGEST_CHUNKS[name]
-            if meta.num_row_groups >= n_files:
-                out = src  # already splittable — real-scale layout
-            else:
-                from bigdataindexing_spark.sources.store_dirs import (
-                    session_store_dir,
-                )
-
+            if (
+                os.path.getsize(src) >= _INGEST_MIN_BYTES
+                # else already splittable — real-scale layout
+                and pq.ParquetFile(src).metadata.num_row_groups < n_files
+            ):
                 tbl = pq.read_table(src)
-                out = session_store_dir("ingest_chunks")
                 rows = tbl.num_rows
                 step = max(1, -(-rows // n_files))
                 for i, lo in enumerate(range(0, rows, step)):
                     pq.write_table(
-                        tbl.slice(lo, step), f"{out}/part-{i:03d}.parquet"
+                        tbl.slice(lo, step), f"{path}/part-{i:03d}.parquet"
                     )
-    except Exception:
-        out = src  # unreadable via pyarrow: fall back to the original
-    _INGESTED[key] = out
-    return out
-
-
-def _read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+                scan = path
+        except Exception:
+            scan = src  # unreadable via pyarrow: fall back to the original
     if name == "events":
-        # events.ts may be Parquet TIMESTAMP(NANOS) (earlier test-data
-        # generations), which the vectorized reader rejects. With
-        # nanosAsLong set, a NANOS column reads as raw LONG nanos and we
-        # truncate to micros (exact integer division — matches duckdb's
-        # ns→us truncation); a MICROS column reads as a timestamp and
-        # passes through untouched, so both generations work.
-        # The conf is session-global and must STAY set: execution is lazy,
-        # so restoring it after this call would break the NANOS scan when
-        # it actually runs (also set in session.get_spark).
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.parquet(_ingest_path(sf_dir, name))
-        if isinstance(df.schema["ts"].dataType, T.LongType):
-            df = df.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
-        else:
-            # TIMESTAMP_NTZ generation: cast to session-time TIMESTAMP —
-            # watermarks and window() require the LTZ type. The cast is
-            # only value-preserving in a UTC session, so fail loudly
-            # instead of silently shifting every event time.
-            tz = spark.conf.get("spark.sql.session.timeZone")
-            if tz not in ("UTC", "Etc/UTC", "GMT"):
-                raise RuntimeError(
-                    f"events.ts NTZ->LTZ cast requires a UTC session, got "
-                    f"spark.sql.session.timeZone={tz!r}; build the session "
-                    "with bigdataindexing_spark.session.get_spark()"
-                )
-            df = df.withColumn("ts", F.col("ts").cast("timestamp"))
-        return df
-    return spark.read.parquet(_ingest_path(sf_dir, name))
+        spark.conf.set(_NANOS_AS_LONG, "true")
+    return scan, spark.read.parquet(src).schema
+
+
+def _open_table(
+    name: str, spark: SparkSession, _path: str, meta: tuple[str, T.StructType]
+) -> DataFrame:
+    scan, schema = meta
+    df = spark.read.schema(schema).parquet(scan)
+    return events_ts(spark, df) if name == "events" else df
+
+
+def events_ts(spark: SparkSession, events: DataFrame) -> DataFrame:
+    """The ``events.ts`` fix, for a batch or a streaming read of
+    ``events``. With nanosAsLong set, a NANOS column reads as raw LONG
+    nanos and is truncated to micros (exact integer division — matches
+    duckdb's ns→us truncation); a MICROS column reads as a timestamp and
+    passes through untouched, so both generations work."""
+    spark.conf.set(_NANOS_AS_LONG, "true")
+    if isinstance(events.schema["ts"].dataType, T.LongType):
+        return events.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
+    # TIMESTAMP_NTZ generation: cast to session-time TIMESTAMP —
+    # watermarks and window() require the LTZ type. The cast is only
+    # value-preserving in a UTC session, so fail loudly instead of
+    # silently shifting every event time.
+    tz = spark.conf.get("spark.sql.session.timeZone")
+    if tz not in ("UTC", "Etc/UTC", "GMT"):
+        raise RuntimeError(
+            f"events.ts NTZ->LTZ cast requires a UTC session, got "
+            f"spark.sql.session.timeZone={tz!r}; build the session "
+            "with bigdataindexing_spark.session.get_spark()"
+        )
+    return events.withColumn("ts", F.col("ts").cast("timestamp"))
+
+
+_TABLES = {
+    name: SessionParquetStore(
+        f"table_{name}", partial(_build_table, name), partial(_open_table, name)
+    )
+    for name in TABLE_NAMES
+}
+
+
+def _table_store(name: str) -> SessionParquetStore:
+    if name not in _TABLES:
+        raise KeyError(f"unknown table {name!r}; known: {TABLE_NAMES}")
+    return _TABLES[name]
+
+
+def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """The session-bound DataFrame over one test table. A DataFrame is an
+    immutable logical plan, so handing the same object to every builder
+    is safe and skips the per-call footer read that schema discovery
+    costs (~10-30ms x 10 tables x ~100 builder calls per sweep)."""
+    return _table_store(name).df(spark, sf_dir)
+
+
+def table_view(spark: SparkSession, sf_dir: str, name: str) -> str:
+    """Temp-view name over :func:`table`, for single-SQL builders.
+
+    A Column-API builder spends one py4j round-trip per transformation
+    (hundreds per complex query, ~0.25 s of pure driver-side plan
+    construction measured on the LSH builder); a ``spark.sql`` string is
+    ONE round-trip and parses to the identical logical plan. The view
+    wraps the session-bound DataFrame, so its already-resolved file
+    index is reused — a ``parquet.`path``` reference would re-list the
+    directory on every analysis."""
+    return _table_store(name).view(spark, sf_dir)
+
+
+def table_schema(spark: SparkSession, sf_dir: str, name: str) -> T.StructType:
+    """The file schema of one test table, as its store recorded it: a
+    reader given it (a stream over the original file) starts no job."""
+    return _table_store(name).meta(spark, sf_dir)[1]
 
 
 def spread(df: DataFrame, heavy: bool = False) -> DataFrame:
@@ -319,22 +316,28 @@ def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     return {name: table(spark, sf_dir, name) for name in TABLE_NAMES}
 
 
-# applicationId -> (sf_dir, names) last registered, so repeated SQL builders
-# against the same directory skip the 10 createOrReplaceTempView calls
-# (driver-side catalog writes) on every invocation.
-_VIEWS_REGISTERED: dict[str, tuple[str, tuple[str, ...]]] = {}
+# applicationId -> (sf_dir, names, handles) last registered, so repeated
+# SQL builders against the same tables skip the 10 createOrReplaceTempView
+# calls (driver-side catalog writes) on every invocation. It holds plain-
+# named catalog views (``lineitem``, not a store's hashed name), which no
+# store owns. The handles follow each table store: a rebuilt store or a
+# sibling session's handle is a new object, so the views re-register.
+_VIEWS_REGISTERED: dict[str, tuple] = {}
 
 
 def register_views(spark: SparkSession, sf_dir: str, names=TABLE_NAMES) -> None:
     """Register the test tables as temp views for ``spark.sql`` use."""
     app_id = spark.sparkContext.applicationId
-    state = (sf_dir, tuple(names))
-    if _VIEWS_REGISTERED.get(app_id) == state and all(
-        spark.catalog.tableExists(n) for n in names
-    ):  # tableExists re-check: temp views are session-scoped, the cache
-        # application-scoped — a sibling spark.newSession() shares the
-        # appId but not the catalog (ADVICE r4)
+    handles = [table(spark, sf_dir, name) for name in names]
+    prev = _VIEWS_REGISTERED.get(app_id)
+    if (
+        prev is not None
+        and prev[:2] == (sf_dir, tuple(names))
+        and all(a is b for a, b in zip(prev[2], handles))
+        # a view dropped from the catalog re-registers
+        and all(spark.catalog.tableExists(n) for n in names)
+    ):
         return
-    for name in names:
-        table(spark, sf_dir, name).createOrReplaceTempView(name)
-    _VIEWS_REGISTERED[app_id] = state
+    for name, df in zip(names, handles):
+        df.createOrReplaceTempView(name)
+    _VIEWS_REGISTERED[app_id] = (sf_dir, tuple(names), handles)

@@ -52,7 +52,7 @@ def main() -> None:
         if unknown:
             raise SystemExit(f"--only names not in registry: {sorted(unknown)}")
     # session.get_spark pins spark.sql.session.timeZone=UTC — the
-    # NTZ->LTZ cast in tables._read_table is only value-preserving in a
+    # NTZ->LTZ cast in tables.events_ts is only value-preserving in a
     # UTC session, so a plain SparkSession here would silently diverge
     # from the oracle on every events-based query on a non-UTC host.
     spark = get_spark(cpus=os.environ.get("SPARK_GRAFT_CPUS", "8"))

@@ -10,11 +10,15 @@ from __future__ import annotations
 
 from bigdataindexing_spark.operators.text_analysis import (
     BPE_MERGES,
-    _BPE_MERGE_CACHE,
     learn_bpe_merges,
     txt_bpe_apply,
     txt_bpe_train,
 )
+
+
+def _newest_job(spark) -> int:
+    """The newest job id the status tracker holds (ids only grow)."""
+    return max(spark.sparkContext.statusTracker().getJobIdsForGroup(None), default=-1)
 
 
 def test_merge_counts_non_increasing(spark, sf_dir):
@@ -45,14 +49,15 @@ def test_apply_consumes_session_cache(spark, sf_dir):
     """txt_bpe_apply must reuse the in-session learned table (the
     VERDICT r9 #7 'store the learned table and consume it' contract):
     after train has run, apply performs zero re-training actions — we
-    pin that by checking the cache is hit and the pieces are exactly
-    the merge-closed vocabulary."""
+    pin that by checking a second lookup of the learned table starts no
+    Spark job and the pieces are exactly the merge-closed vocabulary."""
     learn_bpe_merges(spark, sf_dir)
-    key = (spark.sparkContext.applicationId, sf_dir)
-    assert key in _BPE_MERGE_CACHE
+    before = _newest_job(spark)
+    merges = learn_bpe_merges(spark, sf_dir)
+    assert _newest_job(spark) == before
     out = txt_bpe_apply(spark, sf_dir).collect()
     assert 0 < len(out) <= 30
-    merged_syms = {m for (_s, _l, _r, m, _c) in _BPE_MERGE_CACHE[key]}
+    merged_syms = {m for (_s, _l, _r, m, _c) in merges}
     # every multi-char piece in the served vocabulary must be a learned
     # merge product (single chars are the base alphabet)
     for r in out:

@@ -139,6 +139,21 @@ def test_reading_a_store_starts_no_spark_job(spark, tmp_path):
     assert _newest_job(spark) > opened
 
 
+def test_opening_a_table_stream_starts_no_spark_job(spark, sf_dir):
+    """A test-table stream is given the file schema its table store
+    recorded, so once the store is built, opening the ``events`` and
+    ``documents`` streams infers nothing from Parquet footers."""
+    from bigdataindexing_spark.streaming.core import stream_table
+    from bigdataindexing_spark.tables import table
+
+    for name in ("events", "documents"):
+        table(spark, sf_dir, name)
+        before = _newest_job(spark)
+        sdf = stream_table(spark, sf_dir, name)
+        assert _newest_job(spark) == before, name
+        assert sdf.isStreaming and sdf.dtypes == table(spark, sf_dir, name).dtypes
+
+
 def test_table_schemas_match_shred(spark):
     """The declared store format is exactly what shred produces: same
     tables, column names and types, so the typed reader cannot drift."""

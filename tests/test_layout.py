@@ -18,6 +18,7 @@ from bigdataindexing_spark.sources.layout import (
     write_bucketed,
     write_partitioned_orders,
 )
+from bigdataindexing_spark.sources.store_dirs import STORES
 from bigdataindexing_spark.tables import table
 
 
@@ -76,8 +77,8 @@ def test_bucketed_join_has_no_exchange(spark, sf_dir):
 
 
 def test_ingest_rechunk_preserves_values(spark):
-    """The ingest re-chunk layer (tables._ingest_path) must be a pure
-    byte-level re-layout: same schema, same rows, more scan splits."""
+    """The ingest re-chunk (the ``table_lineitem`` store's build) must be a
+    pure byte-level re-layout: same schema, same rows, more scan splits."""
     import pyarrow.parquet as pq
 
     from bigdataindexing_spark import tables as tbl
@@ -89,7 +90,7 @@ def test_ingest_rechunk_preserves_values(spark):
         pytest.skip("sf0.1 test data not present")
     raw = spark.read.parquet(f"{sf}/lineitem.parquet")
     chunked = tbl.table(spark, sf, "lineitem")
-    path = tbl._ingest_path(sf, "lineitem")
+    path = STORES["table_lineitem"].meta(spark, sf)[0]
     assert path != f"{sf}/lineitem.parquet"  # big single-row-group file
     assert len(chunked.inputFiles()) == tbl._INGEST_CHUNKS["lineitem"]
     assert chunked.schema == raw.schema
@@ -105,9 +106,38 @@ def test_ingest_rechunk_preserves_values(spark):
     b = chunked.agg(*probe).first()
     assert tuple(a) == tuple(b)
     # small files and already-multi-row-group files pass through untouched
-    assert tbl._ingest_path(sf, "nation") == f"{sf}/nation.parquet"
+    assert STORES["table_nation"].meta(spark, sf)[0] == f"{sf}/nation.parquet"
     meta = pq.ParquetFile(path + "/part-000.parquet").metadata
     assert meta.num_rows <= 600000 // tbl._INGEST_CHUNKS["lineitem"] + 1
+
+
+def test_sql_views_follow_a_rebuilt_table(spark, sf_dir, duck, monkeypatch):
+    """``register_views`` must re-register its plain-named views when a
+    table store rebuilds: a view kept over the handle of a reclaimed
+    re-chunk directory reads files that are gone."""
+    import shutil
+
+    from bigdataindexing_spark import tables as tbl
+    from bigdataindexing_spark.registry import all_specs
+    from tests.oracle import compare
+
+    spec = all_specs()["q34_sql_tpch_q3"]
+    store = STORES["table_lineitem"]
+
+    def reclaim():
+        shutil.rmtree(store.dir(spark, sf_dir))
+
+    monkeypatch.setattr(tbl, "_INGEST_MIN_BYTES", 0)
+    try:
+        reclaim()  # the rebuild re-chunks lineitem into the store directory
+        assert store.meta(spark, sf_dir)[0] == store.dir(spark, sf_dir)
+        for _ in range(2):
+            result = compare(spec.builder(spark, sf_dir), duck, spec.oracle_text())
+            assert result["match"], result
+            reclaim()
+    finally:
+        monkeypatch.undo()
+        reclaim()  # later tests scan lineitem as laid out by default
 
 
 def test_sibling_session_reregisters_cached_views(spark, sf_dir):

@@ -17,6 +17,7 @@ from bigdataindexing_spark.sources.delta_log import (
     _DELTA_TABLE,
     ManifestConflictError,
     commit,
+    commit_files,
     log_versions,
     manifest_keep,
     read_commit,
@@ -194,7 +195,7 @@ def test_sweep_orphans_age_guarded(spark, sf_dir, layout):
     # crash simulation: a commit whose files landed but whose log commit
     # never happened
     before = set(maintenance._layout_files(path))
-    maintenance._commit_files(
+    commit_files(
         path, lambda d: li.limit(30).write.mode("overwrite").parquet(d)
     )
     orphans = set(maintenance._layout_files(path)) - before

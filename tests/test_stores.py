@@ -25,12 +25,10 @@ from bigdataindexing_spark.sources.store_dirs import STORES
 registry.all_specs()  # imports every module, so every store has registered
 
 # session_store_dir() call sites that are scratch space, not stores:
-# checkpoints, per-invocation outputs, replay arrivals and re-chunked
-# table copies
+# checkpoints, per-invocation outputs and replay arrivals
 SCRATCH_KINDS = {
     "cc_checkpoint",
     "ckpt",
-    "ingest_chunks",
     "json_ingest",
     "stream_cms",
     "stream_index",
@@ -112,7 +110,7 @@ PACKAGE = Path(__file__).resolve().parent.parent / "bigdataindexing_spark"
 def test_only_self_cleaning_helpers_make_temp_dirs():
     """The package makes temp directories in two places only, and both
     remove them: ``session_store_dir`` at process exit, and
-    ``maintenance._commit_files`` (its staging directory) before it
+    ``delta_log.commit_files`` (its staging directory) before it
     returns. Any other ``mkdtemp`` leaks one directory per call."""
     callers = {
         (py.relative_to(PACKAGE).as_posix(), fn.name)
@@ -121,7 +119,7 @@ def test_only_self_cleaning_helpers_make_temp_dirs():
     }
     assert callers == {
         ("sources/store_dirs.py", "session_store_dir"),
-        ("sources/maintenance.py", "_commit_files"),
+        ("sources/delta_log.py", "commit_files"),
     }
 
 
@@ -140,6 +138,20 @@ def test_every_persist_is_released():
     assert leaks == []
     # the walk does see the package's caches
     assert {"tables.py", "operators/dedup.py", "sources/json_ingest.py"} <= sites
+
+
+def test_only_store_modules_read_application_id():
+    """Per-session state is keyed by ``applicationId`` in three modules
+    only: the store class, the table catalog's view registry and pinned
+    views, and the bucketed layout's catalog tables. Any other reader is
+    a hand-keyed session cache that the store sweeps cannot see; it
+    belongs in a ``SessionParquetStore``."""
+    readers = set()
+    for py in PACKAGE.rglob("*.py"):
+        for node in ast.walk(ast.parse(py.read_text())):
+            if isinstance(node, ast.Attribute) and node.attr == "applicationId":
+                readers.add(py.relative_to(PACKAGE).as_posix())
+    assert readers == {"sources/store_dirs.py", "tables.py", "sources/layout.py"}
 
 
 def test_duplicate_store_kind_raises():
