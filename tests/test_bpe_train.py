@@ -14,11 +14,7 @@ from bigdataindexing_spark.operators.text_analysis import (
     txt_bpe_apply,
     txt_bpe_train,
 )
-
-
-def _newest_job(spark) -> int:
-    """The newest job id the status tracker holds (ids only grow)."""
-    return max(spark.sparkContext.statusTracker().getJobIdsForGroup(None), default=-1)
+from tests.jobs import newest_job
 
 
 def test_merge_counts_non_increasing(spark, sf_dir):
@@ -52,9 +48,9 @@ def test_apply_consumes_session_cache(spark, sf_dir):
     pin that by checking a second lookup of the learned table starts no
     Spark job and the pieces are exactly the merge-closed vocabulary."""
     learn_bpe_merges(spark, sf_dir)
-    before = _newest_job(spark)
+    before = newest_job(spark)
     merges = learn_bpe_merges(spark, sf_dir)
-    assert _newest_job(spark) == before
+    assert newest_job(spark) == before
     out = txt_bpe_apply(spark, sf_dir).collect()
     assert 0 < len(out) <= 30
     merged_syms = {m for (_s, _l, _r, m, _c) in merges}

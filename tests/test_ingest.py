@@ -16,6 +16,7 @@ from bigdataindexing_spark.sources.json_ingest import (
     ingest_stream,
     read_store,
 )
+from tests.jobs import newest_job
 
 
 def _write_input(spark, tmp_path, n=20, include_invalid=True):
@@ -114,13 +115,6 @@ def test_stream_ingest_replay_is_idempotent(spark, tmp_path):
     assert once == twice
 
 
-def _newest_job(spark) -> int:
-    """The newest job id the status tracker holds. Ids only grow, while the
-    tracker drops the oldest jobs past ``spark.ui.retainedJobs``, so the
-    newest id, not the retained set, shows whether a job started."""
-    return max(spark.sparkContext.statusTracker().getJobIdsForGroup(None), default=-1)
-
-
 def test_reading_a_store_starts_no_spark_job(spark, tmp_path):
     """The reader is given the declared table schemas, so opening a store
     (a batch store, or the stream partials beneath it) infers nothing from
@@ -129,14 +123,14 @@ def test_reading_a_store_starts_no_spark_job(spark, tmp_path):
     out_dir = str(tmp_path / "store")
     ingest_batch(spark, in_dir, out_dir)
     ingest_stream(spark, in_dir, out_dir)
-    before = _newest_job(spark)
+    before = newest_job(spark)
     store = read_store(spark, out_dir)
-    opened = _newest_job(spark)
+    opened = newest_job(spark)
     assert opened == before
     # the batch files and the batch=0 partials are one table, and the
     # count's job is seen, so the tracker does see this thread's jobs
     assert store.plans.count() == 10
-    assert _newest_job(spark) > opened
+    assert newest_job(spark) > opened
 
 
 def test_opening_a_table_stream_starts_no_spark_job(spark, sf_dir):
@@ -148,9 +142,9 @@ def test_opening_a_table_stream_starts_no_spark_job(spark, sf_dir):
 
     for name in ("events", "documents"):
         table(spark, sf_dir, name)
-        before = _newest_job(spark)
+        before = newest_job(spark)
         sdf = stream_table(spark, sf_dir, name)
-        assert _newest_job(spark) == before, name
+        assert newest_job(spark) == before, name
         assert sdf.isStreaming and sdf.dtypes == table(spark, sf_dir, name).dtypes
 
 

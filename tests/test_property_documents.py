@@ -603,7 +603,7 @@ def _perturb(draw, doc: dict) -> dict:
     elif kind == "lps_empty":
         doc["linkedPlanServices"] = []
     elif kind == "lps_absent":
-        doc.pop("linkedPlanServices")
+        doc.pop("linkedPlanServices", None)
     elif kind == "null_el" and lps is not None:
         lps.insert(draw(st.integers(0, len(lps))), None)
     elif kind == "dup_el" and el:

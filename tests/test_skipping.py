@@ -21,6 +21,7 @@ from bigdataindexing_spark.sources.delta_log import (
     stats_json,
 )
 from bigdataindexing_spark.tables import table
+from tests.jobs import newest_job
 
 SHIP = {"l_shipdate": (skipping.SKIP_LO, skipping.SKIP_HI)}
 
@@ -84,10 +85,9 @@ def test_absent_stats_never_pruned():
 def test_manifest_cached_with_layout(spark, sf_dir):
     # planning replays the log: no new Spark job per query
     layout = skipping._CLUSTERED.dir(spark, sf_dir)
-    before = spark.sparkContext.statusTracker().getJobIdsForGroup(None)
+    before = newest_job(spark)
     manifest_keep(replay(layout).files, SHIP)
-    after = spark.sparkContext.statusTracker().getJobIdsForGroup(None)
-    assert before == after
+    assert newest_job(spark) == before
 
 
 def test_zorder_prunes_both_dimensions(spark, sf_dir):

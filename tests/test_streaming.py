@@ -27,6 +27,7 @@ from bigdataindexing_spark.streaming.index_maintenance import (
     upsert_batch,
 )
 from bigdataindexing_spark.tables import table
+from tests.jobs import newest_job
 
 
 def _ts(h, m):
@@ -419,10 +420,6 @@ def test_st13_scd2_merge_paths_and_replay(spark, tmp_path):
     assert drain("ckpt_replay") == expected
 
 
-def _job_ids(spark) -> set[int]:
-    return set(spark.sparkContext.statusTracker().getJobIdsForGroup(None))
-
-
 def test_opening_a_partial_store_starts_no_spark_job(spark, tmp_path):
     """The index and CMS partial stores are read with their declared
     partial schemas, so opening either one infers nothing from Parquet
@@ -435,15 +432,15 @@ def test_opening_a_partial_store_starts_no_spark_job(spark, tmp_path):
     index_dir, cms_dir = str(tmp_path / "index"), str(tmp_path / "cms")
     upsert_batch(index_dir)(docs, 0)
     cms_upsert_batch(cms_dir)(docs, 0)
-    before = _job_ids(spark)
+    before = newest_job(spark)
     postings = read_postings(spark, index_dir)
     cms = read_cms(spark, cms_dir)
-    opened = _job_ids(spark)
+    opened = newest_job(spark)
     assert opened == before
     # the counts' jobs are seen, so the tracker does see this thread's jobs
     assert sorted(map(tuple, postings.collect())) == [("a", 1), ("b", 2), ("c", 1)]
     assert cms.count() > 0
-    assert _job_ids(spark) > opened
+    assert newest_job(spark) > opened
 
 
 def test_declared_partial_schemas_match_their_builders(spark, sf_dir, tmp_path):
